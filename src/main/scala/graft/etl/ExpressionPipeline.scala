@@ -146,7 +146,9 @@ object ExpressionPipeline {
     (0 until nGenes).foreach { i =>
       val vals = samples.indices.map { j =>
         val v = ((mix(mix(seed ^ i) ^ j) % 100000L + 100000L) % 100000L) / 100.0
-        f"$v%.2f"
+        // Locale.ROOT: a comma-decimal default locale would write "123,45",
+        // which Spark's DoubleType parse nulls and DuckDB types as VARCHAR.
+        "%.2f".formatLocal(java.util.Locale.ROOT, v)
       }
       sb ++= (s"GENE$i" +: vals).mkString("\t")
       sb += '\n'

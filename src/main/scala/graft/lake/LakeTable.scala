@@ -4,8 +4,12 @@ import java.nio.charset.StandardCharsets
 
 import scala.collection.mutable
 
-import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
+import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, Options, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -18,9 +22,14 @@ import graft.model.Model
   * copy-on-write `base` files (≤1 version per key per bucket across all
   * base files) from merge-on-read `delta` files (appended row versions the
   * read path resolves by max `_lsn` per key until compaction folds them).
+  * `len` is the file's byte length, taken from the listing that found the
+  * file at write time: scans are planned from these entries alone
+  * ([[ManifestFileIndex]]), so a read never lists storage. -1 on entries
+  * from manifests written before the field existed; a scan stats those.
   */
 final case class FileEntry(path: String, bucket: Int, schemaVer: Int, rows: Long,
-    live: Long = -1L, kind: String = FileEntry.Base, stats: Option[FileStats] = None)
+    live: Long = -1L, kind: String = FileEntry.Base, stats: Option[FileStats] = None,
+    len: Long = -1L)
 
 object FileEntry {
   val Base = "base"
@@ -181,6 +190,12 @@ final class CommitConflictException(msg: String) extends RuntimeException(msg)
   *     the groups a commit touches — snapshot JSON and per-commit
   *     metadata writes stay O(buckets touched) regardless of table size.
   *   - Commits are metadata-only renames — O(1) regardless of data size.
+  *   - Scans are planned from the manifest: each file entry carries its
+  *     byte length, and the scan is a `HadoopFsRelation` over exactly the
+  *     snapshot's files ([[ManifestFileIndex]]). No read lists storage —
+  *     neither serially in the planning thread nor as Spark's
+  *     parallel-discovery job — so planning cost is O(files read), with
+  *     no I/O.
   *   - All paths go through Hadoop `FileSystem`, so `root` may be file://,
   *     hdfs://, etc. `_current` swap uses `FileContext.rename(OVERWRITE)`,
   *     which is atomic on HDFS and POSIX; object stores would swap in a
@@ -546,16 +561,30 @@ final class LakeTable(
       .select(publicCols.map(col) :+ col("change_type"): _*)
   }
 
+  /** Scan of `wanted`, conformed to `targetVer`, planned from the manifest
+    * with no listing: each writer version's files become one parquet
+    * `HadoopFsRelation` over a [[ManifestFileIndex]] of exactly those
+    * files. An entry without a recorded length (older manifests) is
+    * stat'ed here instead; nothing else touches the filesystem before the
+    * scan runs. The data schema is made nullable, as Spark does for a
+    * user-specified read schema.
+    */
   private def readFiles(wanted: Seq[FileEntry], targetVer: Int): DataFrame = {
-    val target = physicalSchema(targetVer)
-    val groups = wanted.groupBy(_.schemaVer)
-    val parts = groups.toSeq.sortBy(_._1).map { case (ver, fes) =>
-      val physical = physicalSchema(ver)
-      val df = spark.read.schema(physical).parquet(fes.map(_.path): _*)
-      conformVersioned(df, ver, targetVer)
+    def scan(fes: Seq[FileEntry], ver: Int): DataFrame = {
+      val files = fes.map { f =>
+        val p = new Path(f.path)
+        if (f.len >= 0) new FileStatus(f.len, false, 1, 0L, 0L, p)
+        else p.getFileSystem(hadoopConf).getFileStatus(p)
+      }
+      spark.baseRelationToDataFrame(HadoopFsRelation(new ManifestFileIndex(files),
+        partitionSchema = new StructType(),
+        dataSchema = asNullable(physicalSchema(ver)).asInstanceOf[StructType],
+        bucketSpec = None, fileFormat = new ParquetFileFormat, options = Map.empty)(spark))
     }
-    if (parts.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], target)
-    else parts.reduce(_ unionByName _)
+    wanted.groupBy(_.schemaVer).toSeq.sortBy(_._1)
+      .map { case (ver, fes) => conformVersioned(scan(fes, ver), ver, targetVer) }
+      .reduceOption(_ unionByName _)
+      .getOrElse(scan(Nil, targetVer))
   }
 
   // ---- rename-aware version conformance ----
@@ -1060,17 +1089,38 @@ final class LakeTable(
         s"${stats.size} stat entries) — falling back to footer stats for $dir")
       return None
     }
-    val entries = found.map { case (p, bucket) =>
+    val entries = found.map { case (p, bucket, len) =>
       val pid = partFileRe.findFirstMatchIn(p.getName).map(_.group(1).toLong)
         .getOrElse(return None)
       val key = pid * FileKeySpan + bucket
       stats.get(key) match {
         case Some((rows, live)) =>
-          FileEntry(p.toString, bucket, schemaVer, rows, live, kind, ranges.get(key))
+          FileEntry(p.toString, bucket, schemaVer, rows, live, kind, ranges.get(key), len)
         case None => return None
       }
     }
     Some(entries)
+  }
+
+  /** All parquet data files under a commit directory as (file, bucket,
+    * byte length). The length goes into the manifest, so reads plan
+    * without listing. On
+    * `file:` the engine's sessions bind [[NioLocalFileSystem]], so this
+    * listing forks no process per entry.
+    */
+  private def listDataFiles(dir: Path): Seq[(Path, Int, Long)] = {
+    val fsys = dir.getFileSystem(hadoopConf)
+    if (!fsys.exists(dir)) return Nil
+    val found = mutable.ArrayBuffer[(Path, Int, Long)]()
+    val it = fsys.listFiles(dir, true)
+    while (it.hasNext) {
+      val st = it.next()
+      val p = st.getPath
+      val parent = p.getParent.getName
+      if (p.getName.endsWith(".parquet") && parent.startsWith("_bucket="))
+        found += ((p, parent.stripPrefix("_bucket=").toInt, st.getLen))
+    }
+    found.toSeq
   }
 
   /** Manifest entries for every parquet file under a commit directory,
@@ -1079,53 +1129,6 @@ final class LakeTable(
     * Spark's parquet writer always records it) fall back to one bounded
     * Spark job over just those files.
     */
-  /** All parquet data files under a commit directory as (file, bucket).
-    *
-    * On the LOCAL filesystem this walks with `java.io.File`: Hadoop's
-    * `RawLocalFileSystem` located-status listing forks a process per entry
-    * to load permissions (measured ~20 ms/file — 0.7 s per 64-bucket
-    * commit, serial driver time on the epoch critical path) where the
-    * plain walk is ~1 ms total. Permissions/block locations are never used
-    * here, so the fast path loses nothing; non-local schemes (hdfs://,
-    * s3a://) take the Hadoop listing, whose remote cost is one LIST round
-    * trip, not a fork per file.
-    */
-  private def listDataFiles(dir: Path): Seq[(Path, Int)] = {
-    val scheme = dir.toUri.getScheme
-    val found = mutable.ArrayBuffer[(Path, Int)]() // (file, bucket)
-    if (scheme == null || scheme == "file") {
-      // makeQualified: manifest paths are compared AS STRINGS by orphan GC
-      // and snapshot diffing — the fast walk must emit the exact
-      // "file:/..." form the Hadoop listing branch produces, or every live
-      // file looks like an orphan.
-      val fsys = dir.getFileSystem(hadoopConf)
-      val root = new java.io.File(dir.toUri.getPath)
-      val buckets = root.listFiles()
-      if (buckets == null) return Nil
-      buckets.foreach { bd =>
-        if (bd.isDirectory && bd.getName.startsWith("_bucket=")) {
-          val b = bd.getName.stripPrefix("_bucket=").toInt
-          val files = bd.listFiles()
-          if (files != null) files.foreach { f =>
-            if (f.getName.endsWith(".parquet"))
-              found += ((fsys.makeQualified(new Path(f.getAbsolutePath)), b))
-          }
-        }
-      }
-    } else {
-      val fsys = dir.getFileSystem(hadoopConf)
-      if (!fsys.exists(dir)) return Nil
-      val it = fsys.listFiles(dir, true)
-      while (it.hasNext) {
-        val p = it.next().getPath
-        val parent = p.getParent.getName
-        if (p.getName.endsWith(".parquet") && parent.startsWith("_bucket="))
-          found += ((p, parent.stripPrefix("_bucket=").toInt))
-      }
-    }
-    found.toSeq
-  }
-
   private def footerStats(dir: Path, schemaVer: Int, kind: String): Seq[FileEntry] = {
     import scala.jdk.CollectionConverters._
     val conf = hadoopConf
@@ -1142,7 +1145,8 @@ final class LakeTable(
     // pool is sized to overlap as many as the commit has files (capped).
     val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(48, found.size))
     try {
-      val futures = found.toSeq.map { case (p, bucket) =>
+      val lens = found.map { case (p, _, len) => p -> len }.toMap
+      val futures = found.toSeq.map { case (p, bucket, _) =>
         pool.submit(new java.util.concurrent.Callable[(Path, Int, Long, Long, Option[FileStats])] {
           def call(): (Path, Int, Long, Long, Option[FileStats]) =
             // A transiently unreadable footer must NOT abort the commit
@@ -1256,7 +1260,7 @@ final class LakeTable(
           }
         }
       (ok ++ rescued).map { case (p, bucket, rows, live, fstats) =>
-        FileEntry(p.toString, bucket, schemaVer, rows, live, kind, fstats)
+        FileEntry(p.toString, bucket, schemaVer, rows, live, kind, fstats, lens(p))
       }
     } finally pool.shutdown()
   }
@@ -1379,9 +1383,10 @@ final class LakeTable(
     val keptSnaps = keep.toSeq.map(snapshot)
     val live: Set[String] = keptSnaps.flatMap(_.files.map(_.path)).toSet
     val cutoff = System.currentTimeMillis() - orphanGraceMs
+    // The report counts outcomes: a delete that returns false (already
+    // gone, e.g. a racing expiry) reclaimed nothing and is not counted.
     // delete dead snapshot manifests (id-based: never younger than kept)
-    val deadSnaps = ids.filterNot(keep)
-    deadSnaps.foreach(id => fs.delete(snapPath(id), false))
+    val snapsDeleted = ids.filterNot(keep).count(id => fs.delete(snapPath(id), false))
     // delete group manifests no kept snapshot references (expired
     // snapshots' groups + orphans from lost commit-claim races), unless
     // young enough to be an in-flight commit's pre-claim write
@@ -1391,7 +1396,7 @@ final class LakeTable(
         st.getPath.getName.endsWith(".json") &&
         !liveRefs.contains(st.getPath.getName) &&
         st.getModificationTime < cutoff)
-    deadRefs.foreach(st => fs.delete(st.getPath, false))
+    val refsDeleted = deadRefs.count(st => fs.delete(st.getPath, false))
     // delete orphan data files, same grace
     var dirsReclaimed = 0
     var filesDeleted = 0
@@ -1421,8 +1426,7 @@ final class LakeTable(
           }
         }
       }
-      dead.foreach(p => fs.delete(p, false))
-      filesDeleted = dead.size
+      filesDeleted = dead.count(p => fs.delete(p, false))
       // Reclaim EMPTIED commit directories: every writeDataFiles call
       // creates one c<ts>-<uuid> dir, so without this the data/ tree
       // grows by one dir per epoch forever and each expiry's recursive
@@ -1440,19 +1444,35 @@ final class LakeTable(
         catch { case _: java.io.FileNotFoundException => false }
       fs.listStatus(dataDir).foreach { st =>
         if (st.isDirectory && !liveCommitDirs.contains(st.getPath.getName) &&
-          st.getModificationTime < cutoff && !inFlight(st.getPath)) {
-          fs.delete(st.getPath, true)
+          st.getModificationTime < cutoff && !inFlight(st.getPath) &&
+          fs.delete(st.getPath, true))
           dirsReclaimed += 1
-        }
       }
     }
-    ExpiryReport(deadSnaps.size, deadRefs.length, filesDeleted, dirsReclaimed)
+    ExpiryReport(snapsDeleted, refsDeleted, filesDeleted, dirsReclaimed)
   }
+}
+
+/** A snapshot's files as Spark's file index: the manifest is the index
+  * (Iceberg's manifest-list read), so planning a scan lists nothing.
+  * `files` carry their manifest length; the one partition directory has
+  * no partition values (bucket pruning already happened on the manifest).
+  */
+private[lake] final class ManifestFileIndex(files: Seq[FileStatus]) extends FileIndex {
+  def rootPaths: Seq[Path] = files.map(_.getPath)
+  def listFiles(partitionFilters: Seq[Expression],
+      dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+    Seq(PartitionDirectory(InternalRow.empty, files.toArray))
+  def inputFiles: Array[String] = files.map(_.getPath.toUri.toString).toArray
+  def refresh(): Unit = ()
+  def sizeInBytes: Long = files.map(_.getLen).sum
+  def partitionSchema: StructType = new StructType()
 }
 
 /** What one [[LakeTable.expireSnapshots]] pass reclaimed — returned so a
   * maintenance scheduler or monitoring channel can record retention
-  * activity without re-listing the tree it just swept.
+  * activity without re-listing the tree it just swept. Each count is of
+  * deletes that succeeded, not of deletes attempted.
   */
 final case class ExpiryReport(
     snapshotsDeleted: Int,
@@ -1602,6 +1622,18 @@ object LakeTable {
     case _ => true
   }
 
+  /** `t` with every field, array element and map value nullable: the
+    * schema Spark gives a user-specified file read (its own `asNullable`
+    * is not public).
+    */
+  private def asNullable(t: DataType): DataType = t match {
+    case s: StructType =>
+      StructType(s.fields.map(f => f.copy(dataType = asNullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(asNullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(asNullable(m.keyType), asNullable(m.valueType), valueContainsNull = true)
+    case o => o
+  }
+
   /** Cast/null-fill `df` (physical schema `from`) up to `to`. Only widening
     * casts are legal here; the registry guarantees versions only add
     * nullable columns or widen types.
@@ -1636,8 +1668,10 @@ object LakeTable {
           else ""
         s""",$kk"mn2":${s.min2},"mx2":${s.max2},"mnl":${s.minLsn},"mxl":${s.maxLsn}"""
       }.getOrElse("")
+      // `len` is optional the same way: written when known, -1 when absent.
+      val ln = if (f.len >= 0) s""","len":${f.len}""" else ""
       s"""{"path":"${esc(f.path)}","bucket":${f.bucket},"schemaVer":${f.schemaVer},""" +
-        s""""rows":${f.rows},"live":${f.live},"kind":"${esc(f.kind)}"$st}"""
+        s""""rows":${f.rows},"live":${f.live},"kind":"${esc(f.kind)}"$st$ln}"""
     }.mkString("[", ",", "]")
 
   /** One bucket-group manifest (sharded format). */
@@ -1664,7 +1698,8 @@ object LakeTable {
         f.get("schemaVer").asInt(), f.get("rows").asLong(),
         if (f.has("live")) f.get("live").asLong() else -1L,
         if (f.has("kind")) f.get("kind").asText() else FileEntry.Base,
-        stats)
+        stats,
+        if (f.has("len")) f.get("len").asLong() else -1L)
     }
 
   private[graft] def manifestJson(s: Snapshot): String = {

@@ -2,12 +2,20 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.hadoop.fs.{LocalFileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.cdc.MergeApply
-import graft.lake.LakeTable
+import graft.lake.{ExpiryReport, LakeTable}
 import graft.model.Model
+
+/** `file:` FileSystem whose deletes all fail (return false), as a delete
+  * does when the path is already gone or cannot be removed.
+  */
+class RefusingDeleteFileSystem extends LocalFileSystem {
+  override def delete(p: Path, recursive: Boolean): Boolean = false
+}
 
 /** Time-based snapshot retention: `expireSnapshots(olderThanMs)` keeps
   * every snapshot younger than the age even beyond `keepLast`, so the
@@ -112,5 +120,29 @@ class ExpirySpec extends AnyFunSuite {
     (0L to 3L).foreach(commitBatch(table, _))
     table.expireSnapshots(keepLast = 2, orphanGraceMs = 0L)
     assert(table.snapshotIds == Seq(3L, 4L))
+  }
+
+  test("the expiry report counts only deletes that succeeded") {
+    val root = Files.createTempDirectory("graft-expiry-").toString
+    val table = LakeTable.create(spark, root, schemaVer = 2, numBuckets = 4)
+    (0L to 2L).foreach(commitBatch(table, _))
+    val orphanDir = new java.io.File(s"$root/data/c1-orphan")
+    assert(orphanDir.mkdirs() && orphanDir.setLastModified(System.currentTimeMillis() - 3600_000))
+    // Same sweep through a filesystem whose every delete fails: nothing is
+    // reclaimed, so nothing may be reported.
+    val refusing = Seq("fs.file.impl" -> classOf[RefusingDeleteFileSystem].getName,
+      "fs.file.impl.disable.cache" -> "true")
+    refusing.foreach { case (k, v) => spark.conf.set(k, v) }
+    val failed =
+      try LakeTable.load(spark, root).expireSnapshots(keepLast = 1, orphanGraceMs = 0L)
+      finally refusing.foreach { case (k, _) => spark.conf.unset(k) }
+    assert(failed == ExpiryReport(0, 0, 0, 0), failed.toString)
+    assert(table.snapshotIds == Seq(0L, 1L, 2L, 3L) && orphanDir.exists())
+    // the real filesystem reclaims and reports the same candidates
+    val done = table.expireSnapshots(keepLast = 1, orphanGraceMs = 0L)
+    assert(done.snapshotsDeleted == 3 && done.dataFilesDeleted > 0 &&
+      done.commitDirsReclaimed >= 1, done.toString)
+    assert(table.snapshotIds == Seq(3L) && !orphanDir.exists())
+    assert(table.read().count() == 20L)
   }
 }

@@ -158,4 +158,30 @@ class ExpressionPipelineSpec extends AnyFunSuite {
     val (facts2, _) = ExpressionPipeline.resolveFacts(long2, dim)
     assert(ExpressionPipeline.idempotentAppend(facts, facts2).count() == 3)
   }
+
+  test("fixture TSV written under a comma-decimal default locale still parses as doubles") {
+    val saved = java.util.Locale.getDefault
+    val tsv =
+      try {
+        java.util.Locale.setDefault(java.util.Locale.GERMANY)
+        ExpressionPipeline.fixtureTsv(nGenes = 4, nSamples = 3)
+      } finally java.util.Locale.setDefault(saved)
+    val dir = Files.createTempDirectory("graft-tsv-locale-")
+    val path = Paths.get(dir.toString, "matrix.tsv")
+    Files.writeString(path, tsv)
+    val m = ExpressionPipeline.readMatrix(spark, path.toString)
+    val samples = m.columns.filter(_ != "Gene")
+    assert(samples.length == 3)
+    val rows = m.collect()
+    assert(rows.length == 4)
+    // every cell is a parsed double equal to its decimal-point text
+    val cells = tsv.split("\n").drop(1).map(_.split("\t").drop(1).map(_.toDouble))
+    rows.sortBy(_.getAs[String]("Gene").stripPrefix("GENE").toInt).zip(cells).foreach {
+      case (r, want) =>
+        samples.zip(want).foreach { case (c, v) =>
+          assert(!r.isNullAt(r.fieldIndex(c)), s"${r.getAs[String]("Gene")}.$c parsed to null")
+          assert(r.getAs[Double](c) == v)
+        }
+    }
+  }
 }

@@ -120,7 +120,7 @@ class FileSkippingSpec extends AnyFunSuite {
 
   test("manifest codec: stats roundtrip, legacy entries parse to None and never skip") {
     val withStats = FileEntry("/p/a.parquet", 3, 2, 100, 90, FileEntry.Base,
-      Some(FileStats("conv-a", "conv-z", 1, 9, 50, 150)))
+      Some(FileStats("conv-a", "conv-z", 1, 9, 50, 150)), len = 4321L)
     val nullKeyStats = FileEntry("/p/b.parquet", 1, 2, 10, 10, FileEntry.Delta,
       Some(FileStats(null, null, Long.MaxValue, Long.MinValue, 7, 7)))
     val noStats = FileEntry("/p/c.parquet", 0, 1, 5, 5)
@@ -128,6 +128,9 @@ class FileSkippingSpec extends AnyFunSuite {
       Seq(withStats, nullKeyStats, noStats), writerId = "w1")
     val back = LakeTable.parseManifest(LakeTable.manifestJson(snap))
     assert(back.files == Seq(withStats, nullKeyStats, noStats))
+    // `len` is optional like the stats tail: written only when known
+    assert(back.files.map(_.len) == Seq(4321L, -1L, -1L))
+    assert(LakeTable.manifestJson(snap).split("\"len\":").length == 2)
 
     // a LEGACY manifest (written before the stats field existed) parses
     // to stats=None and is never skipped by any probe
@@ -142,6 +145,85 @@ class FileSkippingSpec extends AnyFunSuite {
     assert(LakeTable.mayContainKey(nullKeyStats, probe))
     // known ranges DO skip
     assert(!LakeTable.mayContainKey(withStats, probe))
+  }
+
+  test("write pass records each file's byte length; a manifest without it reads row-identically") {
+    import org.apache.hadoop.fs.Path
+    val root = tmp()
+    val table = LakeTable.create(spark, root, schemaVer = 2, numBuckets = 4)
+    val events = (0 until 120).map(i => ev(100 + i, f"conv-${i % 40}%03d", i / 40 + 1, s"t$i"))
+    assert(MergeApply.applyBatch(table, df(events), epochId = 0).applied)
+    assert(MergeApply.applyBatch(table, df(events.take(30).map(e =>
+      e.copy(lsn = e.lsn + 1000, text = Some("v2")))), epochId = 1,
+      strategy = WriteStrategy.MergeOnRead).applied)
+    val snap = table.current
+    val conf = spark.sessionState.newHadoopConf()
+    snap.files.foreach { f =>
+      val p = new Path(f.path)
+      assert(f.len == p.getFileSystem(conf).getFileStatus(p).getLen, f.path)
+    }
+    // the lengths survive a reload from disk
+    assert(LakeTable.load(spark, root).current.files == snap.files)
+
+    def rows(t: LakeTable) = t.read().orderBy("conv_id", "turn_idx").collect().toSeq
+    val want = rows(table)
+    val wantKey = table.readKey("conv-007").orderBy("turn_idx").collect().toSeq
+    // rewrite the current manifest as an older writer would have: no `len`
+    val legacyJson = LakeTable.manifestJson(snap.copy(files = snap.files.map(_.copy(len = -1L))))
+    assert(!legacyJson.contains("\"len\""))
+    val manifest = new Path(s"$root/_meta", f"snap-${snap.id}%010d.json")
+    val fs = manifest.getFileSystem(conf)
+    val out = fs.create(manifest, true)
+    try out.write(legacyJson.getBytes("UTF-8")) finally out.close()
+    val legacy = LakeTable.load(spark, root)
+    assert(legacy.current.files.forall(_.len == -1L))
+    assert(rows(legacy) == want && want.size == 120)
+    assert(legacy.readKey("conv-007").orderBy("turn_idx").collect().toSeq == wantKey)
+  }
+
+  test("scans plan from the manifest: no listing job, and readKey opens exactly filesForKey") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val table = LakeTable.create(spark, tmp(), schemaVer = 2, numBuckets = 40)
+    def epoch(e: Int) = (0 until 400).map(i =>
+      ev(e * 1000L + i, f"conv-$i%03d", 1, s"e$e $i"))
+    assert(MergeApply.applyBatch(table, df(epoch(0)), epochId = 0).applied)
+    val from = table.current.id
+    assert(MergeApply.applyBatch(table, df(epoch(1)), epochId = 1).applied)
+    val snap = table.current
+    // above spark.sql.sources.parallelPartitionDiscovery.threshold (32): a
+    // listing file index would plan these reads with a Spark job
+    assert(snap.files.size > 32 && table.changedBuckets(table.snapshot(from), snap).size > 32)
+
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        descs.add(String.valueOf(e.properties.getProperty("spark.job.description")))
+    }
+    // Jobs that ran while planning: listener events arrive in order, so
+    // once a marker job started after planning is seen, every job started
+    // during planning has been seen too.
+    def planningJobs(plan: => org.apache.spark.sql.DataFrame): Seq[String] = {
+      descs.clear()
+      plan.queryExecution.executedPlan
+      val sc = spark.sparkContext
+      sc.setJobDescription("planning-marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!descs.contains("planning-marker") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(descs.contains("planning-marker"), "marker job never reached the listener")
+      descs.toArray(Array.empty[String]).toSeq.filter(_ != "planning-marker")
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(planningJobs(table.read()).isEmpty)
+      assert(planningJobs(table.readChangesSince(from)).isEmpty)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(table.read().count() == 400L)
+    assert(table.readChangesSince(from).count() == 400L)
+
+    Seq("conv-000", "conv-123", "conv-399").foreach { k =>
+      assert(table.readKey(k).inputFiles.toSet == table.filesForKey(k).map(_.path).toSet, k)
+    }
   }
 
   test("point read on a non-string-keyed table fails loudly, not silently empty") {
