@@ -23,14 +23,20 @@ import graft.model.Model
   * per step/batch, enhanced_main_etl_logging.py:219-286):
   *   - `<table>/_metrics`: one row per applied epoch — input events,
   *     deduped keys, touched buckets, duration, events/sec, snapshot id
+  *   - `<table>/_qc`: one batch-quality row per applied epoch
   *   - `<table>/_lineage`: per-partition lineage — source file → epoch →
   *     committed snapshot id (north rule: "source offset → snapshot ID")
-  * Both are written only when the commit actually applied, so replays do
-  * not duplicate metric rows.
+  * They are written only when the commit actually applied, so replays do
+  * not duplicate metric rows. Channel rows are written from the DRIVER
+  * (parquet-mr, no Spark job): a streamed epoch's Spark jobs are its
+  * merge and maintenance, not its bookkeeping — the Structured Streaming
+  * paper's per-trigger progress record is likewise a driver-side record.
   */
 object CdcStream {
 
-  /** @param strategy copy-on-write (default) or merge-on-read delta
+  /** Stream settings.
+    *
+    * @param strategy copy-on-write (default) or merge-on-read delta
     *                  appends (see [[WriteStrategy]])
     * @param compactEveryEpochs under merge-on-read, fold the delta stack
     *                  back to base files every N applied epochs (0 = never;
@@ -43,8 +49,7 @@ object CdcStream {
     *                  safe: the epoch fence makes an already-committed
     *                  apply a no-op and metric emission is
     *                  overwrite-by-epoch.
-    */
-  /** @param expireEveryEpochs run snapshot expiry + orphan GC every N
+    * @param expireEveryEpochs run snapshot expiry + orphan GC every N
     *                  applied epochs (0 = never): the in-stream face of the
     *                  retention lifecycle, so an unattended long-running
     *                  stream's `_meta`/data graveyard stays bounded without
@@ -291,16 +296,12 @@ object CdcStream {
     * per-writer commit fence exists for), so an epoch-only key would let
     * writer B's epoch 0 clobber writer A's epoch-0 observability rows.
     */
-  private def emitMetrics(spark: SparkSession, root: String, wid: String,
+  private[graft] def emitMetrics(spark: SparkSession, root: String, wid: String,
       s: BatchStats): Unit = {
-    import spark.implicits._
     val eps = if (s.durationMs > 0) s.inputEvents * 1000.0 / s.durationMs else 0.0
-    Seq((wid, s.epochId, s.snapshotId, s.inputEvents, s.dedupedKeys, s.touchedBuckets,
-      s.schemaVer, s.maxLsn, s.liveRows, s.durationMs, eps, s.observedRows, s.observedLive))
-      .toDF("writer_id", "epoch_id", "snapshot_id", "input_events", "deduped_keys",
-        "touched_buckets", "schema_ver", "max_lsn", "live_rows", "duration_ms",
-        "events_per_sec", "observed_rows", "observed_live")
-      .coalesce(1).write.mode("overwrite").parquet(s"$root/_metrics/$wid/e${s.epochId}")
+    writeChannel(spark, s"$root/_metrics/$wid/e${s.epochId}", metricsSchema,
+      Seq(Seq(wid, s.epochId, s.snapshotId, s.inputEvents, s.dedupedKeys, s.touchedBuckets,
+        s.schemaVer, s.maxLsn, s.liveRows, s.durationMs, eps, s.observedRows, s.observedLive)))
   }
 
   /** S9 ▸ QC channel: per-epoch batch-quality metrics — tombstone count
@@ -310,15 +311,55 @@ object CdcStream {
     * emitted per applied epoch (reference: _load_qc_metrics study-level QC
     * rows, Scripts/python/enhanced_main_etl.py:998-1020).
     */
-  private def emitQc(spark: SparkSession, root: String, wid: String,
+  private[graft] def emitQc(spark: SparkSession, root: String, wid: String,
       s: BatchStats): Unit = {
-    import spark.implicits._
     val delRate = if (s.inputEvents > 0) s.qcDeletes.toDouble / s.inputEvents else 0.0
     val nullRate = if (s.observedLive > 0) s.qcNullText.toDouble / s.observedLive else 0.0
-    Seq((wid, s.epochId, s.inputEvents, s.qcDeletes, s.qcNullText, delRate, nullRate))
-      .toDF("writer_id", "epoch_id", "input_events", "n_deletes", "n_null_text",
-        "delete_rate", "null_text_rate")
-      .coalesce(1).write.mode("overwrite").parquet(s"$root/_qc/$wid/e${s.epochId}")
+    writeChannel(spark, s"$root/_qc/$wid/e${s.epochId}", qcSchema,
+      Seq(Seq(wid, s.epochId, s.inputEvents, s.qcDeletes, s.qcNullText, delRate, nullRate)))
+  }
+
+  /** Write one channel directory (`<channel>/<writer>/e<N>`) from the
+    * driver, with no Spark job: parquet-mr's example writer, schema
+    * converted exactly as a Spark write would. The file lands in a hidden
+    * sibling (`.e<N>-<id>`, skipped by every Spark listing, so a crash
+    * leaves debris no reader sees); the old `e<N>` is then deleted and
+    * the sibling renamed into place — overwrite-by-epoch, the layout
+    * [[channel]] reads.
+    */
+  private def writeChannel(spark: SparkSession, dir: String, schema: StructType,
+      rows: Seq[Seq[Any]]): Unit = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.example.data.simple.SimpleGroup
+    val conf = hadoopConf(spark)
+    val target = new Path(dir)
+    val fs = target.getFileSystem(conf)
+    val staged = new Path(target.getParent,
+      s".${target.getName}-${java.util.UUID.randomUUID.toString.take(8)}")
+    val msg = new org.apache.spark.sql.execution.datasources.parquet
+      .SparkToParquetSchemaConverter(spark.sessionState.conf).convert(schema)
+    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile
+        .fromPath(new Path(staged, "part-00000.parquet"), conf))
+      .withConf(conf).withType(msg)
+      .withCompressionCodec(org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
+      .build()
+    try rows.foreach { r =>
+      val g = new SimpleGroup(msg)
+      schema.fields.iterator.zip(r.iterator).zipWithIndex.foreach {
+        case ((_, null), _) => // optional field left unset = null
+        case ((f, v), i) => f.dataType match {
+          case StringType => g.add(i, v.asInstanceOf[String])
+          case LongType => g.add(i, v.asInstanceOf[Long])
+          case IntegerType => g.add(i, v.asInstanceOf[Int])
+          case DoubleType => g.add(i, v.asInstanceOf[Double])
+        }
+      }
+      w.write(g)
+    } finally w.close()
+    fs.delete(target, true)
+    if (!fs.rename(staged, target))
+      throw new java.io.IOException(s"could not move channel rows $staged into $target")
   }
 
   /** Hadoop conf per session, weakly keyed: `sessionState.newHadoopConf()`
@@ -339,7 +380,6 @@ object CdcStream {
     }
   }
 
-  /** Read back the QC table. */
   /** Cold-start safe read of an observability channel: a table where no
     * epoch has applied yet (or whose every batch was empty/fenced) has no
     * channel directory — monitoring must see an empty table with the
@@ -399,22 +439,21 @@ object CdcStream {
     scoped.unionByName(legacyLive.select(scoped.columns.map(col).toSeq: _*))
   }
 
-  /** QC rows are NEVER superseded across layouts: the crash-window replay
-    * deliberately does not re-emit QC (its observed values rode the lost
-    * write plan), so a scoped QC row for a legacy epoch id can only come
-    * from a DIFFERENT batch (a fresh-checkpoint writer reusing the
-    * number) — both rows are real and must both survive.
+  /** Read back the QC table. QC rows are NEVER superseded across
+    * layouts: the crash-window replay deliberately does not re-emit QC
+    * (its observed values rode the lost write plan), so a scoped QC row
+    * for a legacy epoch id can only come from a DIFFERENT batch (a
+    * fresh-checkpoint writer reusing the number) — both rows are real and
+    * must both survive.
     */
   def qc(spark: SparkSession, tableRoot: String): DataFrame =
     channel(spark, s"$tableRoot/_qc", qcSchema)
 
-  private def emitLineage(spark: SparkSession, root: String, wid: String,
+  private[graft] def emitLineage(spark: SparkSession, root: String, wid: String,
       s: BatchStats, sourceFiles: Seq[String]): Unit = {
-    import spark.implicits._
-    val rows = if (sourceFiles.isEmpty) Seq((wid, "<none>", s.epochId, s.snapshotId))
-      else sourceFiles.map(f => (wid, f, s.epochId, s.snapshotId))
-    rows.toDF("writer_id", "source_file", "epoch_id", "snapshot_id")
-      .coalesce(1).write.mode("overwrite").parquet(s"$root/_lineage/$wid/e${s.epochId}")
+    val files = if (sourceFiles.isEmpty) Seq("<none>") else sourceFiles
+    writeChannel(spark, s"$root/_lineage/$wid/e${s.epochId}", lineageSchema,
+      files.map(f => Seq(wid, f, s.epochId, s.snapshotId)))
   }
 
   /** Read back the metrics table (per-batch observability surface). */

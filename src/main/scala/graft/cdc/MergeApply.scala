@@ -226,8 +226,7 @@ object MergeApply {
     val salt = if (resolvedEstPerBucket < saltRowThreshold) 1
       else math.max(1, saltFactor)
     val withBucket = resolved.withColumn("_bucket", bucketOf(col(keyCols.head), b))
-    val parts = math.max(1, math.min(touched.size * salt,
-      spark.conf.get("spark.sql.shuffle.partitions", "32").toInt))
+    val parts = LakeTable.writeTasks(spark, touched.size * salt)
     // A8 ▸ observed metrics RIDE THE MERGE PLAN (Dataset.observe →
     // CollectMetrics → QueryExecutionListener via the Observation helper):
     // resolved-row and live-row counts are collected by the same pass that

@@ -194,7 +194,7 @@ object ExpressionPipeline {
     * the quarantine flag derives from the same join miss, so key
     * resolution is still what the oracle checks.
     */
-  private val ep1MetaPath = "/tmp/graft_oracle/metadata_ep1.json"
+  private[graft] val ep1MetaPath = "/tmp/graft_oracle/metadata_ep1.json"
   private val ep1TsvPath = "/tmp/graft_oracle/expr_matrix_ep1.tsv"
 
   /** Study-0 sample accessions of the metadata fixture (JsonMetadata
@@ -228,8 +228,7 @@ object ExpressionPipeline {
                 WHEN regexp_matches(title, 'no[ _-]?sepsis|non[ _-]?septic', 'i') THEN 'NO_SEPSIS'
                 WHEN regexp_matches(title, 'sepsis|septic', 'i') THEN 'SEPSIS'
                 WHEN regexp_matches(title, 'control|healthy|normal', 'i') THEN 'CONTROL' END"""
-      s"""WITH doc AS (SELECT * FROM ${graft.sources.JsonMetadata.duckMaps
-            .replace("/tmp/graft_oracle/metadata.json", ep1MetaPath)}),
+      s"""WITH doc AS (SELECT * FROM ${graft.sources.JsonMetadata.duckMaps(ep1MetaPath)}),
           smp AS (SELECT unnest(map_keys(samples)) AS sample_accession_code,
                          unnest(map_values(samples)) AS sv FROM doc),
           dim AS (SELECT sample_accession_code,

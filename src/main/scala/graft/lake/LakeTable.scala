@@ -334,15 +334,19 @@ final class LakeTable(
     * row accounting and the commit instant (manifest mtime — the claim
     * instant, same clock [[expireSnapshots]]' age-based retention uses).
     * Driver-side metadata only, bounded by retention: expireSnapshots
-    * caps how many manifests exist, so this never scans data.
+    * caps how many manifests exist, so this never scans data. A snapshot
+    * whose manifest a concurrent expiry deletes after the listing is no
+    * longer retained, so it is left out instead of failing the call.
     */
   def history: DataFrame = {
     import spark.implicits._
-    snapshotIds.map { id =>
-      val mtime = fs.getFileStatus(snapPath(id)).getModificationTime
-      val s = snapshot(id)
-      (s.id, s.parent, s.epochId, s.writerId, s.schemaVer, s.numBuckets,
-        s.rows, s.maxLsn, s.maint, s.files.size.toLong, new java.sql.Timestamp(mtime))
+    snapshotIds.flatMap { id =>
+      try {
+        val mtime = fs.getFileStatus(snapPath(id)).getModificationTime
+        val s = snapshot(id)
+        Some((s.id, s.parent, s.epochId, s.writerId, s.schemaVer, s.numBuckets,
+          s.rows, s.maxLsn, s.maint, s.files.size.toLong, new java.sql.Timestamp(mtime)))
+      } catch { case _: java.io.FileNotFoundException => None }
     }.toDF("snapshot_id", "parent_id", "epoch_id", "writer_id", "schema_ver",
       "num_buckets", "rows", "max_lsn", "is_maintenance", "num_files", "committed_at")
   }
@@ -1269,14 +1273,17 @@ final class LakeTable(
 
   /** Bin-pack compaction: rewrite every bucket that has more than
     * `maxFilesPerBucket` files — or, with `foldDeltas`, any unresolved
-    * merge-on-read delta file — into one LWW-resolved sorted base file
-    * (per salt-split task), committed as a metadata-neutral maintenance
-    * snapshot (epoch map unchanged). Bounds the read amplification that
-    * copy-on-write salting and merge-on-read deltas accumulate on hot
-    * buckets; also drops tombstones older than `dropTombstonesBelowLsn`
-    * (safe once the out-of-order window for those LSNs has certainly
-    * passed). Folding all deltas restores the exact manifest live-row
-    * count ([[commit]] row accounting).
+    * merge-on-read delta file — into one LWW-resolved sorted base file per
+    * bucket, committed as a metadata-neutral maintenance snapshot (epoch
+    * map unchanged). Bounds the read amplification that copy-on-write
+    * salting and merge-on-read deltas accumulate on hot buckets; also
+    * drops tombstones older than `dropTombstonesBelowLsn` (safe once the
+    * out-of-order window for those LSNs has certainly passed). Folding all
+    * deltas restores the exact manifest live-row count ([[commit]] row
+    * accounting). The rewrite is one Spark job after one shuffle: LWW
+    * resolves inside the bucket exchange the write needs
+    * ([[resolveIntoBuckets]]), with at most `spark.sql.shuffle.partitions`
+    * write tasks.
     */
   def compact(maxFilesPerBucket: Int = 4, dropTombstonesBelowLsn: Long = -1L,
       foldDeltas: Boolean = false): CommitResult = {
@@ -1287,14 +1294,13 @@ final class LakeTable(
         (foldDeltas && fs.exists(_.kind == FileEntry.Delta))
     }.keySet
     if (fat.isEmpty) return CommitResult(cur, applied = false)
-    // Bucket routing MUST be the merge path's definition — a drifted copy
-    // here would compact rows into different buckets than merges write.
-    var df = readResolved(cur, Some(fat))
-      .withColumn("_bucket",
-        graft.cdc.MergeApply.bucketOf(col(keyCols.head), cur.numBuckets))
+    var df = resolveIntoBuckets(readConformed(cur, Some(fat)), cur.schemaVer,
+      cur.numBuckets, writeTasks(spark, fat.size))
+    // after the resolve: a dropped tombstone must not let an older live
+    // version of its key win instead
     if (dropTombstonesBelowLsn >= 0)
       df = df.filter(!col("_deleted") || col("_lsn") >= dropTombstonesBelowLsn)
-    val files = writeDataFiles(df.repartition(math.max(1, fat.size), col("_bucket")), cur.schemaVer)
+    val files = writeDataFiles(df, cur.schemaVer)
     commit(files, fat, epochId = -1, schemaVer = cur.schemaVer, rowDelta = 0L,
       maxLsnSeen = cur.maxLsn, baseSnapshotId = cur.id)
   }
@@ -1309,7 +1315,8 @@ final class LakeTable(
     * old layout until the commit lands, a crash leaves the old snapshot
     * intact, and a concurrent committer conflicts LOUDLY (the rebucket's
     * write set is every bucket). Unresolved merge-on-read deltas fold in
-    * (the rewrite is LWW-resolved); tombstones are preserved. Crossing
+    * (LWW resolves inside the new-bucket exchange, [[resolveIntoBuckets]]
+    * — the one shuffle of the rewrite); tombstones are preserved. Crossing
     * [[LakeTable.shardBucketThreshold]] in either direction migrates the
     * manifest format automatically. Incremental consumers must
     * re-baseline: [[readChangesSince]] windows cannot span a bucket-count
@@ -1320,16 +1327,37 @@ final class LakeTable(
     require(newNumBuckets > 0, s"bucket count must be positive: $newNumBuckets")
     val cur = current
     if (newNumBuckets == cur.numBuckets) return CommitResult(cur, applied = false)
-    val df = readResolved(cur, None)
-      .withColumn("_bucket",
-        graft.cdc.MergeApply.bucketOf(col(keyCols.head), newNumBuckets))
-    val parts = math.min(newNumBuckets,
-      spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
-    val files = writeDataFiles(
-      df.repartition(math.max(1, parts), col("_bucket")), cur.schemaVer)
+    val files = writeDataFiles(resolveIntoBuckets(readConformed(cur, None), cur.schemaVer,
+      newNumBuckets, writeTasks(spark, newNumBuckets)), cur.schemaVer)
     commit(files, (0 until cur.numBuckets).toSet, epochId = -1,
       schemaVer = cur.schemaVer, rowDelta = 0L, maxLsnSeen = cur.maxLsn,
       baseSnapshotId = cur.id, newNumBuckets = Some(newNumBuckets))
+  }
+
+  /** LWW-resolve stored row versions (physical schema at `schemaVer`)
+    * INSIDE the bucket exchange a rewrite's write needs: one exchange that
+    * sends bucket `b` to write task `b mod parts`, then a max-LSN groupBy
+    * on `(_bucket, keys…)` that the exchange already clusters — the bucket
+    * is a function of the key, so the planner adds no second shuffle, and
+    * each bucket lands in exactly one write task (one file per bucket).
+    * `repartitionById` rather than a hash repartition: hashing a few small
+    * bucket ids into `parts` tasks is lopsided (16 buckets over 4 tasks
+    * hash to 6/4/3/3), the modulo deals them out evenly. Output: the
+    * physical columns plus `_bucket`, ready for [[writeDataFiles]].
+    * Bucket routing is the merge path's own transform — a drifted copy
+    * would put rows in different buckets than merges do.
+    */
+  private def resolveIntoBuckets(rows: DataFrame, schemaVer: Int, numBuckets: Int,
+      parts: Int): DataFrame = {
+    val cols = physicalSchema(schemaVer).fieldNames.toSeq
+    rows.withColumn("_bucket", graft.cdc.MergeApply.bucketOf(col(keyCols.head), numBuckets))
+      .repartitionById(parts, col("_bucket"))
+      .groupBy(col("_bucket") +: keyCols.map(col): _*)
+      .agg(max_by(struct(cols.map(col): _*), col("_lsn")).as("r"))
+      // key columns straight from the grouping keys: their sort order
+      // (the aggregate's) carries through to the write's sort
+      .select(cols.map(c => if (keyCols.contains(c)) col(c) else col(s"r.$c").as(c)) :+
+        col("_bucket"): _*)
   }
 
   /** Expire all but the last `keepLast` snapshots and GC data files no kept
@@ -1548,6 +1576,12 @@ object LakeTable {
   /** Buckets per group manifest — sized so there are ≤ 64 groups. */
   def groupSize(numBuckets: Int): Int =
     math.max(1, (numBuckets + shardBucketThreshold - 1) / shardBucketThreshold)
+
+  /** Write tasks for a rewrite of `buckets` buckets: one per bucket, at
+    * most `spark.sql.shuffle.partitions` (the merge write's rule too).
+    */
+  private[graft] def writeTasks(spark: SparkSession, buckets: Int): Int =
+    math.max(1, math.min(buckets, spark.conf.get("spark.sql.shuffle.partitions", "32").toInt))
 
   /** Create an empty table at `root` with an initial schema version. */
   def create(

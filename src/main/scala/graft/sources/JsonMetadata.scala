@@ -182,7 +182,7 @@ object JsonMetadata {
 
   // ---- driver catalog entries ----
 
-  private val fixturePath = "/tmp/graft_oracle/metadata.json"
+  private[graft] val fixturePath = "/tmp/graft_oracle/metadata.json"
 
   private def fixtureDoc(spark: SparkSession): DataFrame = {
     writeFixture(fixturePath, fixtureJson())
@@ -191,11 +191,12 @@ object JsonMetadata {
 
   private val platformRe = """^(.*)\(([^)]+)\)\s*$"""
 
-  /** DuckDB reads the same document with MAP-typed columns; parallel
-    * unnest of map_keys/map_values is the explode(map_entries) twin.
+  /** DuckDB reads the metadata document at `path` with MAP-typed
+    * columns; parallel unnest of map_keys/map_values is the
+    * explode(map_entries) twin.
     */
-  private[graft] def duckMaps: String =
-    s"""read_json('$fixturePath', columns={
+  private[graft] def duckMaps(path: String): String =
+    s"""read_json('$path', columns={
         experiments: 'MAP(VARCHAR, STRUCT(title VARCHAR, technology VARCHAR,
                            pubmed_id VARCHAR, organisms VARCHAR[],
                            sample_accession_codes VARCHAR[]))',
@@ -205,7 +206,7 @@ object JsonMetadata {
 
   private val s2 = Q("s2_json_metadata",
     (spark, _) => samples(fixtureDoc(spark)).orderBy("study", "sample_accession"),
-    Some(s"""WITH doc AS (SELECT * FROM $duckMaps),
+    Some(s"""WITH doc AS (SELECT * FROM ${duckMaps(fixturePath)}),
           mem AS (SELECT unnest(map_keys(experiments)) AS study,
                          unnest(map_values(experiments)) AS ev FROM doc),
           memx AS (SELECT study, unnest(ev.sample_accession_codes) AS sample_accession FROM mem),
@@ -273,7 +274,7 @@ object JsonMetadata {
           .as("measurement_technology"))
         .orderBy("sample_accession_code")
     },
-    Some(s"""WITH doc AS (SELECT * FROM $duckMaps),
+    Some(s"""WITH doc AS (SELECT * FROM ${duckMaps(fixturePath)}),
           mem AS (SELECT unnest(map_keys(experiments)) AS study,
                          unnest(map_values(experiments)) AS ev FROM doc),
           memx AS (SELECT study, ev.technology AS tech,
@@ -315,7 +316,7 @@ object JsonMetadata {
                 WHEN regexp_matches(title, 'no[ _-]?sepsis|non[ _-]?septic', 'i') THEN 'NO_SEPSIS'
                 WHEN regexp_matches(title, 'sepsis|septic', 'i') THEN 'SEPSIS'
                 WHEN regexp_matches(title, 'control|healthy|normal', 'i') THEN 'CONTROL' END"""
-      s"""WITH doc AS (SELECT * FROM $duckMaps),
+      s"""WITH doc AS (SELECT * FROM ${duckMaps(fixturePath)}),
           mem AS (SELECT unnest(map_keys(experiments)) AS study,
                          unnest(map_values(experiments)) AS ev FROM doc),
           memx AS (SELECT study, ev.technology AS tech,
@@ -353,7 +354,7 @@ object JsonMetadata {
 
   private val c7 = Q("c7_study_transform",
     (spark, _) => studies(fixtureDoc(spark)).orderBy("study"),
-    Some(s"""WITH doc AS (SELECT * FROM $duckMaps),
+    Some(s"""WITH doc AS (SELECT * FROM ${duckMaps(fixturePath)}),
           e AS (SELECT unnest(map_keys(experiments)) AS study,
                        unnest(map_values(experiments)) AS ev FROM doc)
           SELECT study, ev.title AS title, ev.technology AS technology,

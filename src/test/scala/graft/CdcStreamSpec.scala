@@ -304,4 +304,68 @@ class CdcStreamSpec extends AnyFunSuite {
       s"observed ${st.observedRows} != file-stat ${st.dedupedKeys}")
     assert(st.observedLive == table.read().count())
   }
+
+  test("channel rows are written from the driver: read back equal, re-emission replaces, staging dirs unread, no Spark job") {
+    import org.apache.spark.sql.Row
+    val base = tmp()
+    val root = s"$base/table"
+    LakeTable.create(spark, root, schemaVer = 1, numBuckets = 4)
+    val wid = "w-probe"
+    def stats(e: Long, events: Long) = graft.cdc.BatchStats(e, applied = true,
+      snapshotId = 10 + e, inputEvents = events, dedupedKeys = 40, touchedBuckets = 3,
+      schemaVer = 2, maxLsn = 990 + e, liveRows = 35, durationMs = 50,
+      observedRows = 40, observedLive = 35, qcDeletes = 5, qcNullText = 7)
+    def emit(s: graft.cdc.BatchStats, files: Seq[String]): Unit = {
+      CdcStream.emitMetrics(spark, root, wid, s)
+      CdcStream.emitQc(spark, root, wid, s)
+      CdcStream.emitLineage(spark, root, wid, s, files)
+    }
+    val (_, seen) = JobProbe.during(spark) {
+      emit(stats(3, 100), Seq("f-a", "f-b"))
+      emit(stats(4, 80), Nil)
+    }
+    assert(seen.jobs.isEmpty, s"channel emission started ${seen.jobs.size} Spark jobs")
+
+    def rows(df: org.apache.spark.sql.DataFrame): Set[Row] = df.collect().toSet
+    def metricsRow(e: Long, events: Long) = Row(wid, e, 10 + e, events, 40L, 3, 2,
+      990 + e, 35L, 50L, events * 1000.0 / 50, 40L, 35L)
+    assert(rows(CdcStream.metrics(spark, root)) == Set(metricsRow(3, 100), metricsRow(4, 80)))
+    assert(rows(CdcStream.qc(spark, root)) == Set(
+      Row(wid, 3L, 100L, 5L, 7L, 0.05, 0.2), Row(wid, 4L, 80L, 5L, 7L, 5.0 / 80, 0.2)))
+    assert(rows(CdcStream.lineage(spark, root)) == Set(
+      Row(wid, "f-a", 3L, 13L), Row(wid, "f-b", 3L, 13L), Row(wid, "<none>", 4L, 14L)))
+
+    // re-emitting an epoch replaces its rows
+    emit(stats(3, 120), Seq("f-c"))
+    assert(rows(CdcStream.metrics(spark, root)) == Set(metricsRow(3, 120), metricsRow(4, 80)))
+    assert(CdcStream.qc(spark, root).count() == 2L)
+    assert(rows(CdcStream.lineage(spark, root).filter("epoch_id = 3")) ==
+      Set(Row(wid, "f-c", 3L, 13L)))
+
+    // a staging dir left by a crash before its rename is not read
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sessionState.newHadoopConf())
+    val live = new org.apache.hadoop.fs.Path(s"$root/_metrics/$wid/e4")
+    assert(org.apache.hadoop.fs.FileUtil.copy(fs, live, fs,
+      new org.apache.hadoop.fs.Path(s"$root/_metrics/$wid/.e4-crashed"), false,
+      spark.sessionState.newHadoopConf()))
+    assert(rows(CdcStream.metrics(spark, root)) == Set(metricsRow(3, 120), metricsRow(4, 80)))
+  }
+
+  test("a streamed merge-on-read epoch runs 5 Spark jobs, plus 2 when it compacts") {
+    val base = tmp()
+    val cfg = GenConfig(numConvs = 30, maxTurns = 12, numEvents = 2400)
+    writeEventFiles(cfg, s"$base/events", nFiles = 4)
+    val table = LakeTable.create(spark, s"$base/table", schemaVer = 1, numBuckets = 8)
+    val (_, seen) = JobProbe.during(spark) {
+      CdcStream.runAvailable(spark, table, s"$base/events", s"$base/cp",
+        StreamConfig(maxFilesPerTrigger = 1,
+          strategy = graft.cdc.WriteStrategy.MergeOnRead, compactEveryEpochs = 2))
+    }
+    val perEpoch = seen.jobs.groupBy(j =>
+      Option(j.properties.getProperty("streaming.sql.batchId")).map(_.toLong).getOrElse(-1L))
+      .map { case (e, js) => e -> js.size }
+    // epochs 1 and 3 fold the delta stack after their merge
+    assert(perEpoch == Map(0L -> 5, 1L -> 7, 2L -> 5, 3L -> 7), perEpoch.toString)
+    assert(stateOf(table) == oracleOf(cfg))
+  }
 }

@@ -17,6 +17,20 @@ class RefusingDeleteFileSystem extends LocalFileSystem {
   override def delete(p: Path, recursive: Boolean): Boolean = false
 }
 
+/** `file:` FileSystem on which every listing of a table's `_meta` races an
+  * expiry: the oldest snapshot manifest is deleted right after it is
+  * listed.
+  */
+class RacingExpiryFileSystem extends LocalFileSystem {
+  override def listStatus(p: Path): Array[org.apache.hadoop.fs.FileStatus] = {
+    val st = super.listStatus(p)
+    if (p.getName == "_meta")
+      st.map(_.getPath).filter(_.getName.startsWith("snap-")).sortBy(_.getName)
+        .headOption.foreach(super.delete(_, false))
+    st
+  }
+}
+
 /** Time-based snapshot retention: `expireSnapshots(olderThanMs)` keeps
   * every snapshot younger than the age even beyond `keepLast`, so the
   * changelog/time-travel retention contract is expressible in time units
@@ -144,5 +158,20 @@ class ExpirySpec extends AnyFunSuite {
       done.commitDirsReclaimed >= 1, done.toString)
     assert(table.snapshotIds == Seq(3L) && !orphanDir.exists())
     assert(table.read().count() == 20L)
+  }
+
+  test("history skips a listed snapshot whose manifest an expiry deleted") {
+    val root = Files.createTempDirectory("graft-expiry-").toString
+    val table = LakeTable.create(spark, root, schemaVer = 2, numBuckets = 4)
+    (0L to 2L).foreach(commitBatch(table, _))
+    val racing = Seq("fs.file.impl" -> classOf[RacingExpiryFileSystem].getName,
+      "fs.file.impl.disable.cache" -> "true")
+    racing.foreach { case (k, v) => spark.conf.set(k, v) }
+    val ids =
+      try LakeTable.load(spark, root).history.select("snapshot_id").collect().map(_.getLong(0)).toSeq
+      finally racing.foreach { case (k, _) => spark.conf.unset(k) }
+    // snapshot 0 was listed, then expired before its manifest was read
+    assert(ids == Seq(1L, 2L, 3L))
+    assert(table.snapshotIds == Seq(1L, 2L, 3L))
   }
 }

@@ -184,4 +184,10 @@ class ExpressionPipelineSpec extends AnyFunSuite {
         }
     }
   }
+
+  test("the ep1 oracle reads the ep1 metadata document, not the c4/c6 fixture") {
+    val sql = ExpressionPipeline.ep1.oracle.get
+    assert(sql.contains(s"read_json('${ExpressionPipeline.ep1MetaPath}'"))
+    assert(!sql.contains(graft.sources.JsonMetadata.fixturePath))
+  }
 }

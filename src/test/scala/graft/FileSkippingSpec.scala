@@ -182,7 +182,6 @@ class FileSkippingSpec extends AnyFunSuite {
   }
 
   test("scans plan from the manifest: no listing job, and readKey opens exactly filesForKey") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val table = LakeTable.create(spark, tmp(), schemaVer = 2, numBuckets = 40)
     def epoch(e: Int) = (0 until 400).map(i =>
       ev(e * 1000L + i, f"conv-$i%03d", 1, s"e$e $i"))
@@ -194,30 +193,12 @@ class FileSkippingSpec extends AnyFunSuite {
     // listing file index would plan these reads with a Spark job
     assert(snap.files.size > 32 && table.changedBuckets(table.snapshot(from), snap).size > 32)
 
-    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        descs.add(String.valueOf(e.properties.getProperty("spark.job.description")))
-    }
-    // Jobs that ran while planning: listener events arrive in order, so
-    // once a marker job started after planning is seen, every job started
-    // during planning has been seen too.
-    def planningJobs(plan: => org.apache.spark.sql.DataFrame): Seq[String] = {
-      descs.clear()
-      plan.queryExecution.executedPlan
-      val sc = spark.sparkContext
-      sc.setJobDescription("planning-marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!descs.contains("planning-marker") && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(descs.contains("planning-marker"), "marker job never reached the listener")
-      descs.toArray(Array.empty[String]).toSeq.filter(_ != "planning-marker")
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      assert(planningJobs(table.read()).isEmpty)
-      assert(planningJobs(table.readChangesSince(from)).isEmpty)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    // no job may run while either scan is planned
+    def planningJobs(plan: => org.apache.spark.sql.DataFrame) =
+      JobProbe.during(spark)(plan.queryExecution.executedPlan)._2.jobs
+        .map(j => String.valueOf(j.properties.getProperty("spark.job.description")))
+    assert(planningJobs(table.read()).isEmpty)
+    assert(planningJobs(table.readChangesSince(from)).isEmpty)
     assert(table.read().count() == 400L)
     assert(table.readChangesSince(from).count() == 400L)
 

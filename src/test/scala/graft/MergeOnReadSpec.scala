@@ -104,4 +104,55 @@ class MergeOnReadSpec extends AnyFunSuite {
     assert(table.current.files.size == nFiles) // no duplicate delta stack
     assert(finalState(table) == oracleState(cfg))
   }
+
+  test("compaction resolves inside its one bucket exchange: 2 jobs, one shuffle, one file per bucket, LWW rows") {
+    val cfg = GenConfig(numConvs = 40, maxTurns = 12, numEvents = 3000)
+    val table = LakeTable.create(spark, tmp(), schemaVer = 2, numBuckets = 12)
+    replay(table, cfg, batches = 3, _ => WriteStrategy.MergeOnRead)
+    // the LWW fold with tombstone winners kept: (conv, turn) -> (lsn, deleted)
+    val fold = (0L until cfg.totalRows).map(ChangeGen.rowAt(cfg, _))
+      .groupBy(e => (e.conv_id, e.turn_idx.toLong)).map { case (k, es) =>
+        val w = es.maxBy(_.lsn)
+        k -> ((w.lsn, w.op == "D"))
+      }
+    assert(fold.values.exists(_._2), "the generator should leave tombstone winners")
+    def stored(): Map[(String, Long), (Long, Boolean)] =
+      table.readConformed(table.current, None)
+        .select("conv_id", "turn_idx", "_lsn", "_deleted").collect()
+        .map(r => (r.getString(0), r.get(1).asInstanceOf[Number].longValue()) ->
+          ((r.getLong(2), r.getBoolean(3)))).toMap
+    val fat = table.current.files.map(_.bucket).toSet
+    assert(fat.size == 12)
+
+    val partsKey = "spark.sql.shuffle.partitions"
+    val prevParts = spark.conf.get(partsKey)
+    spark.conf.set(partsKey, "4") // fewer write tasks than buckets to compact
+    val (res, seen) =
+      try JobProbe.during(spark)(table.compact(foldDeltas = true))
+      finally spark.conf.set(partsKey, prevParts)
+    assert(res.applied)
+    assert(seen.jobs.size == 2, s"compaction ran ${seen.jobs.size} jobs")
+    assert(JobProbe.resultTasks(seen.jobs.maxBy(_.jobId)) == 4)
+    val writePlans = JobProbe.writePlans(seen)
+    assert(writePlans.size == 1)
+    assert(JobProbe.shuffles(writePlans.head).size == 1, writePlans.head.toString)
+    val files = table.current.files
+    assert(files.forall(_.kind == FileEntry.Base))
+    assert(files.groupBy(_.bucket).values.forall(_.size == 1))
+    assert(files.map(_.bucket).toSet == fat)
+    // the 12 buckets are dealt evenly over the 4 write tasks
+    val task = "part-(\\d+)-".r.unanchored
+    assert(files.groupBy(f => task.findFirstMatchIn(f.path).map(_.group(1))).values
+      .map(_.size).toSeq == Seq(3, 3, 3, 3))
+    assert(stored() == fold)
+    assert(finalState(table) == oracleState(cfg))
+
+    // dropping old tombstones: rows equal the fold minus tombstones below
+    // the cut; every bucket is rewritten (more than 0 files each)
+    val cut = fold.values.filter(_._2).map(_._1).toSeq.sorted.apply(fold.values.count(_._2) / 2)
+    assert(table.compact(maxFilesPerBucket = 0, dropTombstonesBelowLsn = cut).applied)
+    assert(stored() == fold.filter { case (_, (lsn, del)) => !del || lsn >= cut })
+    assert(table.current.files.groupBy(_.bucket).values.forall(_.size == 1))
+    assert(finalState(table) == oracleState(cfg))
+  }
 }

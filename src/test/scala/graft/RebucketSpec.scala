@@ -55,6 +55,24 @@ class RebucketSpec extends AnyFunSuite {
     assert(!state(table).exists(_.head == "conv-7"))
   }
 
+  test("rebucket resolves inside its one bucket exchange: one shuffle, one file per bucket") {
+    val table = LakeTable.create(spark, tmp(), schemaVer = 2, numBuckets = 4)
+    MergeApply.applyBatch(table, batch((0 until 60).map(i =>
+      ev(i + 1L, "I", s"conv-$i", 0, s"t$i")): _*), 0L,
+      strategy = graft.cdc.WriteStrategy.MergeOnRead)
+    MergeApply.applyBatch(table, batch((0 until 60 by 3).map(i =>
+      ev(100L + i, if (i % 2 == 0) "D" else "U", s"conv-$i", 0, s"u$i")): _*), 1L,
+      strategy = graft.cdc.WriteStrategy.MergeOnRead)
+    val before = state(table)
+    val (res, seen) = JobProbe.during(spark)(table.rebucket(6))
+    assert(res.applied)
+    assert(seen.jobs.size == 2, s"rebucket ran ${seen.jobs.size} jobs")
+    val write = JobProbe.writePlans(seen)
+    assert(write.size == 1 && JobProbe.shuffles(write.head).size == 1, write.toString)
+    assert(table.current.files.groupBy(_.bucket).values.forall(_.size == 1))
+    assert(state(table) == before)
+  }
+
   test("merging continues correctly after rebucket: generated replay " +
       "across the boundary equals the naive LWW oracle") {
     import spark.implicits._
