@@ -1,7 +1,6 @@
 package graft.cdc
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
@@ -83,8 +82,9 @@ object CdcStream {
     * recovery and re-created at the same path restarts epochs at 0 under
     * the OLD identity, so its first epochs fall under the old watermark
     * and genuinely new batches are silently fenced — data loss with no
-    * error. Create-exclusive write settles concurrent first starts; the
-    * loser reads the winner's id.
+    * error. A checkpoint without the id file mints one, whatever else it
+    * holds. [[LakeTable.publish]] settles concurrent first starts (the
+    * loser reads the winner's id, never a partly written one).
     */
   def writerIdOf(checkpointDir: String): String = {
     val p = new org.apache.hadoop.fs.Path(checkpointDir, "graft-writer-id")
@@ -97,26 +97,9 @@ object CdcStream {
       .map(hadoopConf).getOrElse(new org.apache.hadoop.conf.Configuration())
     val fs = p.getFileSystem(conf)
     if (fs.exists(p)) return LakeTable.readString(fs, p).trim
-    // Upgrade compat: a checkpoint created BEFORE the id file existed has
-    // offsets/commits but no id. Minting a fresh UUID would change identity
-    // while epochIds continue from N — the crash-window batch at upgrade
-    // time would re-apply unfenced (benign for LWW table state, but a
-    // duplicate snapshot/metrics row; additive tables fall back to the
-    // hash window). Seed with the legacy path-hash id those checkpoints
-    // committed under instead; only a genuinely EMPTY checkpoint mints.
-    val legacyState =
-      fs.exists(new org.apache.hadoop.fs.Path(checkpointDir, "offsets")) ||
-        fs.exists(new org.apache.hadoop.fs.Path(checkpointDir, "commits"))
-    val fresh =
-      if (legacyState) {
-        val d = java.security.MessageDigest.getInstance("SHA-256")
-          .digest(checkpointDir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        "w-" + d.take(6).map(b => f"$b%02x").mkString
-      } else "w-" + java.util.UUID.randomUUID.toString.replace("-", "").take(12)
+    val fresh = "w-" + java.util.UUID.randomUUID.toString.replace("-", "").take(12)
     fs.mkdirs(p.getParent)
-    // same atomic-claim primitive the snapshot commits use (NIO CREATE_NEW
-    // on file://, where Hadoop's create(overwrite=false) is non-atomic)
-    if (LakeTable.writeStringExclusive(fs, p, fresh)) fresh
+    if (LakeTable.publish(fs, p, fresh)) fresh
     else LakeTable.readString(fs, p).trim
   }
 
@@ -417,35 +400,7 @@ object CdcStream {
     StructField("source_file", StringType), StructField("epoch_id", LongType),
     StructField("snapshot_id", LongType)))
 
-  /** Drop LEGACY layout rows superseded by writer-scoped ones. Channels
-    * written before writer scoping lived at `_channel/eN` with no
-    * writer_id column (read back as null writer_id); a crash-window
-    * replay after the upgrade re-emits the same epoch into
-    * `_channel/<writer>/eN`, so without this filter monitoring would see
-    * the epoch twice (duplicated input_events in any aggregate).
-    *
-    * The supersede key is (epoch_id, snapshot_id), NOT epoch_id alone: a
-    * post-upgrade writer under a FRESH checkpoint restarts its epochs at
-    * 0, so a bare epoch match would hide legacy rows describing DIFFERENT
-    * batches that genuinely applied (undercounted aggregates). Only a
-    * re-emission of the SAME commit — same epoch AND same snapshot —
-    * duplicates a legacy row.
-    */
-  private def dropSupersededLegacy(df: DataFrame): DataFrame = {
-    val key = Seq("epoch_id", "snapshot_id")
-    val scoped = df.filter(col("writer_id").isNotNull)
-    val legacyLive = df.filter(col("writer_id").isNull)
-      .join(scoped.select(key.map(col): _*).distinct(), key, "left_anti")
-    scoped.unionByName(legacyLive.select(scoped.columns.map(col).toSeq: _*))
-  }
-
-  /** Read back the QC table. QC rows are NEVER superseded across
-    * layouts: the crash-window replay deliberately does not re-emit QC
-    * (its observed values rode the lost write plan), so a scoped QC row
-    * for a legacy epoch id can only come from a DIFFERENT batch (a
-    * fresh-checkpoint writer reusing the number) — both rows are real and
-    * must both survive.
-    */
+  /** Read back the QC table. */
   def qc(spark: SparkSession, tableRoot: String): DataFrame =
     channel(spark, s"$tableRoot/_qc", qcSchema)
 
@@ -458,9 +413,9 @@ object CdcStream {
 
   /** Read back the metrics table (per-batch observability surface). */
   def metrics(spark: SparkSession, tableRoot: String): DataFrame =
-    dropSupersededLegacy(channel(spark, s"$tableRoot/_metrics", metricsSchema))
+    channel(spark, s"$tableRoot/_metrics", metricsSchema)
 
   /** Read back the lineage table: source file → epoch → snapshot. */
   def lineage(spark: SparkSession, tableRoot: String): DataFrame =
-    dropSupersededLegacy(channel(spark, s"$tableRoot/_lineage", lineageSchema))
+    channel(spark, s"$tableRoot/_lineage", lineageSchema)
 }

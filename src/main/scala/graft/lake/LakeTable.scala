@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 
 import scala.collection.mutable
 
-import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, Options, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileContext, FileStatus, FileSystem, Options, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -24,8 +24,7 @@ import graft.model.Model
   * read path resolves by max `_lsn` per key until compaction folds them).
   * `len` is the file's byte length, taken from the listing that found the
   * file at write time: scans are planned from these entries alone
-  * ([[ManifestFileIndex]]), so a read never lists storage. -1 on entries
-  * from manifests written before the field existed; a scan stats those.
+  * ([[ManifestFileIndex]]), so a read never lists storage.
   */
 final case class FileEntry(path: String, bucket: Int, schemaVer: Int, rows: Long,
     live: Long = -1L, kind: String = FileEntry.Base, stats: Option[FileStats] = None,
@@ -65,7 +64,7 @@ final case class FileStats(minKey: String, maxKey: String,
   * load-bearing subset of Iceberg semantics the north rule needs, built
   * from scratch (no lake-format jars exist in this sandbox):
   *
-  *   - atomic snapshot commits (tmp-write + atomic rename of `_current`)
+  *   - atomic snapshot commits (put-if-absent publish of `snap-N`)
   *   - time-travelable snapshot ids (`snap-NNN.json` manifests kept)
   *   - schema-evolution metadata (`schemaVer` against a versioned registry)
   *   - exactly-once fencing (`epochId`; re-commit of an epoch is a no-op)
@@ -119,8 +118,7 @@ final case class FileStats(minKey: String, maxKey: String,
   *                  the rest, so both the snapshot JSON and the per-commit
   *                  metadata write volume are O(buckets touched), not
   *                  O(table). `files` is always the fully resolved list in
-  *                  memory (loaded from the refs at read time); empty
-  *                  `groupRefs` means the inline format.
+  *                  memory (loaded from the refs at read time).
   */
 final case class Snapshot(
     id: Long,
@@ -159,8 +157,8 @@ final case class GroupRef(g: Int, path: String, n: Int)
 final case class CommitResult(snapshot: Snapshot, applied: Boolean)
 
 /** Thrown when a commit cannot be applied without losing a concurrent
-  * committer's rows (write-set overlap with a missed commit), or when the
-  * snapshot-claim race cannot be resolved within the retry/wait budget.
+  * committer's rows (write-set overlap with a missed commit), or when it
+  * loses the snapshot-id race more than [[LakeTable.maxCommitRetries]] times.
   * Loud failure is the contract: the caller re-reads current state and
   * re-derives its files; nothing is ever silently dropped.
   */
@@ -171,8 +169,8 @@ final class CommitConflictException(msg: String) extends RuntimeException(msg)
   *
   * Layout (all under `root`):
   * {{{
-  *   _meta/_current          // name of the current snapshot manifest
-  *   _meta/snap-<id>.json    // immutable manifest per snapshot
+  *   _meta/snap-<id>.json    // immutable manifest per snapshot; the highest id is current
+  *   _meta/_current          // hint: a recent snapshot's manifest name
   *   data/c<id>-<salt>/_bucket=<n>/part-*.parquet
   * }}}
   *
@@ -189,7 +187,8 @@ final class CommitConflictException(msg: String) extends RuntimeException(msg)
   *     manifest files referenced from the snapshot, rewritten only for
   *     the groups a commit touches — snapshot JSON and per-commit
   *     metadata writes stay O(buckets touched) regardless of table size.
-  *   - Commits are metadata-only renames — O(1) regardless of data size.
+  *   - A commit is one put-if-absent manifest publish — O(1) regardless
+  *     of data size.
   *   - Scans are planned from the manifest: each file entry carries its
   *     byte length, and the scan is a `HadoopFsRelation` over exactly the
   *     snapshot's files ([[ManifestFileIndex]]). No read lists storage —
@@ -197,17 +196,19 @@ final class CommitConflictException(msg: String) extends RuntimeException(msg)
   *     parallel-discovery job — so planning cost is O(files read), with
   *     no I/O.
   *   - All paths go through Hadoop `FileSystem`, so `root` may be file://,
-  *     hdfs://, etc. `_current` swap uses `FileContext.rename(OVERWRITE)`,
-  *     which is atomic on HDFS and POSIX; object stores would swap in a
-  *     real catalog (documented limitation, matching Iceberg's own
+  *     hdfs://, etc. The publish is `link(2)` on POSIX and
+  *     `FileContext.rename(NONE)` elsewhere, both of which fail atomically
+  *     when the target exists; object stores without put-if-absent would
+  *     need a real catalog (documented limitation, matching Iceberg's own
   *     HadoopCatalog caveat).
   *
-  * Multi-writer safety: commits are optimistic-concurrency. A committer
-  * CLAIMS its snapshot id by create-exclusive manifest write — two
-  * committers racing for `snap-N` cannot both win; the loser waits for
-  * `_current` to advance, re-validates its write set (bucket overlap
-  * against the commits it missed, tracked via each snapshot's persisted
-  * `touched` set) and retries on the new parent, or fails LOUDLY with
+  * Multi-writer safety: commits are optimistic-concurrency. Publishing
+  * `snap-N` IS the commit — two committers racing for `snap-N` cannot
+  * both win, and a committer that dies after publishing has committed.
+  * The loser backs off, re-reads the current snapshot, re-validates its
+  * write set (bucket overlap against the commits it missed, tracked via
+  * each snapshot's persisted `touched` set) and retries on the new
+  * parent, or fails LOUDLY with
   * [[CommitConflictException]] when the write sets overlap — never a
   * silently lost snapshot. This covers the real deployment shape the
   * single-writer design left open: a CDC stream plus an out-of-band
@@ -268,58 +269,37 @@ final class LakeTable(
 
   // ---- metadata ----
 
-  def current: Snapshot = {
-    val name = currentName()
-    // Bounded retry on manifest not-found: the pointer exists, so a
-    // missing target is the swap window (or a racing expiry) — transient
-    // by construction. HDFS/POSIX renames are atomic, but Hadoop's
-    // local-FS FileContext rename(OVERWRITE) deletes the destination
-    // before renaming — a concurrent reader can land in that window.
-    // swapCurrent uses NIO ATOMIC_MOVE on file:// so the window is closed
-    // there; the retry covers any other FS with the same flaw.
-    var lastErr: java.io.FileNotFoundException = null
-    var i = 0
-    while (i < 40) {
-      val nm = if (i == 0) name else currentName()
-      try return readManifest(fs, new Path(metaDir, nm))
-      catch {
-        case e: java.io.FileNotFoundException => lastErr = e; sleepInterruptibly(10)
-      }
-      i += 1
-    }
-    throw lastErr
+  /** The current snapshot: the highest published `snap-N`. `_current` is
+    * only a hint where to start looking. Ids are dense, so probing forward
+    * from the hint costs O(1 + lag) existence checks; a missing or
+    * unreadable hint, or one whose manifest an expiry deleted, falls back
+    * to listing `_meta`.
+    */
+  def current: Snapshot =
+    try readManifest(fs, snapPath(latestFrom(hintId)))
+    catch { case _: java.io.FileNotFoundException => readManifest(fs, snapPath(latestFrom(-1L))) }
+
+  private def latestFrom(hint: Long): Long = {
+    var id = if (hint >= 0) hint else snapshotIds.lastOption.getOrElse(
+      throw new java.io.FileNotFoundException(s"no lake table at $root (no snapshot in $metaDir)"))
+    while (fs.exists(snapPath(id + 1))) id += 1
+    id
   }
 
-  /** Current snapshot id from the pointer alone — no manifest read, no
-    * group resolution. The claim-race poll compares only ids, so polling
-    * the FULL snapshot (up to 64 group-manifest round trips on a sharded
-    * table, every 25 ms) would turn the wait into a metadata storm.
+  /** The id `_current` names, or -1. The hint is rewritten in place, so a
+    * racing read can see it empty or cut short; only a whole name counts.
     */
-  def currentId: Long =
-    currentName().stripPrefix("snap-").stripSuffix(".json").toLong
+  private def hintId: Long =
+    try {
+      val name = readString(fs, currentPtr).trim
+      if (name.startsWith("snap-") && name.endsWith(".json")) idOf(name) else -1L
+    } catch { case _: java.io.IOException | _: NumberFormatException => -1L }
 
-  /** Read the `_current` pointer with a SHORT retry: a missing pointer is
-    * either a table that does not exist (fail fast, clear message) or the
-    * sub-10ms rename window of a flawed FS (retry a few times).
-    */
-  private def currentName(): String = {
-    var i = 0
-    var lastErr: java.io.FileNotFoundException = null
-    while (i < 5) {
-      try return readString(fs, currentPtr).trim
-      catch {
-        case e: java.io.FileNotFoundException => lastErr = e; sleepInterruptibly(10)
-      }
-      i += 1
-    }
-    throw new java.io.FileNotFoundException(
-      s"no lake table at $root (missing ${currentPtr}): ${lastErr.getMessage}")
-  }
+  private def idOf(name: String): Long = name.stripPrefix("snap-").stripSuffix(".json").toLong
 
   def snapshotIds: Seq[Long] = {
     val st = fs.listStatus(metaDir)
-    st.map(_.getPath.getName).filter(_.startsWith("snap-"))
-      .map(n => n.stripPrefix("snap-").stripSuffix(".json").toLong).sorted.toSeq
+    st.map(_.getPath.getName).filter(_.startsWith("snap-")).map(idOf).sorted.toSeq
   }
 
   def snapshot(id: Long): Snapshot = readManifest(fs, snapPath(id))
@@ -331,7 +311,7 @@ final class LakeTable(
   /** Snapshot history as a DataFrame — the operational metadata surface
     * (Iceberg's `.history`/`.snapshots` shape): one row per RETAINED
     * snapshot with commit lineage, writer identity, schema/bucket layout,
-    * row accounting and the commit instant (manifest mtime — the claim
+    * row accounting and the commit instant (manifest mtime — the publish
     * instant, same clock [[expireSnapshots]]' age-based retention uses).
     * Driver-side metadata only, bounded by retention: expireSnapshots
     * caps how many manifests exist, so this never scans data. A snapshot
@@ -568,18 +548,13 @@ final class LakeTable(
   /** Scan of `wanted`, conformed to `targetVer`, planned from the manifest
     * with no listing: each writer version's files become one parquet
     * `HadoopFsRelation` over a [[ManifestFileIndex]] of exactly those
-    * files. An entry without a recorded length (older manifests) is
-    * stat'ed here instead; nothing else touches the filesystem before the
-    * scan runs. The data schema is made nullable, as Spark does for a
-    * user-specified read schema.
+    * files; nothing touches the filesystem before the scan runs. The data
+    * schema is made nullable, as Spark does for a user-specified read
+    * schema.
     */
   private def readFiles(wanted: Seq[FileEntry], targetVer: Int): DataFrame = {
     def scan(fes: Seq[FileEntry], ver: Int): DataFrame = {
-      val files = fes.map { f =>
-        val p = new Path(f.path)
-        if (f.len >= 0) new FileStatus(f.len, false, 1, 0L, 0L, p)
-        else p.getFileSystem(hadoopConf).getFileStatus(p)
-      }
+      val files = fes.map(f => new FileStatus(f.len, false, 1, 0L, 0L, new Path(f.path)))
       spark.baseRelationToDataFrame(HadoopFsRelation(new ManifestFileIndex(files),
         partitionSchema = new StructType(),
         dataSchema = asNullable(physicalSchema(ver)).asInstanceOf[StructType],
@@ -650,12 +625,13 @@ final class LakeTable(
     * written and the existing snapshot is returned (`applied = false`) —
     * this is the exactly-once guarantee under foreachBatch replay.
     *
-    * Concurrency: the snapshot id is CLAIMED by create-exclusive manifest
-    * write, so two committers (separate drivers — e.g. the CDC stream plus
-    * an out-of-band compaction) cannot both win `snap-N`. The loser waits
-    * for `_current` to advance and retries on the new parent — but only
-    * after validating that none of the commits it missed touched its own
-    * write set. `baseSnapshotId` is the snapshot the CALLER derived
+    * Concurrency: the commit point is the put-if-absent publish of the
+    * `snap-N` manifest ([[LakeTable.publish]]), so two committers
+    * (separate drivers — e.g. the CDC stream plus an out-of-band
+    * compaction) cannot both win `snap-N`. The winner then rewrites the
+    * `_current` hint. The loser backs off and retries on the new parent —
+    * but only after validating that none of the commits it missed touched
+    * its own write set. `baseSnapshotId` is the snapshot the CALLER derived
     * `newFiles` from (its read set); when commits landed since, and any of
     * them replaced one of our buckets, retrying would silently drop those
     * rows — so the commit throws [[CommitConflictException]] instead (the
@@ -787,17 +763,19 @@ final class LakeTable(
         groupRefs =
           if (!sharded(nb)) Nil
           else shardGroupRefs(cur, allFiles, replacedBuckets, newFiles, nb))
-      if (writeStringExclusive(fs, snapPath(snap.id), manifestJson(snap))) {
-        swapCurrent(snap.id)
+      if (publish(fs, snapPath(snap.id), manifestJson(snap))) {
+        // The snapshot is committed; the hint only saves the next reader a
+        // longer probe, so failing to write it fails nothing.
+        try writeString(fs, currentPtr, snapPath(snap.id).getName)
+        catch { case _: java.io.IOException => }
         return CommitResult(snap, applied = true)
       }
-      // Claim lost: another committer owns snap-(cur.id+1). Wait for its
-      // `_current` swap to land, then loop (re-fence, re-validate, re-id).
+      // Claim lost: another committer published snap-(cur.id+1), so the
+      // next `current` sees it. Loop (re-fence, re-validate, re-id).
       // Jittered exponential backoff breaks claim lockstep: without it two
-      // steady committers re-synchronize on every swap and re-race for
+      // steady committers re-synchronize on every commit and re-race for
       // each next id, and one can lose every round.
       attempt += 1
-      awaitCurrentAdvance(cur.id, writerId)
       sleepInterruptibly(1 + java.util.concurrent.ThreadLocalRandom.current()
         .nextLong(4L << math.min(attempt, 7)))
     }
@@ -818,16 +796,13 @@ final class LakeTable(
     val gsz = groupSize(numBuckets)
     val touched = (replacedBuckets.iterator ++ newFiles.iterator.map(_.bucket))
       .map(_ / gsz).toSet
-    // Inline→sharded migration: a parent written in the inline format (or
-    // pre-sharding) has no groupRefs to carry forward — on the FIRST
-    // sharded commit every group holding files must be materialized, else
-    // the untouched groups' files silently vanish from the persisted
-    // snapshot (and the next expiry would GC their data as orphans). A
-    // BUCKET-COUNT change (rebucket) re-materializes everything too: the
-    // parent's refs are grouped by the OLD group size, so none can carry
-    // forward (the rebucket replaced every file anyway).
+    // A BUCKET-COUNT change (rebucket, including one that crosses the
+    // shard threshold from the inline format) re-materializes every group
+    // holding files: the parent's refs, if any, are grouped by the OLD
+    // group size, so none can carry forward (the rebucket replaced every
+    // file anyway).
     val changed =
-      if (cur.groupRefs.isEmpty || numBuckets != cur.numBuckets)
+      if (numBuckets != cur.numBuckets)
         touched ++ allFiles.iterator.map(_.bucket / gsz).toSet
       else touched
     // On a bucket-count change NO parent ref may survive — its group id is
@@ -882,23 +857,6 @@ final class LakeTable(
     }
   }
 
-  /** Bounded wait for a racing committer's `_current` swap. A claimer that
-    * crashed between manifest write and swap leaves its id orphaned — after
-    * the wait budget the commit throws (operator intervention: delete the
-    * orphaned `snap-N.json`), which is loud, bounded, and loses nothing.
-    */
-  private def awaitCurrentAdvance(beyondId: Long, writerId: String): Unit = {
-    val deadline = System.nanoTime() + claimWaitMs * 1000000L
-    while (System.nanoTime() < deadline) {
-      if (currentId > beyondId) return
-      sleepInterruptibly(25)
-    }
-    throw new CommitConflictException(
-      s"commit by writer '$writerId' at $root: snapshot ${beyondId + 1} is claimed but " +
-        s"_current did not advance within ${claimWaitMs} ms — a racing committer may have " +
-        "crashed between claim and swap (delete its orphaned manifest to recover)")
-  }
-
   /** Epoch fence, scoped per writer identity: a commit is a replay no-op
     * only when the SAME writer already committed this epoch or a later one.
     * A different writer (fresh checkpoint — its epochIds restart at 0)
@@ -923,7 +881,7 @@ final class LakeTable(
       (cur.writerId == writerId && cur.epochId >= 0)
 
   /** Sleep that propagates interrupts WITH the flag restored — a stream
-    * stop() landing mid-claim-wait must surface as an interrupt the caller
+    * stop() landing mid-backoff must surface as an interrupt the caller
     * can see (same hygiene as [[graft.cdc.Retry]]'s backoff sleep).
     */
   private def sleepInterruptibly(ms: Long): Unit =
@@ -933,33 +891,6 @@ final class LakeTable(
         Thread.currentThread().interrupt()
         throw ie
     }
-
-  private def swapCurrent(id: Long): Unit = {
-    val scheme = Option(rootPath.toUri.getScheme).getOrElse("file")
-    if (scheme == "file") {
-      // True atomic replace on POSIX via NIO — Hadoop's local FileContext
-      // rename(OVERWRITE) is delete-then-rename, which exposes a missing
-      // `_current` to concurrent readers. Written outside the checksum
-      // layer; the stale `.crc` shadow (from the initial Hadoop-written
-      // pointer) goes first so no reader ever pairs new content with an
-      // old checksum.
-      val crc = new Path(metaDir, s".${currentPtr.getName}.crc")
-      if (fs.exists(crc)) fs.delete(crc, false)
-      val tmpNio = java.nio.file.Paths.get(
-        new Path(metaDir, s"._current.tmp-$id").toUri.getPath)
-      java.nio.file.Files.write(tmpNio,
-        snapPath(id).getName.getBytes(StandardCharsets.UTF_8))
-      java.nio.file.Files.move(tmpNio,
-        java.nio.file.Paths.get(currentPtr.toUri.getPath),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    } else {
-      val tmp = new Path(metaDir, s"._current.tmp-$id")
-      writeString(fs, tmp, snapPath(id).getName)
-      val fc = FileContext.getFileContext(rootPath.toUri, hadoopConf)
-      fc.rename(tmp, currentPtr, Options.Rename.OVERWRITE)
-    }
-  }
 
   // ---- data file write helper ----
 
@@ -1367,13 +1298,15 @@ final class LakeTable(
   /** @param orphanGraceMs age floor for ORPHAN deletion (group manifests /
     *                      data files referenced by no kept snapshot). A
     *                      concurrent committer writes its data files and
-    *                      group manifests BEFORE it claims `snap-N`, so an
-    *                      expiry running in that window sees them as
+    *                      group manifests BEFORE it publishes `snap-N`, so
+    *                      an expiry running in that window sees them as
     *                      orphans — deleting them would corrupt the commit
     *                      the moment it lands. Files younger than the
-    *                      grace are skipped (a claimed-but-unswapped
-    *                      snapshot needs no grace: its manifest is listed,
-    *                      so its refs and files are already live here).
+    *                      grace are skipped (a published snapshot needs no
+    *                      grace: its manifest is listed, so its refs and
+    *                      files are already live here). Publish temps a
+    *                      crashed committer left in `_meta` go by the same
+    *                      age floor.
     *                      Single-writer maintenance (tests, in-replay GC)
     *                      passes 0 for immediate reclamation.
     * @param olderThanMs   TIME-BASED retention (Iceberg's
@@ -1387,7 +1320,7 @@ final class LakeTable(
     *                      baseline taken in the last 7 days stays
     *                      readable" — which is how changelog consumers
     *                      reason, not in snapshot counts. Age is the
-    *                      manifest file's mtime (the commit's claim
+    *                      manifest file's mtime (the commit's publish
     *                      instant). Negative (default) = count-based
     *                      retention only, the pre-existing behavior.
     */
@@ -1417,14 +1350,13 @@ final class LakeTable(
     val snapsDeleted = ids.filterNot(keep).count(id => fs.delete(snapPath(id), false))
     // delete group manifests no kept snapshot references (expired
     // snapshots' groups + orphans from lost commit-claim races), unless
-    // young enough to be an in-flight commit's pre-claim write
+    // young enough to be an in-flight commit's pre-claim write; publish
+    // temps a crash leaked go by the same grace
     val liveRefs: Set[String] = keptSnaps.flatMap(_.groupRefs.map(_.path)).toSet
-    val deadRefs = fs.listStatus(metaDir)
-      .filter(st => st.getPath.getName.startsWith("m-") &&
-        st.getPath.getName.endsWith(".json") &&
-        !liveRefs.contains(st.getPath.getName) &&
-        st.getModificationTime < cutoff)
-    val refsDeleted = deadRefs.count(st => fs.delete(st.getPath, false))
+    val oldMeta = fs.listStatus(metaDir).filter(_.getModificationTime < cutoff).map(_.getPath)
+    val refsDeleted = oldMeta.filter(p => p.getName.startsWith("m-") &&
+      p.getName.endsWith(".json") && !liveRefs.contains(p.getName)).count(fs.delete(_, false))
+    oldMeta.filter(_.getName.startsWith(PublishTempPrefix)).foreach(fs.delete(_, false))
     // delete orphan data files, same grace
     var dirsReclaimed = 0
     var filesDeleted = 0
@@ -1549,16 +1481,10 @@ object LakeTable {
     */
   val maxCommitRetries = 16
 
-  /** Wait budget (ms) for a racing claimer's `_current` swap to land
-    * before declaring it crashed. sys-prop override for tests.
-    */
-  def claimWaitMs: Long =
-    sys.props.get("graft.lake.claimWaitMs").map(_.toLong).getOrElse(5000L)
-
   /** Default orphan-deletion age floor for [[LakeTable.expireSnapshots]]:
     * long enough that any concurrent commit whose data files / group
-    * manifests predate its `snap-N` claim has claimed (or died) before its
-    * artifacts become eligible — the Iceberg remove-orphans pattern.
+    * manifests predate its `snap-N` publish has published (or died) before
+    * its artifacts become eligible — the Iceberg remove-orphans pattern.
     */
   val defaultOrphanGraceMs: Long = 30L * 60 * 1000
 
@@ -1592,18 +1518,17 @@ object LakeTable {
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
     val metaDir = new Path(rootPath, "_meta")
-    // Re-creating over an existing table must start METADATA-fresh:
-    // resetting `_current` to snap-0 while a stale snap-1.json survives
-    // from the previous incarnation would deadlock the next commit — its
-    // create-exclusive claim of id 1 always loses to the stale file and
-    // `_current` never advances (observed when a bench child was killed
-    // and its table path reused). Old DATA files are left in place:
-    // snap-0 references none of them, so they are merely orphans.
+    // Re-creating over an existing table must start METADATA-fresh: the
+    // highest `snap-N` is the current snapshot, so a stale snap-1.json
+    // surviving from the previous incarnation would BE the re-created
+    // table's state (observed when a bench child was killed and its table
+    // path reused). Old DATA files are left in place: snap-0 references
+    // none of them, so they are merely orphans.
     if (fs.exists(metaDir) && !fs.delete(metaDir, true))
       throw new IllegalStateException(
         s"create: failed to delete stale table metadata at $metaDir — " +
-          "refusing to proceed (surviving snap-N manifests would deadlock " +
-          "the re-created table's first commit)")
+          "refusing to proceed (surviving snap-N manifests would resurface " +
+          "as the re-created table's state)")
     fs.mkdirs(metaDir)
     val snap = Snapshot(0L, -1L, -1L, schemaVer, numBuckets, 0L, -1L, Nil)
     val t = new LakeTable(spark, root, registry, keyCols, renames)
@@ -1620,8 +1545,9 @@ object LakeTable {
     new LakeTable(spark, root, registry, keyCols, renames)
 
   def exists(spark: SparkSession, root: String): Boolean = {
-    val p = new Path(root, "_meta/_current")
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
+    val meta = new Path(root, "_meta")
+    val fs = meta.getFileSystem(spark.sessionState.newHadoopConf())
+    fs.exists(meta) && fs.listStatus(meta).exists(_.getPath.getName.startsWith("snap-"))
   }
 
   /** Driver-side twin of [[graft.cdc.MergeApply.bucketOf]]: the same
@@ -1702,10 +1628,8 @@ object LakeTable {
           else ""
         s""",$kk"mn2":${s.min2},"mx2":${s.max2},"mnl":${s.minLsn},"mxl":${s.maxLsn}"""
       }.getOrElse("")
-      // `len` is optional the same way: written when known, -1 when absent.
-      val ln = if (f.len >= 0) s""","len":${f.len}""" else ""
       s"""{"path":"${esc(f.path)}","bucket":${f.bucket},"schemaVer":${f.schemaVer},""" +
-        s""""rows":${f.rows},"live":${f.live},"kind":"${esc(f.kind)}"$st$ln}"""
+        s""""rows":${f.rows},"live":${f.live},"kind":"${esc(f.kind)}"$st,"len":${f.len}}"""
     }.mkString("[", ",", "]")
 
   /** One bucket-group manifest (sharded format). */
@@ -1733,7 +1657,7 @@ object LakeTable {
         if (f.has("live")) f.get("live").asLong() else -1L,
         if (f.has("kind")) f.get("kind").asText() else FileEntry.Base,
         stats,
-        if (f.has("len")) f.get("len").asLong() else -1L)
+        f.get("len").asLong())
     }
 
   private[graft] def manifestJson(s: Snapshot): String = {
@@ -1807,39 +1731,46 @@ object LakeTable {
       parseGroupManifest(readString(fs, new Path(p.getParent, r.path)))))
   }
 
+  /** Plain overwrite, past the checksum layer of a checksummed FS such as
+    * `file:`: the `_current` hint is rewritten in place, and a reader
+    * racing that rewrite must see a short read, not a data/`.crc` mismatch
+    * (which the local FS answers by moving the file to `bad_files`).
+    */
   private[lake] def writeString(fs: FileSystem, p: Path, s: String): Unit = {
-    val out = fs.create(p, true)
+    val raw = fs match {
+      case c: ChecksumFileSystem => c.getRawFileSystem
+      case o => o
+    }
+    val out = raw.create(p, true)
     try out.write(s.getBytes(StandardCharsets.UTF_8)) finally out.close()
   }
 
-  /** Create-exclusive write — the snapshot-id CLAIM primitive. Returns
-    * false when another committer already owns `p`. On the file scheme
-    * this MUST be NIO `CREATE_NEW` (O_CREAT|O_EXCL, atomic in the kernel):
-    * Hadoop's local create(overwrite=false) is a non-atomic exists check
-    * followed by an O_TRUNC open, so two racing claimers could both pass
-    * the check and the second would truncate the winner's manifest — a
-    * corrupted snapshot, not just a lost race. HDFS create(false) is
-    * atomic at the namenode, so the Hadoop path is safe there.
+  /** Name prefix of [[publish]]'s temps: hidden, and never `snap-` or `m-`. */
+  private[graft] val PublishTempPrefix = ".publish-"
+
+  /** Put-if-absent write — the commit point of a snapshot and the engine's
+    * only create-if-absent path. The bytes go to a hidden temp beside `p`
+    * first; the temp is then put in place by an operation that fails
+    * atomically when `p` exists: `link(2)` on `file:` (NIO's ATOMIC_MOVE
+    * is `rename(2)`, which would silently replace `p`) and
+    * `FileContext.rename(NONE)` elsewhere (atomic at the HDFS namenode).
+    * So a reader sees no file or the whole file, never a partial one.
+    * Returns false when `p` already exists. A temp a crash leaks is swept
+    * by [[LakeTable.expireSnapshots]].
     */
-  private[graft] def writeStringExclusive(fs: FileSystem, p: Path, s: String): Boolean =
-    if (fs.getScheme == "file")
-      try {
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(p.toUri.getPath),
-          s.getBytes(StandardCharsets.UTF_8),
-          java.nio.file.StandardOpenOption.CREATE_NEW,
-          java.nio.file.StandardOpenOption.WRITE)
-        true
-      } catch { case _: java.nio.file.FileAlreadyExistsException => false }
-    else
-      try {
-        val out = fs.create(p, false)
-        try out.write(s.getBytes(StandardCharsets.UTF_8)) finally out.close()
-        true
-      } catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
-        case e: java.io.IOException if fs.exists(p) => false
-      }
+  private[graft] def publish(fs: FileSystem, p: Path, s: String): Boolean = {
+    val tmp = new Path(p.getParent, PublishTempPrefix + java.util.UUID.randomUUID)
+    writeString(fs, tmp, s)
+    try {
+      if (fs.getScheme == "file")
+        java.nio.file.Files.createLink(java.nio.file.Paths.get(p.toUri.getPath),
+          java.nio.file.Paths.get(tmp.toUri.getPath))
+      else FileContext.getFileContext(p.toUri, fs.getConf).rename(tmp, p, Options.Rename.NONE)
+      true
+    } catch {
+      case _: java.io.IOException if fs.exists(p) => false
+    } finally fs.delete(tmp, false)
+  }
 
   private[graft] def readString(fs: FileSystem, p: Path): String = {
     val in = fs.open(p)

@@ -256,44 +256,6 @@ class CdcStreamSpec extends AnyFunSuite {
     assert(CdcStream.metrics(spark, s"$base/table").columns.contains("events_per_sec"))
   }
 
-  test("legacy (pre-writer-scoping) channel rows are superseded per epoch, kept otherwise") {
-    import spark.implicits._
-    val base = tmp()
-    LakeTable.create(spark, s"$base/table", schemaVer = 1, numBuckets = 4)
-    val root = s"$base/table"
-    // Legacy layout: _metrics/eN parquet with NO writer_id column (as the
-    // pre-scoping release wrote it) for epochs 0 and 1.
-    def legacy(e: Long): Unit =
-      Seq((e, 1L, 100L, 10L, 2, 1, 50L, 10L, 5L, 1.0, 10L, 10L))
-        .toDF("epoch_id", "snapshot_id", "input_events", "deduped_keys",
-          "touched_buckets", "schema_ver", "max_lsn", "live_rows", "duration_ms",
-          "events_per_sec", "observed_rows", "observed_live")
-        .coalesce(1).write.mode("overwrite").parquet(s"$root/_metrics/e$e")
-    legacy(0L); legacy(1L)
-    def scoped(w: String, e: Long, snap: Long): Unit =
-      Seq((w, e, snap, 100L, 10L, 2, 1, 50L, 10L, 5L, 1.0, 10L, 10L))
-        .toDF("writer_id", "epoch_id", "snapshot_id", "input_events", "deduped_keys",
-          "touched_buckets", "schema_ver", "max_lsn", "live_rows", "duration_ms",
-          "events_per_sec", "observed_rows", "observed_live")
-        .coalesce(1).write.mode("overwrite").parquet(s"$root/_metrics/$w/e$e")
-    // Post-upgrade crash replay re-emits epoch 0 of the SAME commit
-    // (snapshot 1 — the replay re-derives the id from the epoch commit
-    // itself): the legacy row is superseded.
-    scoped("w1", 0L, snap = 1L)
-    // A FRESH-checkpoint writer reuses epoch number 1 for a DIFFERENT
-    // batch (snapshot 7): both rows are real — a bare epoch-id supersede
-    // would hide the legacy batch and undercount every aggregate.
-    scoped("w2", 1L, snap = 7L)
-    val m = CdcStream.metrics(spark, root)
-    // Epoch 0 appears ONCE (scoped replay wins over its own legacy row).
-    assert(m.filter($"epoch_id" === 0L).count() == 1L)
-    assert(m.filter($"epoch_id" === 0L && $"writer_id".isNotNull).count() == 1L)
-    // Epoch 1: the legacy batch AND w2's unrelated batch both survive.
-    assert(m.filter($"epoch_id" === 1L).count() == 2L)
-    assert(m.filter($"epoch_id" === 1L && $"writer_id".isNull).count() == 1L)
-    assert(m.count() == 3L)
-  }
-
   test("A8 observe: merge metrics ride the write plan and match file stats") {
     val base = tmp()
     val cfg = GenConfig(numConvs = 20, maxTurns = 10, numEvents = 1200)

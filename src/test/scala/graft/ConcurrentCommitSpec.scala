@@ -1,7 +1,10 @@
 package graft
 
-import java.nio.file.Files
-import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicBoolean
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,6 +16,7 @@ import graft.lake.{CommitConflictException, FileEntry, LakeTable}
   * out-of-band maintenance job) must never silently lose a commit. Either
   * both land (disjoint write sets → rebase) or one fails loudly with
   * CommitConflictException (overlapping write sets / unresolvable race).
+  * Publishing `snap-N` is the commit; `_current` is only a hint.
   */
 class ConcurrentCommitSpec extends AnyFunSuite {
 
@@ -119,25 +123,84 @@ class ConcurrentCommitSpec extends AnyFunSuite {
     assert(files.exists(_.path == fe(3, "a").path) && files.exists(_.path == delta.path))
   }
 
-  test("a claimed snapshot whose committer never swaps _current fails the " +
-      "waiter loudly within the wait budget") {
+  private def snapFile(root: String, id: Long) = Paths.get(root, "_meta", f"snap-$id%010d.json")
+
+  test("a published snapshot whose committer never wrote the hint is current, " +
+      "and the next commit lands on top of it at once") {
+    val root = tmp()
+    val t = LakeTable.create(spark, root, schemaVer = 1, numBuckets = 8)
+    // a committer that died right after publishing snap-1: its manifest is
+    // whole, but the `_current` hint still names snap-0
+    val crashed = t.current.copy(id = 1L, parent = 0L, epochId = 0L, writerId = "wDead",
+      files = Seq(fe(0, "dead")), writerEpochs = Map("wDead" -> 0L), touched = Some(Seq(0)))
+    Files.writeString(snapFile(root, 1L), LakeTable.manifestJson(crashed))
+    assert(Files.readString(Paths.get(root, "_meta", "_current")).trim ==
+      snapFile(root, 0L).getFileName.toString)
+    assert(t.current.id == 1L && t.current.files == crashed.files)
+    val t0 = System.nanoTime()
+    val r = t.commit(Seq(fe(1, "next")), Set(1), 0L, 1, 0L, 0L, writerId = "wX",
+      baseSnapshotId = t.current.id)
+    val ms = (System.nanoTime() - t0) / 1000000L
+    assert(r.applied && r.snapshot.id == 2L && r.snapshot.parent == 1L)
+    // landing must not wait on a hint update that never comes
+    assert(ms < 3000L, s"commit took $ms ms")
+    val cur = LakeTable.load(spark, root).current
+    assert(cur.id == 2L && cur.files.map(_.path).toSet == Set(fe(0, "dead").path, fe(1, "next").path))
+    // the crashed writer's replay of its epoch is fenced: it committed
+    assert(!t.commit(Seq(fe(0, "dead")), Set(0), 0L, 1, 0L, 0L, writerId = "wDead").applied)
+  }
+
+  test("current resolves to the newest snapshot when the hint is missing, empty, " +
+      "cut short or names an expired snapshot") {
+    val root = tmp()
+    val t = LakeTable.create(spark, root, schemaVer = 1, numBuckets = 8)
+    (0 until 3).foreach(e => assert(t.commit(Seq(fe(e, s"e$e")), Set(e), e.toLong, 1, 0L,
+      e.toLong, writerId = "w").applied))
+    t.expireSnapshots(keepLast = 1, orphanGraceMs = 0L)
+    assert(t.snapshotIds == Seq(3L))
+    val hint = Paths.get(root, "_meta", "_current")
+    def check(what: String): Unit = {
+      val cur = LakeTable.load(spark, root).current
+      assert(cur.id == 3L && cur.files.size == 3, what)
+    }
+    Files.delete(hint)
+    check("missing")
+    Files.writeString(hint, "")
+    check("empty")
+    Files.writeString(hint, "snap-00000")
+    check("cut short")
+    Files.writeString(hint, snapFile(root, 1L).getFileName.toString)
+    check("expired target")
+  }
+
+  test("history and expiry beside ~200 commits never read a partial manifest") {
     val root = tmp()
     LakeTable.create(spark, root, schemaVer = 1, numBuckets = 8)
-    val t = LakeTable.load(spark, root)
-    // simulate a claimer that crashed between manifest write and swap:
-    // snap-1 exists, _current still points at snap-0
-    val metaDir = new java.io.File(root, "_meta")
-    val orphan = new java.io.File(metaDir, f"snap-${1L}%010d.json")
-    val w = new java.io.FileWriter(orphan)
-    try w.write("{}") finally w.close()
-    sys.props("graft.lake.claimWaitMs") = "300"
-    try {
-      val ex = intercept[CommitConflictException] {
-        t.commit(Seq(fe(0, "x")), Set(0), 0L, 1, 0L, 0L, writerId = "wX",
-          baseSnapshotId = t.current.id)
-      }
-      assert(ex.getMessage.contains("claimed"))
-    } finally sys.props.remove("graft.lake.claimWaitMs")
+    val n = 200
+    val done = new AtomicBoolean(false)
+    val errors = new ConcurrentLinkedQueue[Throwable]()
+    val committer = new Thread(() => {
+      val t = LakeTable.load(spark, root)
+      try (0 until n).foreach(e => assert(t.commit(Seq(fe(e % 8, s"e$e")), Set(e % 8),
+        e.toLong, 1, 0L, e.toLong, writerId = "w").applied))
+      catch { case e: Throwable => errors.add(e) }
+      finally done.set(true)
+    })
+    val lister = LakeTable.load(spark, root)
+    lister.history // warm the DataFrame path before the race starts
+    committer.start()
+    var rounds = 0
+    while (!done.get) {
+      try {
+        lister.history
+        lister.expireSnapshots(orphanGraceMs = 30L * 60 * 1000)
+      } catch { case e: Throwable => errors.add(e) }
+      rounds += 1
+    }
+    committer.join()
+    assert(errors.isEmpty, errors.iterator.asScala.map(_.toString).mkString("\n"))
+    assert(rounds > 1)
+    assert(LakeTable.load(spark, root).current.id == n.toLong)
   }
 
   test("re-creating a table over an existing one starts metadata-fresh " +

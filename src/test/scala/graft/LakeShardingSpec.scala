@@ -66,39 +66,6 @@ class LakeShardingSpec extends AnyFunSuite {
     assert(snapJsonBytes(root, 11L) < 8 * 1024)
   }
 
-  test("inline-manifest parent (pre-sharding upgrade) migrates losslessly " +
-      "on its first sharded commit") {
-    // Simulate a 128-bucket table written by a release that predates the
-    // sharded format: its snapshot embeds `files` inline and has no
-    // groupRefs. The first commit under the sharded format must
-    // materialize EVERY group holding files — reusing the (empty) parent
-    // refs would silently drop all untouched groups' files.
-    val root = tmp()
-    new java.io.File(s"$root/_meta").mkdirs()
-    val oldFiles = (0 until 128 by 2).map(b => fe(b, "old"))
-    val filesJson = oldFiles.map(f =>
-      s"""{"path":"${f.path}","bucket":${f.bucket},"schemaVer":1,"rows":1,"live":1}""")
-      .mkString("[", ",", "]")
-    val json = s"""{"id":1,"parent":0,"epochId":0,"schemaVer":1,"numBuckets":128,""" +
-      s""""rows":64,"maxLsn":0,"writer":"old","inputEvents":-1,"dedupedKeys":-1,""" +
-      s""""mergeMs":-1,"writerEpochs":[{"w":"old","e":0}],"batchHashes":[],""" +
-      s""""files":$filesJson}"""
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$root/_meta/snap-0000000001.json"), json)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$root/_meta/_current"), "snap-0000000001.json")
-    val t = LakeTable.load(spark, root)
-    assert(t.current.files.size == oldFiles.size)
-    assert(t.commit(Seq(fe(0, "new")), Set(0), 1L, 1, 0L, 1L, writerId = "w",
-      baseSnapshotId = t.current.id).applied)
-    val after = LakeTable.load(spark, root).current
-    assert(after.groupRefs.nonEmpty, "expected sharded metadata after migration")
-    val paths = after.files.map(_.path).toSet
-    assert(paths.contains(fe(0, "new").path))
-    oldFiles.filter(_.bucket != 0).foreach(f => assert(paths.contains(f.path),
-      s"${f.path} vanished in the inline->sharded migration"))
-  }
-
   test("orphan GC grace: young unreferenced files survive expiry, zero-grace reclaims them") {
     // A concurrent committer writes data files and group manifests BEFORE
     // claiming its snapshot id — an expiry in that window must not eat

@@ -176,25 +176,12 @@ class MergeApplySpec extends AnyFunSuite {
     assert(b != a)
   }
 
-  test("upgrade compat: a pre-id-file checkpoint with stream state seeds the " +
-      "legacy path-hash writer id; an empty checkpoint mints fresh") {
-    // legacy checkpoint: offsets exist, no graft-writer-id file — the id
-    // must be the path hash those checkpoints' commits were fenced under
+  test("writer id: a checkpoint without an id file mints a fresh one, persisted and stable") {
     val cp = tmp() + "/cp"
-    assert(new java.io.File(cp, "offsets").mkdirs())
-    def legacyId(p: String) = {
-      val d = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(p.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      "w-" + d.take(6).map(b => f"$b%02x").mkString
-    }
     val id = graft.cdc.CdcStream.writerIdOf(cp)
-    assert(id == legacyId(cp))
+    assert(id.startsWith("w-"))
     assert(graft.cdc.CdcStream.writerIdOf(cp) == id) // persisted, stable
-    // an EMPTY checkpoint (fresh stream) mints a random id, not the hash
-    val cp2 = tmp() + "/cp2"
-    val id2 = graft.cdc.CdcStream.writerIdOf(cp2)
-    assert(id2 != legacyId(cp2))
-    assert(graft.cdc.CdcStream.writerIdOf(cp2) == id2)
+    assert(graft.cdc.CdcStream.writerIdOf(tmp() + "/cp2") != id)
   }
 
   test("schema v3 widening: turn_idx int32→int64, old files conform on read") {
