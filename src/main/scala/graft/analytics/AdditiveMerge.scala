@@ -77,13 +77,7 @@ object AdditiveMerge {
         merged.repartition(math.max(1, math.min(touched.size, partitionCap)), col("_bucket")),
         schemaVer = cur.schemaVer)
       val newLive = files.map(_.live).sum
-      // Unknown live stats (-1 from a foreign writer's statless footer)
-      // must not be summed into the row delta — recount, the same guard
-      // as MergeApply/Scd2History.
-      val replaced = cur.files.filter(f => touched.contains(f.bucket))
-      val oldLive =
-        if (replaced.forall(_.live >= 0)) replaced.map(_.live).sum
-        else table.readConformed(cur, Some(touched)).filter(!col("_deleted")).count()
+      val oldLive = cur.files.filter(f => touched.contains(f.bucket)).map(_.live).sum
       table.commit(files, touched, epochId, schemaVer = cur.schemaVer,
         rowDelta = newLive - oldLive, maxLsnSeen = epochId,
         writerId = writerId, batchHash = Some(batchHash),

@@ -252,14 +252,9 @@ object MergeApply {
         pmod(xxhash64(keyCols.map(col): _*), lit(salt)))
     val files = timed("merge-write")(table.writeDataFiles(salted, newVer,
       kind = if (isMor) graft.lake.FileEntry.Delta else graft.lake.FileEntry.Base))
-    // Speculative execution can run TWO successful attempts of one write
-    // task, both feeding the CollectMetrics accumulators — the exact
-    // double-count hazard writeDataFiles skips its FileStatsAgg hint for
-    // (LakeTable.statsFromWrite). Inflated observed counts would trip the
-    // false reconciliations the -1 sentinel exists to avoid, so under
-    // speculation the plan-ride metrics are reported unavailable.
-    val speculative = spark.conf.get("spark.speculation", "false").toBoolean
-    val observed = if (speculative) Map.empty[String, Any] else obs.get
+    // writeDataFiles refuses speculative execution, so no write task runs
+    // twice and these plan-ride counts are exact.
+    val observed = obs.get
     val obsRows = observed.get("rows").collect { case x: Long => x }.getOrElse(-1L)
     // -1 = metric unavailable (same sentinel as obsRows/BatchStats
     // defaults) — 0 would be indistinguishable from "all tombstones" /
@@ -276,11 +271,7 @@ object MergeApply {
     val newLive = files.map(_.live).sum
     val oldLive =
       if (isMor) 0L
-      else {
-        val replaced = cur.files.filter(f => touched.contains(f.bucket))
-        if (replaced.forall(_.live >= 0)) replaced.map(_.live).sum
-        else table.readConformed(cur, Some(touched)).filter(!col("_deleted")).count()
-      }
+      else cur.files.filter(f => touched.contains(f.bucket)).map(_.live).sum
 
     // A merge-on-read commit replaces nothing, but a GATED mode's output
     // was derived from a liveness probe of the touched buckets — that read

@@ -145,14 +145,7 @@ object Scd2History {
     val files = table.writeDataFiles(
       merged.repartition(math.max(1, touched.size), col("_bucket")), schemaVer = 1)
     val newLive = files.map(_.live).sum
-    // Same guard as MergeApply: a replaced file with unknown live stats
-    // (-1, e.g. a foreign writer's footer without null counts) would
-    // silently skew rowDelta — recount from a read instead of summing
-    // the sentinel in.
-    val replaced = cur.files.filter(f => touched.contains(f.bucket))
-    val oldLive =
-      if (replaced.forall(_.live >= 0)) replaced.map(_.live).sum
-      else table.readConformed(cur, Some(touched)).filter(!col("_deleted")).count()
+    val oldLive = cur.files.filter(f => touched.contains(f.bucket)).map(_.live).sum
     table.commit(files, touched, epochId, schemaVer = 1,
       rowDelta = newLive - oldLive, maxLsnSeen = epochId,
       writerId = writerId, batchHash = Some(batchHash),

@@ -6,105 +6,134 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
-/** Exact grouped (rows, live-rows) counts keyed by a caller-supplied long —
-  * `map<long, array<long>[rows, live]>` — as a native Catalyst aggregate.
+/** Per-file manifest stats keyed by a caller-supplied long —
+  * `map<long, struct<rows, live, min_key, max_key>>` — as a native
+  * Catalyst aggregate.
   *
   * Purpose: manifest FILE STATS FROM THE WRITE PASS ITSELF. Keyed by
   * `(write partition id, bucket)` and hung on the data-file write plan via
-  * `Dataset.observe`, it yields every output file's row/live counts the
-  * moment the write finishes — replacing the per-commit parquet-footer
-  * read pass, which is O(files) SERIAL driver time on every epoch's
-  * critical path (measured ~0.7 s/epoch at 64 buckets on local disk; on an
-  * object store each footer open is a driver round-trip, so at 100 TB the
-  * pass would dominate the commit). The footer path remains the fallback
-  * (foreign files, speculative execution, stats/file mismatch).
+  * `Dataset.observe`, it yields every output file's row count, live-row
+  * count and key range the moment the write finishes, with no post-write
+  * I/O ([[graft.lake.LakeTable.writeDataFiles]]). Delta Lake collects its
+  * per-file stats during the write the same way.
+  *
+  * Per key the buffer holds rows, live rows (a null `live` counts as not
+  * live) and the min/max of `key` (the table's first merge key, cast to
+  * string by the caller) in UTF8String BINARY order — the unsigned-byte
+  * order parquet binary stats use, and the order the probe side compares
+  * in. A min/max value is copied only when it moves: an unsafe-row
+  * UTF8String points into a reused buffer. A group that saw a null `key`
+  * yields null min/max (unknown bounds: the file is never skipped). A row
+  * with a null `fileKey` is ignored, per SQL aggregate null semantics.
   *
   * Why a custom `TypedImperativeAggregate` and not builtins: `observe`
   * admits no GROUP BY, and Spark has no exact `map_agg`. The group count
   * is bounded by `write tasks × buckets per task` (≤ a few thousand), so
-  * the buffer stays tiny; update cost is one hash probe + two adds per
-  * row. Not a UDF: no row-level serialization — inputs are read with
-  * unsafe-row accessors and the buffer is a primitive-keyed map.
+  * the buffer stays tiny. Not a UDF: no row-level serialization.
   */
 case class FileStatsAgg(
+    fileKey: Expression,
     key: Expression,
     live: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[mutable.LongMap[Array[Long]]] {
+  extends TypedImperativeAggregate[mutable.LongMap[FileStatsAgg.Buf]] {
+  import FileStatsAgg.Buf
 
-  override def children: Seq[Expression] = Seq(key, live)
+  override def children: Seq[Expression] = Seq(fileKey, key, live)
   override def nullable: Boolean = false
-  override def dataType: DataType =
-    MapType(LongType, ArrayType(LongType, containsNull = false), valueContainsNull = false)
-  override def prettyName: String = "graft_file_stats"
+  override def dataType: DataType = FileStatsAgg.resultType
+  override def prettyName: String = FileStatsAgg.fnName
 
-  override def createAggregationBuffer(): mutable.LongMap[Array[Long]] =
-    mutable.LongMap.empty
+  override def createAggregationBuffer(): mutable.LongMap[Buf] = mutable.LongMap.empty
 
-  override def update(buf: mutable.LongMap[Array[Long]], input: InternalRow): mutable.LongMap[Array[Long]] = {
-    // Standard SQL aggregate null semantics: a null key row is ignored
-    // (unguarded unboxing would silently count it toward key 0 — the
-    // internal write-path inputs are non-null, but the registry exposes
-    // graft_file_stats to arbitrary SQL), and a null live flag counts as
-    // not-live.
-    val kRaw = key.eval(input)
-    if (kRaw != null) {
-      val a = buf.getOrElseUpdate(kRaw.asInstanceOf[Long], Array(0L, 0L))
-      a(0) += 1L
+  override def update(buf: mutable.LongMap[Buf], input: InternalRow): mutable.LongMap[Buf] = {
+    val fk = fileKey.eval(input)
+    if (fk != null) {
+      val b = buf.getOrElseUpdate(fk.asInstanceOf[Long], new Buf)
+      b.rows += 1L
       val l = live.eval(input)
-      if (l != null && l.asInstanceOf[Boolean]) a(1) += 1L
+      if (l != null && l.asInstanceOf[Boolean]) b.live += 1L
+      key.eval(input) match {
+        case s: UTF8String =>
+          if (b.minKey == null || s.binaryCompare(b.minKey) < 0) b.minKey = s.clone()
+          if (b.maxKey == null || s.binaryCompare(b.maxKey) > 0) b.maxKey = s.clone()
+        case _ => b.keyNulls = true
+      }
     }
     buf
   }
 
-  override def merge(buf: mutable.LongMap[Array[Long]], other: mutable.LongMap[Array[Long]]): mutable.LongMap[Array[Long]] = {
-    other.foreach { case (k, v) =>
-      val a = buf.getOrElseUpdate(k, Array(0L, 0L))
-      a(0) += v(0)
-      a(1) += v(1)
+  override def merge(buf: mutable.LongMap[Buf], other: mutable.LongMap[Buf]): mutable.LongMap[Buf] = {
+    other.foreach { case (k, o) =>
+      val b = buf.getOrElseUpdate(k, new Buf)
+      b.rows += o.rows
+      b.live += o.live
+      if (o.minKey != null && (b.minKey == null || o.minKey.binaryCompare(b.minKey) < 0)) b.minKey = o.minKey
+      if (o.maxKey != null && (b.maxKey == null || o.maxKey.binaryCompare(b.maxKey) > 0)) b.maxKey = o.maxKey
+      b.keyNulls |= o.keyNulls
     }
     buf
   }
 
-  override def eval(buf: mutable.LongMap[Array[Long]]): Any = {
+  override def eval(buf: mutable.LongMap[Buf]): Any = {
     val keys = new Array[Any](buf.size)
     val vals = new Array[Any](buf.size)
     var i = 0
-    buf.foreach { case (k, v) =>
+    buf.foreach { case (k, b) =>
       keys(i) = k
-      vals(i) = new GenericArrayData(Array(v(0), v(1)))
+      vals(i) = new GenericInternalRow(Array[Any](b.rows, b.live,
+        if (b.keyNulls) null else b.minKey, if (b.keyNulls) null else b.maxKey))
       i += 1
     }
     ArrayBasedMapData(keys, vals)
   }
 
-  override def serialize(buf: mutable.LongMap[Array[Long]]): Array[Byte] = {
+  override def serialize(buf: mutable.LongMap[Buf]): Array[Byte] = {
     val bytes = new ByteArrayOutputStream()
     val out = new DataOutputStream(bytes)
+    def writeStr(s: UTF8String): Unit =
+      if (s == null) out.writeInt(-1)
+      else { val b = s.getBytes; out.writeInt(b.length); out.write(b) }
     out.writeInt(buf.size)
-    buf.foreach { case (k, v) =>
+    buf.foreach { case (k, b) =>
       out.writeLong(k)
-      out.writeLong(v(0))
-      out.writeLong(v(1))
+      out.writeLong(b.rows)
+      out.writeLong(b.live)
+      writeStr(b.minKey)
+      writeStr(b.maxKey)
+      out.writeBoolean(b.keyNulls)
     }
     out.flush()
     bytes.toByteArray
   }
 
-  override def deserialize(bytes: Array[Byte]): mutable.LongMap[Array[Long]] = {
+  override def deserialize(bytes: Array[Byte]): mutable.LongMap[Buf] = {
     val in = new DataInputStream(new ByteArrayInputStream(bytes))
+    def readStr(): UTF8String = {
+      val len = in.readInt()
+      if (len < 0) null
+      else { val b = new Array[Byte](len); in.readFully(b); UTF8String.fromBytes(b) }
+    }
     val n = in.readInt()
-    val buf = mutable.LongMap.empty[Array[Long]]
+    val buf = mutable.LongMap.empty[Buf]
     var i = 0
     while (i < n) {
-      buf.update(in.readLong(), Array(in.readLong(), in.readLong()))
+      val k = in.readLong()
+      val b = new Buf
+      b.rows = in.readLong()
+      b.live = in.readLong()
+      b.minKey = readStr()
+      b.maxKey = readStr()
+      b.keyNulls = in.readBoolean()
+      buf.update(k, b)
       i += 1
     }
     buf
@@ -115,22 +144,40 @@ case class FileStatsAgg(
   override def withNewInputAggBufferOffset(newOffset: Int): FileStatsAgg =
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): FileStatsAgg =
-    copy(key = newChildren(0), live = newChildren(1))
+    copy(fileKey = newChildren(0), key = newChildren(1), live = newChildren(2))
 }
 
 object FileStatsAgg {
+
+  final class Buf {
+    var rows: Long = 0L
+    var live: Long = 0L
+    var minKey: UTF8String = null
+    var maxKey: UTF8String = null
+    var keyNulls: Boolean = false
+  }
+
+  val resultType: DataType = MapType(
+    LongType,
+    StructType(Seq(
+      StructField("rows", LongType, nullable = false),
+      StructField("live", LongType, nullable = false),
+      StructField("min_key", StringType),
+      StructField("max_key", StringType))),
+    valueContainsNull = false)
+
   val fnName = "graft_file_stats"
 
   /** Register in the session's function registry once, then build columns
     * with `call_function` — the public route to a custom aggregate column
     * (Column-from-Expression constructors are private[sql] in Spark 4).
     */
-  def column(spark: SparkSession, key: Column, live: Column): Column = {
+  def column(spark: SparkSession, fileKey: Column, key: Column, live: Column): Column = {
     val reg = spark.sessionState.functionRegistry
     val ident = org.apache.spark.sql.catalyst.FunctionIdentifier(fnName)
     if (!reg.functionExists(ident))
       reg.createOrReplaceTempFunction(fnName,
-        exprs => FileStatsAgg(exprs(0), exprs(1)).toAggregateExpression(), "built-in")
-    call_function(fnName, key, live)
+        exprs => FileStatsAgg(exprs(0), exprs(1), exprs(2)).toAggregateExpression(), "built-in")
+    call_function(fnName, fileKey, key, live)
   }
 }

@@ -22,12 +22,15 @@ import graft.model.Model
   * copy-on-write `base` files (≤1 version per key per bucket across all
   * base files) from merge-on-read `delta` files (appended row versions the
   * read path resolves by max `_lsn` per key until compaction folds them).
-  * `len` is the file's byte length, taken from the listing that found the
-  * file at write time: scans are planned from these entries alone
+  * `rows` / `live` are the file's exact row and non-tombstone row counts,
+  * and `stats` its key range, all counted during the write
+  * ([[LakeTable.writeDataFiles]]). `len` is the file's byte length, taken
+  * from the listing that found the file at write time: scans are planned
+  * from these entries alone
   * ([[ManifestFileIndex]]), so a read never lists storage.
   */
 final case class FileEntry(path: String, bucket: Int, schemaVer: Int, rows: Long,
-    live: Long = -1L, kind: String = FileEntry.Base, stats: Option[FileStats] = None,
+    live: Long, kind: String = FileEntry.Base, stats: Option[FileStats] = None,
     len: Long = -1L)
 
 object FileEntry {
@@ -35,30 +38,18 @@ object FileEntry {
   val Delta = "delta"
 }
 
-/** Manifest-level column ranges of one data file — the engine's substitute
+/** Manifest-level key range of one data file — the engine's substitute
   * for the reference's secondary indexes (SURVEY §4; reference:
   * Scripts/database_schema.sql:165-169): point/range reads skip files whose
-  * ranges cannot contain the probe, without opening a single footer.
+  * range cannot contain the probe, without opening a single footer.
   *
-  *   - `minKey`/`maxKey`: first merge key (conv_id), compared in UTF8
-  *     BINARY order on both the write side ([[graft.functions.FileRangeAgg]])
-  *     and the probe side — the same unsigned-byte order parquet binary
-  *     stats use. Null ⟺ unknown (a file with null keys, or a legacy
-  *     footer without stats) — such a file is never skipped.
-  *   - `min2`/`max2`: second merge key (turn_idx) when integral; the
-  *     "unknown" sentinel is min2 > max2.
-  *   - `minLsn`/`maxLsn`: `_lsn` range, same sentinel — lets maintenance
-  *     and changelog consumers reason about a file's change window.
-  *
-  * Absent entirely (`stats = None`, manifests written before the field
-  * existed) ⟹ no skipping: version-tolerant by construction.
+  * `minKey`/`maxKey` bound the first merge key (conv_id), compared in UTF8
+  * BINARY order on both the write side ([[graft.functions.FileStatsAgg]])
+  * and the probe side — the same unsigned-byte order parquet binary stats
+  * use. A file whose range is unknown (it holds null keys) carries
+  * `stats = None` and is never skipped.
   */
-final case class FileStats(minKey: String, maxKey: String,
-    min2: Long, max2: Long, minLsn: Long, maxLsn: Long) {
-  def hasKeyRange: Boolean = minKey != null && maxKey != null
-  def has2: Boolean = min2 <= max2
-  def hasLsn: Boolean = minLsn <= maxLsn
-}
+final case class FileStats(minKey: String, maxKey: String)
 
 /** A committed table snapshot. The table's commit protocol gives the
   * load-bearing subset of Iceberg semantics the north rule needs, built
@@ -900,79 +891,48 @@ final class LakeTable(
     * sorted by (conv_id, turn_idx) so turn-ordered reads stay fast and
     * parquet min/max stats stay tight (north rule: sort-order maintenance).
     *
-    * Per-file row/live-row counts ride THE WRITE PASS ITSELF: a
-    * [[graft.functions.FileStatsAgg]] metric keyed by
-    * `(write partition id, bucket)` — which maps 1:1 onto output files
-    * (dynamic partitioning writes one `part-<pid>` file per bucket a task
-    * holds) — is hung on the write plan via `Dataset.observe`, so the
-    * manifest entries exist the moment the write job finishes, with ZERO
-    * post-write I/O. The previous design read each file's parquet footer
-    * (row count + `_live` null count) after the write: O(files) SERIAL
-    * driver time (~0.7 s/epoch at 64 buckets on local disk, a driver
-    * round-trip per file on an object store) on every commit's critical
-    * path — fixed cost that directly capped N→4N scaling efficiency. The
-    * footer pass remains the verified FALLBACK: speculative execution may
-    * double-count observe metrics (two successful attempts of one task),
-    * so the hint is skipped under `spark.speculation`; and any
-    * file↔stats-entry mismatch (multi-file tasks under maxRecordsPerFile,
-    * foreign writers) discards the hint for that commit. The write-only
-    * nullable `_live` marker column (null ⟺ tombstone) keeps the footer
-    * fallback possible on every file; reads pass an explicit schema, so
-    * `_live` is pruned at scan time and costs ~1 bit/row RLE on disk.
+    * Every entry's stats (rows, live rows, key range) ride THE WRITE PASS
+    * ITSELF: a [[graft.functions.FileStatsAgg]] keyed by `(write partition
+    * id, bucket)` is hung on the write plan via `Dataset.observe`, so the
+    * entries exist the moment the write job finishes — no extra Spark job,
+    * no footer read. The key maps 1:1 onto output files because dynamic
+    * partitioning writes one `part-<pid>` file per bucket a task holds, and
+    * `maxRecordsPerFile` is pinned to 0 so a task never splits a bucket.
+    * Speculative execution could run two successful attempts of one task
+    * and double-count the observation, so it is refused; Spark launches no
+    * speculative tasks in `local[n]` anyway. If the listed files and the
+    * stats entries still fail to match one to one, the write throws
+    * [[IllegalStateException]] before anything is committed: the caller's
+    * retry re-runs the epoch and orphan GC reclaims the files.
     */
   def writeDataFiles(df: DataFrame, schemaVer: Int,
       kind: String = FileEntry.Base): Seq[FileEntry] = {
+    require(!spark.sparkContext.getConf.getBoolean("spark.speculation", false),
+      "spark.speculation=true is not supported: a speculative write task would " +
+        "double-count the write-pass file stats")
     val dir = new Path(new Path(rootPath, "data"),
       s"c${System.currentTimeMillis()}-${java.util.UUID.randomUUID.toString.take(8)}")
-    val withLive = df.withColumn("_live",
-      when(col("_deleted"), lit(null).cast(BooleanType)).otherwise(lit(true)))
-    // `spark.graft.writeStats=footer` is the runtime A/B + test switch
-    // (spark.speculation is a static conf, so tests cannot toggle it).
-    val useWriteStats =
-      !spark.conf.get("spark.speculation", "false").toBoolean &&
-        spark.conf.get("spark.graft.writeStats", "observe") != "footer"
-    val (toWrite, obs) =
-      if (!useWriteStats) (withLive, None)
-      else {
-        val o = org.apache.spark.sql.Observation(
-          s"graft-filestats-${java.util.UUID.randomUUID.toString.take(8)}")
-        // The key project is NONDETERMINISTIC (spark_partition_id), so the
-        // optimizer cannot push it below the exchange the caller's
-        // repartition planted — pids seen here are the write task's.
-        val keyed = withLive.withColumn("_fskey",
-          spark_partition_id().cast(LongType) * lit(FileKeySpan) +
-            col("_bucket").cast(LongType))
-        // Manifest min/max ranges ride the SAME observation: first merge
-        // key in string space, second key when integral (turn_idx), and
-        // `_lsn` — the inputs the file-skip predicates compare against.
-        val k2 = keyCols.drop(1).headOption
-          .filter(c => withLive.schema(c).dataType match {
-            case ByteType | ShortType | IntegerType | LongType => true
-            case _ => false
-          })
-          .map(c => col(c).cast(LongType))
-          .getOrElse(lit(null).cast(LongType))
-        // Register the aggregates in the OBSERVED DataFrame's session:
-        // under foreachBatch the batch df belongs to a CLONED session with
-        // its own function registry, and a merge-on-read plan derives
-        // purely from the batch side — registering in the table's outer
-        // session would leave the clone's analyzer unable to resolve the
-        // function (copy-on-write masks this by deriving from the outer
-        // session's table read).
-        val obsSession = keyed.sparkSession
-        (keyed.observe(o,
-          graft.functions.FileStatsAgg.column(obsSession, col("_fskey"),
-            not(coalesce(col("_deleted"), lit(false)))).as("fs"),
-          graft.functions.FileRangeAgg.column(obsSession, col("_fskey"),
-            col(keyCols.head).cast(StringType), k2, col("_lsn")).as("fr"))
-          .drop("_fskey"), Some(o))
-      }
+    val obs = org.apache.spark.sql.Observation(
+      s"graft-filestats-${java.util.UUID.randomUUID.toString.take(8)}")
+    // The key project is NONDETERMINISTIC (spark_partition_id), so the
+    // optimizer cannot push it below the exchange the caller's repartition
+    // planted — pids seen here are the write task's.
+    val keyed = df.withColumn("_fskey",
+      spark_partition_id().cast(LongType) * lit(FileKeySpan) + col("_bucket").cast(LongType))
+    // Register the aggregate in the OBSERVED DataFrame's session: under
+    // foreachBatch the batch df belongs to a CLONED session with its own
+    // function registry, and a merge-on-read plan derives purely from the
+    // batch side — registering in the table's outer session would leave
+    // the clone's analyzer unable to resolve the function.
+    val observed = keyed.observe(obs,
+      graft.functions.FileStatsAgg.column(keyed.sparkSession, col("_fskey"),
+        col(keyCols.head).cast(StringType), not(coalesce(col("_deleted"), lit(false)))).as("fs"))
+      .drop("_fskey")
     graft.cdc.MergeApply.timed("merge-write-files")(
-      toWrite.sortWithinPartitions("_bucket", keyCols: _*)
-        .write.partitionBy("_bucket").mode("overwrite").parquet(dir.toString))
-    graft.cdc.MergeApply.timed("file-stats")(
-      obs.flatMap(statsFromWrite(dir, schemaVer, kind, _))
-        .getOrElse(footerStats(dir, schemaVer, kind)))
+      observed.sortWithinPartitions("_bucket", keyCols: _*)
+        .write.partitionBy("_bucket").option("maxRecordsPerFile", 0L)
+        .mode("overwrite").parquet(dir.toString))
+    graft.cdc.MergeApply.timed("file-stats")(statsFromWrite(dir, schemaVer, kind, obs))
   }
 
   /** `part-NNNNN-` write-task prefix of every Spark output file name. */
@@ -985,56 +945,27 @@ final class LakeTable(
 
   /** Manifest entries from the write-pass [[graft.functions.FileStatsAgg]]
     * observation: map each listed file back to its `(pid, bucket)` stats
-    * key via the `part-NNNNN` task index in its name. None (→ footer
-    * fallback) unless files↔entries is a verified bijection — every file
-    * resolves a distinct key and the counts match exactly.
+    * key via the `part-NNNNN` task index in its name. Throws unless
+    * files↔entries is a bijection — every file resolves a distinct key and
+    * the counts match exactly.
     */
   private def statsFromWrite(dir: Path, schemaVer: Int, kind: String,
-      obs: org.apache.spark.sql.Observation): Option[Seq[FileEntry]] = {
-    val row = graft.cdc.MergeApply.timed("file-stats-obs-get")(obs.get)
-    val stats: collection.Map[Long, (Long, Long)] = row.get("fs") match {
-      case Some(m: collection.Map[_, _]) =>
-        m.map { case (k, v) =>
-          val a = v.asInstanceOf[collection.Seq[Long]]
-          k.asInstanceOf[Long] -> ((a(0), a(1)))
-        }
-      case _ => return None
-    }
-    // Min/max ranges from the companion FileRangeAgg observation. A
-    // missing/undecodable range entry degrades THAT file to stats=None
-    // (no skipping), never the whole commit — ranges are an optimization,
-    // the row/live counts above are the accounting.
-    val ranges: collection.Map[Long, FileStats] = row.get("fr") match {
-      case Some(m: collection.Map[_, _]) =>
-        m.flatMap { case (k, v) =>
-          v match {
-            case r: org.apache.spark.sql.Row if r.length == 6 =>
-              Some(k.asInstanceOf[Long] -> FileStats(
-                if (r.isNullAt(0)) null else r.getString(0),
-                if (r.isNullAt(1)) null else r.getString(1),
-                r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))
-            case _ => None
-          }
-        }
-      case _ => collection.Map.empty[Long, FileStats]
-    }
-    val found = graft.cdc.MergeApply.timed("file-stats-list")(listDataFiles(dir))
-    if (found.size != stats.size) {
-      System.err.println(s"[lake] write-stats mismatch (${found.size} files vs " +
-        s"${stats.size} stat entries) — falling back to footer stats for $dir")
-      return None
-    }
-    val entries = found.map { case (p, bucket, len) =>
+      obs: org.apache.spark.sql.Observation): Seq[FileEntry] = {
+    val stats = obs.get("fs").asInstanceOf[collection.Map[Long, org.apache.spark.sql.Row]]
+    val found = listDataFiles(dir)
+    def mismatch(why: String) =
+      new IllegalStateException(s"write-pass stats do not match the files under $dir: $why")
+    if (found.size != stats.size) throw mismatch(s"${found.size} files vs ${stats.size} stats entries")
+    val keyed = found.map { case (p, bucket, len) =>
       val pid = partFileRe.findFirstMatchIn(p.getName).map(_.group(1).toLong)
-        .getOrElse(return None)
+        .getOrElse(throw mismatch(s"${p.getName} has no task index"))
       val key = pid * FileKeySpan + bucket
-      stats.get(key) match {
-        case Some((rows, live)) =>
-          FileEntry(p.toString, bucket, schemaVer, rows, live, kind, ranges.get(key), len)
-        case None => return None
-      }
+      val s = stats.getOrElse(key, throw mismatch(s"no stats entry for ${p.getName}"))
+      val range = if (s.isNullAt(2)) None else Some(FileStats(s.getString(2), s.getString(3)))
+      key -> FileEntry(p.toString, bucket, schemaVer, s.getLong(0), s.getLong(1), kind, range, len)
     }
-    Some(entries)
+    if (keyed.map(_._1).distinct.size != keyed.size) throw mismatch("two files share a stats key")
+    keyed.map(_._2)
   }
 
   /** All parquet data files under a commit directory as (file, bucket,
@@ -1056,148 +987,6 @@ final class LakeTable(
         found += ((p, parent.stripPrefix("_bucket=").toInt, st.getLen))
     }
     found.toSeq
-  }
-
-  /** Manifest entries for every parquet file under a commit directory,
-    * derived purely from footer metadata (row counts + `_live` null
-    * counts). Files whose footers lack a null count (foreign writers —
-    * Spark's parquet writer always records it) fall back to one bounded
-    * Spark job over just those files.
-    */
-  private def footerStats(dir: Path, schemaVer: Int, kind: String): Seq[FileEntry] = {
-    import scala.jdk.CollectionConverters._
-    val conf = hadoopConf
-    val found = listDataFiles(dir)
-    if (found.isEmpty) return Nil
-    val physical = physicalSchema(schemaVer)
-    val keyIsString = physical(keyCols.head).dataType == StringType
-    val k2Name = keyCols.drop(1).headOption.filter(c => physical(c).dataType match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    })
-    // The footer pass is SERIAL driver time on every epoch's critical
-    // path; each footer open is ~10 ms of filesystem round trips, so the
-    // pool is sized to overlap as many as the commit has files (capped).
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(48, found.size))
-    try {
-      val lens = found.map { case (p, _, len) => p -> len }.toMap
-      val futures = found.toSeq.map { case (p, bucket, _) =>
-        pool.submit(new java.util.concurrent.Callable[(Path, Int, Long, Long, Option[FileStats])] {
-          def call(): (Path, Int, Long, Long, Option[FileStats]) =
-            // A transiently unreadable footer must NOT abort the commit
-            // (the data files are already written) — degrade that file to
-            // "unknown" and let the bounded Spark rescue job below read it;
-            // only a file Spark itself cannot read then fails the epoch.
-            try {
-              val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf)
-              val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-              try {
-                val blocks = reader.getFooter.getBlocks.asScala
-                val rows = blocks.map(_.getRowCount).sum
-                // dead = Σ null counts of `_live`; -1 when any chunk lacks them
-                var dead = 0L
-                var known = true
-                // Min/max ranges from the same footers (parquet binary
-                // stats are unsigned-byte order — the probe order). Any
-                // block without usable stats degrades that field to
-                // unknown; parquet-mr's truncated binary stats stay valid
-                // bounds (min truncated down, max padded up).
-                var minKey: String = null; var maxKey: String = null; var keyOk = keyIsString
-                var min2 = Long.MaxValue; var max2 = Long.MinValue; var k2Ok = k2Name.isDefined
-                var minLsn = Long.MaxValue; var maxLsn = Long.MinValue; var lsnOk = true
-                def chunk(b: org.apache.parquet.hadoop.metadata.BlockMetaData, name: String) =
-                  b.getColumns.asScala.find(_.getPath.toDotString == name)
-                    .map(_.getStatistics).filter(s => s != null && s.hasNonNullValue)
-                blocks.foreach { b =>
-                  chunk(b, "_live") match {
-                    case Some(s) if s.isNumNullsSet => dead += s.getNumNulls
-                    case _ => known = false
-                  }
-                  if (keyOk) chunk(b, keyCols.head) match {
-                    case Some(s) =>
-                      // Combine per-block extremes in UTF8 BINARY order —
-                      // the probe order — not Java's UTF-16 String order
-                      // (they diverge for non-ASCII keys).
-                      import org.apache.spark.unsafe.types.UTF8String.{fromString => u}
-                      val mn = new String(s.getMinBytes, StandardCharsets.UTF_8)
-                      val mx = new String(s.getMaxBytes, StandardCharsets.UTF_8)
-                      if (minKey == null || u(mn).binaryCompare(u(minKey)) < 0) minKey = mn
-                      if (maxKey == null || u(mx).binaryCompare(u(maxKey)) > 0) maxKey = mx
-                    case None => keyOk = false
-                  }
-                  k2Name.foreach { n => if (k2Ok) chunk(b, n) match {
-                    case Some(s) =>
-                      val mn = s.genericGetMin.asInstanceOf[Number].longValue()
-                      val mx = s.genericGetMax.asInstanceOf[Number].longValue()
-                      if (mn < min2) min2 = mn
-                      if (mx > max2) max2 = mx
-                    case None => k2Ok = false
-                  }}
-                  if (lsnOk) chunk(b, "_lsn") match {
-                    case Some(s) =>
-                      val mn = s.genericGetMin.asInstanceOf[Number].longValue()
-                      val mx = s.genericGetMax.asInstanceOf[Number].longValue()
-                      if (mn < minLsn) minLsn = mn
-                      if (mx > maxLsn) maxLsn = mx
-                    case None => lsnOk = false
-                  }
-                }
-                val fstats =
-                  if (!lsnOk) None
-                  else Some(FileStats(
-                    if (keyOk) minKey else null, if (keyOk) maxKey else null,
-                    if (k2Ok) min2 else Long.MaxValue, if (k2Ok) max2 else Long.MinValue,
-                    minLsn, maxLsn))
-                (p, bucket, rows, if (known) rows - dead else -1L, fstats)
-              } finally reader.close()
-            } catch {
-              case e: Exception =>
-                System.err.println(s"[lake] footer read failed for $p (${e.getClass.getSimpleName}: " +
-                  s"${e.getMessage}) — routing through the Spark rescue pass")
-                (p, bucket, -1L, -1L, None)
-            }
-        })
-      }
-      val stats = futures.map(_.get())
-      val (ok, unknown) = stats.partition(_._4 >= 0L)
-      val rescued: Seq[(Path, Int, Long, Long, Option[FileStats])] =
-        if (unknown.isEmpty) Nil
-        else {
-          // The rescue job computes the same ranges Spark-side (string
-          // min/max is UTF8 binary order there too).
-          val keyStr = col(keyCols.head).cast(StringType)
-          val k2Col = k2Name.map(c => col(c).cast(LongType)).getOrElse(lit(null).cast(LongType))
-          val byPath = spark.read.schema(physical)
-            .parquet(unknown.map(_._1.toString): _*)
-            .select(input_file_name().as("f"), col("_deleted"), col("_lsn"),
-              keyStr.as("_k"), k2Col.as("_k2"))
-            .groupBy(col("f"))
-            .agg(count(lit(1)).as("rows"),
-              sum(when(col("_deleted"), 0L).otherwise(1L)).as("live"),
-              min("_k").as("mn"), max("_k").as("mx"),
-              min("_k2").as("mn2"), max("_k2").as("mx2"),
-              min("_lsn").as("mnl"), max("_lsn").as("mxl"))
-            .collect()
-            .map { r =>
-              val fstats = FileStats(
-                if (r.isNullAt(3)) null else r.getString(3),
-                if (r.isNullAt(4)) null else r.getString(4),
-                if (r.isNullAt(5)) Long.MaxValue else r.getLong(5),
-                if (r.isNullAt(6)) Long.MinValue else r.getLong(6),
-                r.getLong(7), r.getLong(8))
-              new Path(new java.net.URI(r.getString(0))).toString ->
-                ((r.getLong(1), r.getLong(2), fstats))
-            }
-            .toMap
-          unknown.map { case (p, b, rows0, _, _) =>
-            val (rows, live, fstats) = byPath.getOrElse(p.toString, (0L, 0L, null))
-            (p, b, if (rows0 >= 0) rows0 else rows, live, Option(fstats))
-          }
-        }
-      (ok ++ rescued).map { case (p, bucket, rows, live, fstats) =>
-        FileEntry(p.toString, bucket, schemaVer, rows, live, kind, fstats, lens(p))
-      }
-    } finally pool.shutdown()
   }
 
   // ---- maintenance ----
@@ -1562,12 +1351,12 @@ object LakeTable {
   }
 
   /** File-skip predicates, in UTF8 BINARY order on both sides (the write
-    * pass and parquet footer stats min/max in the same order). Absent or
-    * unknown stats never skip — legacy manifests read correct, unpruned.
+    * pass min/maxes in the same order). A file without a key range never
+    * skips.
     */
   private[graft] def mayContainKey(f: FileEntry,
       k: org.apache.spark.unsafe.types.UTF8String): Boolean = f.stats match {
-    case Some(s) if s.hasKeyRange =>
+    case Some(s) =>
       import org.apache.spark.unsafe.types.UTF8String.{fromString => u}
       k.binaryCompare(u(s.minKey)) >= 0 && k.binaryCompare(u(s.maxKey)) <= 0
     case _ => true
@@ -1576,7 +1365,7 @@ object LakeTable {
   private[graft] def mayOverlapKeyRange(f: FileEntry,
       lo: org.apache.spark.unsafe.types.UTF8String,
       hi: org.apache.spark.unsafe.types.UTF8String): Boolean = f.stats match {
-    case Some(s) if s.hasKeyRange =>
+    case Some(s) =>
       import org.apache.spark.unsafe.types.UTF8String.{fromString => u}
       hi.binaryCompare(u(s.minKey)) >= 0 && lo.binaryCompare(u(s.maxKey)) <= 0
     case _ => true
@@ -1617,17 +1406,9 @@ object LakeTable {
 
   private[graft] def filesJson(fes: Seq[FileEntry]): String =
     fes.map { f =>
-      // Stats tail is OPTIONAL per entry (version-tolerant both ways:
-      // old readers ignore the extra fields, old entries parse to None).
-      // `mnl` is the presence marker — LSN ranges are tracked whenever
-      // stats are collected at all; key min/max may still be absent
-      // (null keys in the file).
-      val st = f.stats.map { s =>
-        val kk =
-          if (s.hasKeyRange) s""""mn":"${esc(s.minKey)}","mx":"${esc(s.maxKey)}","""
-          else ""
-        s""",$kk"mn2":${s.min2},"mx2":${s.max2},"mnl":${s.minLsn},"mxl":${s.maxLsn}"""
-      }.getOrElse("")
+      // The key range is optional per entry: a file holding null keys has
+      // none.
+      val st = f.stats.map(s => s""","mn":"${esc(s.minKey)}","mx":"${esc(s.maxKey)}"""").getOrElse("")
       s"""{"path":"${esc(f.path)}","bucket":${f.bucket},"schemaVer":${f.schemaVer},""" +
         s""""rows":${f.rows},"live":${f.live},"kind":"${esc(f.kind)}"$st,"len":${f.len}}"""
     }.mkString("[", ",", "]")
@@ -1645,16 +1426,10 @@ object LakeTable {
     (0 until arr.size()).map { i =>
       val f = arr.get(i)
       val stats =
-        if (!f.has("mnl")) None
-        else Some(FileStats(
-          if (f.has("mn")) f.get("mn").asText() else null,
-          if (f.has("mx")) f.get("mx").asText() else null,
-          if (f.has("mn2")) f.get("mn2").asLong() else Long.MaxValue,
-          if (f.has("mx2")) f.get("mx2").asLong() else Long.MinValue,
-          f.get("mnl").asLong(), f.get("mxl").asLong()))
+        if (f.has("mn") && f.has("mx")) Some(FileStats(f.get("mn").asText(), f.get("mx").asText()))
+        else None
       FileEntry(f.get("path").asText(), f.get("bucket").asInt(),
-        f.get("schemaVer").asInt(), f.get("rows").asLong(),
-        if (f.has("live")) f.get("live").asLong() else -1L,
+        f.get("schemaVer").asInt(), f.get("rows").asLong(), f.get("live").asLong(),
         if (f.has("kind")) f.get("kind").asText() else FileEntry.Base,
         stats,
         f.get("len").asLong())

@@ -45,7 +45,7 @@ class FileSkippingSpec extends AnyFunSuite {
     }
   }
 
-  test("write-pass manifest stats carry key/turn/lsn ranges that cover the data") {
+  test("write-pass manifest stats carry a key range that covers the data") {
     val root = tmp()
     val table = LakeTable.create(spark, root, schemaVer = 2, numBuckets = 4)
     val events = (0 until 200).map(i => ev(100 + i, f"conv-${i % 50}%03d", i / 50 + 1, s"t$i"))
@@ -54,10 +54,7 @@ class FileSkippingSpec extends AnyFunSuite {
     assert(files.nonEmpty)
     files.foreach { f =>
       val s = f.stats.getOrElse(fail(s"file ${f.path} has no stats"))
-      assert(s.hasKeyRange && s.has2 && s.hasLsn)
       assert(s.minKey <= s.maxKey)
-      assert(s.minLsn >= 100 && s.maxLsn <= 299)
-      assert(s.min2 >= 1 && s.max2 <= 4)
     }
     // roundtrip: a freshly loaded table parses the same stats back
     val reloaded = LakeTable.load(spark, root).current.files
@@ -120,9 +117,8 @@ class FileSkippingSpec extends AnyFunSuite {
 
   test("manifest codec: stats roundtrip, legacy entries parse to None and never skip") {
     val withStats = FileEntry("/p/a.parquet", 3, 2, 100, 90, FileEntry.Base,
-      Some(FileStats("conv-a", "conv-z", 1, 9, 50, 150)), len = 4321L)
-    val nullKeyStats = FileEntry("/p/b.parquet", 1, 2, 10, 10, FileEntry.Delta,
-      Some(FileStats(null, null, Long.MaxValue, Long.MinValue, 7, 7)))
+      Some(FileStats("conv-a", "conv-z")), len = 4321L)
+    val nullKeyStats = FileEntry("/p/b.parquet", 1, 2, 10, 10, FileEntry.Delta)
     val noStats = FileEntry("/p/c.parquet", 0, 1, 5, 5)
     val snap = Snapshot(4L, 3L, 9L, 2, 4, 115L, 150L,
       Seq(withStats, nullKeyStats, noStats), writerId = "w1")
@@ -136,12 +132,12 @@ class FileSkippingSpec extends AnyFunSuite {
     // to stats=None and is never skipped by any probe
     val legacyJson = LakeTable.manifestJson(
       snap.copy(files = snap.files.map(_.copy(stats = None))))
-    assert(!legacyJson.contains("\"mnl\""))
+    assert(!legacyJson.contains("\"mn\""))
     val legacy = LakeTable.parseManifest(legacyJson)
     assert(legacy.files.forall(_.stats.isEmpty))
     val probe = UTF8String.fromString("zzz-outside-any-range")
     assert(legacy.files.forall(LakeTable.mayContainKey(_, probe)))
-    // unknown-key stats (null min/max) also never skip
+    // an entry without a key range (its file holds null keys) never skips
     assert(LakeTable.mayContainKey(nullKeyStats, probe))
     // known ranges DO skip
     assert(!LakeTable.mayContainKey(withStats, probe))
