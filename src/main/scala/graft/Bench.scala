@@ -1,9 +1,14 @@
 package graft
 
+import java.io.{BufferedReader, InputStreamReader, PrintWriter}
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicReference}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types.StructType
 
 import graft.cdc.MergeApply
 import graft.gen.ChangeGen
@@ -12,1270 +17,273 @@ import graft.lake.LakeTable
 
 /** Benchmark main (driver contract): one JSON line with
   *   - per-query seconds for the operator catalog at local[CPUS]
-  *   - the engine's headline metric: change-events/sec sustained
-  *     merge-apply throughput on CDC replay, measured at two parallelism
-  *     levels (N and 4N cores — the sandbox stand-in for two cluster
-  *     sizes) plus the scaling efficiency between them (north rule:
-  *     efficiency = speedup/4 ≥ 0.8).
+  *   - the engine's headline metric: change-events/sec of sustained
+  *     merge-apply on CDC replay, measured at N and 4N cores (a single-host
+  *     stand-in for two cluster sizes) plus the scaling efficiency between
+  *     them (north rule: efficiency = speedup/4 ≥ 0.8).
   *
-  * DEADLINE-AWARE: the whole protocol runs inside a wall-clock budget
-  * (`SPARK_GRAFT_BENCH_DEADLINE_SEC`, default 480 s from JVM start).
-  * Replay event volume is SIZED to the budget that remains after the
-  * query catalog, every expensive step (extra query pass, each replay
-  * round, the peak run, each probe) is gated on its own cost estimate
-  * fitting the remaining budget, and the JSON line is emitted
-  * UNCONDITIONALLY — on normal completion, on any replay error (partial
-  * results + an `error` field), and on SIGTERM via a shutdown hook that
-  * prints whatever was measured by then. A bench that measures less is
-  * still a bench; a bench the driver has to kill produces nothing.
+  * The replay is one fixed protocol (BENCH/BASELINE.md, "Methodology"):
+  *   1. generate the change log once, [[NBatches]] parquet batches;
+  *   2. start the N child JVM and wait until it has replayed its
+  *      [[WarmEpochs]] untimed epochs, then start the 4N child the same
+  *      way, so the two heap pre-touches never overlap;
+  *   3. time epoch pairs, both children applying the same batch, in ABBA
+  *      order, adding pairs while the slowest pair so far still fits the
+  *      deadline;
+  *   4. the headline is the median pair's N/4N quotient. Per-epoch steal
+  *      and GC are reported next to it and gate nothing.
   *
-  * Also refreshes BENCH/BASELINE.md with the measured numbers.
+  * N, the child heap and the epoch size are derived from the host (cores
+  * and total memory); nothing is read from a tuning variable. The whole
+  * run sits inside a fixed wall-clock deadline and the JSON line is
+  * emitted unconditionally: as a partial after every pair, on completion,
+  * on a replay error (with an `error` field) and on SIGTERM from a
+  * shutdown hook.
   */
 object Bench {
 
+  /** Wall-clock budget, from the start of `main`. */
+  private val DeadlineSec = 480.0
+  /** Reserved for the final emit and the children's shutdown. */
+  private val TailMarginSec = 20.0
+  /** Untimed epochs each child replays before its first timed one. */
+  private val WarmEpochs = 2
+  /** Timed pairs at most; the deadline may stop the protocol earlier. */
+  private val MaxPairs = 5
+  /** Batches generated: the warm epochs, then one per timed pair. */
+  private val NBatches = WarmEpochs + MaxPairs
+  /** A child that takes longer than this for one step (start-up plus
+    * warm-up, or one epoch) is taken as failed. */
+  private val ChildTimeoutSec = 600.0
+
+  // ---- protocol decisions, pure so that they are unit-tested ----
+
+  /** N of the N-vs-4N pair: a quarter of the host's cores, between 1 and
+    * 2 (2/8 on a 32-core host, 1/4 on a 4-core one). N stays at 2 on
+    * larger hosts: beyond 8-16 threads the host's memory bandwidth, not
+    * the engine, sets the 4N side, and a local[1] baseline is biased fast
+    * (one busy thread gets turbo and idle cores for its GC and I/O
+    * helpers), so N=2 is preferred wherever 4N=8 fits.
+    */
+  private[graft] def derivedN(cpus: Int): Int = math.max(1, math.min(2, cpus / 4))
+
+  /** Heap of each child JVM: a sixth of the host's memory, so the parent
+    * and both children fit with room to spare; at least 1 GiB and at most
+    * 12 GiB (pinning more than ~16 GB at once storms a virtualized
+    * kernel's page provisioning, see build.sbt).
+    */
+  private[graft] def childHeapMb(memTotalKb: Long): Long =
+    math.max(1024L, math.min(12L * 1024, memTotalKb / 1024 / 6))
+
+  /** Rows per batch: 1.5M per 4N core, so the per-epoch fixed cost
+    * (scheduling + commit, independent of cores) stays a small slice of
+    * the 4N side's epoch; capped at ~1 KB of child heap per row (12M rows
+    * at 4N=8 in a 12 GiB heap).
+    */
+  private[graft] def epochEvents(cores4n: Int, heapMb: Long): Long =
+    math.min(1500000L * cores4n, heapMb * 1024L)
+
+  /** ABBA order: N runs first in even pairs and 4N in odd ones, so the
+    * first slot of a pair, which absorbs whatever the host did in between,
+    * falls on each side equally often.
+    */
+  private[graft] def nFirst(pair: Int): Boolean = pair % 2 == 0
+
+  /** One timed epoch of one child. */
+  private[graft] final case class Epoch(sec: Double, stealCoreSec: Double, gcSec: Double)
+
+  /** The same batch, applied by the N child and by the 4N child. */
+  private[graft] final case class Pair(n: Epoch, n4: Epoch) {
+    def quotient: Double = n.sec / n4.sec
+    def wall: Double = n.sec + n4.sec
+  }
+
+  /** The headline (N sec, 4N sec): the pair with the median N/4N
+    * quotient; for an even count, the component-wise mean of the two
+    * middle pairs. Both walls of a pair share one host window, so the
+    * quotient is immune to drift between windows.
+    */
+  private[graft] def medianPair(pairs: Seq[Pair]): (Double, Double) = {
+    require(pairs.nonEmpty, "no timed epoch pair")
+    val s = pairs.sortBy(_.quotient)
+    val m = s.size / 2
+    if (s.size % 2 == 1) (s(m).n.sec, s(m).n4.sec)
+    else ((s(m - 1).n.sec + s(m).n.sec) / 2, (s(m - 1).n4.sec + s(m).n4.sec) / 2)
+  }
+
+  /** Stop rule: another pair starts only while the slowest pair measured
+    * so far still fits the remaining budget; the first pair always runs.
+    */
+  private[graft] def fitsAnotherPair(pairs: Seq[Pair], remainingSec: Double): Boolean =
+    pairs.isEmpty || pairs.map(_.wall).max <= remainingSec
+
+  /** Both children replay the same batches, so at equal epoch depth the
+    * parallelism must not change the final table.
+    */
+  private[graft] def requireSameFinalState(depthN: Int, rowsN: Long,
+      depth4N: Int, rows4N: Long): Unit = {
+    require(depthN == depth4N,
+      s"N and 4N children stopped at different epoch depths: $depthN vs $depth4N")
+    require(rowsN == rows4N,
+      s"parallelism changed final state after $depthN epochs: $rowsN vs $rows4N rows")
+  }
+
   def main(args: Array[String]): Unit = {
-    // Child mode: one replay measurement in a FRESH JVM (see replayOnce).
-    if (args.length >= 5 && args(0) == "replay-child") {
-      val bw = membwGBs()
-      val (secs, steals, sysu, gcs, rows) =
-        replayInProcess(args(1).toInt, args(2).toInt, args(3), args(4).toInt)
-      println(s"CHILD_RESULT epochs=${secs.mkString(",")} steals=${steals.mkString(",")} " +
-        s"sysu=${sysu.map(v => f"$v%.3f").mkString(",")} " +
-        s"gcs=${gcs.map(v => f"$v%.2f").mkString(",")} membw=${f"$bw%.1f"} rows=$rows")
-      return
-    }
-    // Sync child mode: same replay, but each epoch fires on a parent "GO"
-    // command over stdin so the parent can ALTERNATE epochs between the N
-    // and 4N children — each quotient pair then lands in the same host
-    // window (see the sync bullet in BENCH/BASELINE.md).
-    if (args.length >= 5 && args(0) == "replay-child-sync") {
-      val bw = membwGBs()
-      // CHILD_SPUN = heap pre-touched + session up (but not yet warmed):
-      // the parent spawns the sibling only after this, so two 12g
-      // pre-touches never overlap (this host's kernel storms when >~16 GB
-      // of fresh pages fault at once), while the WARM phases still run
-      // concurrently.
-      var tSpun = System.nanoTime()
-      val (ctx, warmOnce) = warmedCtx(args(1).toInt, args(2).toInt, args(3),
-        onSpun = () => {
-          tSpun = System.nanoTime()
-          // spinSec = JVM start -> session up (the serialized pre-touch
-          // phase); the parent adds it back into the round-cost estimate.
-          val spin = java.lang.management.ManagementFactory.getRuntimeMXBean.getUptime / 1000.0
-          println(f"CHILD_SPUN spinSec=$spin%.1f"); Console.out.flush()
-        })
-      // warmSec = the WARM-only wall (spun -> ready), i.e. the portion
-      // that overlaps the sibling's warm — the parent's round-cost
-      // estimator subtracts the shorter of the two from its serial sum.
-      println(f"CHILD_READY warmSec=${(System.nanoTime() - tSpun) / 1e9}%.1f")
-      Console.out.flush()
-      val in = new java.io.BufferedReader(new java.io.InputStreamReader(System.in))
-      var done = false
-      while (!done) {
-        val cmd = in.readLine()
-        if (cmd == null || cmd.trim == "DONE") {
-          println(s"CHILD_RESULT rows=${ctx.table.current.rows} membw=${f"$bw%.1f"}")
-          Console.out.flush()
-          done = true
-        } else if (cmd.trim.startsWith("GO ")) {
-          val b = cmd.trim.drop(3).trim.toInt
-          val (sec, steal, sysu, gc) = measureEpoch(ctx, b)
-          println(f"CHILD_EPOCH b=$b sec=$sec%.3f steal=$steal%.2f sysu=$sysu%.3f gc=$gc%.2f")
-          Console.out.flush()
-        } else if (cmd.trim == "QUIESCE") {
-          // Untimed inter-epoch GC quiesce, parent-orchestrated so it
-          // never overlaps the sibling child's timed epoch.
-          System.gc()
-          println("CHILD_QUIESCED"); Console.out.flush()
-        } else if (cmd.trim.startsWith("SETTLE")) {
-          // UNCONTENDED re-stabilization, parent-serialized (the sibling
-          // is idle and generation is done). The concurrent warm phase
-          // cannot distinguish "every pass contended" from steady state —
-          // its warmMin may itself be contention-inflated, accepting an
-          // under-warmed child whose first timed epoch runs ~2x slow with
-          // zero steal (a fake 0.47 pair was measured from exactly that).
-          // Up to 4 clean passes here drain any residual C2 queue and
-          // confirm the real steady state before the first timed epoch,
-          // wall-capped by the parent-provided budget slice so a degraded
-          // window cannot eat the round. The near-best clause mirrors the
-          // warm loop: a pass that got SLOWER (host blip) must not count
-          // as stable.
-          val capSec = cmd.trim.split("\\s+").drop(1).headOption
-            .flatMap(s => scala.util.Try(s.toDouble).toOption).getOrElse(60.0)
-          var prev = Double.MaxValue
-          var minSeen = Double.MaxValue
-          var last = 0.0
-          var total = 0.0
-          var n = 0
-          var stable = false
-          while (n < 4 && !stable && total < capSec) {
-            last = warmOnce()
-            stable = last > prev * 0.88 && last <= minSeen * 1.3
-            prev = last
-            minSeen = math.min(minSeen, last)
-            total += last
-            n += 1
-          }
-          println(f"CHILD_SETTLED n=$n sec=$last%.2f")
-          Console.out.flush()
-        }
-      }
-      ctx.s.stop()
-      return
-    }
-    // Debug mode: generate a change-log directory and exit, so a single
-    // replay-child can be run (and traced) in isolation.
-    if (args.length >= 4 && args(0) == "gen-only") {
-      val (dir, events, nb) = (args(1), args(2).toLong, args(3).toInt)
-      val cfg = GenConfig(numEvents = events, numConvs = 5000, maxTurns = 40)
-      val s = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
-        appName = "graft-bench-gen", tmpfsShuffle = true)
-      s.sparkContext.setLogLevel("WARN")
-      val per = (cfg.totalRows + nb - 1) / nb
-      (0 until nb).foreach { b =>
-        val t0 = System.nanoTime()
-        ChangeGen.eventSlice(s, cfg, b * per, math.min(cfg.totalRows, (b + 1) * per))
-          .toDF().write.parquet(s"$dir/batch-$b")
-        System.err.println(f"[gen-only] batch $b written in ${(System.nanoTime() - t0) / 1e9}%.1fs")
-      }
-      s.stop()
+    if (args.headOption.contains("replay-child")) {
+      replayChild(args(1).toInt, args(2))
       return
     }
     val tStart = System.nanoTime()
-    def elapsedSec: Double = (System.nanoTime() - tStart) / 1e9
-    val deadlineSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_DEADLINE_SEC", "480").toDouble
-    // Reserve for JSON emit + BASELINE.md write + session teardown.
-    val tailMarginSec = 20.0
-    def remainingSec: Double = deadlineSec - elapsedSec - tailMarginSec
+    def remainingSec: Double = DeadlineSec - (System.nanoTime() - tStart) / 1e9 - TailMarginSec
 
     // ---- always-emit machinery ----
-    // `partial` always holds the best JSON known so far; `emit` prints it
-    // exactly once (main on completion, or the shutdown hook on SIGTERM).
+    // `partial` always holds the freshest JSON; `emit` prints the final
+    // line exactly once (main on completion, or the shutdown hook on
+    // SIGTERM).
     val emitted = new AtomicBoolean(false)
     val partial = new AtomicReference[String](
       s"""{"metric":"total","value":0.0,"unit":"sec","queries":{},"truncated":"startup"}""")
     def emit(json: String): Unit =
       if (!emitted.getAndSet(true)) {
         val fitted = fitJson(json)
-        // Full diagnostic line first (for complete logs), then — only when
-        // the full line cannot fit the driver's tail window — a compacted
-        // line LAST, so the last complete JSON line in the window always
-        // parses. Round 3 shipped a single ~2.4k-char line into a 2000-char
-        // tail capture and the driver recorded `parsed: null`.
+        // The full diagnostic line first, then, only when it cannot fit the
+        // collector's ~2000-char tail window, the compacted line LAST, so the last
+        // complete JSON line in the window always parses.
         if (fitted ne json) println(json)
         println(fitted)
         Console.flush()
       }
     Runtime.getRuntime.addShutdownHook(new Thread(() => emit(partial.get)))
-    // Update the emergency JSON AND print it: the shutdown hook only fires
-    // on an orderly SIGTERM of THIS JVM — when the harness kills the sbt
-    // wrapper instead, the forked bench dies with the hook's output lost
-    // (observed: a deadline-killed run left NO JSON at all). Printing each
-    // partial as it lands means the freshest evidence is already on stdout
-    // the moment a hard kill arrives; the collector reads the LAST complete
-    // JSON line of the ~2000-char output tail, so on a clean run the final
-    // emit still wins (it prints after every partial), and on a kill the
-    // newest partial does.
+    // Also PRINT each partial: the hook runs only on an orderly SIGTERM of
+    // this JVM, and a kill of the sbt wrapper loses it. The collector reads
+    // the last complete JSON line, so a clean run's final emit still wins
+    // and a killed run leaves its newest partial.
     def publish(json: String): Unit = {
       partial.set(json)
       if (!emitted.get) { println(fitJson(json)); Console.flush() }
     }
 
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    // 4 micro-batches per replay round: the headline is a SUSTAINED
-    // multi-epoch stream (commit + merge + maintenance paid per epoch),
-    // not one giant bulk merge. Per-epoch walls + variance are reported in
-    // the JSON. More epochs at fixed event volume shrink events/epoch;
-    // below ~4M events/epoch the per-epoch fixed slice (~0.6 s of
-    // scheduling + commit, core-count-independent) starts to dominate the
-    // 4N side's quotient — 4 is the depth the 480 s budget sustains at
-    // volumes that still measure the engine.
-    val nBatches = sys.env.getOrElse("SPARK_GRAFT_BENCH_BATCHES", "4").toInt
-    // Hard cap on interleaved measurement rounds (the deadline usually
-    // binds first). The loop is adaptive: it stops once each core count
-    // has a steal-clean round (minimum 2 rounds) or the budget is spent.
-    val rounds = sys.env.getOrElse("SPARK_GRAFT_BENCH_ROUNDS", "6").toInt
-    // Scaling pair N vs 4N. Default N=2 (→ 4N=8): a single busy thread
-    // gets host turbo and the JVM's GC/IO helper threads still run on idle
-    // cores, both of which bias a local[1] baseline FAST and depress the
-    // reported efficiency — N=2 measures the engine, not the host's
-    // single-thread turbo. Full-width peak throughput is reported alongside.
-    val smallCores = sys.env.getOrElse("SPARK_GRAFT_BENCH_N", "2").toInt
-    val bigCores = smallCores * 4
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
 
     // ---- 1. operator catalog at local[cpus] ----
-    val runQueries = sys.env.getOrElse("SPARK_GRAFT_BENCH_QUERIES", "1") != "0"
     val spark = Sessions.local(cpus, appName = "graft-bench", tmpfsShuffle = true)
     spark.sparkContext.setLogLevel("WARN")
-    // Per-query numbers are best-of-R full passes: the host's hypervisor
-    // CPU-steal stalls hit whichever query is running when they land
-    // (identical queries measured 5-10× apart across passes), so a single
-    // pass misattributes host noise to individual operators. Min per query
-    // over interleaved passes; a second pass only runs when the remaining
-    // budget still fits a pass plus a minimum replay.
-    val qRounds = sys.env.getOrElse("SPARK_GRAFT_BENCH_QROUNDS", "2").toInt
-    // First-pass catalog wall — the replay sizing's preferred window probe
-    // (a ~100 s measurement of real Spark work in THIS process; see epsN).
-    var qPass1Sec = 0.0
-    val queryTimes: Seq[(String, Double)] =
-      if (!runQueries) Nil
-      else {
-        // Untimed warmup: JIT/codegen for the scan + hash-agg + join +
-        // window paths is paid here, so the alphabetically-first timed
-        // query stops absorbing ~4 s of one-time session cost.
-        Seq("q1_agg", "j1_star_join", "w2_running_sum").foreach { w =>
-          try { SparkEntry.queries(w)(spark, sfDir).count(); () }
-          catch { case _: Throwable => () }
-        }
-        // Catalog entries + the production-hash twins of d2/d3: the
-        // driver hash-checks the sha256-reproducible mode; the bench
-        // times BOTH so the published table shows production cost too.
-        val names = (SparkEntry.queries.toSeq ++
-          graft.sim.SimilarityQueries.prodVariants).sortBy(_._1)
-        def onePass(): Seq[(String, Double)] = names.map { case (name, fn) =>
-          val t0 = System.nanoTime()
-          try { fn(spark, sfDir).count(); () } catch { case _: Throwable => () }
-          name -> (System.nanoTime() - t0) / 1e9
-        }
-        var passes = Vector(onePass())
-        val pass1Sec = passes.head.map(_._2).sum
-        qPass1Sec = pass1Sec
-        // The headline metric is the replay scaling pair, so the SECOND
-        // catalog pass runs only when the budget still fits a healthy
-        // replay protocol after it: generation + TWO interleaved rounds at
-        // a batch size that amortizes the serial slice + the peak run
-        // (~300 s). A single-pass catalog costs per-query min-of-1
-        // fidelity; a single-round replay costs the interleave rescue on
-        // the NORTH-RULE number — the wrong trade.
-        val minReplaySec = 300.0
-        var p = 1
-        while (p < qRounds && remainingSec > pass1Sec * 1.2 + minReplaySec) {
-          passes :+= onePass()
-          p += 1
-        }
-        names.indices.map(i => passes.head(i)._1 -> passes.map(_(i)._2).min)
-      }
+    // Untimed warmup: JIT/codegen for the scan + hash-agg + join + window
+    // paths is paid here, so the alphabetically-first timed query does not
+    // absorb ~4 s of one-time session cost.
+    Seq("q1_agg", "j1_star_join", "w2_running_sum").foreach { w =>
+      try { SparkEntry.queries(w)(spark, sfDir).count(); () }
+      catch { case _: Throwable => () }
+    }
+    // Catalog entries + the production-hash twins of d2/d3: the oracle
+    // checks the sha256-reproducible mode; the bench times BOTH so the
+    // published table shows production cost too.
+    val names = (SparkEntry.queries.toSeq ++
+      graft.sim.SimilarityQueries.prodVariants).sortBy(_._1)
+    def onePass(): Seq[(String, Double)] = names.map { case (name, fn) =>
+      val t0 = System.nanoTime()
+      try { fn(spark, sfDir).count(); () } catch { case _: Throwable => () }
+      name -> (System.nanoTime() - t0) / 1e9
+    }
+    // Per-query seconds are the min over two passes, so a host stall is
+    // not pinned on whichever query it hit. The second pass runs only if
+    // the budget still fits it plus a replay (~300 s on a 32-core host:
+    // generation, two warm-ups and a few pairs).
+    var passes = Vector(onePass())
+    if (remainingSec > passes.head.map(_._2).sum * 1.2 + 300.0) passes :+= onePass()
+    val queryTimes = names.indices.map(i => passes.head(i)._1 -> passes.map(_(i)._2).min)
     val totalQuery = queryTimes.map(_._2).sum
     val qs = queryTimes.map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
-    publish(
-      f"""{"metric":"total","value":$totalQuery%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","truncated":"before_replay"}""")
+    val head = f"""{"metric":"total","value":$totalQuery%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir""""
+    publish(s"""$head,"truncated":"before_replay"}""")
 
-    // Queries-only pass (SPARK_GRAFT_BENCH_REPLAY=0): refresh the catalog
-    // table in BENCH/BASELINE.md, keep the recorded replay/scaling rows
-    // (the symmetric twin of the replay-only pass keeping the query table).
-    val runReplay = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPLAY", "1") != "0"
-    if (!runReplay) {
-      spark.stop()
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      emit(f"""{"metric":"total","value":$totalQuery%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir"}""")
-      patchQueryTable(totalQuery, queryTimes, sfDir)
-      return
-    }
-
-    try {
-      runReplayProtocol(spark, sfDir, cpus, nBatches, rounds, smallCores, bigCores,
-        () => remainingSec, totalQuery, qs, queryTimes, qPass1Sec, partial, emit)
-    } catch {
+    try runReplay(spark, cpus, () => remainingSec, head, publish, emit)
+    catch {
       case e: Throwable =>
-        // Partial evidence beats none: keep whatever the protocol recorded
-        // in `partial` and append the failure reason.
+        // Partial evidence beats none: keep the last partial and append
+        // the failure reason.
         val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
           .replace("\\", "\\\\").replace("\"", "'").replace("\n", " ").take(300)
-        val base = partial.get.stripSuffix("}")
-        emit(s"""$base,"error":"$msg"}""")
+        emit(s"""${partial.get.stripSuffix("}")},"error":"$msg"}""")
     }
   }
 
-  /** The CDC replay protocol, sized to the remaining wall-clock budget.
-    *
-    * Keyspace is bounded (5000 conversations × 40 turns = 200k keys) so
-    * the bench models the north-star regime events ≫ keys: a 10^10-event
-    * stream mutates a finite set of conversations, so per-commit write
-    * volume is bounded by the table size, not the stream size.
+  /** The CDC replay protocol (see the object doc). Keyspace is bounded
+    * (5000 conversations × 40 turns = 200k keys), the north-star regime
+    * events ≫ keys: a stream of any length mutates a finite table, so the
+    * per-commit write volume is bounded by the table, not the stream.
     */
-  private def runReplayProtocol(spark0: SparkSession, sfDir: String, cpus: Int,
-      nBatches: Int, rounds: Int, smallCores: Int, bigCores: Int,
-      remainingSec: () => Double, totalQuery: Double, qs: String,
-      queryTimes: Seq[(String, Double)], qPass1Sec: Double,
-      partial: AtomicReference[String], emit: String => Unit): Unit = {
-
-    // Update the emergency JSON AND print it (fitted): the shutdown hook
-    // only covers an orderly SIGTERM of this JVM — a kill of the sbt
-    // wrapper loses the hook's output entirely (observed: a deadline-
-    // killed run left NO JSON). The freshest partial on stdout means the
-    // collector's last-JSON-line read still lands on evidence after a
-    // hard kill; the final emit prints after every partial on clean runs.
-    def publish(json: String): Unit = {
-      partial.set(json)
-      println(fitJson(json))
-      Console.flush()
-    }
-
-    // ---- sizing heuristics, calibrated to the CURRENT host window ----
-    // The host's co-tenant load swings merge throughput 2-3× between
-    // windows with zero recorded steal (N=2 sustained measured 394k
-    // events/s at membw 11.9 GB/s — the round-3 driver run — but ~180k at
-    // membw 9.1). Sizing from a fixed assumed rate therefore either
-    // starves epochs (healthy window) or overruns the deadline (degraded
-    // window). The 256 MB array-copy calibration predicts the window, so
-    // the assumed N-rate for SIZING (results are always measured, never
-    // assumed) is scaled by (membw/11.9)^3 — a deliberately punitive curve
-    // fitted to the two observed anchor windows above — and floored.
-    val bwNow = membwGBs()
-    val bwFactor = math.min(1.0, bwNow / 11.9)
-    // The catalog pass is a BETTER window probe than the memcpy when it
-    // ran in this process: a ~100 s measurement of real Spark work
-    // (scans, shuffles, commits) vs a 256 MB single-thread copy. Measured
-    // divergence: a morning window read memcpy 8.5 GB/s (cubic curve →
-    // epsN 150k) while the replay then ran at 437k events/s — the memcpy
-    // under-predicted 3× and the round was sized to epochs too small to
-    // amortize the ~1.3 s/epoch serial slice (sync pair read eff 0.711
-    // where the same engine at 2× the epoch size measures 0.82+). The
-    // reference wall is the catalog's healthy-window first pass
-    // (SPARK_GRAFT_BENCH_QREF_SEC); the ratio is linear, not punitive —
-    // under-sizing now costs gate accuracy (small epochs), while
-    // over-sizing is bounded by the sync round's pair-granular early
-    // stop, so the asymmetric-punitive curve is no longer the right risk
-    // trade. The memcpy cubic remains the fallback for replay-only runs.
-    val qRefSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_QREF_SEC", "78").toDouble
-    val hostFactor =
-      if (qPass1Sec > 0) math.min(1.0, qRefSec / qPass1Sec)
-      else bwFactor * bwFactor * bwFactor
-    val epsN = sys.env.get("SPARK_GRAFT_BENCH_ASSUMED_EPS_N").map(_.toDouble)
-      .getOrElse(math.max(150000.0, 450000.0 * hostFactor))
-    val spinUp = 35.0
-    // Fixed wall per epoch beyond event volume (job scheduling + head agg
-    // + commit; core-count-independent) — measured ~0.6 s after the
-    // write-pass manifest stats removed the footer read pass.
-    val epochFixed = sys.env.getOrElse("SPARK_GRAFT_BENCH_EPOCH_FIXED", "0.6").toDouble
-    // Untimed steady-state warmup per child (see replayInProcess): ~2.5
-    // passes over a warm-slice until the pass wall stabilizes.
-    val warmEvents = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARM_EVENTS", "3000000").toLong
-    def warmCost(eps: Double): Double = 2.5 * warmEvents / eps
-    def roundCostSec(events: Long): Double =
-      events / epsN + events / (2.8 * epsN) + 2 * spinUp + 2 * nBatches * epochFixed +
-        warmCost(epsN) + warmCost(2.8 * epsN)
-    def peakCostSec(events: Long): Double =
-      events / (3.5 * epsN) + spinUp + nBatches * epochFixed + warmCost(3.5 * epsN)
-    // Generation rate with the parent's heap PINNED (-Xms == -Xmx, see
-    // build.sbt): measured 48.9M events in ~40 s (≥1.2M events/s). With a
-    // lazily-growing heap the same job ran 5-15× slower — 32 threads
-    // faulting fresh heap pages serialize in the virtualized kernel (67
-    // SYS-minutes for one 12M-row slice). Batches 1..n-1 additionally
-    // OVERLAP the sync children's untimed spin-up/warm phases (gen thread
-    // below); the estimate stays un-overlapped = conservative.
-    def genCostSec(events: Long): Double = events / (1000000.0 * hostFactor) + 10.0
-
-    // Size events so ONE interleaved round + generation fit the remaining
-    // budget (further rounds, the peak run and probes are each gated
-    // adaptively on measured cost below). One round of BIG epochs beats
-    // two rounds of small ones: the ~0.6 s/epoch serial slice rides every
-    // epoch, and at 4 epochs/round it drags the 4N quotient below the
-    // north rule once epochs shrink under ~5M events. An explicit
-    // SPARK_GRAFT_BENCH_EVENTS overrides. Floor 12M, cap 32M.
-    val budget0 = remainingSec()
-    // Minimal-viable cost: generation + both children's spin-up + warmup
-    // + ONE epoch pair. The sync protocol stops at pair granularity, so
-    // committing to big events is safe whenever a single big pair fits —
-    // one big pair is stronger gate evidence than four small ones (the
-    // ~1.0-1.3 s/epoch serial slice drags the 4N quotient below the
-    // north rule once epochs shrink under ~6M events: measured eff 0.711
-    // at 3.9M-event epochs, 0.798 at 8.2M, model 0.89 at 12M).
-    // Serialized post-warm settle passes (~2 per child at steady state,
-    // each one warm-slice pass): without this term sizing committed to
-    // events whose warm left no budget for the settles — they were then
-    // skipped and the round's single pair measured an under-settled child
-    // (observed: a skipped-settle 4N epoch at 2-3× its steady state,
-    // publishing eff 0.426 where settled runs measure 0.87-0.93).
-    val settleCost: Double =
-      2.0 * warmEvents / epsN + 2.0 * warmEvents / (2.8 * epsN)
-    def minViableCost(events: Long): Double =
-      genCostSec(events) + 2 * spinUp + warmCost(epsN) + warmCost(2.8 * epsN) +
-        settleCost +
-        (events.toDouble / nBatches) / epsN + (events.toDouble / nBatches) / (2.8 * epsN) +
-        2 * epochFixed
-    // Largest epoch size whose one-pair minimum fits: epoch size is the
-    // quotient's accuracy knob, pair COUNT is the budget knob.
-    val ladder = Seq(48000000L, 40000000L, 32000000L, 24000000L, 16000000L, 12000000L)
-    val sized = ladder.find(e => budget0 >= minViableCost(e)).getOrElse(ladder.last)
-    val benchEvents = sys.env.get("SPARK_GRAFT_BENCH_EVENTS").map(_.toLong).getOrElse(sized)
-    System.err.println(f"[bench] budget=${budget0}%.0fs membw=$bwNow%.1fGB/s epsN=$epsN%.0f " +
-      f"-> events=$benchEvents%,d (est round=${roundCostSec(benchEvents)}%.0fs " +
-      f"peak=${peakCostSec(benchEvents)}%.0fs)")
-
-    // ---- 2. generate the change log once as files ----
-    // Only a small WARM SLICE is written serially (the children's warmup
-    // reads it); EVERY real batch generates on a background thread that
-    // OVERLAPS the sync children's untimed spin-up + warm phases — the
-    // contention lands only on untimed work, and the first timed epoch
-    // waits on genJoin() below. Generation is the protocol's single
-    // biggest fixed cost (~120 s for 32M events), so hiding most of it
-    // buys 1-2 extra measurement pairs per round.
-    val cfg = GenConfig(numEvents = benchEvents, numConvs = 5000, maxTurns = 40)
+  private def runReplay(spark: SparkSession, cpus: Int, remainingSec: () => Double,
+      head: String, publish: String => Unit, emit: String => Unit): Unit = {
+    val n = derivedN(cpus)
+    val n4 = 4 * n
+    val heapMb = childHeapMb(memTotalKb())
+    val per = epochEvents(n4, heapMb)
+    // totalRows ≥ NBatches × per, so every batch holds exactly `per` rows
+    val cfg = GenConfig(numEvents = per * NBatches, numConvs = 5000, maxTurns = 40)
     val benchDir = Files.createTempDirectory("graft-bench-").toString
-    val per = (cfg.totalRows + nBatches - 1) / nBatches
-    def genBatch(b: Int): Unit =
-      ChangeGen.eventSlice(spark0, cfg, b * per, math.min(cfg.totalRows, (b + 1) * per))
-        .toDF().write.parquet(s"$benchDir/batch-$b")
-    // Only the small WARM SLICE is generated serially (the children warm
-    // on it); every real batch generates on the background thread under
-    // the children's untimed spin-up/warm umbrella. Serially generating
-    // batch-0 first cost 40-150 s of pure deadline (the whole slice at
-    // the window's speed) for data the timed epochs would not touch for
-    // another two minutes.
-    val warmSliceEvents = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARM_EVENTS", "3000000").toLong
-    ChangeGen.eventSlice(spark0, cfg, 0, math.min(cfg.totalRows, warmSliceEvents))
-      .toDF().write.parquet(s"$benchDir/warm-src")
-    @volatile var genError: Option[Throwable] = None
-    val genThread = new Thread(() => {
-      try {
-        // bind the parent session to this thread (getOrCreate-style
-        // thread-local binding; see Sessions.local)
-        SparkSession.setActiveSession(spark0)
-        (0 until nBatches).foreach(genBatch)
-      } catch { case e: Throwable => genError = Some(e) }
-    }, "graft-bench-gen")
-    genThread.setDaemon(true)
-    genThread.start()
-    var genJoined = false
-    def genJoin(): Unit = if (!genJoined) {
-      genThread.join()
-      genError.foreach(e => throw e)
-      genJoined = true
-      spark0.stop()
+    var children = List.empty[Child]
+    try {
+      val g0 = System.nanoTime()
+      (0 until NBatches).foreach { b =>
+        ChangeGen.eventSlice(spark, cfg, b * per, (b + 1) * per)
+          .toDF().write.parquet(s"$benchDir/batch-$b")
+      }
+      spark.stop()
       SparkSession.clearActiveSession()
       SparkSession.clearDefaultSession()
-    }
+      System.err.println(f"[bench] N=$n 4N=$n4 heap=${heapMb}m epoch=$per%,d rows; " +
+        f"generated $NBatches batches in ${(System.nanoTime() - g0) / 1e9}%.0fs")
 
-    // ---- 3. replay at N and 4N cores ----
-    // The sandbox host shows intermittent CPU steal (3-4× swings on
-    // identical batches), so each core count is measured in INTERLEAVED
-    // rounds (N, 4N, N, 4N, …) and per-round steal is recorded — standard
-    // practice for scaling numbers on a noisy shared host.
-    //
-    // Each measurement runs in a FRESH CHILD JVM (same flags/classpath):
-    // reusing one JVM across interleaved sessions penalized the wide runs
-    // ~60% (GC debt / fragmentation from the preceding narrow run).
-    // Separate JVMs are also the faithful analogue of separate executor
-    // fleets at N vs 4N. Falls back to in-process if the child cannot be
-    // launched.
-    def replayOnce(cores: Int, round: Int)
-        : (Seq[Double], Seq[Double], Seq[Double], Seq[Double], Double, Long, Double) = {
-      import scala.jdk.CollectionConverters._
-      val cmd = childJvmCmd(Seq("replay-child", cores.toString, round.toString,
-        benchDir, nBatches.toString), cores)
-      val w0 = System.nanoTime()
-      def wall: Double = (System.nanoTime() - w0) / 1e9
-      try {
-        val pb = new ProcessBuilder(cmd.asJava)
-        pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-        val p = pb.start()
-        val out = new String(p.getInputStream.readAllBytes(), "UTF-8")
-        val code = p.waitFor()
-        val line = out.linesIterator.find(_.startsWith("CHILD_RESULT"))
-        require(code == 0 && line.isDefined, s"child exit=$code out=$out")
-        val kv = line.get.split("\\s+").drop(1).map { t =>
-          val Array(k, v) = t.split("=", 2); k -> v
-        }.toMap
-        (kv("epochs").split(",").toSeq.map(_.toDouble),
-          kv("steals").split(",").toSeq.map(_.toDouble),
-          kv.get("sysu").map(_.split(",").toSeq.map(_.toDouble))
-            .getOrElse(Seq.fill(nBatches)(0.0)),
-          kv.get("gcs").map(_.split(",").toSeq.map(_.toDouble))
-            .getOrElse(Seq.fill(nBatches)(0.0)),
-          kv.get("membw").map(_.toDouble).getOrElse(0.0),
-          kv("rows").toLong, wall)
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] child JVM failed (${e.getMessage}); running in-process")
-          val (a, b, c, g, d) = replayInProcess(cores, round, benchDir, nBatches)
-          (a, b, c, g, 0.0, d, wall)
-      }
-    }
+      // Sequential start: the 4N child spawns only after the N child is
+      // ready, so the two pinned-heap pre-touches never overlap.
+      val a = new Child(n, heapMb, benchDir); children ::= a
+      a.await("CHILD_READY")
+      val b = new Child(n4, heapMb, benchDir); children ::= b
+      b.await("CHILD_READY")
 
-    // Adaptive rounds gated on MEASURED steal AND the deadline: an epoch
-    // that absorbed hypervisor steal above `stealCleanSec` core-seconds is
-    // objectively a corrupted measurement (the counter is external
-    // evidence), so interleaving continues until each core count has at
-    // least one fully-clean round — bounded by `rounds` AND by the
-    // remaining budget fitting another round (estimated from the rounds
-    // already measured, spin-up included).
-    val stealCleanSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_STEAL_CLEAN", "15").toDouble
-    // Storm gate: machine sys/user jiffy ratio per epoch. Healthy Spark
-    // epochs are user-dominated (ratio well under 1); this host's
-    // hypervisor-interference storms measure sys 10-100× user with only
-    // modest recorded steal (see userSysJiffies). 1.0 separates the two
-    // regimes by an order of magnitude on both sides.
-    val sysUserCleanRatio = sys.env.getOrElse("SPARK_GRAFT_BENCH_SYSU_CLEAN", "1.0").toDouble
-    // Internal stall gate: the steal/sysu counters miss some host stalls
-    // (observed: one epoch at 43 s between siblings at ~17.5 s with 0.1
-    // stolen core-sec and sysu 0.06 — likely a hypervisor or page-cache
-    // event below both counters). An epoch that long relative to its OWN
-    // round's median is evidence of a stall regardless of counter
-    // attribution; it corrupts the quotient in whichever direction the
-    // stall lands (fake-superlinear if on N, gate-failing if on 4N).
-    // Healthy pair-side rounds measure max/median ≤ ~1.4; stalled ones
-    // 1.8-2.5 (observed 1.795 and 2.45 in back-to-back runs) — 1.6
-    // separates the regimes. This gate drives the SOUND pool (extra
-    // rounds / probes); single-round headlines use the median-epoch
-    // composition regardless, which is robust to one stall per side.
-    val epochStallFactor = sys.env.getOrElse("SPARK_GRAFT_BENCH_EPOCH_STALL", "1.6").toDouble
-    def medianOf(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
+      var pairs = Vector.empty[Pair]
+      while (pairs.size < MaxPairs && fitsAnotherPair(pairs, remainingSec())) {
+        val batch = WarmEpochs + pairs.size
+        pairs :+= (if (nFirst(pairs.size)) { val x = a.epoch(batch); Pair(x, b.epoch(batch)) }
+                   else { val y = b.epoch(batch); Pair(a.epoch(batch), y) })
+        publish(s"""$head,"cdc":${cdcJson(pairs, n, per, heapMb, None)},"truncated":"mid_replay"}""")
+      }
+      val (depthN, rowsN) = a.done()
+      val (depth4N, rows4N) = b.done()
+      requireSameFinalState(depthN, rowsN, depth4N, rows4N)
+      emit(s"""$head,"cdc":${cdcJson(pairs, n, per, heapMb, Some(rowsN))}}""")
+    } finally {
+      children.foreach(_.destroy())
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(benchDir))
     }
-    val minRounds = math.min(2, rounds)
-    final case class Run(cores: Int, round: Int, secs: Seq[Double], steals: Seq[Double],
-        sysu: Seq[Double], gcs: Seq[Double], membw: Double, rows: Long, wall: Double,
-        warmSec: Double = 0.0) {
-      def clean: Boolean = steals.forall(_ <= stealCleanSec) &&
-        sysu.forall(_ <= sysUserCleanRatio)
-      def stalled: Boolean = secs.max > epochStallFactor * medianOf(secs)
-      /** Usable as headline evidence: counter-clean AND internally consistent. */
-      def sound: Boolean = clean && !stalled
-    }
-    var runs = Vector.empty[Run]
-    var syncRounds = Set.empty[Int] // round indices measured epoch-interleaved
-    // Sync rounds whose uncontended settle passes were skipped (deadline
-    // pressure): steady state was never established, so their quotients
-    // are labeled, never presented as settled gate evidence.
-    var unsettledRounds = Set.empty[Int]
-    def cleanRounds(c: Int) = runs.count(r => r.cores == c && r.clean)
-    def soundRounds(c: Int) = runs.count(r => r.cores == c && r.sound)
+  }
 
-    // SYNC round: both children stay alive and the parent alternates
-    // epochs between them (N epoch b, then 4N epoch b), so each quotient
-    // pair lands in the SAME host window. Sequential child-level
-    // interleaving cannot fix window-scale drift when the budget fits only
-    // one round — observed: an entire N child running in a degraded window
-    // minutes before a clean 4N child read 1.13 superlinear off medians.
-    // Warmups run CONCURRENTLY (only the heap pre-touches are staggered,
-    // on the CHILD_SPUN handshake); post-READY the parent serializes one
-    // uncontended SETTLE re-stabilization per child so steady-state
-    // detection never concludes on contended passes, and the inter-epoch
-    // GC quiesce is parent-orchestrated so it never overlaps the
-    // sibling's timed epoch. Falls back to the sequential protocol on any
-    // handshake failure or timeout.
-    final class SyncChild(cores: Int, round: Int) {
-      import scala.jdk.CollectionConverters._
-      private val t0 = System.nanoTime()
-      val proc: Process = {
-        val pb = new ProcessBuilder(childJvmCmd(Seq("replay-child-sync", cores.toString,
-          round.toString, benchDir, nBatches.toString), cores).asJava)
-        pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-        // Budget-scaled warm cap: in a degraded window the default 120 s
-        // per-child warm can blow the whole deadline before the first
-        // timed epoch (the warms run concurrently but a 79 s first pass
-        // was measured); the serialized settle pass provides the
-        // steady-state guarantee, so a tighter warm costs honesty nothing.
-        if (!sys.env.contains("SPARK_GRAFT_BENCH_WARM_CAP_SEC"))
-          pb.environment().put("SPARK_GRAFT_BENCH_WARM_CAP_SEC",
-            math.max(25.0, math.min(120.0, remainingSec() * 0.25)).toString)
-        pb.start()
-      }
-      private val lines = new java.util.concurrent.LinkedBlockingQueue[String]()
-      private val reader = new Thread(() => {
-        try {
-          val br = new java.io.BufferedReader(new java.io.InputStreamReader(proc.getInputStream))
-          var l = br.readLine()
-          while (l != null) {
-            if (l.startsWith("CHILD_")) lines.put(l)
-            l = br.readLine()
-          }
-        } catch { case _: Throwable => () }
-        lines.put("CHILD_EOF")
-      })
-      reader.setDaemon(true); reader.start()
-      private val writer = new java.io.PrintWriter(
-        new java.io.OutputStreamWriter(proc.getOutputStream), true)
-      def send(cmd: String): Unit = writer.println(cmd)
-      /** Next CHILD_ line if it matches `prefix` within the timeout. */
-      def await(prefix: String, timeoutSec: Double): Option[String] = {
-        val l = lines.poll(math.max(1L, (timeoutSec * 1000).toLong),
-          java.util.concurrent.TimeUnit.MILLISECONDS)
-        if (l != null && l.startsWith(prefix)) Some(l) else None
-      }
-      def busySec: Double = (System.nanoTime() - t0) / 1e9
-      def destroy(): Unit = { try { proc.destroyForcibly(); () } catch { case _: Throwable => () } }
-    }
-    def parseKv(line: String): Map[String, String] =
-      line.split("\\s+").drop(1).map { t => val Array(k, v) = t.split("=", 2); k -> v }.toMap
-    def replaySyncRound(round: Int): Boolean = {
-      // Generous timeouts: spin-up + warm cap for READY, the observed
-      // worst stall epoch plus margin for an epoch. On miss the whole
-      // round is discarded (the deadline guard already budgeted for it).
-      val readyTimeoutSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_SYNC_READY_SEC", "300").toDouble
-      val epochTimeoutSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_SYNC_EPOCH_SEC", "240").toDouble
-      var spawned = List.empty[SyncChild]
-      try {
-        // Both children WARM concurrently — all untimed work, and
-        // serializing it (~135 s: spawn+warm+spawn+warm) was costing 1-2
-        // measurement pairs per round. The sibling spawns only after
-        // CHILD_SPUN (heap pre-touched + session up), so the two 12g heap
-        // PRE-TOUCHES never overlap — this host's kernel storms when
-        // >~16 GB of fresh pages fault at once (see build.sbt), and a
-        // fixed 20 s stagger proved insufficient in a degraded window
-        // (the first child's spin ran past it and the overlapping touches
-        // stalled it beyond the ready timeout). The warms themselves may
-        // contend, which the near-best steady-state rule tolerates (and
-        // the 32-core gen thread already overlaps them regardless).
-        // spinSec on the SPUN line = JVM start -> session up, the
-        // serialized pre-touch phase — real serial wall the round-cost
-        // estimator must count (warmSec alone under-estimated the next
-        // round by ~2x spin and green-lit rounds that then blew the
-        // deadline).
-        def spunSpin(c: SyncChild, label: String): Double = {
-          val l = c.await("CHILD_SPUN", readyTimeoutSec)
-          require(l.isDefined, s"$label child not spun")
-          parseKv(l.get).get("spinSec").map(_.toDouble).getOrElse(c.busySec)
-        }
-        val a = new SyncChild(smallCores, round); spawned ::= a
-        val spinA = spunSpin(a, "N")
-        val b = new SyncChild(bigCores, round); spawned ::= b
-        // b's CHILD_SPUN must be drained (await hands lines out in order).
-        val spinB = spunSpin(b, "4N")
-        // warmSec on the READY line is the child's own warm-only wall
-        // (spun -> ready) — the overlappable portion; the parent-clock
-        // fallback over-counts it with queue-drain wait (conservative).
-        def readyWarm(c: SyncChild, label: String): Double = {
-          val l = c.await("CHILD_READY", readyTimeoutSec)
-          require(l.isDefined, s"$label child not ready")
-          parseKv(l.get).get("warmSec").map(_.toDouble).getOrElse(c.busySec)
-        }
-        val warmA = readyWarm(a, "N")
-        val warmB = readyWarm(b, "4N")
-        genJoin() // all batches on disk before the first TIMED epoch; the
-                  // background generation overlapped both untimed warms
-        // Post-READY settle passes, SERIALIZED (sibling idle, generation
-        // done, so the passes are uncontended): the concurrent warm phase
-        // alone cannot tell "every pass contended" from steady state —
-        // see the SETTLE handler. Their wall is serial round cost, so it
-        // rides in the Run wall alongside the epochs.
-        def settle(c: SyncChild, label: String): Double = {
-          // Wall-cap the child's settle passes to a slice of the budget
-          // so a degraded window (79 s passes measured) cannot eat the
-          // round or trip the await timeout after the warm investment is
-          // already paid.
-          val cap = math.max(15.0, math.min(60.0, remainingSec() * 0.15))
-          c.send(f"SETTLE $cap%.0f")
-          val l = c.await("CHILD_SETTLED", epochTimeoutSec)
-          require(l.isDefined, s"$label child settle timed out")
-          val kv = parseKv(l.get)
-          System.err.println(s"[bench] $label child settled: n=${kv.getOrElse("n", "?")} " +
-            s"lastPass=${kv.getOrElse("sec", "?")}s")
-          kv.get("sec").map(_.toDouble).getOrElse(0.0)
-        }
-        // Settle only while there is budget beyond the settle's own cost
-        // (re-checked per child — degraded windows can burn the budget
-        // mid-settle): when the deadline is blown the priority is landing
-        // ANY pair before the driver's hard kill. A settle-less pair is
-        // NOT headline-grade, in either direction: an under-settled narrow
-        // child reads fake-superlinear (caught by the plausibility gate),
-        // an under-settled WIDE child deflates the quotient below it
-        // (observed: a skipped-settle 4N child's single epoch ran 18 s vs
-        // its 6-9 s steady state and published eff 0.426) — so a round
-        // whose settle was skipped is marked UNSETTLED and its headline is
-        // labeled, with the prior settled doc block retained.
-        val settleSec = {
-          val settleWall0 = System.nanoTime()
-          Seq((a, "N"), (b, "4N")).foreach { case (c, label) =>
-            if (remainingSec() > 60) settle(c, label)
-            else {
-              unsettledRounds += round
-              System.err.println(
-                f"[bench] skipping $label settle (remaining=${remainingSec()}%.0fs) — " +
-                  "round marked unsettled")
-            }
-          }
-          (System.nanoTime() - settleWall0) / 1e9
-        }
-        val eps = Array(a, b).map(_ => Vector.newBuilder[(Double, Double, Double, Double)])
-        val perEpochEvents = cfg.totalRows.toDouble / nBatches
-        var measuredN = Vector.empty[Double]
-        var measured4 = Vector.empty[Double]
-        // per-pair counter evidence, for the PARTIAL's clean-pair filter
-        // (the emergency JSON must not publish a storm-dirty quotient when
-        // a clean pair exists — the final headline filters, so must this)
-        var pairDirty = Vector.empty[Boolean]
-        // Cost of the NEXT pair: worst measured epoch per side once one
-        // exists (the honest predictor for this window), else the sizing
-        // estimate; +8 s for quiesce/handshake slack.
-        // +20 s: quiesce/handshake slack PLUS the round's fixed tail (the
-        // DONE handshake and each child's membw calibration run after the
-        // last pair) — with only +8 a degraded-window run green-lit a pair
-        // whose tail pushed the whole protocol past the deadline.
-        def nextPairCost: Double =
-          (if (measuredN.nonEmpty) measuredN.max else perEpochEvents / epsN) +
-            (if (measured4.nonEmpty) measured4.max else perEpochEvents / (2.8 * epsN)) + 20.0
-        var e = 0
-        var stopped = false
-        while (e < nBatches && !stopped) {
-          // PAIR-GRANULAR EARLY STOP: events are sized so one big pair
-          // always fits; each further pair runs only if the remaining
-          // budget fits it. Every completed pair is self-contained gate
-          // evidence (same-window quotient), so stopping early loses
-          // depth, never validity.
-          if (e > 0 && remainingSec() < nextPairCost) {
-            System.err.println(f"[bench] sync round $round: early stop after $e/$nBatches " +
-              f"pairs (remaining=${remainingSec()}%.0fs < pair=${nextPairCost}%.0fs)")
-            stopped = true
-          } else {
-            // ABBA within-pair ordering: whichever side runs FIRST after a
-            // quiesce (or right after generation finished) absorbs any
-            // residual host churn; alternating the order per pair makes
-            // that exposure symmetric across the round's median.
-            val order = if (e % 2 == 0) Seq((a, 0), (b, 1)) else Seq((b, 1), (a, 0))
-            var dirty = false
-            order.foreach { case (c, i) =>
-              c.send(s"GO $e")
-              val line = c.await("CHILD_EPOCH", epochTimeoutSec)
-              require(line.isDefined, s"epoch $e timed out on child ${c.proc.pid()}")
-              val kv = parseKv(line.get)
-              val sec = kv("sec").toDouble
-              if (i == 0) measuredN :+= sec else measured4 :+= sec
-              if (kv("steal").toDouble > stealCleanSec ||
-                kv("sysu").toDouble > sysUserCleanRatio) dirty = true
-              eps(i) += ((sec, kv("steal").toDouble,
-                kv("sysu").toDouble, kv("gc").toDouble))
-            }
-            // the plausibility bar is part of pair cleanliness everywhere
-            if (measuredN.last / measured4.last >
-              (bigCores.toDouble / smallCores) * 1.05) dirty = true
-            pairDirty :+= dirty
-            // Keep the SIGTERM-emergency JSON current after EVERY pair:
-            // the sync round is now most of the protocol's wall, and a
-            // mid-round kill must still report the pairs already measured.
-            locally {
-              val ratios = measuredN.zip(measured4).map { case (x, y) => x / y }
-              // Clean pairs only, when any exist — a kill right after a
-              // storm-dirty pair must not publish its quotient while a
-              // clean same-window pair is in hand (observed: dirty pair
-              // eff 0.44 next to a clean 0.88 in one stormy round).
-              val usable = ratios.zip(pairDirty).collect { case (r, false) => r } match {
-                case Vector() => ratios
-                case clean => clean
-              }
-              val med = medianOf(usable)
-              publish(
-                f"""{"metric":"total","value":$totalQuery%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir",""" +
-                  f""""cdc":{"events":${cfg.totalRows},"batches":$nBatches,""" +
-                  f""""sync_pairs_done":${e + 1},"pairs_dirty":${pairDirty.count(identity)},""" +
-                  f""""pair_ratio_epochs":[${ratios.map(r => f"$r%.2f").mkString(",")}],""" +
-                  f""""epoch_secs_n":[${measuredN.map(s => f"$s%.2f").mkString(",")}],""" +
-                  f""""epoch_secs_4n":[${measured4.map(s => f"$s%.2f").mkString(",")}],""" +
-                  f""""cores_n":$smallCores,"cores_4n":$bigCores,""" +
-                  f""""scaling_efficiency":${med / (bigCores.toDouble / smallCores)}%.3f,""" +
-                  f""""headline_source":"sync_partial${
-                    if (unsettledRounds.contains(round)) "_unsettled" else ""}",""" +
-                  f""""truncated":"mid_sync_round"}}""")
-            }
-            if (e < nBatches - 1) {
-              Seq(a, b).foreach(_.send("QUIESCE"))
-              Seq(a, b).foreach(c => require(c.await("CHILD_QUIESCED", 120).isDefined, "quiesce lost"))
-            }
-            e += 1
-          }
-        }
-        val results = Seq(a, b).map { c =>
-          c.send("DONE")
-          val line = c.await("CHILD_RESULT", 120)
-          require(line.isDefined, "no CHILD_RESULT")
-          val kv = parseKv(line.get)
-          c.proc.waitFor()
-          (kv("rows").toLong, kv("membw").toDouble)
-        }
-        // Per-child busy wall (spin-up + warm + half the serialized settle
-        // + its own epochs), used by the round-cost and peak-cost
-        // estimators: the children are alive for the whole round but only
-        // busy for their own slices. warmSec rides separately so the
-        // estimator can subtract the OVERLAPPED (shorter) warm from its
-        // serial sum; the spins are deliberately serialized, so both
-        // count in full.
-        Seq((a, 0, warmA, spinA), (b, 1, warmB, spinB)).foreach { case (c, i, warm, spin) =>
-          val m = eps(i).result()
-          val cores = if (i == 0) smallCores else bigCores
-          val run = Run(cores, round, m.map(_._1), m.map(_._2), m.map(_._3), m.map(_._4),
-            results(i)._2, results(i)._1, spin + warm + settleSec / 2 + m.map(_._1).sum,
-            warmSec = warm)
-          if (run.stalled)
-            System.err.println(f"[bench] cores=$cores round=$round epoch-stall: " +
-              f"max=${run.secs.max}%.1fs median=${medianOf(run.secs)}%.1fs — excluded from sound pool")
-          runs :+= run
-        }
-        syncRounds += round
-        true
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] sync round $round failed (${e.getMessage}); " +
-            "falling back to sequential children")
-          false
-      } finally spawned.foreach(_.destroy())
-    }
-    // Cost of another round, from the MEASURED per-child busy walls of the
-    // rounds already run. In a sync round the two children's warm phases
-    // OVERLAP — only the slower warm contributes to the round wall — so
-    // subtract the shorter warm from the naive per-side sum (sequential
-    // runs carry warmSec=0 and degrade to the conservative plain sum).
-    def measuredRoundCost: Double =
-      if (runs.isEmpty) roundCostSec(cfg.totalRows)
-      else {
-        val picked = Seq(smallCores, bigCores).map { c =>
-          val of = runs.filter(_.cores == c)
-          if (of.isEmpty) (cfg.totalRows / epsN + spinUp, 0.0)
-          else { val m = of.minBy(_.wall); (m.wall, m.warmSec) }
-        }
-        picked.map(_._1).sum - picked.map(_._2).min
-      }
-    var r = 0
-    var budgetStop = false
-    while (r < rounds && !budgetStop &&
-        (r < minRounds || soundRounds(smallCores) == 0 || soundRounds(bigCores) == 0)) {
-      // The first round always runs (events were sized so it fits); later
-      // rounds must fit the remaining budget. The peak run's budget is
-      // reserved only once TWO interleaved rounds exist: a second round
-      // protects the north-rule scaling number (min over clean rounds),
-      // the peak is informational (the 4N number stands in when skipped).
-      val reserve = if (r >= 2) peakCostSec(cfg.totalRows) else 0.0
-      if (r > 0 && remainingSec() < measuredRoundCost + reserve) {
-        System.err.println(f"[bench] deadline: stopping after $r rounds " +
-          f"(remaining=${remainingSec()}%.0fs < round=${measuredRoundCost}%.0fs + peak)")
-        budgetStop = true
-      } else {
-        val syncMode = !sys.env.get("SPARK_GRAFT_BENCH_SYNC").contains("0")
-        if (syncMode && replaySyncRound(r)) {
-          // Deliberately NOT updatePartialWithRuns(): the sync round just
-          // published a clean-pair-median partial — strictly better
-          // evidence than the cross-round best-epoch composition, which
-          // ignores pair structure and can briefly publish an impossible
-          // (>core-ratio) quotient between here and the final emit
-          // (observed: 1.108 next to a 0.934 clean pair).
-        } else {
-          genJoin() // sequential children replay all epochs unsynced
-          Seq(smallCores, bigCores).foreach { c =>
-            val (secs, steals, sysu, gcs, membw, rows, wall) = replayOnce(c, r)
-            System.err.println(f"[bench] child cores=$c round=$r wall=$wall%.0fs membwGBs=$membw%.1f")
-            val run = Run(c, r, secs, steals, sysu, gcs, membw, rows, wall)
-            if (run.stalled)
-              System.err.println(f"[bench] cores=$c round=$r epoch-stall: max=${secs.max}%.1fs " +
-                f"median=${medianOf(secs)}%.1fs (ratio ${secs.max / medianOf(secs)}%.2f > " +
-                f"$epochStallFactor%.1f) — round excluded from the sound pool")
-            runs :+= run
-            updatePartialWithRuns() // after EVERY child, not every round: a
-            // SIGTERM mid-round still reports the half-round's evidence
-          }
-        }
-        r += 1
-      }
-    }
-
-    // Evidence-pool preference for a side: sound rounds (counter-clean and
-    // internally consistent), else counter-clean (stall-only), else all.
-    def poolOf(cores: Int): Vector[Run] = {
-      val of = runs.filter(_.cores == cores)
-      if (of.exists(_.sound)) of.filter(_.sound)
-      else if (of.exists(_.clean)) of.filter(_.clean)
-      else of
-    }
-    // Full-replay-equivalent wall: an early-stopped sync round measures
-    // fewer (identically sized) epochs, so scale its sum to nBatches.
-    def fullEquiv(run: Run): Double = run.secs.sum * nBatches.toDouble / run.secs.size
-    def bestOf(cores: Int): Double = poolOf(cores).map(fullEquiv).min
-    // Stall-robust within-round composition: nBatches × the round's MEDIAN
-    // epoch, minimized over the side's evidence pool. Immune to a single
-    // stalled epoch on either side (4 epochs/round), and a real sustained
-    // measurement — the raw epoch walls stay in the JSON alongside it.
-    def medOf(cores: Int): Double =
-      poolOf(cores).map(run => nBatches * medianOf(run.secs)).min
-    def floorOf(cores: Int): Double = {
-      val perRound = runs.filter(_.cores == cores).map(_.secs)
-      val mins = (0 until nBatches).flatMap { e =>
-        val vs = perRound.flatMap(_.lift(e)); if (vs.isEmpty) None else Some(vs.min)
-      }
-      mins.sum * nBatches.toDouble / mins.size
-    }
-    // Per-epoch walls of the round behind `bestOf` — the sustained-stream
-    // evidence (mean ± stddev across the epochs of one real run).
-    def gcSecsOf(cores: Int): Seq[Double] = poolOf(cores).minBy(fullEquiv).gcs
-    def epochStatsOf(cores: Int): (Seq[Double], Double, Double) = {
-      val secs = poolOf(cores).minBy(fullEquiv).secs
-      val mean = secs.sum / secs.size
-      val sd = math.sqrt(secs.map(s => (s - mean) * (s - mean)).sum / secs.size)
-      (secs, mean, sd)
-    }
-    // Keep `partial` current after every replay phase so a SIGTERM mid-
-    // protocol still reports the interleaved evidence gathered so far.
-    def updatePartialWithRuns(): Unit = {
-      if (!runs.exists(_.cores == smallCores) || !runs.exists(_.cores == bigCores)) return
-      val ratio = bigCores.toDouble / smallCores
-      val eff = (bestOf(smallCores) / bestOf(bigCores)) / ratio
-      publish(
-        f"""{"metric":"total","value":$totalQuery%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir",""" +
-          f""""cdc":{"events":${cfg.totalRows},"batches":$nBatches,""" +
-          f""""cores_n":$smallCores,"sec_n":${bestOf(smallCores)}%.2f,""" +
-          f""""events_per_sec_n":${cfg.totalRows / bestOf(smallCores)}%.0f,""" +
-          f""""cores_4n":$bigCores,"sec_4n":${bestOf(bigCores)}%.2f,""" +
-          f""""events_per_sec_4n":${cfg.totalRows / bestOf(bigCores)}%.0f,""" +
-          f""""speedup":${bestOf(smallCores) / bestOf(bigCores)}%.2f,""" +
-          f""""scaling_efficiency":$eff%.3f,"headline_source":"partial_interleaved",""" +
-          f""""rounds_run":$r},"truncated":"mid_replay"}"""
-      )
-    }
-
-    // Clean-window PROBES: when no full-size interleaved round lands clean
-    // (sustained steal periods on this host), measure the same merge job
-    // on a single SHORT batch (events/6, one epoch) alternating N / 4N
-    // until each side records a steal-clean epoch. Short epochs have
-    // proportionally short exposure windows, so they find clean air that
-    // multi-minute rounds cannot; the pair is a real measurement of the
-    // same job at two parallelism levels, verified clean by the external
-    // steal counter — not a model or an adjustment. Probes are budget-
-    // gated like everything else and a failed probe child is SKIPPED, not
-    // fatal.
-    // Probes run BEFORE the peak run: they rescue the NORTH-RULE number,
-    // the peak is informational — under deadline pressure the probe pair
-    // must get the budget first. Probe cost comes from the MEASURED round
-    // rate when one exists, not the sizing assumption.
-    val needProbes = cleanRounds(smallCores) == 0 || cleanRounds(bigCores) == 0
-    val probeCfg = GenConfig(numEvents = math.max(cfg.numEvents / 6, 1000000L),
-      numConvs = 5000, maxTurns = 40)
-    val measEpsN = runs.filter(_.cores == smallCores) match {
-      case rs if rs.nonEmpty => cfg.totalRows / rs.map(_.secs.sum).min
-      case _ => epsN
-    }
-    val probeCost = probeCfg.totalRows / measEpsN + warmCost(measEpsN) + spinUp
-    var probeBest = Map.empty[Int, Double] // cores -> best clean single-epoch sec
-    if (needProbes && remainingSec() > genCostSec(probeCfg.totalRows) + 2 * probeCost) {
-      val probeDir = Files.createTempDirectory("graft-probe-").toString
-      val sGen = Sessions.local(cpus, appName = "graft-bench-probegen", tmpfsShuffle = true)
-      sGen.sparkContext.setLogLevel("WARN")
-      ChangeGen.eventSlice(sGen, probeCfg, 0, probeCfg.totalRows)
-        .toDF().write.parquet(s"$probeDir/batch-0")
-      sGen.stop()
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      def probeOnce(cores: Int, attempt: Int): Option[(Double, Double, Double)] = {
-        import scala.jdk.CollectionConverters._
-        try {
-          val cmd = childJvmCmd(Seq("replay-child", cores.toString,
-            (1000 + attempt).toString, probeDir, "1"), cores)
-          val pb = new ProcessBuilder(cmd.asJava)
-          pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-          val p = pb.start()
-          val out = new String(p.getInputStream.readAllBytes(), "UTF-8")
-          val code = p.waitFor()
-          val line = out.linesIterator.find(_.startsWith("CHILD_RESULT"))
-          if (code != 0 || line.isEmpty) {
-            System.err.println(s"[bench] probe child exit=$code; skipping attempt")
-            None
-          } else {
-            val kv = line.get.split("\\s+").drop(1)
-              .map { t => val Array(k, v) = t.split("=", 2); k -> v }.toMap
-            Some((kv("epochs").toDouble, kv("steals").toDouble,
-              kv.get("sysu").map(_.toDouble).getOrElse(0.0)))
-          }
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] probe failed (${e.getMessage}); skipping attempt")
-            None
-        }
-      }
-      val maxAttempts = sys.env.getOrElse("SPARK_GRAFT_BENCH_PROBE_ATTEMPTS", "8").toInt
-      var attempt = 0
-      while (attempt < maxAttempts && remainingSec() > probeCost &&
-          (!probeBest.contains(smallCores) || !probeBest.contains(bigCores))) {
-        Seq(smallCores, bigCores).foreach { c =>
-          if (!probeBest.contains(c) && remainingSec() > probeCost) {
-            probeOnce(c, attempt).foreach { case (sec, steal, sysu) =>
-              System.err.println(f"[bench] probe cores=$c attempt=$attempt sec=$sec%.2f " +
-                f"stolenCoreSec=$steal%.1f sysOverUser=$sysu%.2f")
-              if (steal <= stealCleanSec && sysu <= sysUserCleanRatio) probeBest += c -> sec
-            }
-          }
-        }
-        attempt += 1
-      }
-    }
-
-    // one extra round at full machine width for the peak-throughput number
-    // (skipped under deadline pressure — the 4N number then stands in).
-    // Cost estimate: the measured 4N child wall when one exists (the peak
-    // child does the same spin-up + warmup + epochs, only faster epochs),
-    // else the model.
-    val peakCostEst = runs.filter(_.cores == bigCores) match {
-      case rs if rs.nonEmpty => rs.map(_.wall).min
-      case _ => peakCostSec(cfg.totalRows)
-    }
-    val peak: Option[(Seq[Double], Long)] =
-      if (remainingSec() > peakCostEst) {
-        val (secs, _, _, _, _, rows, _) = replayOnce(cpus, r)
-        Some((secs, rows))
-      } else {
-        System.err.println(f"[bench] deadline: skipping peak run (remaining=${remainingSec()}%.0fs)")
-        None
-      }
-    // Final-state equality PER EPOCH DEPTH: an early-stopped sync round
-    // applies fewer epochs, so its final row count legitimately differs
-    // from a full round's (or the peak run's, which always replays all
-    // batches) — comparing across depths would abort a valid protocol.
-    // Within one depth, N and 4N children must agree exactly.
-    val rowsByDepth = (runs.map(r => r.secs.size -> r.rows) ++
-      peak.map(p => nBatches -> p._2)).groupBy(_._1)
-    rowsByDepth.foreach { case (d, rs) =>
-      require(rs.map(_._2).distinct.size == 1,
-        s"parallelism changed final state after $d epochs: ${rs.map(_._2).distinct}")
-    }
-
-    val probeEff: Option[Double] =
-      for { pn <- probeBest.get(smallCores); p4 <- probeBest.get(bigCores) }
-        yield (pn / p4) / (bigCores.toDouble / smallCores)
-    // Two views of each core count, both reported and named explicitly:
-    //   *_best  — best single-round wall time among steal-CLEAN rounds (a
-    //             real run, uncorrupted by measured steal); falls back to
-    //             all rounds if the cap/deadline expired with no clean round
-    //   *_floor — per-epoch minima composed across interleaved rounds (the
-    //             noise floor: this host shows exogenous multi-second CPU-
-    //             steal stalls, same batch varying 10 s vs 90 s; the floor
-    //             estimates engine time absent stalls but is not a wall
-    //             time any single run observed)
-    val (tSmallBest, tBigBest) = (bestOf(smallCores), bestOf(bigCores))
-    val (tSmallFloor, tBigFloor) = (floorOf(smallCores), floorOf(bigCores))
-    val (peakSecsSum, peakCores) = peak match {
-      case Some((secs, _)) => (secs.sum, cpus)
-      case None => (tBigBest, bigCores)
-    }
-    val epsPeak = cfg.totalRows / peakSecsSum
-    val rowsBig = rowsByDepth.maxBy(_._1)._2.head._2
-    val ratio = bigCores.toDouble / smallCores
-    val effBest = (tSmallBest / tBigBest) / ratio
-    val effFloor = (tSmallFloor / tBigFloor) / ratio
-    // Same-round pair efficiencies, reported as EVIDENCE alongside
-    // best/floor (not a headline candidate): a same-round quotient pairs
-    // the two children launched closest in time, but the children still
-    // run sequentially, so a host window shift can split a round just as
-    // it splits the cross-round composites — maximizing over round pairs
-    // would overstate exactly when a degraded-N / healthy-4N split lands.
-    // The per-child membw calibration in the log tells the two cases
-    // apart after the fact.
-    case class Pair(round: Int, tN: Double, t4N: Double, clean: Boolean) {
-      def eff: Double = (tN / t4N) / ratio
-    }
-    val pairs = (0 until r).flatMap { i =>
-      for {
-        n <- runs.find(x => x.cores == smallCores && x.round == i)
-        b <- runs.find(x => x.cores == bigCores && x.round == i)
-      } yield Pair(i, n.secs.sum, b.secs.sum, n.clean && b.clean)
-    }
-    val cleanPairs = pairs.filter(_.clean)
-    val bestPair: Option[Pair] =
-      (if (cleanPairs.nonEmpty) cleanPairs else pairs) match {
-        case Seq() => None
-        case ps => Some(ps.maxBy(_.eff))
-      }
-    // Sync-round composition: epoch e ran at N then at 4N back-to-back, so
-    // each (secN_e, sec4N_e) pair shares one host window — quotients from
-    // pairs are immune to window-scale drift between the two children.
-    // Counter-dirty pairs (steal/sysu on either side) are dropped; the
-    // MEDIAN remaining pair (lower-middle for even counts — the
-    // conservative side) represents the round, robust to one sub-counter
-    // stall on either side. Both walls are real measurements of the same
-    // epoch, so sec/eff stay mutually consistent.
-    def syncPairOf(i: Int): Option[(Double, Double)] = {
-      val nb = for {
-        n <- runs.find(x => x.cores == smallCores && x.round == i)
-        b <- runs.find(x => x.cores == bigCores && x.round == i)
-      } yield (n, b)
-      nb.flatMap { case (n, b) =>
-        // Early-stopped rounds complete fewer (identically sized) pairs;
-        // only epochs BOTH sides ran can pair.
-        val completed = math.min(n.secs.size, b.secs.size)
-        // Internal-consistency reference per side: identical epochs on one
-        // child only differ by host interference, and stalls only ever ADD
-        // time — so an epoch far above its own child's best is a stall
-        // regardless of counter attribution. This is the SYMMETRIC twin of
-        // the superlinear gate: an N-side stall inflates the quotient
-        // (caught there), a WIDE-side stall deflates it below the gate with
-        // zero recorded steal (observed: 4N epochs [14.9 s, 7.6 s] in one
-        // round — the stalled pair read eff 0.44 where its sibling read
-        // 0.86). Needs ≥2 completed pairs for a reference.
-        val nMin = n.secs.take(completed).min
-        val bMin = b.secs.take(completed).min
-        val good = (0 until completed).filter { e =>
-          val consistent = completed < 2 ||
-            (n.secs(e) <= epochStallFactor * nMin && b.secs(e) <= epochStallFactor * bMin)
-          if (!consistent)
-            System.err.println(f"[bench] round $i pair $e dropped as internally " +
-              f"inconsistent (N=${n.secs(e)}%.2fs vs side-best $nMin%.2fs, " +
-              f"4N=${b.secs(e)}%.2fs vs side-best $bMin%.2fs)")
-          val counters = consistent &&
-            n.steals(e) <= stealCleanSec && n.sysu(e) <= sysUserCleanRatio &&
-            b.steals(e) <= stealCleanSec && b.sysu(e) <= sysUserCleanRatio
-          // PLAUSIBILITY: a pair whose quotient implies efficiency beyond
-          // the core ratio (+5% margin) is physically impossible for this
-          // engine — same socket, shared LLC, the narrow side has MORE
-          // cache per thread — so it is a sub-counter N-side stall, not a
-          // measurement. Dropping it biases the median DOWN (conservative
-          // for the ≥0.8 gate), exactly like a counter-dirty pair.
-          val plausible =
-            n.secs(e) / b.secs(e) <= (bigCores.toDouble / smallCores) * 1.05
-          if (counters && !plausible)
-            System.err.println(f"[bench] round $i pair $e dropped as " +
-              f"superlinear-impossible (N=${n.secs(e)}%.2fs / 4N=${b.secs(e)}%.2fs)")
-          counters && plausible
-        }
-        // Demand a majority of the COMPLETED pairs clean (a lone clean
-        // pair from a full round is too easy to land on a dirty host),
-        // but accept a single-pair round — that pair is a real clean
-        // same-window measurement and the round was budget-truncated.
-        if (good.isEmpty || good.size < math.max(1, (completed + 1) / 2)) None
-        else {
-          // STANDARD median over the clean pairs' quotients — the label
-          // says median, so an even count takes the midpoint of the two
-          // middle pairs' walls (component-wise), not the lower one:
-          // `prs((size-1)/2)` silently computed the MINIMUM for 2 pairs,
-          // which is not a median estimate but the worst case (measured:
-          // clean pairs 3.20/3.46 reported 0.799 where the median is 0.83).
-          val prs = good.map(e => (n.secs(e), b.secs(e))).sortBy { case (x, y) => x / y }
-          if (prs.size % 2 == 1) Some(prs(prs.size / 2))
-          else {
-            val (x1, y1) = prs(prs.size / 2 - 1)
-            val (x2, y2) = prs(prs.size / 2)
-            Some(((x1 + x2) / 2, (y1 + y2) / 2))
-          }
-        }
-      }
-    }
-    // Min efficiency over sync rounds — conservative when several exist.
-    val syncPair: Option[(Double, Double)] =
-      syncRounds.toSeq.sorted.flatMap(syncPairOf)
-        .sortBy { case (x, y) => x / y }.headOption
-    val (tSmallMed, tBigMed) = (medOf(smallCores), medOf(bigCores))
-    val effMed = (tSmallMed / tBigMed) / ratio
-    // Headline selection, by strength of evidence:
-    //   0. a sync round with a counter-clean median epoch pair → that pair
-    //      scaled to full-replay walls (window-drift-proof AND robust to
-    //      one sub-counter stall per side — the strongest evidence this
-    //      host can produce)
-    //   1. ≥2 rounds with sound rounds (counter-clean, internally
-    //      consistent) on both sides → better of best/floor (min-over-
-    //      rounds already trims single-round stalls)
-    //   2. counter-clean rounds on both sides but only one round (or no
-    //      sound round) → median-epoch composition: single-epoch host
-    //      stalls below the steal/sysu counters hit most runs (observed
-    //      once per side in back-to-back runs, 1.8-2.5× the round
-    //      median), so a 4-sample sum is the wrong estimator for one
-    //      round; the median is robust to one stall per side, symmetric,
-    //      and a real full-size sustained measurement (raw epoch walls
-    //      stay in the JSON alongside)
-    //   3. a side has no counter-clean round but both sides landed a clean
-    //      short probe → the probe pair (a real clean measurement)
-    //   4. nothing clean → multi-round: better of best/floor; single
-    //      round: median composition — both explicitly labeled dirty
-    val roundsSound = soundRounds(smallCores) > 0 && soundRounds(bigCores) > 0
-    val roundsDirty = cleanRounds(smallCores) == 0 || cleanRounds(bigCores) == 0
-    val (tSmall, tBig, efficiency, headlineSource0) = syncPair match {
-      case Some((pn, p4)) =>
-        (nBatches * pn, nBatches * p4, (pn / p4) / ratio, "sync_epoch_pair_median")
-      case None =>
-      if (!roundsDirty) {
-        if (roundsSound && r >= 2) {
-          if (effFloor >= effBest) (tSmallFloor, tBigFloor, effFloor, "interleaved_floor")
-          else (tSmallBest, tBigBest, effBest, "interleaved_clean_best")
-        } else (tSmallMed, tBigMed, effMed, "interleaved_epoch_median")
-      } else probeEff match {
-        case Some(pe) => (probeBest(smallCores), probeBest(bigCores), pe, "clean_probe")
-        case None =>
-          if (r >= 2) {
-            if (effFloor >= effBest) (tSmallFloor, tBigFloor, effFloor, "dirty_floor")
-            else (tSmallBest, tBigBest, effBest, "dirty_best")
-          } else (tSmallMed, tBigMed, effMed, "dirty_epoch_median")
-      }
-    }
-    // A final efficiency beyond the core ratio (+5%) cannot be the engine
-    // (see the pair plausibility filter); when every pair of a truncated
-    // round was impossible the fallback compositions reuse the same
-    // stalled epochs, so the label must say so rather than present a
-    // fake-superlinear number as gate evidence.
-    // A sync headline whose every contributing round skipped its settle
-    // passes measured children never shown to be at steady state — label
-    // it (warm-quality failure deflates OR inflates the quotient; see the
-    // settle note above).
-    val unsettledHeadline = headlineSource0 == "sync_epoch_pair_median" &&
-      syncRounds.nonEmpty && syncRounds.forall(unsettledRounds.contains)
-    val headlineSource = headlineSource0 +
-      (if (efficiency > 1.05) "_superlinear_suspect" else "") +
-      (if (unsettledHeadline) "_unsettled" else "")
-    if (efficiency > 1.05)
-      System.err.println(f"[bench] headline efficiency $efficiency%.3f exceeds the " +
-        "core ratio — physically impossible, labeling the run suspect")
-    if (unsettledHeadline)
-      System.err.println(f"[bench] headline efficiency $efficiency%.3f measured without " +
-        "settle passes — labeling the run unsettled")
-    val headlineEvents = if (headlineSource0 == "clean_probe") probeCfg.totalRows else cfg.totalRows
-    val (epsSmall, epsBig) = (headlineEvents / tSmall, headlineEvents / tBig)
-    val speedup = tSmall / tBig
-
-    // ---- 4. emit ----
-    val (epochsN, epochMeanN, epochSdN) = epochStatsOf(smallCores)
-    val (epochs4N, epochMean4N, epochSd4N) = epochStatsOf(bigCores)
-    // Conservative within-round composition: nBatches × the best epoch on
-    // EACH side. Epoch walls wobble ±10% with zero recorded steal (the
-    // host's bandwidth-contention mode); composing each side's best epoch
-    // removes that wobble symmetrically, so a single-round headline that
-    // only passes because slow N epochs inflated the quotient is exposed.
-    val effEpochMin = ((nBatches * epochsN.min) / (nBatches * epochs4N.min)) / ratio
-    val json =
-      f"""{"metric":"total","value":$totalQuery%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir",""" +
-        f""""cdc":{"events":${cfg.totalRows},"batches":$nBatches,""" +
-        f""""epoch_secs_n":[${epochsN.map(s => f"$s%.2f").mkString(",")}],""" +
-        f""""epoch_sec_mean_n":$epochMeanN%.2f,"epoch_sec_stddev_n":$epochSdN%.2f,""" +
-        f""""epoch_secs_4n":[${epochs4N.map(s => f"$s%.2f").mkString(",")}],""" +
-        f""""epoch_sec_mean_4n":$epochMean4N%.2f,"epoch_sec_stddev_4n":$epochSd4N%.2f,""" +
-        f""""epoch_gc_secs_n":[${gcSecsOf(smallCores).map(s => f"$s%.2f").mkString(",")}],""" +
-        f""""epoch_gc_secs_4n":[${gcSecsOf(bigCores).map(s => f"$s%.2f").mkString(",")}],""" +
-        f""""scaling_efficiency_epoch_min":$effEpochMin%.3f,""" +
-        f""""sec_n_median":$tSmallMed%.2f,"sec_4n_median":$tBigMed%.2f,""" +
-        f""""scaling_efficiency_epoch_median":$effMed%.3f,""" +
-        f""""epoch_stall_factor":$epochStallFactor%.1f,""" +
-        f""""stalled_rounds_n":${runs.count(x => x.cores == smallCores && x.stalled)},""" +
-        f""""stalled_rounds_4n":${runs.count(x => x.cores == bigCores && x.stalled)},""" +
-        f""""sync_rounds":${syncRounds.size},""" +
-        f""""epochs_run_n":${epochsN.size},"epochs_run_4n":${epochs4N.size},""" +
-        syncRounds.toSeq.sorted.headOption.flatMap { i =>
-          for {
-            n <- runs.find(x => x.cores == smallCores && x.round == i)
-            b <- runs.find(x => x.cores == bigCores && x.round == i)
-          } yield f""""pair_ratio_epochs":[${n.secs.zip(b.secs)
-            .map { case (x, y) => f"${x / y}%.2f" }.mkString(",")}],"""
-        }.getOrElse("") +
-        syncPair.map { case (pn, p4) =>
-          f""""sync_pair_sec_n":$pn%.2f,"sync_pair_sec_4n":$p4%.2f,""" +
-          f""""scaling_efficiency_sync_pair":${(pn / p4) / ratio}%.3f,"""
-        }.getOrElse("") +
-        f""""cores_n":$smallCores,"sec_n":$tSmall%.2f,"events_per_sec_n":$epsSmall%.0f,""" +
-        f""""cores_4n":$bigCores,"sec_4n":$tBig%.2f,"events_per_sec_4n":$epsBig%.0f,""" +
-        f""""sec_n_best":$tSmallBest%.2f,"sec_4n_best":$tBigBest%.2f,"scaling_efficiency_best":$effBest%.3f,""" +
-        f""""sec_n_floor":$tSmallFloor%.2f,"sec_4n_floor":$tBigFloor%.2f,"scaling_efficiency_floor":$effFloor%.3f,""" +
-        bestPair.map(p => f""""scaling_efficiency_pair":${p.eff}%.3f,"pair_round":${p.round},""").getOrElse("") +
-        f""""speedup":$speedup%.2f,"scaling_efficiency":$efficiency%.3f,""" +
-        f""""headline_source":"$headlineSource","headline_events":$headlineEvents,""" +
-        f""""cores_peak":$peakCores,"events_per_sec_peak":$epsPeak%.0f,""" +
-        f""""rounds_run":$r,"clean_rounds_n":${cleanRounds(smallCores)},""" +
-        f""""membw_gbs_n":${runs.filter(_.cores == smallCores).map(_.membw).max}%.1f,""" +
-        f""""membw_gbs_4n":${runs.filter(_.cores == bigCores).map(_.membw).max}%.1f,""" +
-        f""""clean_rounds_4n":${cleanRounds(bigCores)},"steal_clean_core_sec":$stealCleanSec%.0f,""" +
-        probeEff.map(pe => f""""probe_events":${probeCfg.totalRows},"probe_sec_n":${probeBest(smallCores)}%.2f,""" +
-          f""""probe_sec_4n":${probeBest(bigCores)}%.2f,"scaling_efficiency_probe":$pe%.3f,""").getOrElse("") +
-        f""""final_rows":$rowsBig}}"""
-    emit(json)
-    writeBenchMd(cfg.totalRows, nBatches, smallCores, bigCores, tSmall, tBig,
-      epsSmall, epsBig, speedup, efficiency, totalQuery, queryTimes, peakCores, epsPeak,
-      tSmallBest, tBigBest, effBest, tSmallFloor, tBigFloor, effFloor,
-      r, cleanRounds(smallCores), cleanRounds(bigCores), stealCleanSec,
-      headlineSource, headlineEvents,
-      probeEff.map(pe => (probeCfg.totalRows, probeBest(smallCores), probeBest(bigCores), pe)),
-      (epochMeanN, epochSdN, epochMean4N, epochSd4N), effEpochMin, sfDir)
+  /** The `cdc` object: the median pair's numbers, scaled to the timed
+    * events (`events` = pairs × batch rows, `sec_*` = pairs × the median
+    * pair's wall), then the per-pair evidence.
+    */
+  private def cdcJson(pairs: Seq[Pair], n: Int, per: Long, heapMb: Long,
+      finalRows: Option[Long]): String = {
+    val (pn, p4) = medianPair(pairs)
+    val k = pairs.size
+    val speedup = pn / p4
+    def arr(f: Pair => Double): String = pairs.map(p => f"${f(p)}%.2f").mkString("[", ",", "]")
+    f"""{"events":${k * per},"batches":$k,"warm_epochs":$WarmEpochs,""" +
+      f""""cores_n":$n,"sec_n":${k * pn}%.2f,"events_per_sec_n":${per / pn}%.0f,""" +
+      f""""cores_4n":${4 * n},"sec_4n":${k * p4}%.2f,"events_per_sec_4n":${per / p4}%.0f,""" +
+      f""""speedup":$speedup%.2f,"scaling_efficiency":${speedup / 4}%.3f,""" +
+      f""""cores_peak":${4 * n},"events_per_sec_peak":${per / p4}%.0f,""" +
+      f""""steal_core_sec":${pairs.map(p => p.n.stealCoreSec + p.n4.stealCoreSec).sum}%.1f,""" +
+      s""""pair_ratio_epochs":${arr(_.quotient)},""" +
+      s""""epoch_secs_n":${arr(_.n.sec)},"epoch_secs_4n":${arr(_.n4.sec)},""" +
+      s""""epoch_steal_core_sec_n":${arr(_.n.stealCoreSec)},""" +
+      s""""epoch_steal_core_sec_4n":${arr(_.n4.stealCoreSec)},""" +
+      s""""epoch_gc_secs_n":${arr(_.n.gcSec)},"epoch_gc_secs_4n":${arr(_.n4.gcSec)},""" +
+      s""""child_heap_mb":$heapMb""" +
+      finalRows.map(r => s""","final_rows":$r""").getOrElse("") + "}"
   }
 
   /** Hard ceiling for the LAST stdout line: the driver keeps only the
@@ -1308,18 +316,15 @@ object Bench {
         if (!n.has("cdc")) ""
         else {
           val c = n.get("cdc")
-          val keep = Seq("events", "batches", "cores_n", "sec_n", "events_per_sec_n",
-            "cores_4n", "sec_4n", "events_per_sec_4n", "speedup", "scaling_efficiency",
-            "scaling_efficiency_best", "scaling_efficiency_floor",
-            "scaling_efficiency_sync_pair", "headline_source", "headline_events",
-            "cores_peak", "events_per_sec_peak", "rounds_run", "sync_pairs_done",
-            "pairs_dirty", "final_rows")
+          val keep = Seq("events", "batches", "warm_epochs", "cores_n", "sec_n",
+            "events_per_sec_n", "cores_4n", "sec_4n", "events_per_sec_4n", "speedup",
+            "scaling_efficiency", "cores_peak", "events_per_sec_peak", "steal_core_sec",
+            "final_rows")
           keep.filter(c.has).map(k => s""""$k":${c.get(k)}""")
             .mkString(""","cdc":{""", ",", "}")
         }
       var queries = ""
       if (n.has("queries")) {
-        import scala.jdk.CollectionConverters._
         val entries = n.get("queries").properties().asScala.toSeq
           .map(e => e.getKey -> e.getValue.asDouble())
           .sortBy { case (_, v) => -v }
@@ -1343,573 +348,137 @@ object Bench {
     }
   }
 
-  /** Child JVM command: inherited flags minus heap sizing, replaced by a
-    * FIXED-size pre-touched heap (-Xms == -Xmx, default 12g): the parent's
-    * lazily-growing 16→48 GB heap faulted fresh pages mid-measurement —
-    * the first timed epoch ran 2-4× slow, uniformly across phases, with
-    * ZERO recorded hypervisor steal; pinning the heap removed the anomaly
-    * entirely (10.4/10.9 s epochs where the growing heap measured
-    * 37.9/9.2 s).
+  // ---- parent side of a replay child ----
+
+  /** A live replay child JVM. Its stdin carries `GO b` (apply batch `b`,
+    * timed) and `DONE`; its stdout answers with `CHILD_READY`,
+    * `CHILD_EPOCH …` and `CHILD_RESULT …` lines.
     */
-  private def childJvmCmd(childArgs: Seq[String], cores: Int): Seq[String] = {
-    import scala.jdk.CollectionConverters._
+  private final class Child(cores: Int, heapMb: Long, benchDir: String) {
+    private val proc = new ProcessBuilder(childJvmCmd(cores, heapMb, benchDir).asJava)
+      .redirectError(ProcessBuilder.Redirect.INHERIT).start()
+    private val lines = new LinkedBlockingQueue[String]()
+    private val reader = new Thread(() => {
+      try {
+        val in = new BufferedReader(new InputStreamReader(proc.getInputStream))
+        Iterator.continually(in.readLine()).takeWhile(_ != null)
+          .filter(_.startsWith("CHILD_")).foreach(lines.put)
+      } catch { case _: java.io.IOException => () }
+      lines.put("CHILD_EOF")
+    })
+    reader.setDaemon(true)
+    reader.start()
+    private val stdin = new PrintWriter(proc.getOutputStream, true)
+
+    /** The key=value fields of the next `CHILD_` line, which must start
+      * with `prefix`. */
+    def await(prefix: String): Map[String, String] = {
+      val l = lines.poll((ChildTimeoutSec * 1000).toLong, TimeUnit.MILLISECONDS)
+      require(l != null && l.startsWith(prefix), s"$cores-core child: expected $prefix, got $l")
+      l.split("\\s+").drop(1).map { t => val Array(k, v) = t.split("=", 2); k -> v }.toMap
+    }
+
+    def epoch(b: Int): Epoch = {
+      stdin.println(s"GO $b")
+      val kv = await("CHILD_EPOCH")
+      Epoch(kv("sec").toDouble, kv("steal").toDouble, kv("gc").toDouble)
+    }
+
+    /** (epochs applied, final live rows) */
+    def done(): (Int, Long) = {
+      stdin.println("DONE")
+      val kv = await("CHILD_RESULT")
+      proc.waitFor()
+      (kv("depth").toInt, kv("rows").toLong)
+    }
+
+    def destroy(): Unit = { proc.destroyForcibly(); () }
+  }
+
+  /** Child JVM command: the parent's flags minus heap sizing, plus a
+    * fixed pre-touched heap (-Xms == -Xmx): a lazily growing heap faults
+    * fresh pages mid-measurement, and the first timed epoch then ran 2-4×
+    * slow with zero recorded steal.
+    *
+    * ActiveProcessorCount = the measured core count: local[N] caps only
+    * the task threads, and GC workers, JIT threads and common pools would
+    * otherwise size to the whole machine and run on idle cores, a free
+    * parallelism an N-core executor does not have. CICompilerCount stays
+    * at 4 above it, so the warm-up drains the JIT queue instead of a
+    * single C2 thread spilling compilation into the timed epochs.
+    */
+  private def childJvmCmd(cores: Int, heapMb: Long, benchDir: String): Seq[String] = {
     val javaBin = Paths.get(sys.props("java.home"), "bin", "java").toString
-    val heap = sys.env.getOrElse("SPARK_GRAFT_BENCH_CHILD_HEAP", "12g")
     val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
       .getInputArguments.asScala.toSeq
       .filterNot(a => a.startsWith("-Xms") || a.startsWith("-Xmx"))
-    // ActiveProcessorCount = the measured core count: local[N] caps only
-    // TASK threads; GC workers, JIT compiler threads and common pools
-    // otherwise size to the machine's 32 vCPUs and run on idle cores —
-    // free parallelism a cgroup-capped N-core executor would not have,
-    // which flatters the narrow side of the scaling quotient. This sizes
-    // every JVM-internal pool to N (the faithful executor model) without
-    // taskset pinning's kernel-migration noise.
-    // CICompilerCount is pinned ABOVE ActiveProcessorCount: JIT
-    // compilation is warmup-phase work (excluded from measurement by the
-    // steady-state warmup), and at ActiveProcessorCount=2 the single C2
-    // thread takes ~60 s of wall to drain the merge path's compile queue —
-    // warmup would eat half the child's budget. Task threads stay capped
-    // at local[N] and GC threads at ActiveProcessorCount, which are the
-    // pools that shape the measured epochs.
-    Seq(javaBin) ++ jvmArgs ++ Seq(s"-Xms$heap", s"-Xmx$heap",
+    Seq(javaBin) ++ jvmArgs ++ Seq(s"-Xms${heapMb}m", s"-Xmx${heapMb}m",
       s"-XX:ActiveProcessorCount=$cores", "-XX:CICompilerCount=4",
-      "-cp", sys.props("java.class.path"), "graft.Bench") ++ childArgs
+      "-cp", sys.props("java.class.path"), "graft.Bench",
+      "replay-child", cores.toString, benchDir)
   }
 
-  /** Hypervisor CPU steal, cumulative, in jiffies. Steal accrues ONLY on
-    * busy vCPUs, so a 2-thread run's 2 busy cores absorb ALL the window's
-    * steal — low-N runs are hit proportionally as hard as wide ones, and a
-    * stolen window poisons whichever core count happened to be measured in
-    * it. Measuring steal per epoch makes dirty epochs visible; the
-    * interleaved-rounds floor then composes clean epochs.
+  /** The host's total memory in kB (MemTotal, or the container's limit). */
+  private def memTotalKb(): Long =
+    java.lang.management.ManagementFactory.getOperatingSystemMXBean
+      .asInstanceOf[com.sun.management.OperatingSystemMXBean].getTotalMemorySize / 1024
+
+  // ---- child side ----
+
+  /** The child JVM: one table at local[cores]; replay the warm batches,
+    * report ready, then apply each `GO b` batch timed until `DONE` (or
+    * the parent's exit closes stdin).
     */
+  private def replayChild(cores: Int, benchDir: String): Unit = {
+    val s = Sessions.local(cores, appName = s"graft-replay-$cores", tmpfsShuffle = true)
+    s.sparkContext.setLogLevel("WARN")
+    val table = LakeTable.create(s, s"$benchDir/table-$cores", schemaVer = 1, numBuckets = 64)
+    // Every batch has the generator's schema: read it once, so no epoch
+    // pays footer-based schema inference.
+    val schema = s.read.parquet(s"$benchDir/batch-0").schema
+    def say(line: String): Unit = { println(line); Console.out.flush() }
+    (0 until WarmEpochs).foreach(b => measureEpoch(s, table, schema, benchDir, cores, b))
+    say("CHILD_READY")
+    var depth = WarmEpochs
+    val in = new BufferedReader(new InputStreamReader(System.in))
+    var cmd = in.readLine()
+    while (cmd != null && cmd.trim != "DONE") {
+      require(cmd.trim.startsWith("GO "), s"unknown command: $cmd")
+      val b = cmd.trim.drop(3).trim.toInt
+      val e = measureEpoch(s, table, schema, benchDir, cores, b)
+      depth += 1
+      say(f"CHILD_EPOCH b=$b sec=${e.sec}%.3f steal=${e.stealCoreSec}%.2f gc=${e.gcSec}%.2f")
+      cmd = in.readLine()
+    }
+    say(s"CHILD_RESULT depth=$depth rows=${table.current.rows}")
+    s.stop()
+  }
+
+  /** Apply batch `b`; the epoch's wall, the machine's stolen core-seconds
+    * and this JVM's GC seconds over it.
+    */
+  private def measureEpoch(s: SparkSession, table: LakeTable, schema: StructType,
+      benchDir: String, cores: Int, b: Int): Epoch = {
+    val st0 = stealJiffies()
+    val gc0 = gcMillis()
+    val st = MergeApply.applyBatch(table, s.read.schema(schema).parquet(s"$benchDir/batch-$b"),
+      b.toLong)
+    val e = Epoch(st.durationMs / 1000.0, (stealJiffies() - st0) / 100.0,
+      (gcMillis() - gc0) / 1000.0)
+    System.err.println(f"[bench] cores=$cores epoch=$b ms=${st.durationMs} " +
+      f"events=${st.inputEvents} live=${st.liveRows} " +
+      f"stolenCoreSec=${e.stealCoreSec}%.1f gcSec=${e.gcSec}%.2f")
+    e
+  }
+
+  /** Hypervisor CPU steal, machine-wide and cumulative, in jiffies
+    * (/proc/stat; 0 where it cannot be read). */
   private def stealJiffies(): Long =
-    try {
-      val l = Files.readAllLines(Paths.get("/proc/stat")).get(0)
-      l.trim.split("\\s+")(8).toLong
-    } catch { case _: Throwable => 0L }
+    try Files.readAllLines(Paths.get("/proc/stat")).get(0).trim.split("\\s+")(8).toLong
+    catch { case _: Throwable => 0L }
 
-  /** Single-thread memory-bandwidth calibration, GB/s: copy a 256 MB long
-    * array 4 times and take the best pass. A fixed microbenchmark whose
-    * only variable is the HOST — the third external health signal next to
-    * steal and sys/user: co-tenant memory-bandwidth contention slows wide
-    * runs 2× while registering zero steal and normal sys time. Recorded
-    * as evidence per child (not a gate — a real regression should not be
-    * maskable by declaring the host slow).
-    */
-  private def membwGBs(): Double = {
-    val n = 32 * 1024 * 1024 // 256 MB of longs
-    val src = new Array[Long](n)
-    val dst = new Array[Long](n)
-    java.util.Arrays.fill(src, 0x5DEECE66DL)
-    var best = Double.MaxValue
-    (0 until 4).foreach { _ =>
-      val t0 = System.nanoTime()
-      System.arraycopy(src, 0, dst, 0, n)
-      best = math.min(best, (System.nanoTime() - t0) / 1e9)
-    }
-    // 2 × 256 MB moved per pass (read + write)
-    (2.0 * n * 8) / best / 1e9
-  }
-
-  /** Machine-wide (user+nice, system) jiffies — the STORM detector. This
-    * host exhibits windows where the hypervisor's interference is
-    * misaccounted as guest SYSTEM time: a pure user-mode spin loop (zero
-    * syscalls) measures ~65% sy / ~0.2% us machine-wide with only 3-20%
-    * recorded steal, and identical Spark jobs run 3-5× slower. Healthy
-    * Spark epochs are user-dominated (user ≥ system by a wide margin), so
-    * an epoch whose window shows user < system is objectively corrupted
-    * even when the steal counter stays under its threshold.
-    */
-  private def userSysJiffies(): (Long, Long) =
-    try {
-      val t = Files.readAllLines(Paths.get("/proc/stat")).get(0).trim.split("\\s+")
-      (t(1).toLong + t(2).toLong, t(3).toLong)
-    } catch { case _: Throwable => (1L, 0L) }
-
-  /** One replay measurement: fresh table, symmetric full-size JIT warmup,
-    * then `nBatches` timed epochs. Returns (per-epoch seconds, per-epoch
-    * stolen core-seconds, per-epoch machine sys/user jiffy ratio, final
-    * rows). Runs inside whatever JVM calls it — the parent launches it via
-    * the replay-child mode for JVM isolation.
-    */
-  /** Session + fresh table + steady-state warmup, shared by the sequential
-    * and sync child modes. Returns the warmed context ready for timed
-    * epochs.
-    */
-  private final case class ReplayCtx(s: SparkSession, table: LakeTable,
-      benchDir: String, cores: Int, round: Int,
-      batchSchema: org.apache.spark.sql.types.StructType)
-
-  private def replayInProcess(cores: Int, round: Int, benchDir: String,
-      nBatches: Int): (Seq[Double], Seq[Double], Seq[Double], Seq[Double], Long) = {
-    val (ctx, _) = warmedCtx(cores, round, benchDir)
-    val measured = (0 until nBatches).map { b =>
-      // Untimed inter-epoch quiesce (JMH-style): flush the previous
-      // epoch's GC debt so a collection does not land mid-measurement —
-      // the analogue of an executor's idle gap between micro-batches.
-      if (b > 0) System.gc()
-      measureEpoch(ctx, b)
-    }
-    val rows = ctx.table.current.rows
-    ctx.s.stop()
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    (measured.map(_._1), measured.map(_._2), measured.map(_._3), measured.map(_._4), rows)
-  }
-
-  /** Per-epoch GC time from the collector MXBeans: single-epoch stalls
-    * with zero steal and normal sys time need attribution — a full GC at
-    * 2 GC threads over a 12g heap runs tens of seconds of pure user time,
-    * indistinguishable from a host stall without this counter.
-    */
-  private def gcMillisNow(): Long = {
-    import scala.jdk.CollectionConverters._
+  /** Cumulative GC time of this JVM's collectors, ms. */
+  private def gcMillis(): Long =
     java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
       .map(b => math.max(0L, b.getCollectionTime)).sum
-  }
-
-  /** One timed epoch: apply batch `b` to the context's table, returning
-    * (wall sec, stolen core-sec, machine sys/user ratio, JVM GC sec).
-    */
-  private def measureEpoch(ctx: ReplayCtx, b: Int): (Double, Double, Double, Double) = {
-    val st0 = stealJiffies()
-    val (us0, sy0) = userSysJiffies()
-    val gc0 = gcMillisNow()
-    // Explicit schema (captured once at warmup): all batch slices share
-    // the generator's wire schema, so per-epoch footer-based inference is
-    // pure serial driver time on the measurement path.
-    val df = ctx.s.read.schema(ctx.batchSchema).parquet(s"${ctx.benchDir}/batch-$b")
-    val st = MergeApply.applyBatch(ctx.table, df, b.toLong)
-    val stolenCoreSec = (stealJiffies() - st0) / 100.0
-    val gcSec = (gcMillisNow() - gc0) / 1000.0
-    val (us1, sy1) = userSysJiffies()
-    val (dUs, dSy) = (math.max(1L, us1 - us0), sy1 - sy0)
-    System.err.println(s"[bench] cores=${ctx.cores} round=${ctx.round} epoch=$b ms=${st.durationMs} " +
-      s"events=${st.inputEvents} keys=${st.dedupedKeys} live=${st.liveRows} " +
-      f"stolenCoreSec=$stolenCoreSec%.1f sysOverUser=${dSy.toDouble / dUs}%.2f gcSec=$gcSec%.2f")
-    (st.durationMs / 1000.0, stolenCoreSec, dSy.toDouble / dUs, gcSec)
-  }
-
-  /** Returns the warmed context plus a `warmOnce` closure that runs ONE
-    * more warm pass against a fresh throwaway table — the sync protocol's
-    * post-READY settle passes reuse it (see the SETTLE command).
-    */
-  private def warmedCtx(cores: Int, round: Int, benchDir: String,
-      onSpun: () => Unit = () => ()): (ReplayCtx, () => Double) = {
-    val s = Sessions.local(cores, appName = s"graft-replay-$cores-r$round", tmpfsShuffle = true)
-    s.sparkContext.setLogLevel("WARN")
-    onSpun()
-    val root = s"$benchDir/table-$cores-r$round"
-    val table = LakeTable.create(s, root, schemaVer = 1, numBuckets = 64)
-    // STEADY-STATE warmup: replay a slice of the first batch into
-    // throwaway tables until the pass wall stabilizes. JIT state is
-    // process-wide and compilation is one-time work a long-lived executor
-    // does not pay per batch; a single fixed-size warmup was NOT enough on
-    // the narrow child (ActiveProcessorCount=2 leaves a long C2 queue —
-    // its first timed epochs ran 2-3x slow with zero recorded steal, and
-    // the N/4N quotient read as fake superlinear scaling). Stability rule:
-    // stop once a pass improves on the previous one by less than 12%,
-    // bounded by a pass cap and a wall cap.
-    val warmEvents = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARM_EVENTS", "3000000").toInt
-    val warmMax = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARM_MAX", "6").toInt
-    val warmCapSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARM_CAP_SEC", "120").toDouble
-    // Preferred warm input: the dedicated warm slice the parent generates
-    // FIRST (so children spawn before any real batch exists — the real
-    // batches generate in the background under this warm). Fallback for
-    // standalone replay-child runs without one: a seeded SAMPLE of
-    // batch-0 — a sample, not a limit, because a global limit collapses
-    // the scan to one partition, so the warm passes would compile the
-    // codegen but exercise a serial plan the timed epochs never run.
-    val warmPath = new java.io.File(s"$benchDir/warm-src")
-    val (warmSrc, batch0) = if (warmPath.isDirectory) {
-      val w = s.read.parquet(warmPath.toString)
-      (w, w) // schema source only; all slices share the generator schema
-    } else {
-      val b0 = s.read.parquet(s"$benchDir/batch-0")
-      val warmFrac = math.min(1.0, warmEvents.toDouble / math.max(1L, b0.count()))
-      (if (warmFrac >= 1.0) b0 else b0.sample(withReplacement = false, warmFrac, 42L), b0)
-    }
-    var warmPrev = Double.MaxValue
-    var warmMin = Double.MaxValue
-    var warmTotal = 0.0
-    var w = 0
-    var warmStable = false
-    def warmOnce(): Double = {
-      val warmTable = LakeTable.create(s, s"$benchDir/warm-$cores-r$round-$w",
-        schemaVer = 1, numBuckets = 64)
-      val t0 = System.nanoTime()
-      MergeApply.applyBatch(warmTable, warmSrc, -1L)
-      val sec = (System.nanoTime() - t0) / 1e9
-      System.err.println(f"[bench] cores=$cores round=$round warm pass $w: $sec%.2fs")
-      w += 1
-      sec
-    }
-    while (w < warmMax && !warmStable && warmTotal < warmCapSec) {
-      val sec = warmOnce()
-      // Stable = no longer improving AND near the best pass seen. The
-      // second clause matters under CONCURRENT warm-up (children warm in
-      // parallel since the sync protocol): a pass inflated by the
-      // sibling's warm contention (observed 3.3 s -> 7.2 s) reads as "no
-      // improvement" to the first clause alone, the child declares ready
-      // under-warmed, and its first timed epoch runs ~2x slow with zero
-      // steal — a fake quotient (a 0.47 pair was measured from exactly
-      // this). A contended pass fails the near-best clause, so warming
-      // continues until the contention passes or the pass/wall caps hit.
-      // NOTE this phase cannot distinguish "every pass contended" from
-      // true steady state (warmMin itself may be inflated); the sync
-      // protocol closes that hole with UNCONTENDED post-READY settle
-      // passes (SETTLE command), which the parent serializes.
-      warmStable = w >= 2 && sec > warmPrev * 0.88 && sec <= warmMin * 1.3
-      warmPrev = sec
-      warmMin = math.min(warmMin, sec)
-      warmTotal += sec
-    }
-    (ReplayCtx(s, table, benchDir, cores, round, batch0.schema), () => warmOnce())
-  }
-
-  /** Replace BENCH/BASELINE.md's catalog-total row and per-query table
-    * with a fresh measurement, leaving the replay/scaling rows untouched.
-    */
-  private def patchQueryTable(totalQuery: Double,
-      queryTimes: Seq[(String, Double)], sfDir: String): Unit = {
-    val p = Paths.get("BENCH/BASELINE.md")
-    if (!Files.exists(p) || queryTimes.isEmpty) return
-    val old = Files.readString(p)
-    val sfName = Paths.get(sfDir).getFileName.toString
-    // Never replace a catalog recorded at a DIFFERENT scale factor: a
-    // quick sf0.001 smoke pass must not overwrite the judged sf0.1 table
-    // (a silent relabel did exactly that once — the doc claimed sf0.1
-    // over sf0.001 numbers).
-    val recordedSf = "\\| operator catalog total \\((sf[0-9.]+),".r
-      .findFirstMatchIn(old).map(_.group(1))
-    if (recordedSf.exists(_ != sfName)) {
-      System.err.println(s"[bench] queries-only pass at $sfName: BENCH/BASELINE.md records " +
-        s"the ${recordedSf.get} catalog — leaving it untouched")
-      return
-    }
-    val totalRow = f"| operator catalog total ($sfName, ${queryTimes.size} queries) | $totalQuery%.1f s |"
-    val patchedTotal = old.linesIterator.map { l =>
-      if (l.startsWith("| operator catalog total")) totalRow else l
-    }.mkString("\n")
-    val cut = patchedTotal.indexOf("Per-query seconds:")
-    val table = new StringBuilder("Per-query seconds:\n\n| query | sec |\n|---|---|\n")
-    queryTimes.foreach { case (k, v) => table ++= f"| $k | $v%.3f |\n" }
-    // The run-history section FOLLOWS the per-query table — keep it (a
-    // queries-only pass must never erase the record of clean replay runs).
-    val tail = {
-      val h = patchedTotal.indexOf("## Run history")
-      if (h >= 0 && (cut < 0 || h > cut)) "\n" + patchedTotal.substring(h) else ""
-    }
-    val out = if (cut >= 0) patchedTotal.take(cut) + table.toString + tail
-      else patchedTotal + "\n\n" + table.toString + tail
-    Files.writeString(p, out)
-    ()
-  }
-
-  private def writeBenchMd(events: Long, batches: Int, n: Int, n4: Int,
-      tN: Double, t4N: Double, epsN: Double, eps4N: Double,
-      speedup: Double, eff: Double, totalQuery: Double,
-      queryTimes: Seq[(String, Double)], peakCores: Int, epsPeak: Double,
-      tNBest: Double, t4NBest: Double, effBest: Double,
-      tNFloor: Double, t4NFloor: Double, effFloor: Double,
-      roundsRun: Int, cleanN: Int, clean4N: Int, stealCleanSec: Double,
-      headlineSource: String, headlineEvents: Long,
-      probe: Option[(Long, Double, Double, Double)],
-      epochStats: (Double, Double, Double, Double), effEpochMin: Double,
-      sfDir: String = "/root/testdata/sf0.1"): Unit = {
-    val sfName = Paths.get(sfDir).getFileName.toString
-    val prevDoc = {
-      val p = Paths.get("BENCH/BASELINE.md")
-      if (Files.exists(p)) Files.readString(p) else ""
-    }
-    val md = new StringBuilder
-    md ++= "# BENCH — measured engine numbers\n\n"
-    md ++= "Headline metric (north rule): change-events/sec sustained merge-apply\n"
-    md ++= "throughput on CDC replay into the snapshot-committed transcript table,\n"
-    md ++= "same job + same input at two parallelism levels (the sandbox stand-in\n"
-    md ++= "for N vs 4N executors; single host, local[N] threads).\n\n"
-    // A suspect (physically impossible) quotient is host noise, not engine
-    // evidence — it must not REPLACE a prior plausible headline block. The
-    // suspect run still appends its run-history row and (when measured)
-    // refreshes the catalog numbers.
-    val prevTable = {
-      val s = prevDoc.indexOf("| quantity | value |")
-      val e = if (s < 0) -1 else prevDoc.indexOf("\nMethodology", s)
-      if (s >= 0 && e > s) {
-        // Strip any prior retention note so repeated suspect runs do not
-        // stack one note per run — this run re-emits a single fresh one.
-        val raw = prevDoc.substring(s, e)
-        val cut = raw.indexOf("(Headline") // any prior headline-provenance note
-        Some((if (cut >= 0) raw.take(cut) else raw).strip)
-      } else None
-    }
-    // Retain the prior headline block whenever THIS run is marked (suspect
-    // or unsettled) and the prior block is not: a marked run is recorded
-    // in the run history but must not replace settled, plausible evidence.
-    val marked = headlineSource.contains("_superlinear_suspect") ||
-      headlineSource.contains("_unsettled")
-    val retainPrior = marked &&
-      prevTable.exists(t => !t.contains("suspect") && !t.contains("unsettled"))
-    if (retainPrior) {
-      val retained =
-        if (queryTimes.isEmpty) prevTable.get
-        else prevTable.get.linesIterator.map { l =>
-          if (l.startsWith("| operator catalog total"))
-            f"| operator catalog total ($sfName, ${queryTimes.size} queries) | $totalQuery%.1f s |"
-          else l
-        }.mkString("\n")
-      md ++= retained + "\n\n"
-      if (headlineSource.contains("_superlinear_suspect")) {
-        md ++= f"(Headline retained from the prior run: this run's quotient read\n"
-        md ++= f"$eff%.3f — beyond the core ratio, physically impossible, so it is\n"
-        md ++= "a sub-counter host stall on the narrow side, recorded in the run\n"
-        md ++= "history below but not presented as gate evidence.)\n\n"
-      } else {
-        md ++= f"(Headline retained from the prior run: this run skipped its\n"
-        md ++= f"uncontended settle passes under deadline pressure and read\n"
-        md ++= f"$eff%.3f — steady state was never established, so the quotient is\n"
-        md ++= "recorded in the run history below but not presented as gate\n"
-        md ++= "evidence.)\n\n"
-      }
-    } else {
-      md ++= "| quantity | value |\n|---|---|\n"
-      md ++= f"| replayed change events (interleaved rounds) | $events%,d (in $batches micro-batches) |\n"
-      md ++= f"| headline measurement | $headlineSource ($headlineEvents%,d events) |\n"
-      md ++= f"| N = $n cores: wall / throughput | $tN%.2f s / $epsN%,.0f events/s |\n"
-      md ++= f"| 4N = $n4 cores: wall / throughput | $t4N%.2f s / $eps4N%,.0f events/s |\n"
-      md ++= f"| speedup N→4N | $speedup%.2f× |\n"
-      md ++= f"| **scaling efficiency (speedup/4, target ≥0.8)** | **$eff%.3f** |\n"
-      // Efficiency above 1 is impossible at equal work — when a diagnostic
-      // composition reads superlinear (both sides absorbing a host stall
-      // asymmetrically), say so in the row rather than leaving an
-      // impossible number unexplained.
-      def effNote(e: Double): String =
-        if (e > 1.0) " (>1 is impossible at equal work — host-window artifact, see caveats)" else ""
-      md ++= f"| full-size walls, best (N / 4N) | $tNBest%.2f s / $t4NBest%.2f s → eff $effBest%.3f${effNote(effBest)} |\n"
-      md ++= f"| full-size walls, noise-floor (N / 4N, composed) | $tNFloor%.2f s / $t4NFloor%.2f s → eff $effFloor%.3f${effNote(effFloor)} |\n"
-      md ++= f"| rounds run / steal-clean rounds (N, 4N) | $roundsRun / ($cleanN, $clean4N) at ≤$stealCleanSec%.0f stolen core-s per epoch |\n"
-      md ++= f"| per-epoch wall, best round (N / 4N, $batches epochs) | ${epochStats._1}%.2f ± ${epochStats._2}%.2f s / ${epochStats._3}%.2f ± ${epochStats._4}%.2f s |\n"
-      md ++= f"| conservative within-round composition ($batches × best epoch each side) | eff $effEpochMin%.3f |\n"
-      probe.foreach { case (pEvents, pN, p4N, pEff) =>
-        md ++= f"| steal-clean short-probe walls (N / 4N, $pEvents%,d events) | $pN%.2f s / $p4N%.2f s → eff $pEff%.3f |\n"
-      }
-      md ++= f"| peak throughput at $peakCores cores | $epsPeak%,.0f events/s |\n"
-      md ++= f"| reference honesty baseline (BASELINE.md) | 12,000 records/s single node |\n"
-      if (queryTimes.isEmpty) {
-        // replay-only pass: carry the prior run's catalog-total row forward
-        val prior = prevDoc.linesIterator.find(_.startsWith("| operator catalog total ("))
-        md ++= prior.getOrElse("| operator catalog total | not run this pass (table below is the prior run) |")
-        md ++= "\n\n"
-      } else
-        md ++= f"| operator catalog total ($sfName, ${queryTimes.size} queries) | $totalQuery%.1f s |\n\n"
-    }
-    md ++= "Methodology & host caveats:\n\n"
-    md ++= "- The WHOLE protocol runs inside a wall-clock deadline\n"
-    md ++= "  (SPARK_GRAFT_BENCH_DEADLINE_SEC, default 480 s): replay event\n"
-    md ++= "  volume is sized to the budget remaining after the query catalog,\n"
-    md ++= "  each further round / the peak run / each probe must fit a cost\n"
-    md ++= "  estimate from the rounds already measured, and the JSON line is\n"
-    md ++= "  emitted unconditionally (partial results on error or SIGTERM via\n"
-    md ++= "  a shutdown hook). A bench that measures less is still a bench.\n"
-    md ++= "- Each core count is measured in interleaved rounds (N, 4N, N, 4N,\n"
-    md ++= "  ...). Rounds are ADAPTIVE, gated on measured hypervisor steal: an\n"
-    md ++= "  epoch that absorbed steal above the threshold is an objectively\n"
-    md ++= "  corrupted measurement (the /proc/stat counter is external\n"
-    md ++= "  evidence), so interleaving continues until each core count has a\n"
-    md ++= "  fully-clean round, bounded by the hard cap and the deadline. Two\n"
-    md ++= "  aggregates are reported and named explicitly: `best` = best\n"
-    md ++= "  single-round wall time among steal-clean rounds (a real run;\n"
-    md ++= "  falls back to all rounds if the cap expired dirty), `floor` =\n"
-    md ++= "  per-epoch minima composed across rounds — an estimate of engine\n"
-    md ++= "  time absent steal stalls (identical batches vary multi-x between\n"
-    md ++= "  rounds), NOT a wall time any single run observed. The headline\n"
-    md ++= "  row uses the better-supported of the two; both appear above.\n"
-    md ++= "- Each measurement runs in a FRESH child JVM (same flags/classpath):\n"
-    md ++= "  reusing one JVM across interleaved sessions penalized the wide\n"
-    md ++= "  runs ~60% (GC debt from the preceding narrow run; the same\n"
-    md ++= "  24M-event 8-core epoch measured 16.7 s fresh vs 26-29 s in a\n"
-    md ++= "  churned JVM). Fresh JVMs are also the faithful analogue of\n"
-    md ++= "  separate executor fleets at N vs 4N.\n"
-    md ++= "- Each replay child runs an UNTIMED steady-state warmup before its\n"
-    md ++= "  timed epochs: a slice of the first batch is replayed into\n"
-    md ++= "  throwaway tables until the pass wall stabilizes (<12% improvement\n"
-    md ++= "  pass-over-pass, pass- and wall-capped). JIT compilation is\n"
-    md ++= "  one-time work a long-lived executor does not pay per batch; a\n"
-    md ++= "  single fixed-size warmup left the narrow child's first epochs\n"
-    md ++= "  2-3x slow (one C2 thread at ActiveProcessorCount=2) and the\n"
-    md ++= "  quotient read as fake superlinear scaling (a measured 1.23 was\n"
-    md ++= "  discarded for exactly this). Child JVMs pin CICompilerCount=4 so\n"
-    md ++= "  the compile queue drains during warmup; task threads stay capped\n"
-    md ++= "  at local[N] and GC threads at ActiveProcessorCount=N. In the\n"
-    md ++= "  sync protocol the two children's warms run CONCURRENTLY (only\n"
-    md ++= "  the 12g heap pre-touches are staggered, on a CHILD_SPUN\n"
-    md ++= "  handshake — >~16 GB of fresh pages faulting at once storms this\n"
-    md ++= "  host's kernel); since a fully-contended warm cannot be told\n"
-    md ++= "  apart from steady state, the parent then SERIALIZES one\n"
-    md ++= "  uncontended settle re-stabilization per child (up to 4 clean\n"
-    md ++= "  passes, skipped only when the deadline is already blown) before\n"
-    md ++= "  the first timed epoch.\n"
-    md ++= "- Replay volume is sized to the remaining budget using an assumed\n"
-    md ++= "  N-rate scaled by the CATALOG pass's wall vs its healthy-window\n"
-    md ++= "  reference (~100 s of real Spark work in this process — the\n"
-    md ++= "  256 MB memcpy calibration under-predicted a window 3x: memcpy\n"
-    md ++= "  8.5 GB/s implied 150k events/s, the replay then ran 437k, and\n"
-    md ++= "  the round was sized to epochs too small to amortize the\n"
-    md ++= "  ~1.3 s/epoch serial slice — eff read 0.711 where the same\n"
-    md ++= "  engine at 2x the epoch size measures 0.82+). The memcpy cubic\n"
-    md ++= "  ((bw/11.9)^3) remains the replay-only fallback. Events commit\n"
-    md ++= "  to the 32M cap whenever ONE big epoch pair fits the budget:\n"
-    md ++= "  the sync round stops at pair granularity (each completed pair\n"
-    md ++= "  is self-contained same-window gate evidence), so over-sizing\n"
-    md ++= "  costs depth, never the deadline — one big pair beats four\n"
-    md ++= "  small epochs whose 4N quotient the serial slice dominates.\n"
-    md ++= "  Later rounds / the peak run / probes are each gated on the\n"
-    md ++= "  measured child walls of the rounds already run. Sizing only;\n"
-    md ++= "  every reported number is measured.\n"
-    md ++= "- Hypervisor steal is MEASURED per epoch (/proc/stat steal delta,\n"
-    md ++= "  printed as stolenCoreSec in the run log). Steal accrues only on\n"
-    md ++= "  busy vCPUs, so it hits an N-thread run's N busy cores directly —\n"
-    md ++= "  a stolen window poisons whichever core count it lands on, which\n"
-    md ++= "  is why single-round efficiency quotients swing and the floor\n"
-    md ++= "  composition over interleaved rounds is the defensible estimate.\n"
-    md ++= "- A second external cleanliness gate catches the host's SYS-TIME\n"
-    md ++= "  STORM mode: windows where hypervisor interference is accounted\n"
-    md ++= "  as guest system time (a pure user-mode spin loop with zero\n"
-    md ++= "  syscalls measures ~65% sy / ~0.2% us machine-wide, identical\n"
-    md ++= "  jobs run 3-5x slower, recorded steal stays modest). Each epoch\n"
-    md ++= "  also records the machine sys/user jiffy ratio (sysOverUser in\n"
-    md ++= "  the log); healthy Spark epochs sit well under 1, storm windows\n"
-    md ++= "  one order of magnitude above, so epochs with ratio > 1 are\n"
-    md ++= "  treated as dirty exactly like steal-hit ones.\n"
-    md ++= "- SINGLE-EPOCH HOST STALLS slip below both counters: back-to-back\n"
-    md ++= "  runs on 2026-08-19 each measured one epoch at 1.8-2.5× its round\n"
-    md ++= "  median with ≤0.1 stolen core-s and sysOverUser ≤0.06 (43 s between\n"
-    md ++= "  ~17.5 s siblings on N; 9.2 s between ~5.1 s siblings on 4N). The\n"
-    md ++= "  stall swings a sum-composed quotient in whichever direction it\n"
-    md ++= "  lands — fake-superlinear on N (an uncorrected 1.093 was recorded),\n"
-    md ++= "  gate-failing on 4N (an uncorrected 0.734). A single round's four\n"
-    md ++= "  epoch walls are therefore composed by MEDIAN (batches × the\n"
-    md ++= "  round's median epoch per side, labeled interleaved_epoch_median):\n"
-    md ++= "  robust to one stall per side, symmetric, still a real full-size\n"
-    md ++= "  sustained measurement, raw epoch walls reported alongside in the\n"
-    md ++= "  JSON. With ≥2 rounds the cross-round best/floor compositions\n"
-    md ++= "  already trim stalls and stay the headline. A round whose slowest\n"
-    md ++= "  epoch exceeds 1.6× its own median (SPARK_GRAFT_BENCH_EPOCH_STALL;\n"
-    md ++= "  healthy pair-side rounds measure ≤ ~1.4) is excluded from the\n"
-    md ++= "  sound pool, which drives whether another round or a probe runs.\n"
-    md ++= "  For attribution, each epoch also records its JVM GC time\n"
-    md ++= "  (collector MXBean delta, gcSec in the log, epoch_gc_secs_* in\n"
-    md ++= "  the JSON) — a full GC at 2 GC threads over a 12g heap runs tens\n"
-    md ++= "  of seconds of pure user time, indistinguishable from a host\n"
-    md ++= "  stall without the counter — and an untimed System.gc() quiesce\n"
-    md ++= "  runs between epochs (the analogue of an executor's idle gap\n"
-    md ++= "  between micro-batches) so collections of the previous epoch's\n"
-    md ++= "  debt do not land mid-measurement.\n"
-    md ++= "- WINDOW-SCALE drift defeats child-level interleaving when the\n"
-    md ++= "  budget fits one round: an entire N child ran in a degraded\n"
-    md ++= "  window minutes before a clean 4N child and even the medians\n"
-    md ++= "  read 1.13 superlinear. The default protocol therefore\n"
-    md ++= "  interleaves at EPOCH level (SPARK_GRAFT_BENCH_SYNC=0 reverts):\n"
-    md ++= "  both children stay alive and the parent alternates GO commands\n"
-    md ++= "  (N epoch b, then 4N epoch b — ABBA-ordered across pairs, so\n"
-    md ++= "  residual churn right after a quiesce or after generation hits\n"
-    md ++= "  each side equally often), so each quotient pair lands in\n"
-    md ++= "  the same host window. The GC quiesce is parent-orchestrated so\n"
-    md ++= "  it cannot overlap the sibling's timed epoch; counter-dirty\n"
-    md ++= "  pairs are dropped, as are PHYSICALLY IMPOSSIBLE pairs whose\n"
-    md ++= "  quotient implies efficiency beyond the core ratio +5% (same\n"
-    md ++= "  socket, shared LLC — the narrow side has MORE cache per\n"
-    md ++= "  thread, so such a pair is a sub-counter N-side stall; dropping\n"
-    md ++= "  it biases the median DOWN, conservative for the gate). The\n"
-    md ++= "  headline is the MEDIAN remaining pair (lower-middle; labeled\n"
-    md ++= "  sync_epoch_pair_median) scaled to full-replay walls — immune to\n"
-    md ++= "  both window drift and one sub-counter stall per side. If the\n"
-    md ++= "  selected headline still exceeds 1.05 (possible when a truncated\n"
-    md ++= "  round's ONLY pair was impossible and the fallback composition\n"
-    md ++= "  reuses the same stalled epochs), the source label carries a\n"
-    md ++= "  _superlinear_suspect suffix — it is host noise, not engine\n"
-    md ++= "  evidence. Raw per-epoch pair ratios are in the JSON\n"
-    md ++= "  (pair_ratio_epochs); any handshake failure falls back to\n"
-    md ++= "  sequential children.\n"
-    md ++= "- Each child also runs a fixed 256MB array-copy calibration and\n"
-    md ++= "  reports its best-pass GB/s (membw_gbs_* in the JSON): co-tenant\n"
-    md ++= "  memory-bandwidth contention slows wide runs with zero steal and\n"
-    md ++= "  normal sys time, and host turbo/DVFS shifts the N-core vs\n"
-    md ++= "  4N-core frequency ratio between windows — the calibration is\n"
-    md ++= "  recorded host evidence, deliberately not a gate. Observed\n"
-    md ++= "  window-to-window swing on complete protocol runs: efficiency\n"
-    md ++= "  0.61-0.97 with identical code and data (the 0.61 run is labeled\n"
-    md ++= "  dirty_best — its 8-core round absorbed 8.6/17.8 stolen core-s).\n"
-    md ++= "- When NO full-size round lands steal-clean (sustained-steal\n"
-    md ++= "  periods), the bench falls back to automated SHORT PROBES: the\n"
-    md ++= "  same merge job on a single events/6 batch, alternating N / 4N\n"
-    md ++= "  until each side records an epoch with steal below the threshold.\n"
-    md ++= "  Short epochs have proportionally short exposure windows, so they\n"
-    md ++= "  find clean air that multi-minute rounds cannot; the probe pair is\n"
-    md ++= "  a real clean measurement of the same job at both parallelism\n"
-    md ++= "  levels, not a model or a steal-subtraction. A probe child that\n"
-    md ++= "  fails is skipped (the attempt loop continues), never fatal.\n"
-    md ++= "- The default scaling pair is N=2 vs 4N=8 threads: a local[1]\n"
-    md ++= "  baseline is biased FAST (single busy thread gets host turbo; GC /\n"
-    md ++= "  IO helper threads use idle cores), and beyond ~8-16 threads the\n"
-    md ++= "  VM's memory bandwidth saturates, so added threads measure the\n"
-    md ++= "  host's bandwidth wall, not the engine. On a real multi-executor\n"
-    md ++= "  cluster each executor brings its own memory bandwidth — the regime\n"
-    md ++= "  the N->4N executor rule targets. Full-width peak throughput is\n"
-    md ++= "  reported above for reference (replaced by the 4N number when the\n"
-    md ++= "  deadline forces the peak run to be skipped).\n"
-    md ++= "- Bench JVM heap is pre-touched (-Xms + AlwaysPreTouch): lazy heap\n"
-    md ++= "  page faults across 32 task threads contended in the kernel (3.5x\n"
-    md ++= "  merge-stage slowdown without it).\n"
-    md ++= "- The operator catalog is preceded by an untimed 3-query warmup so\n"
-    md ++= "  the first timed query does not absorb session JIT/codegen cost;\n"
-    md ++= "  per-query seconds are the MIN over interleaved full passes\n"
-    md ++= "  (default 2; the second pass is skipped under deadline pressure)\n"
-    md ++= "  so a steal stall is not misattributed to whichever query it\n"
-    md ++= "  happened to land on.\n\n"
-    md ++= "Per-query seconds:\n\n| query | sec |\n|---|---|\n"
-    queryTimes.foreach { case (k, v) => md ++= f"| $k | $v%.3f |\n" }
-    if (queryTimes.isEmpty) {
-      // replay-only run: keep the previous run's per-query table
-      val i = prevDoc.indexOf("Per-query seconds:")
-      if (i >= 0) {
-        val keep = md.toString
-        val cut = keep.indexOf("Per-query seconds:")
-        md.setLength(0)
-        // strip the old doc's history section — re-appended fresh below
-        val frag = prevDoc.substring(i)
-        val h = frag.indexOf("## Run history")
-        md ++= keep.take(cut) + (if (h >= 0) frag.take(h) else frag)
-      }
-    }
-    // ---- run history: PRESERVED across rewrites, one row per protocol
-    // run. The table above always shows THIS run; the defensible engine
-    // number is the best steal-clean row here — a later run measured in a
-    // worse (or turbo-skewed) host window must not erase the record of a
-    // clean one.
-    val oldRows = {
-      val i = prevDoc.indexOf("## Run history")
-      if (i < 0) Seq.empty
-      else prevDoc.substring(i).linesIterator
-        .filter(_.startsWith("| 20")).toSeq // data rows start with the year
-    }
-    val when = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm")
-      .withZone(java.time.ZoneOffset.UTC).format(java.time.Instant.now())
-    val newRow = f"| $when | $headlineSource | $eff%.3f | $epsN%,.0f | " +
-      f"$eps4N%,.0f | $events%,d | ($cleanN,$clean4N) |"
-    md ++= "\n## Run history\n\n"
-    md ++= "Every completed protocol run on this checkout, newest last. The\n"
-    md ++= "headline table above shows the LATEST run; the defensible engine\n"
-    md ++= "number is the best steal-clean row here (the host-window swing —\n"
-    md ++= "steal, sys-storms, turbo bias on the narrow side — is documented\n"
-    md ++= "in the caveats and moves the quotient, not the engine).\n\n"
-    md ++= "| when (UTC) | source | eff | N ev/s | 4N ev/s | events | clean(N,4N) |\n"
-    md ++= "|---|---|---|---|---|---|---|\n"
-    md ++= (oldRows.takeRight(60) :+ newRow).mkString("\n") + "\n"
-    Files.createDirectories(Paths.get("BENCH"))
-    Files.writeString(Paths.get("BENCH/BASELINE.md"), md.toString)
-    ()
-  }
 }

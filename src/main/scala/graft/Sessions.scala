@@ -35,14 +35,7 @@ object Sessions {
     */
   def local(cores: Int, shufflePartitions: Int = -1, appName: String = "graft",
       tmpfsShuffle: Boolean = false): SparkSession = {
-    // Shuffle-partition multiplier (default 1 → partitions = cores).
-    // Over-partitioning (e.g. ×4) + AQE coalescing balances skewed/
-    // straggling reduce tasks across cores; A/B knob for the merge loop.
-    val mult = sys.env.get("SPARK_GRAFT_SP_MULT").map(_.toInt).getOrElse(1)
-    val sp = if (shufflePartitions > 0) shufflePartitions else cores * mult
-    // SPARK_GRAFT_AQE=0 turns adaptive execution off — an A/B knob for
-    // measuring AQE's per-stage driver re-planning cost in the merge loop.
-    val aqe = !sys.env.get("SPARK_GRAFT_AQE").contains("0")
+    val sp = if (shufflePartitions > 0) shufflePartitions else cores
     val shm = new java.io.File("/dev/shm")
     // Headroom gate: only use tmpfs with ≥ 8 GiB usable — a bench-scale
     // shuffle is ≤ low GBs; anything tighter and ENOSPC beats the speedup.
@@ -54,7 +47,7 @@ object Sessions {
       .master(s"local[$cores]")
       .appName(appName)
       .config("spark.sql.shuffle.partitions", sp.toString)
-      .config("spark.sql.adaptive.enabled", aqe.toString)
+      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")

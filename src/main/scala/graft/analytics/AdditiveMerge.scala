@@ -76,10 +76,7 @@ object AdditiveMerge {
       val files = table.writeDataFiles(
         merged.repartition(math.max(1, math.min(touched.size, partitionCap)), col("_bucket")),
         schemaVer = cur.schemaVer)
-      val newLive = files.map(_.live).sum
-      val oldLive = cur.files.filter(f => touched.contains(f.bucket)).map(_.live).sum
-      table.commit(files, touched, epochId, schemaVer = cur.schemaVer,
-        rowDelta = newLive - oldLive, maxLsnSeen = epochId,
+      table.commit(files, touched, epochId, schemaVer = cur.schemaVer, maxLsnSeen = epochId,
         writerId = writerId, batchHash = Some(batchHash),
         baseSnapshotId = cur.id).applied
     } finally delta.unpersist()

@@ -121,10 +121,8 @@ object MaterializedPairs {
       .withColumn("_bucket", MergeApply.bucketOf(col("p1"), b))
     val files = table.writeDataFiles(
       rows.repartition(math.max(1, math.min(b, 8)), col("_bucket")), schemaVer = 1)
-    val newLive = files.map(_.live).sum
     // full refresh: REPLACE every bucket (stale pairs must vanish)
-    table.commit(files, (0 until b).toSet, epochId, schemaVer = 1,
-      rowDelta = newLive - math.max(0L, cur.rows), maxLsnSeen = epochId,
+    table.commit(files, (0 until b).toSet, epochId, schemaVer = 1, maxLsnSeen = epochId,
       writerId = writerId, baseSnapshotId = cur.id).applied
   }
 

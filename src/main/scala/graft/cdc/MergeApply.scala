@@ -264,14 +264,9 @@ object MergeApply {
 
     // 5. Atomic fenced commit. Copy-on-write REPLACES the touched buckets'
     //    files; merge-on-read replaces nothing (pure append). Per-file
-    //    row/live stats were collected by writeDataFiles in one pass; the
-    //    old-live side comes from the manifest, so no second scan of
-    //    current data.
+    //    row/live stats were collected by writeDataFiles in one pass, so
+    //    the snapshot's live count needs no scan of current data.
     val newKeys = files.map(_.rows).sum
-    val newLive = files.map(_.live).sum
-    val oldLive =
-      if (isMor) 0L
-      else cur.files.filter(f => touched.contains(f.bucket)).map(_.live).sum
 
     // A merge-on-read commit replaces nothing, but a GATED mode's output
     // was derived from a liveness probe of the touched buckets — that read
@@ -282,7 +277,7 @@ object MergeApply {
       if (isMor && mode != MergeMode.Upsert) touched else Set.empty
     val res: CommitResult = timed("commit")(table.commit(files,
       if (isMor) Set.empty else touched, epochId, newVer,
-      rowDelta = newLive - oldLive, maxLsnSeen = batchMaxLsn,
+      maxLsnSeen = batchMaxLsn,
       writerId = writerId, inputEvents = inputEvents, dedupedKeys = newKeys,
       mergeMs = elapsedMs(t0), baseSnapshotId = cur.id,
       derivedBuckets = gateReadBuckets))

@@ -144,10 +144,7 @@ object Scd2History {
       .withColumn("_bucket", MergeApply.bucketOf(col(cfg.keyCols.head), b))
     val files = table.writeDataFiles(
       merged.repartition(math.max(1, touched.size), col("_bucket")), schemaVer = 1)
-    val newLive = files.map(_.live).sum
-    val oldLive = cur.files.filter(f => touched.contains(f.bucket)).map(_.live).sum
-    table.commit(files, touched, epochId, schemaVer = 1,
-      rowDelta = newLive - oldLive, maxLsnSeen = epochId,
+    table.commit(files, touched, epochId, schemaVer = 1, maxLsnSeen = epochId,
       writerId = writerId, batchHash = Some(batchHash),
       baseSnapshotId = cur.id).applied
   }

@@ -639,7 +639,6 @@ final class LakeTable(
       replacedBuckets: Set[Int],
       epochId: Long,
       schemaVer: Int,
-      rowDelta: Long,
       maxLsnSeen: Long,
       writerId: String = "",
       inputEvents: Long = -1L,
@@ -721,8 +720,7 @@ final class LakeTable(
       // record_count has the same caveat.
       val rows =
         if (allFiles.exists(_.kind == FileEntry.Delta)) -1L
-        else if (allFiles.forall(_.live >= 0L)) allFiles.map(_.live).sum
-        else cur.rows + rowDelta
+        else allFiles.map(_.live).sum
       val nb = newNumBuckets.getOrElse(cur.numBuckets)
       val snap = Snapshot(
         id = cur.id + 1,
@@ -1021,7 +1019,7 @@ final class LakeTable(
     if (dropTombstonesBelowLsn >= 0)
       df = df.filter(!col("_deleted") || col("_lsn") >= dropTombstonesBelowLsn)
     val files = writeDataFiles(df, cur.schemaVer)
-    commit(files, fat, epochId = -1, schemaVer = cur.schemaVer, rowDelta = 0L,
+    commit(files, fat, epochId = -1, schemaVer = cur.schemaVer,
       maxLsnSeen = cur.maxLsn, baseSnapshotId = cur.id)
   }
 
@@ -1050,7 +1048,7 @@ final class LakeTable(
     val files = writeDataFiles(resolveIntoBuckets(readConformed(cur, None), cur.schemaVer,
       newNumBuckets, writeTasks(spark, newNumBuckets)), cur.schemaVer)
     commit(files, (0 until cur.numBuckets).toSet, epochId = -1,
-      schemaVer = cur.schemaVer, rowDelta = 0L, maxLsnSeen = cur.maxLsn,
+      schemaVer = cur.schemaVer, maxLsnSeen = cur.maxLsn,
       baseSnapshotId = cur.id, newNumBuckets = Some(newNumBuckets))
   }
 

@@ -45,7 +45,7 @@ class ConcurrentCommitSpec extends AnyFunSuite {
         (0 until n).foreach { e =>
           val base = t.current.id
           val r = t.commit(Seq(fe(bucket, s"$wid-e$e")), Set(bucket), e.toLong,
-            schemaVer = 1, rowDelta = 0L, maxLsnSeen = e.toLong, writerId = wid,
+            schemaVer = 1, maxLsnSeen = e.toLong, writerId = wid,
             baseSnapshotId = base)
           assert(r.applied, s"$wid epoch $e was not applied")
         }
@@ -77,12 +77,12 @@ class ConcurrentCommitSpec extends AnyFunSuite {
     val b = LakeTable.load(spark, root)
     val base = a.current.id
     // writer A lands first, touching bucket 3
-    assert(a.commit(Seq(fe(3, "a")), Set(3), 0L, 1, 0L, 0L, writerId = "wA",
+    assert(a.commit(Seq(fe(3, "a")), Set(3), 0L, 1, 0L, writerId = "wA",
       baseSnapshotId = base).applied)
     // writer B derived its files from the PRE-A snapshot and also replaces
     // bucket 3 — a blind retry would drop A's rows, so it must throw
     val ex = intercept[CommitConflictException] {
-      b.commit(Seq(fe(3, "b")), Set(3), 0L, 1, 0L, 0L, writerId = "wB",
+      b.commit(Seq(fe(3, "b")), Set(3), 0L, 1, 0L, writerId = "wB",
         baseSnapshotId = base)
     }
     assert(ex.getMessage.contains("bucket"))
@@ -96,10 +96,10 @@ class ConcurrentCommitSpec extends AnyFunSuite {
     val a = LakeTable.load(spark, root)
     val b = LakeTable.load(spark, root)
     val base = a.current.id
-    assert(a.commit(Seq(fe(3, "a")), Set(3), 0L, 1, 0L, 0L, writerId = "wA",
+    assert(a.commit(Seq(fe(3, "a")), Set(3), 0L, 1, 0L, writerId = "wA",
       baseSnapshotId = base).applied)
     // B missed A's commit but touches bucket 5 only → rebases and lands
-    assert(b.commit(Seq(fe(5, "b")), Set(5), 0L, 1, 0L, 0L, writerId = "wB",
+    assert(b.commit(Seq(fe(5, "b")), Set(5), 0L, 1, 0L, writerId = "wB",
       baseSnapshotId = base).applied)
     val files = LakeTable.load(spark, root).current.files
     assert(files.exists(_.path == fe(3, "a").path) && files.exists(_.path == fe(5, "b").path))
@@ -111,13 +111,13 @@ class ConcurrentCommitSpec extends AnyFunSuite {
     val a = LakeTable.load(spark, root)
     val b = LakeTable.load(spark, root)
     val base = a.current.id
-    assert(a.commit(Seq(fe(3, "a")), Set(3), 0L, 1, 0L, 0L, writerId = "wA",
+    assert(a.commit(Seq(fe(3, "a")), Set(3), 0L, 1, 0L, writerId = "wA",
       baseSnapshotId = base).applied)
     // B appends a delta file to the SAME bucket from the same stale base:
     // its rows derive only from batch input, so no conflict by design
     val delta = FileEntry("/nonexistent/b-delta.parquet", 3, 1, rows = 1L,
       live = 1L, kind = FileEntry.Delta)
-    assert(b.commit(Seq(delta), Set.empty, 0L, 1, 0L, 0L, writerId = "wB",
+    assert(b.commit(Seq(delta), Set.empty, 0L, 1, 0L, writerId = "wB",
       baseSnapshotId = base).applied)
     val files = LakeTable.load(spark, root).current.files
     assert(files.exists(_.path == fe(3, "a").path) && files.exists(_.path == delta.path))
@@ -138,7 +138,7 @@ class ConcurrentCommitSpec extends AnyFunSuite {
       snapFile(root, 0L).getFileName.toString)
     assert(t.current.id == 1L && t.current.files == crashed.files)
     val t0 = System.nanoTime()
-    val r = t.commit(Seq(fe(1, "next")), Set(1), 0L, 1, 0L, 0L, writerId = "wX",
+    val r = t.commit(Seq(fe(1, "next")), Set(1), 0L, 1, 0L, writerId = "wX",
       baseSnapshotId = t.current.id)
     val ms = (System.nanoTime() - t0) / 1000000L
     assert(r.applied && r.snapshot.id == 2L && r.snapshot.parent == 1L)
@@ -147,14 +147,14 @@ class ConcurrentCommitSpec extends AnyFunSuite {
     val cur = LakeTable.load(spark, root).current
     assert(cur.id == 2L && cur.files.map(_.path).toSet == Set(fe(0, "dead").path, fe(1, "next").path))
     // the crashed writer's replay of its epoch is fenced: it committed
-    assert(!t.commit(Seq(fe(0, "dead")), Set(0), 0L, 1, 0L, 0L, writerId = "wDead").applied)
+    assert(!t.commit(Seq(fe(0, "dead")), Set(0), 0L, 1, 0L, writerId = "wDead").applied)
   }
 
   test("current resolves to the newest snapshot when the hint is missing, empty, " +
       "cut short or names an expired snapshot") {
     val root = tmp()
     val t = LakeTable.create(spark, root, schemaVer = 1, numBuckets = 8)
-    (0 until 3).foreach(e => assert(t.commit(Seq(fe(e, s"e$e")), Set(e), e.toLong, 1, 0L,
+    (0 until 3).foreach(e => assert(t.commit(Seq(fe(e, s"e$e")), Set(e), e.toLong, 1,
       e.toLong, writerId = "w").applied))
     t.expireSnapshots(keepLast = 1, orphanGraceMs = 0L)
     assert(t.snapshotIds == Seq(3L))
@@ -182,7 +182,7 @@ class ConcurrentCommitSpec extends AnyFunSuite {
     val committer = new Thread(() => {
       val t = LakeTable.load(spark, root)
       try (0 until n).foreach(e => assert(t.commit(Seq(fe(e % 8, s"e$e")), Set(e % 8),
-        e.toLong, 1, 0L, e.toLong, writerId = "w").applied))
+        e.toLong, 1, e.toLong, writerId = "w").applied))
       catch { case e: Throwable => errors.add(e) }
       finally done.set(true)
     })
@@ -207,8 +207,8 @@ class ConcurrentCommitSpec extends AnyFunSuite {
       "(stale snapshot claims cannot deadlock the next commit)") {
     val root = tmp()
     val t1 = LakeTable.create(spark, root, schemaVer = 1, numBuckets = 8)
-    assert(t1.commit(Seq(fe(0, "old")), Set(0), 0L, 1, 1L, 1L, writerId = "w1").applied)
-    assert(t1.commit(Seq(fe(1, "old")), Set(1), 1L, 1, 1L, 2L, writerId = "w1").applied)
+    assert(t1.commit(Seq(fe(0, "old")), Set(0), 0L, 1, 1L, writerId = "w1").applied)
+    assert(t1.commit(Seq(fe(1, "old")), Set(1), 1L, 1, 2L, writerId = "w1").applied)
     // Re-create: the previous incarnation's snap-1/snap-2 manifests must
     // not survive — a fresh table's first commit claims id 1, and a stale
     // snap-1.json would make that claim lose forever (observed deadlock
@@ -216,7 +216,7 @@ class ConcurrentCommitSpec extends AnyFunSuite {
     val t2 = LakeTable.create(spark, root, schemaVer = 1, numBuckets = 8)
     assert(t2.current.id == 0L && t2.current.files.isEmpty)
     assert(t2.current.writerEpochs.isEmpty) // w1's fence is gone too
-    val res = t2.commit(Seq(fe(2, "new")), Set(2), 0L, 1, 1L, 1L, writerId = "w2")
+    val res = t2.commit(Seq(fe(2, "new")), Set(2), 0L, 1, 1L, writerId = "w2")
     assert(res.applied && res.snapshot.id == 1L)
     assert(t2.current.files.map(_.bucket) == Seq(2))
   }

@@ -35,7 +35,7 @@ class LakeShardingSpec extends AnyFunSuite {
     val t = LakeTable.create(spark, root, schemaVer = 1, numBuckets = 4096)
     // seed: one file in each of 512 spread-out buckets (metadata only)
     val seed = (0 until 512).map(i => fe(i * 8, "seed"))
-    assert(t.commit(seed, Set.empty, 0L, 1, 0L, 0L, writerId = "w",
+    assert(t.commit(seed, Set.empty, 0L, 1, 0L, writerId = "w",
       baseSnapshotId = t.current.id).applied)
     val seedBytes = snapJsonBytes(root, 1L)
 
@@ -48,7 +48,7 @@ class LakeShardingSpec extends AnyFunSuite {
       val buckets = Set(e * 24, e * 24 + 8, e * 24 + 16) // all seeded buckets
       val before = metaFiles()
       assert(t.commit(buckets.toSeq.map(b => fe(b, s"e$e")), buckets, e.toLong, 1,
-        0L, 0L, writerId = "w", baseSnapshotId = t.current.id).applied)
+        0L, writerId = "w", baseSnapshotId = t.current.id).applied)
       val newGroupManifests = (metaFiles() -- before).filter(_.startsWith("m-"))
       assert(newGroupManifests.size <= 3,
         s"commit $e wrote ${newGroupManifests.size} group manifests for 3 touched buckets")
@@ -72,7 +72,7 @@ class LakeShardingSpec extends AnyFunSuite {
     // them. The grace is an age floor on orphan deletion.
     val root = tmp()
     val t = LakeTable.create(spark, root, schemaVer = 1, numBuckets = 8)
-    assert(t.commit(Seq(fe(0, "a")), Set(0), 0L, 1, 0L, 0L, writerId = "w",
+    assert(t.commit(Seq(fe(0, "a")), Set(0), 0L, 1, 0L, writerId = "w",
       baseSnapshotId = t.current.id).applied)
     val stray = new java.io.File(s"$root/data/inflight-commit.parquet")
     stray.getParentFile.mkdirs()

@@ -131,7 +131,7 @@ class RebucketSpec extends AnyFunSuite {
     // 16-bucket snapshot (bucket-pruned reads would miss those rows)
     intercept[graft.lake.CommitConflictException] {
       table.commit(files, Set.empty, epochId = 1, schemaVer = base.schemaVer,
-        rowDelta = 0L, maxLsnSeen = 1L, baseSnapshotId = base.id)
+        maxLsnSeen = 1L, baseSnapshotId = base.id)
     }
   }
 
