@@ -165,7 +165,8 @@ object SparkEntry {
       // compaction INSIDE the window: makes every compacted bucket
       // diff-eligible, so the result proves the (key, lsn) anti-join
       // drops unchanged rows rather than leaning on bucket pruning
-      if (b == 2) table.compact(maxFilesPerBucket = 1)
+      if (b == 2) assert(table.compact(maxFilesPerBucket = 0).applied,
+        "the mid-window compaction rewrote nothing")
     }
     table.readChangesSince(fromId).orderBy("conv_id", "turn_idx")
   }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
-import graft.lake.LakeTable
+import graft.lake.{LakeTable, Snapshot}
 import graft.model.Model
 
 /** The streaming face of the engine: tail a change-event log (file-based
@@ -20,16 +20,21 @@ import graft.model.Model
   *
   * Per-batch observability (reference analog: meta.etl_process_log rows
   * per step/batch, enhanced_main_etl_logging.py:219-286):
-  *   - `<table>/_metrics`: one row per applied epoch — input events,
-  *     deduped keys, touched buckets, duration, events/sec, snapshot id
-  *   - `<table>/_qc`: one batch-quality row per applied epoch
+  *   - `<table>/_metrics`: one row per committed epoch — input events,
+  *     deduped keys, touched buckets, merge wall, events/sec, snapshot id
+  *   - `<table>/_qc`: one batch-quality row per committed epoch
   *   - `<table>/_lineage`: per-partition lineage — source file → epoch →
   *     committed snapshot id (north rule: "source offset → snapshot ID")
-  * They are written only when the commit actually applied, so replays do
-  * not duplicate metric rows. Channel rows are written from the DRIVER
-  * (parquet-mr, no Spark job): a streamed epoch's Spark jobs are its
-  * merge and maintenance, not its bookkeeping — the Structured Streaming
-  * paper's per-trigger progress record is likewise a driver-side record.
+  * The epoch's record is durable WITH its commit: the snapshot summary
+  * holds it ([[BatchStats.of]]), and the source files come from the
+  * checkpoint's offset log. So the rows are emitted from that record
+  * whether the epoch applied in this run or in a run that crashed between
+  * publish and emit — the replay re-emits identical rows, and
+  * overwrite-by-epoch emission never duplicates them. Channel rows are
+  * written from the DRIVER (parquet-mr, no Spark job): a streamed epoch's
+  * Spark jobs are its merge and maintenance, not its bookkeeping — the
+  * Structured Streaming paper's per-trigger progress record is likewise a
+  * driver-side record.
   */
 object CdcStream {
 
@@ -115,12 +120,10 @@ object CdcStream {
       .option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)
       .parquet(eventsDir)
     // Retry scope is PER PHASE, not the whole epoch body: a transient
-    // failure in a post-commit write must retry only that write — wrapping
-    // everything would re-run the (now epoch-fenced) merge and take the
-    // applied=false path, silently dropping the epoch's QC row and its
-    // scheduled compaction on every transient post-commit error. Each
-    // phase retries safely on its own: the merge is commit-fenced, the
-    // observability channels overwrite by epoch, and compaction is
+    // failure in a post-commit write retries only that write, not the
+    // (now epoch-fenced) merge with its head-agg job. Each phase retries
+    // safely on its own: the merge is commit-fenced, the channels
+    // overwrite by epoch from the committed record, and compaction is
     // idempotent maintenance.
     val writer = events.writeStream
       .option("checkpointLocation", checkpointDir)
@@ -130,52 +133,11 @@ object CdcStream {
             mode = cfg.mode, writerId = wid, strategy = cfg.strategy)
         }
         Retry.run(cfg.retry, s"epoch $epochId observability") {
-          if (stats.applied) {
-            emitMetrics(spark, table.root, wid, stats)
-            emitQc(spark, table.root, wid, stats)
-            emitLineage(spark, table.root, wid, stats,
-              sourceFilesOf(spark, checkpointDir, epochId))
-          } else {
-            // Crash-window replay: the epoch's commit already applied but
-            // the metrics/lineage writes may have been lost with the crash.
-            // The commit stats live in the manifest, so the rows are
-            // re-derived and re-written — combined with overwrite-by-epoch
-            // emission this makes observability exactly-once, not
-            // at-most-once. (QC is not replayed: its observed values rode
-            // the lost write plan and are not recoverable from the
-            // manifest; fabricating zeros would be worse than absence.)
-            // Maintenance commits CARRY the epoch's stats forward but have
-            // their own snapshot id and post-maintenance row count — and a
-            // SECOND writer sharing the table (a first-class shape: LWW
-            // makes cross-writer applies safe) may have committed its own
-            // epochs on top before this replay runs. Walk parents past
-            // both until THIS writer's commit of THIS epoch is found; the
-            // walk is bounded by retention, and an expired / absent target
-            // means the true stats are gone: skip (absence beats wrong
-            // attribution).
-            // The walk is additionally BOUNDED by the per-writer epoch
-            // watermark: when `fenced` is false at a snapshot, this
-            // writer's commit of this epoch is not there or deeper — in
-            // particular a batch that was content-hash-fenced (applied =
-            // false with NO matching snapshot) skips the walk entirely
-            // instead of reading every retained manifest back to the root
-            // on each replay.
-            var cur = table.current
-            var walkable = true
-            while (walkable &&
-              !(!cur.maint && cur.epochId == epochId && cur.writerId == wid) &&
-              cur.parent >= 0 && table.fenced(cur, epochId, wid))
-              try cur = table.snapshot(cur.parent)
-              catch { case scala.util.control.NonFatal(_) => walkable = false }
-            if (walkable && !cur.maint && cur.epochId == epochId &&
-              cur.writerId == wid && cur.inputEvents >= 0) {
-              val replayStats = BatchStats(epochId, applied = true, cur.id,
-                cur.inputEvents, cur.dedupedKeys, 0, cur.schemaVer, cur.maxLsn,
-                cur.rows, cur.mergeMs)
-              emitMetrics(spark, table.root, wid, replayStats)
-              emitLineage(spark, table.root, wid, replayStats,
-                sourceFilesOf(spark, checkpointDir, epochId))
-            }
+          val record = if (stats.applied) Some(stats) else committedRecord(table, epochId, wid)
+          record.foreach { r =>
+            emitMetrics(spark, table.root, wid, r)
+            emitQc(spark, table.root, wid, r)
+            emitLineage(spark, table.root, wid, r, sourceFilesOf(spark, checkpointDir, epochId))
           }
         }
         // Maintenance fires on the SCHEDULE, not on `applied`: a fenced
@@ -215,6 +177,25 @@ object CdcStream {
       cfg: StreamConfig = StreamConfig()): Unit = {
     val q = start(spark, table, eventsDir, checkpointDir, cfg.copy(availableNow = true))
     q.awaitTermination()
+  }
+
+  /** The record of writer `wid`'s commit of `epochId`, read back from the
+    * table — for a replayed epoch, whose commit applied in a run that may
+    * have crashed before emitting its rows. Walks parents from the current
+    * snapshot past maintenance commits (they carry the epoch id forward)
+    * and past other writers' commits stacked on top, and stops as soon as
+    * this writer's watermark no longer covers the epoch, so an epoch that
+    * never committed reads one manifest. An expired target means the
+    * record is gone: None, since absence beats wrong attribution.
+    */
+  private[graft] def committedRecord(table: LakeTable, epochId: Long,
+      wid: String): Option[BatchStats] = {
+    def isTarget(s: Snapshot) = !s.maint && s.epochId == epochId && s.writerId == wid
+    var cur = table.current
+    while (!isTarget(cur) && cur.parent >= 0 && table.fenced(cur, epochId, wid))
+      cur = try table.snapshot(cur.parent)
+        catch { case _: java.io.FileNotFoundException => return None }
+    if (isTarget(cur)) BatchStats.of(cur) else None
   }
 
   /** The authoritative source-offset record for an epoch: the
@@ -272,7 +253,7 @@ object CdcStream {
       }.toSeq
   }
 
-  /** One metrics row per applied (writer, epoch), written OVERWRITE into a
+  /** One metrics row per committed (writer, epoch), written OVERWRITE into a
     * per-writer per-epoch directory — re-emission after a crash replaces
     * rather than duplicates. The WRITER scoping is load-bearing: epochIds
     * restart at 0 under a fresh checkpoint (a first-class hand-over the
@@ -291,7 +272,7 @@ object CdcStream {
     * over input events (head agg, narrow columns only) and null-payload
     * count over the RESOLVED live rows (observed on the merge write plan,
     * so the fat payload column is never scanned twice) — advisory channel,
-    * emitted per applied epoch (reference: _load_qc_metrics study-level QC
+    * emitted per committed epoch (reference: _load_qc_metrics study-level QC
     * rows, Scripts/python/enhanced_main_etl.py:998-1020).
     */
   private[graft] def emitQc(spark: SparkSession, root: String, wid: String,

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.lake.{CommitResult, LakeTable}
+import graft.lake.{CommitResult, LakeTable, Snapshot}
 import graft.model.Model
 
 /** M4 ▸ merge modes (reference: sp_merge_staging_to_production declares
@@ -59,7 +59,10 @@ object WriteStrategy {
   case object MergeOnRead extends WriteStrategy
 }
 
-/** Per-micro-batch outcome, used for metrics + lineage emission. */
+/** Per-micro-batch outcome, used for metrics, QC + lineage emission.
+  * `durationMs` is the merge wall up to the commit: the commit's own time
+  * cannot be recorded inside the commit.
+  */
 final case class BatchStats(
     epochId: Long,
     applied: Boolean,
@@ -75,6 +78,25 @@ final case class BatchStats(
     observedLive: Long = -1L,
     qcDeletes: Long = -1L,
     qcNullText: Long = -1L)
+
+object BatchStats {
+
+  /** The record of the epoch `s` committed, read from its header and its
+    * summary; None when the summary does not hold a record (a maintenance
+    * commit, or an epoch committed by a kernel that keeps none), so a
+    * replay emits nothing rather than fabricated rows.
+    */
+  def of(s: Snapshot): Option[BatchStats] = {
+    val m = s.summary
+    if (!SummaryKeys.forall(m.contains)) None
+    else Some(BatchStats(s.epochId, applied = true, s.id, m("inputEvents"), m("dedupedKeys"),
+      m("touchedBuckets").toInt, s.schemaVer, s.maxLsn, s.rows, m("mergeMs"),
+      m("observedRows"), m("observedLive"), m("qcDeletes"), m("qcNullText")))
+  }
+
+  private val SummaryKeys = Seq("inputEvents", "dedupedKeys", "touchedBuckets", "mergeMs",
+    "observedRows", "observedLive", "qcDeletes", "qcNullText")
+}
 
 /** The engine core: apply one micro-batch of change events to a LakeTable
   * as a key-partitioned MERGE upsert.
@@ -130,9 +152,9 @@ object MergeApply {
     // Fence first (scoped per writer identity): replaying an epoch this
     // writer already committed must cost nothing. A DIFFERENT writer's
     // epoch numbering is unrelated — it applies (LWW makes that safe).
-    if (table.fenced(cur, epochId, writerId))
-      return BatchStats(epochId, applied = false, cur.id, 0L, 0L, 0, cur.schemaVer,
-        cur.maxLsn, cur.rows, elapsedMs(t0))
+    def notApplied(s: Snapshot) = BatchStats(epochId, applied = false, s.id, 0L, 0L, 0,
+      s.schemaVer, s.maxLsn, s.rows, elapsedMs(t0))
+    if (table.fenced(cur, epochId, writerId)) return notApplied(cur)
 
     // One driver-side pass for the batch-level facts the PLAN ITSELF
     // depends on: count, max lsn, max schema version, the touched-bucket
@@ -150,9 +172,7 @@ object MergeApply {
       collect_set(bucketOf(col(keyCols.head), b)).as("touched"),
       sum(when(col("op") === "D", 1L).otherwise(0L)).as("qcDeletes")).collect()(0))
     val inputEvents = head.getAs[Long]("n")
-    if (inputEvents == 0L)
-      return BatchStats(epochId, applied = false, cur.id, 0L, 0L, 0, cur.schemaVer,
-        cur.maxLsn, cur.rows, elapsedMs(t0))
+    if (inputEvents == 0L) return notApplied(cur)
     val batchMaxLsn = head.getAs[Long]("maxLsn")
     val newVer = math.max(cur.schemaVer, head.getAs[Int]("maxVer"))
     val target = table.registry(newVer)
@@ -265,8 +285,10 @@ object MergeApply {
     // 5. Atomic fenced commit. Copy-on-write REPLACES the touched buckets'
     //    files; merge-on-read replaces nothing (pure append). Per-file
     //    row/live stats were collected by writeDataFiles in one pass, so
-    //    the snapshot's live count needs no scan of current data.
-    val newKeys = files.map(_.rows).sum
+    //    the snapshot's live count needs no scan of current data. The
+    //    epoch's record rides the commit as the snapshot summary (the
+    //    fields its header does not hold), so a crash before the channel
+    //    writes loses no row: BatchStats.of reads it back.
 
     // A merge-on-read commit replaces nothing, but a GATED mode's output
     // was derived from a liveness probe of the touched buckets — that read
@@ -275,16 +297,15 @@ object MergeApply {
     // read-time LWW). Plain upsert under MoR reads nothing: pure append.
     val gateReadBuckets: Set[Int] =
       if (isMor && mode != MergeMode.Upsert) touched else Set.empty
+    val summary = Map("inputEvents" -> inputEvents, "dedupedKeys" -> files.map(_.rows).sum,
+      "touchedBuckets" -> touched.size.toLong, "mergeMs" -> elapsedMs(t0),
+      "observedRows" -> obsRows, "observedLive" -> obsLive,
+      "qcDeletes" -> head.getAs[Long]("qcDeletes"), "qcNullText" -> obsNullText)
     val res: CommitResult = timed("commit")(table.commit(files,
       if (isMor) Set.empty else touched, epochId, newVer,
-      maxLsnSeen = batchMaxLsn,
-      writerId = writerId, inputEvents = inputEvents, dedupedKeys = newKeys,
-      mergeMs = elapsedMs(t0), baseSnapshotId = cur.id,
-      derivedBuckets = gateReadBuckets))
-    BatchStats(epochId, res.applied, res.snapshot.id, inputEvents, newKeys,
-      touched.size, newVer, res.snapshot.maxLsn, res.snapshot.rows, elapsedMs(t0),
-      observedRows = obsRows, observedLive = obsLive,
-      qcDeletes = head.getAs[Long]("qcDeletes"), qcNullText = obsNullText)
+      maxLsnSeen = batchMaxLsn, writerId = writerId, summary = summary,
+      baseSnapshotId = cur.id, derivedBuckets = gateReadBuckets))
+    if (res.applied) BatchStats.of(res.snapshot).get else notApplied(res.snapshot)
   }
 
   /** Hidden-partitioning bucket expression (Iceberg-style bucket transform). */

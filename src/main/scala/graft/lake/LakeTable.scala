@@ -71,10 +71,12 @@ final case class FileStats(minKey: String, maxKey: String)
   *                  0) re-applies instead of being silently fenced (the
   *                  merge is row-level idempotent under LWW, so re-apply is
   *                  safe; silent fencing would be data loss)
-  * @param inputEvents / dedupedKeys / mergeMs — the committing batch's
-  *                  stats, persisted IN the manifest so per-epoch metrics
-  *                  can be re-derived idempotently after a crash between
-  *                  commit and metrics write (exactly-once observability)
+  * @param summary  the committing epoch's own record, as named counters
+  *                  (Iceberg's snapshot `summary`): whatever the writer
+  *                  needs to re-emit its per-epoch rows after a crash
+  *                  between publish and emit. It is durable with the
+  *                  commit, and the table never interprets it. Maintenance
+  *                  commits carry an empty summary.
   * @param writerEpochs per-writer applied-epoch high-watermark. The single
   *                  (writerId, epochId) pair forgets writer A's watermark
   *                  the moment writer B commits; the map keeps every
@@ -121,18 +123,15 @@ final case class Snapshot(
     maxLsn: Long,
     files: Seq[FileEntry],
     writerId: String = "",
-    inputEvents: Long = -1L,
-    dedupedKeys: Long = -1L,
-    mergeMs: Long = -1L,
+    summary: Map[String, Long] = Map.empty,
     writerEpochs: Map[String, Long] = Map.empty,
     batchHashes: Seq[Long] = Nil,
     touched: Option[Seq[Int]] = None,
     groupRefs: Seq[GroupRef] = Nil,
-    // true ⟺ a maintenance commit (compaction, expiry plumbing): its
-    // epochId/writerId/batch stats are CARRIED FORWARD from the last epoch
-    // commit, not its own — readers re-deriving an epoch's stats (the
-    // crash-window metrics replay) must walk past maint snapshots to the
-    // epoch commit itself, or they attribute the wrong snapshot id/rows.
+    // true ⟺ a maintenance commit (compaction, rebucket): its epochId and
+    // writerId are CARRIED FORWARD from the last epoch commit, not its own,
+    // and its summary is empty — a reader looking for an epoch's commit
+    // (the crash-window channel replay) walks past maint snapshots to it.
     maint: Boolean = false)
 
 /** Reference to one bucket-group manifest file (sharded format): `g` is
@@ -641,9 +640,7 @@ final class LakeTable(
       schemaVer: Int,
       maxLsnSeen: Long,
       writerId: String = "",
-      inputEvents: Long = -1L,
-      dedupedKeys: Long = -1L,
-      mergeMs: Long = -1L,
+      summary: Map[String, Long] = Map.empty,
       batchHash: Option[Long] = None,
       baseSnapshotId: Long = -1L,
       derivedBuckets: Set[Int] = Set.empty,
@@ -732,15 +729,7 @@ final class LakeTable(
         maxLsn = math.max(maxLsnSeen, cur.maxLsn),
         files = allFiles,
         writerId = if (epochId >= 0) writerId else cur.writerId,
-        // Maintenance commits (epochId < 0: compaction, view refresh
-        // plumbing) carry the last EPOCH commit's batch stats forward,
-        // same as epochId/writerId above — overwriting them with the
-        // maintenance defaults (-1) would break the crash-window
-        // metrics replay, which re-derives a lost epoch's rows from
-        // exactly these fields (CdcStream observability path).
-        inputEvents = if (epochId >= 0) inputEvents else cur.inputEvents,
-        dedupedKeys = if (epochId >= 0) dedupedKeys else cur.dedupedKeys,
-        mergeMs = if (epochId >= 0) mergeMs else cur.mergeMs,
+        summary = summary,
         writerEpochs =
           if (epochId >= 0)
             cur.writerEpochs.updated(writerId,
@@ -855,8 +844,7 @@ final class LakeTable(
     * alive across hand-overs (the last-writer-only pair would forget it).
     */
   def fenced(cur: Snapshot, epochId: Long, writerId: String): Boolean =
-    epochId >= 0 && (cur.writerEpochs.get(writerId).exists(_ >= epochId) ||
-      (cur.writerId == writerId && cur.epochId >= epochId))
+    epochId >= 0 && cur.writerEpochs.get(writerId).exists(_ >= epochId)
 
   /** A writer is ESTABLISHED once it holds an epoch watermark in the
     * current snapshot — from then on the epoch fence alone covers its
@@ -866,8 +854,7 @@ final class LakeTable(
     * hash like an old one would be silently dropped.
     */
   def establishedWriter(cur: Snapshot, writerId: String): Boolean =
-    cur.writerEpochs.contains(writerId) ||
-      (cur.writerId == writerId && cur.epochId >= 0)
+    cur.writerEpochs.contains(writerId)
 
   /** Sleep that propagates interrupts WITH the flag restored — a stream
     * stop() landing mid-backoff must surface as an interrupt the caller
@@ -1446,15 +1433,17 @@ object LakeTable {
       .map { case (w, e) => s"""{"w":"${esc(w)}","e":$e}""" }.mkString("[", ",", "]")
     val bh = s.batchHashes.mkString("[", ",", "]")
     val tb = s.touched.map(_.mkString(""""touched":[""", ",", "],")).getOrElse("")
+    val sm = s.summary.toSeq.sortBy(_._1)
+      .map { case (k, v) => s""""${esc(k)}":$v""" }.mkString("{", ",", "}")
     s"""{"id":${s.id},"parent":${s.parent},"epochId":${s.epochId},"schemaVer":${s.schemaVer},""" +
       s""""numBuckets":${s.numBuckets},"rows":${s.rows},"maxLsn":${s.maxLsn},""" +
-      s""""writer":"${esc(s.writerId)}","inputEvents":${s.inputEvents},""" +
-      s""""dedupedKeys":${s.dedupedKeys},"mergeMs":${s.mergeMs},"maint":${s.maint},""" +
+      s""""writer":"${esc(s.writerId)}","summary":$sm,"maint":${s.maint},""" +
       s"""$tb"writerEpochs":$we,"batchHashes":$bh,$tail}"""
   }
 
   private[graft] def parseManifest(json: String): Snapshot = {
     import com.fasterxml.jackson.databind.ObjectMapper
+    import scala.jdk.CollectionConverters._
     val m = new ObjectMapper()
     val n = m.readTree(json)
     val files = if (n.has("files")) parseFileArray(n.get("files")) else Nil
@@ -1464,7 +1453,6 @@ object LakeTable {
         val g = n.get("groups").get(i)
         GroupRef(g.get("g").asInt(), g.get("path").asText(), g.get("n").asInt())
       }
-    def optLong(k: String): Long = if (n.has(k)) n.get(k).asLong() else -1L
     val writerEpochs: Map[String, Long] =
       if (!n.has("writerEpochs")) Map.empty
       else (0 until n.get("writerEpochs").size()).map { i =>
@@ -1477,12 +1465,14 @@ object LakeTable {
     val touched: Option[Seq[Int]] =
       if (!n.has("touched")) None
       else Some((0 until n.get("touched").size()).map(i => n.get("touched").get(i).asInt()))
+    val summary: Map[String, Long] =
+      if (!n.has("summary")) Map.empty
+      else n.get("summary").properties().asScala.map(e => e.getKey -> e.getValue.asLong()).toMap
     Snapshot(n.get("id").asLong(), n.get("parent").asLong(), n.get("epochId").asLong(),
       n.get("schemaVer").asInt(), n.get("numBuckets").asInt(), n.get("rows").asLong(),
       n.get("maxLsn").asLong(), files,
       writerId = if (n.has("writer")) n.get("writer").asText() else "",
-      inputEvents = optLong("inputEvents"), dedupedKeys = optLong("dedupedKeys"),
-      mergeMs = optLong("mergeMs"),
+      summary = summary,
       writerEpochs = writerEpochs, batchHashes = batchHashes, touched = touched,
       groupRefs = groupRefs,
       // pre-field manifests: false (every commit then was written by a

@@ -36,6 +36,26 @@ class CdcStreamSpec extends AnyFunSuite {
       .as[(String, Int, String)].collect().toSeq
   }
 
+  /** Every row of the three observability channels, every column. */
+  private def channelRows(table: LakeTable): Seq[Set[org.apache.spark.sql.Row]] =
+    Seq(CdcStream.metrics(spark, table.root), CdcStream.qc(spark, table.root),
+      CdcStream.lineage(spark, table.root)).map(_.collect().toSet)
+
+  /** Crash between the snapshot publish and the checkpoint advance: drop
+    * the epoch's commit marker (so the stream replays it) and the given
+    * channels' rows for it (their writes were lost with the crash), then
+    * restart the stream on the same checkpoint.
+    */
+  private def crashAndRerun(table: LakeTable, base: String, epoch: Long,
+      channels: Seq[String], sc: StreamConfig): Unit = {
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sessionState.newHadoopConf())
+    val wid = CdcStream.writerIdOf(s"$base/cp")
+    assert(fs.delete(new org.apache.hadoop.fs.Path(s"$base/cp/commits/$epoch"), false))
+    channels.foreach(c =>
+      assert(fs.delete(new org.apache.hadoop.fs.Path(s"${table.root}/$c/$wid/e$epoch"), true)))
+    CdcStream.runAvailable(spark, table, s"$base/events", s"$base/cp", sc)
+  }
+
   private def oracleOf(cfg: GenConfig): Seq[(String, Int, String)] = {
     val events = (0L until cfg.totalRows).map(i => ChangeGen.rowAt(cfg, i))
     ChangeGen.oracleFold(events).toSeq.sortBy { case ((c, t), _) => (c, t) }
@@ -133,27 +153,22 @@ class CdcStreamSpec extends AnyFunSuite {
     val cfg = GenConfig(numConvs = 15, maxTurns = 8, numEvents = 1000)
     writeEventFiles(cfg, s"$base/events", nFiles = 4)
     val table = LakeTable.create(spark, s"$base/table", schemaVer = 1, numBuckets = 4)
-    CdcStream.runAvailable(spark, table, s"$base/events", s"$base/cp",
-      StreamConfig(maxFilesPerTrigger = 2))
+    val sc = StreamConfig(maxFilesPerTrigger = 2)
+    CdcStream.runAvailable(spark, table, s"$base/events", s"$base/cp", sc)
     val lastEpoch = table.current.epochId
     val nMetrics = CdcStream.metrics(spark, table.root).count()
     val state = stateOf(table)
-    // simulate the crash between snapshot commit and checkpoint advance,
-    // with the metrics write lost: drop the last commit marker (stream will
-    // replay the epoch) and the epoch's metrics directory
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sessionState.newHadoopConf())
-    val wid = CdcStream.writerIdOf(s"$base/cp")
-    assert(fs.delete(new org.apache.hadoop.fs.Path(s"$base/cp/commits/$lastEpoch"), false))
-    assert(fs.delete(new org.apache.hadoop.fs.Path(s"${table.root}/_metrics/$wid/e$lastEpoch"), true))
-    CdcStream.runAvailable(spark, table, s"$base/events", s"$base/cp",
-      StreamConfig(maxFilesPerTrigger = 2))
-    // commit was fenced (no double apply), but the metrics row came back
+    val rowsBefore = channelRows(table)
+    crashAndRerun(table, base, lastEpoch, Seq("_metrics", "_qc", "_lineage"), sc)
+    // commit was fenced (no double apply), but the channel rows came back
     assert(stateOf(table) == state)
     val m = CdcStream.metrics(spark, table.root)
     assert(m.count() == nMetrics, "metrics duplicated or lost after crash replay")
     val replayRow = m.filter(org.apache.spark.sql.functions.col("epoch_id") === lastEpoch).collect()
     assert(replayRow.length == 1)
     assert(replayRow(0).getAs[Long]("input_events") > 0)
+    // the replayed rows equal the uncrashed run's, QC included
+    assert(channelRows(table) == rowsBefore)
   }
 
   test("crash window after a scheduled compaction: replay attributes the EPOCH snapshot, not the maintenance one") {
@@ -169,19 +184,34 @@ class CdcStreamSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     val before = CdcStream.metrics(spark, table.root)
       .filter(col("epoch_id") === lastEpoch).collect()(0)
-    val wid = CdcStream.writerIdOf(s"$base/cp")
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sessionState.newHadoopConf())
-    assert(fs.delete(new org.apache.hadoop.fs.Path(s"$base/cp/commits/$lastEpoch"), false))
-    assert(fs.delete(new org.apache.hadoop.fs.Path(s"${table.root}/_metrics/$wid/e$lastEpoch"), true))
-    CdcStream.runAvailable(spark, table, s"$base/events", s"$base/cp", sc)
+    val rowsBefore = channelRows(table)
+    crashAndRerun(table, base, lastEpoch, Seq("_metrics", "_qc", "_lineage"), sc)
     val after = CdcStream.metrics(spark, table.root)
       .filter(col("epoch_id") === lastEpoch).collect()
     assert(after.length == 1)
     // the replayed row must point at the epoch's own commit snapshot — the
-    // compaction commit carries the epoch's stats forward but has its own
-    // id and post-fold row count
+    // compaction commit carries the epoch id forward but has its own id
+    // and post-fold row count
     assert(after(0).getAs[Long]("snapshot_id") == before.getAs[Long]("snapshot_id"))
     assert(after(0).getAs[Long]("input_events") == before.getAs[Long]("input_events"))
+    assert(channelRows(table) == rowsBefore)
+  }
+
+  test("a committed snapshot without a summary replays no rows; one with a summary replays the applied record") {
+    val base = tmp()
+    val table = LakeTable.create(spark, s"$base/table", schemaVer = 2, numBuckets = 4)
+    val st = MergeApply.applyBatch(table,
+      ChangeGen.events(spark, GenConfig(numConvs = 10, maxTurns = 6, numEvents = 300)).toDF(),
+      0L, writerId = "w")
+    assert(st.applied)
+    assert(CdcStream.committedRecord(table, 0L, "w") == Some(st))
+    // epoch 1 committed by a caller that keeps no record
+    assert(table.commit(Nil, Set.empty, 1L, 2, st.maxLsn, writerId = "w",
+      baseSnapshotId = table.current.id).applied)
+    assert(table.current.summary.isEmpty)
+    assert(CdcStream.committedRecord(table, 1L, "w").isEmpty)
+    // an epoch this writer never committed finds nothing either
+    assert(CdcStream.committedRecord(table, 2L, "w").isEmpty)
   }
 
   test("observability channels are writer-scoped: a fresh checkpoint's epoch 0 does not clobber the old writer's") {

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.cdc.MergeApply
 import graft.gen.ChangeGen
 import graft.gen.ChangeGen.GenConfig
-import graft.lake.{FileEntry, LakeTable}
+import graft.lake.{FileEntry, FileStats, GroupRef, LakeTable, Snapshot}
 
 /** Sharded manifest format (tables with > 64 buckets): the snapshot JSON
   * carries per-bucket-group manifest references instead of inline file
@@ -28,6 +28,23 @@ class LakeShardingSpec extends AnyFunSuite {
 
   private def snapJsonBytes(root: String, id: Long): Long =
     new java.io.File(s"$root/_meta", f"snap-$id%010d.json").length()
+
+  test("manifest codec: a snapshot with a summary round-trips on the inline and the grouped shape") {
+    val summary = Map("inputEvents" -> 1200L, "mergeMs" -> 431L, "qcNullText" -> -1L)
+    val inline = Snapshot(7L, 6L, 3L, 2, 8, 90L, 4100L,
+      Seq(FileEntry("/p/a.parquet", 5, 2, 100L, 90L, FileEntry.Base,
+        Some(FileStats("conv-a", "conv-q")), len = 2048L)),
+      writerId = "w-1", summary = summary, writerEpochs = Map("w-1" -> 3L, "w-0" -> 9L),
+      batchHashes = Seq(11L, -4L), touched = Some(Seq(5)))
+    assert(LakeTable.parseManifest(LakeTable.manifestJson(inline)) == inline)
+    // the grouped shape holds group refs; its file list is loaded from them
+    val grouped = inline.copy(numBuckets = 4096, files = Nil,
+      groupRefs = Seq(GroupRef(0, "m-g0000-a.json", 3), GroupRef(9, "m-g0009-b.json", 1)))
+    assert(LakeTable.parseManifest(LakeTable.manifestJson(grouped)) == grouped)
+    // a maintenance commit's empty summary round-trips as empty
+    val maint = inline.copy(summary = Map.empty, maint = true)
+    assert(LakeTable.parseManifest(LakeTable.manifestJson(maint)) == maint)
+  }
 
   test("4096-bucket table: snapshot JSON and metadata-write volume stay " +
       "O(buckets touched), file lists round-trip exactly") {
