@@ -62,7 +62,10 @@ object SparkEntry {
       // merge against a table whose history was just garbage-collected —
       // the staging-purge lifecycle (S10) on the driver-checked path.
       if (expireMaintenance && b == batches / 2 - 1) {
-        table.compact(maxFilesPerBucket = 1)
+        // 0, not 1: a copy-on-write bucket holds one file, so any higher
+        // threshold compacts nothing
+        assert(table.compact(maxFilesPerBucket = 0).applied,
+          "the mid-replay compaction rewrote nothing")
         table.expireSnapshots(keepLast = 1, orphanGraceMs = 0L)
       }
       // Bucket-count evolution mid-replay: later epochs merge into the

@@ -183,9 +183,117 @@ class FileSkippingSpec extends AnyFunSuite {
     assert(table.read().count() == 400L)
     assert(table.readChangesSince(from).count() == 400L)
 
+    // the Spark scan (cap 0; these files are small enough for the driver)
     Seq("conv-000", "conv-123", "conv-399").foreach { k =>
-      assert(table.readKey(k).inputFiles.toSet == table.filesForKey(k).map(_.path).toSet, k)
+      assert(table.readKey(k, driverCapBytes = 0L).inputFiles.toSet ==
+        table.filesForKey(k).map(_.path).toSet, k)
     }
+  }
+
+  /** A copy-on-write base for `aaa-*` keys, then merge-on-read deltas: one
+    * updating half the `aaa` keys, one adding `bbb` keys. Every bucket holds
+    * three files, and an `aaa` key's point read keeps its base and the
+    * `aaa` delta.
+    */
+  private def baseAndDeltas(): LakeTable = {
+    val table = LakeTable.create(spark, tmp(), schemaVer = 2, numBuckets = 4)
+    def batch(prefix: String, lsnBase: Long, n: Int, text: String) =
+      (0 until n).flatMap(i => (1 to 2).map(t =>
+        ev(lsnBase + i * 2 + t, f"$prefix-$i%03d", t, s"$text $i $t")))
+    assert(MergeApply.applyBatch(table, df(batch("aaa", 0, 80, "v1")), epochId = 0).applied)
+    assert(MergeApply.applyBatch(table, df(batch("aaa", 1000, 40, "v2")), epochId = 1,
+      strategy = WriteStrategy.MergeOnRead).applied)
+    assert(MergeApply.applyBatch(table, df(batch("bbb", 2000, 80, "v1")), epochId = 2,
+      strategy = WriteStrategy.MergeOnRead).applied)
+    table
+  }
+
+  /** A `ParquetFileFormat` that records what the driver point read asks of
+    * it: the pushed filters of each reader and every file it opens. With
+    * `failDecode` each file's rows throw on the first row, and `closed`
+    * counts the readers closed.
+    */
+  private final class RecordingFormat(failDecode: Boolean = false)
+      extends org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.execution.datasources.PartitionedFile
+    val filters = new java.util.concurrent.ConcurrentLinkedQueue[Seq[org.apache.spark.sql.sources.Filter]]()
+    val opened = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val closed = new java.util.concurrent.atomic.AtomicInteger()
+    override def buildReaderWithPartitionValues(session: SparkSession,
+        dataSchema: org.apache.spark.sql.types.StructType,
+        partitionSchema: org.apache.spark.sql.types.StructType,
+        requiredSchema: org.apache.spark.sql.types.StructType,
+        pushed: Seq[org.apache.spark.sql.sources.Filter], options: Map[String, String],
+        hadoopConf: org.apache.hadoop.conf.Configuration): PartitionedFile => Iterator[InternalRow] = {
+      filters.add(pushed)
+      val read = super.buildReaderWithPartitionValues(session, dataSchema, partitionSchema,
+        requiredSchema, pushed, options, hadoopConf)
+      f => {
+        opened.add(f.toPath.toString)
+        val rows = read(f)
+        new Iterator[InternalRow] with java.io.Closeable {
+          def hasNext: Boolean = rows.hasNext
+          def next(): InternalRow =
+            if (failDecode) throw new java.io.IOException("injected decode failure") else rows.next()
+          def close(): Unit = {
+            closed.incrementAndGet()
+            rows match { case c: java.io.Closeable => c.close(); case _ => }
+          }
+        }
+      }
+    }
+  }
+
+  test("a point read under the cap runs no Spark job, on a CoW bucket and on an MoR bucket with deltas") {
+    val cow = LakeTable.create(spark, tmp(), schemaVer = 2, numBuckets = 4)
+    assert(MergeApply.applyBatch(cow, df((0 until 40).map(i =>
+      ev(i + 1L, f"ccc-$i%03d", 1, s"c$i"))), epochId = 0).applied)
+    assert(cow.filesForKey("ccc-007").map(_.kind) == Seq(FileEntry.Base))
+    val mor = baseAndDeltas()
+    assert(mor.filesForKey("aaa-007").map(_.kind).sorted == Seq(FileEntry.Base, FileEntry.Delta))
+    Seq((cow, "ccc-007", 1), (mor, "aaa-007", 2)).foreach { case (t, k, n) =>
+      assert(t.filesForKey(k).map(_.len).sum < LakeTable.driverReadCapBytes)
+      // a projection plus collect over the result, the shape a caller reads
+      val (got, seen) = JobProbe.during(spark)(
+        t.readKey(k).select(col("turn_idx"), col("text"), xxhash64(col("conv_id"))).collect())
+      assert(seen.jobs.isEmpty, s"readKey($k) ran ${seen.jobs.size} Spark jobs")
+      val want = t.readKey(k, driverCapBytes = 0L)
+        .select(col("turn_idx"), col("text"), xxhash64(col("conv_id"))).collect()
+      assert(got.toSet == want.toSet && got.length == n, k)
+      // a local relation: nothing to list, a LocalTableScan to explain
+      assert(t.readKey(k).inputFiles.isEmpty)
+      assert(t.readKey(k).queryExecution.executedPlan.toString.contains("LocalTableScan"))
+    }
+    // the delta's update wins on the driver too
+    assert(mor.readKey("aaa-007").collect().map(_.getAs[String]("text")).toSet ==
+      Set("v2 7 1", "v2 7 2"))
+  }
+
+  test("the driver point read opens exactly filesForKey and pushes the key equality to the reader") {
+    import org.apache.spark.sql.sources.EqualTo
+    import scala.jdk.CollectionConverters._
+    val table = baseAndDeltas()
+    Seq("aaa-007", "aaa-060", "bbb-042").foreach { k =>
+      val format = new RecordingFormat
+      val got = table.readKey(k, LakeTable.driverReadCapBytes, format).collect()
+      val wanted = table.filesForKey(k).map(f => new org.apache.hadoop.fs.Path(f.path).toString)
+      assert(wanted.size < table.current.files.count(_.bucket == LakeTable.bucketOfKey(k, 4)),
+        s"fixture must prune files of $k's bucket")
+      assert(format.opened.asScala.toSeq.sorted == wanted.sorted, k)
+      assert(format.filters.asScala.toSeq == Seq(Seq(EqualTo("conv_id", k))), k)
+      assert(format.closed.get == wanted.size, k)
+      assert(got.toSet == table.readKey(k, driverCapBytes = 0L).collect().toSet, k)
+    }
+  }
+
+  test("the driver point read closes the file reader when decoding throws") {
+    val table = baseAndDeltas()
+    val format = new RecordingFormat(failDecode = true)
+    val e = intercept[java.io.IOException](
+      table.readKey("aaa-007", LakeTable.driverReadCapBytes, format))
+    assert(e.getMessage == "injected decode failure")
+    assert(format.opened.size == 1 && format.closed.get == 1)
   }
 
   test("point read on a non-string-keyed table fails loudly, not silently empty") {

@@ -43,7 +43,9 @@ class PlanShapeSpec extends AnyFunSuite {
     * FileSkippingSpec on file COUNTS) and the key predicate reaching the
     * parquet scan for row-group pruning INSIDE the kept files — pinned
     * here on the plan text, since a resolve-shape change could silently
-    * lift the filter above the scan and still return correct rows.
+    * lift the filter above the scan and still return correct rows. A
+    * table this small is read on the driver, so the read takes the Spark
+    * scan by a cap of 0, the path every read above the cap takes.
     */
   test("readKey: the key equality predicate pushes down to the parquet scan") {
     import graft.lake.LakeTable
@@ -55,7 +57,8 @@ class PlanShapeSpec extends AnyFunSuite {
     val evs = (0 until 64).map(i => graft.model.Model.ChangeEvent(
       i + 1L, "I", 2, s"conv-$i", 0, Some("user"), Some(s"t$i"), None, Some(ts)))
     MergeApply.applyBatch(table, spark.createDataset(evs).toDF(), 0L)
-    val p = table.readKey("conv-7").queryExecution.explainString(FormattedMode)
+    val p = table.readKey("conv-7", driverCapBytes = 0L).queryExecution
+      .explainString(FormattedMode)
     val pushed = p.linesIterator.find(_.contains("PushedFilters"))
     assert(pushed.isDefined, "no PushedFilters line in the point-read plan")
     assert(pushed.get.contains("EqualTo(conv_id,conv-7)"),
