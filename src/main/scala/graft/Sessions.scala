@@ -6,18 +6,22 @@ import org.apache.spark.sql.SparkSession
   * (runtime re-plan + skew-join splitting), shuffle partitions sized to
   * cores (not the 200 default), UTC session time zone for oracle parity.
   *
-  * `file:` is rebound to [[graft.lake.NioLocalFileSystem]]. Spark ships no
-  * libhadoop, and without it Hadoop's local FileSystem forks one process
-  * per `chmod` (every file, `.crc` and directory it creates) and per
-  * `ls -ld` (every listed or stat'ed entry whose permission is read): about
-  * 7 forks per written data file, ~390 for a copy-on-write epoch that
-  * rewrites 54 bucket files. The rebound class does the same calls
-  * in-process through `java.nio`.
+  * `file:` is rebound to [[graft.lake.NioLocalFileSystem]] for
+  * `FileSystem` and to [[graft.lake.NioLocalFs]] for `FileContext` (which
+  * Spark's streaming checkpoint logs write through). Spark ships no
+  * libhadoop, and without it Hadoop's local file systems fork one process
+  * per `chmod` (every file, `.crc` and directory they create), per `ls -ld`
+  * (every listed or stat'ed entry whose permission is read) and per
+  * `readlink` (every `FileContext` rename): about 7 forks per written data
+  * file, ~390 for a copy-on-write epoch that rewrites 54 bucket files, and
+  * ~25 per streaming trigger for the offset, commit and source logs. The
+  * rebound classes do the same calls in-process through `java.nio`.
   */
 object Sessions {
-  /** The `file:` binding every engine session carries (see above). */
-  private[graft] val LocalFs: (String, String) =
-    "spark.hadoop.fs.file.impl" -> classOf[graft.lake.NioLocalFileSystem].getName
+  /** The `file:` bindings every engine session carries (see above). */
+  private[graft] val LocalFs: Map[String, String] = Map(
+    "spark.hadoop.fs.file.impl" -> classOf[graft.lake.NioLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[graft.lake.NioLocalFs].getName)
 
   /** @param tmpfsShuffle opt-in: put shuffle/spill files on /dev/shm when
     *                     one exists AND has headroom. The LIBRARY default
@@ -53,7 +57,7 @@ object Sessions {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.parquet.compression.codec", "snappy")
-      .config(LocalFs._1, LocalFs._2)
+      .config(LocalFs)
       // Survive multi-minute hypervisor pauses on the shared sandbox host
       // (a 260 s whole-JVM freeze was observed); without this the local
       // executor gets heartbeat-evicted and the session is dead.

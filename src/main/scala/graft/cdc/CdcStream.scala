@@ -43,9 +43,12 @@ object CdcStream {
     * @param strategy copy-on-write (default) or merge-on-read delta
     *                  appends (see [[WriteStrategy]])
     * @param compactEveryEpochs under merge-on-read, fold the delta stack
-    *                  back to base files every N applied epochs (0 = never;
-    *                  compaction is itself a fenceless maintenance commit,
-    *                  so a crash mid-compaction is harmless)
+    *                  back to base files every N epochs (0 = never): epoch
+    *                  N-1 of each period is written copy-on-write, which
+    *                  folds the buckets it touches in its own merge, then a
+    *                  compaction folds the delta buckets it left untouched
+    *                  (a fenceless maintenance commit, so a crash
+    *                  mid-compaction is harmless)
     * @param retry    engine-level retry of a failed epoch apply, config
     *                  data via [[graft.enrich.RulesConfig]]'s `retry`
     *                  section (see [[RetryPolicy]]; deterministic failures
@@ -128,9 +131,16 @@ object CdcStream {
     val writer = events.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
+        // A scheduled compaction epoch is written copy-on-write: the
+        // touched buckets are rewritten LWW-resolved with their deltas
+        // folded in by the merge itself, so the trailing compaction only
+        // folds the delta buckets this batch did not touch.
+        val compacts = cfg.compactEveryEpochs > 0 &&
+          epochId % cfg.compactEveryEpochs == (cfg.compactEveryEpochs - 1)
         val stats = Retry.run(cfg.retry, s"epoch $epochId apply") {
-          MergeApply.applyBatch(table, batch, epochId, cfg.saltFactor,
-            mode = cfg.mode, writerId = wid, strategy = cfg.strategy)
+          MergeApply.applyBatch(table, batch, epochId, cfg.saltFactor, mode = cfg.mode,
+            writerId = wid,
+            strategy = if (compacts) WriteStrategy.CopyOnWrite else cfg.strategy)
         }
         Retry.run(cfg.retry, s"epoch $epochId observability") {
           val record = if (stats.applied) Some(stats) else committedRecord(table, epochId, wid)
@@ -142,9 +152,10 @@ object CdcStream {
         }
         // Maintenance fires on the SCHEDULE, not on `applied`: a fenced
         // re-run of the scheduled epoch must not skip its compaction round
-        // (the delta stack would grow for another full period).
-        if (cfg.compactEveryEpochs > 0 &&
-          epochId % cfg.compactEveryEpochs == (cfg.compactEveryEpochs - 1))
+        // (the delta stack would grow for another full period). After a
+        // copy-on-write epoch it folds only untouched delta buckets, and
+        // with none left it is a no-op that starts no Spark job.
+        if (compacts)
           Retry.run(cfg.retry, s"epoch $epochId compaction") {
             table.compact(foldDeltas = true)
           }

@@ -47,11 +47,13 @@ object MergeMode {
   *     regime where keys are spread wide and every bucket is touched —
   *     at 100 TB a CoW batch there would rewrite the whole table. Reads
   *     LWW-resolve delta-carrying buckets ([[LakeTable.readResolved]]);
-  *     [[LakeTable.compact]](foldDeltas = true) folds deltas back to base.
+  *     [[LakeTable.compact]](foldDeltas = true) or a copy-on-write merge
+  *     of the touched buckets (a stream's scheduled epoch) folds deltas back.
   *
   * The same dichotomy as Iceberg v2 copy-on-write vs merge-on-read; both
-  * strategies commit through the same fenced snapshot protocol and may be
-  * mixed batch-by-batch on one table.
+  * strategies resolve in the one bucket exchange of their write
+  * ([[LakeTable.resolveIntoBuckets]]), commit through the same fenced
+  * snapshot protocol and may be mixed batch-by-batch on one table.
   */
 sealed trait WriteStrategy
 object WriteStrategy {
@@ -114,9 +116,10 @@ object BatchStats {
   *     replayed foreachBatch invocation after a crash is a no-op
   *   - schema evolution: a batch carrying a newer `schema_ver` advances
   *     the table schema (versioned registry, applied per batch)
-  *   - skew: hot conversations are spread with a salted repartition on
-  *     (bucket, hash(conv_id, turn_idx) % salt) before the write, and the
-  *     session enables AQE skew-join splitting (see [[graft.Sessions]])
+  *   - skew: a bucket too large for one write task is spread over salted
+  *     write partitions (bucket·salt + hash(conv_id, turn_idx) mod salt),
+  *     resolved inside the same one exchange, and the session enables AQE
+  *     skew-join splitting (see [[graft.Sessions]])
   *
   * Reference analog for the whole stage: MERGE matched/not-matched upsert +
   * content-hash idempotent batch loads (reference:
@@ -214,44 +217,37 @@ object MergeApply {
     //    batches resolve here too); merge-on-read dedups the batch alone —
     //    cross-batch LWW then happens at read time over the delta stack.
     //    (Duplicate re-emissions share an LSN and identical payload, so
-    //    max_by ties are safe.)
+    //    max_by ties are safe.) `_batch` marks batch rows: its max per key
+    //    says whether the batch carried the key, whichever version wins.
+    val batchSide = gatedBatch.select(mergeCols.map(col) :+ lit(1).as("_batch"): _*)
     val toResolve =
-      if (isMor) gatedBatch.select(mergeCols.map(col): _*)
+      if (isMor) batchSide
       else {
-        // Version-aware conform: renamed columns map their old-name data
-        // across the cur→newVer step, dropped columns project away.
+        // version-aware conform: renames map old-name data, drops project away
         val currentRows = table.conformVersioned(
           table.readConformed(cur, Some(touched)), cur.schemaVer, newVer)
-        currentRows.select(mergeCols.map(col): _*)
-          .unionByName(gatedBatch.select(mergeCols.map(col): _*))
+        currentRows.select(mergeCols.map(col) :+ lit(0).as("_batch"): _*).unionByName(batchSide)
       }
-    val resolved = toResolve
-      .groupBy(keyCols.map(col): _*)
-      .agg(max_by(struct(mergeCols.map(col): _*), col("_lsn")).as("r"))
-      .select(col("r.*"))
 
-    // 4. Salted write: spread a bucket across multiple write tasks ONLY
-    //    when its RESOLVED row volume warrants it. The written volume per
-    //    bucket is (existing live rows in the bucket) + (new keys, upper-
-    //    bounded by batch events per bucket) — NOT the batch's raw event
-    //    count: a hot conversation's million events resolve to ≤ max_turns
-    //    rows, so salting on event volume multiplied output-file count
-    //    (and every per-file fixed cost: write setup, footer, manifest
-    //    entry, later read open) with zero balancing benefit. The default
-    //    threshold is a healthy parquet write task (~4M rows ≈ 0.5 GB);
-    //    the 100 TB case — CoW rewriting a ~2.4e8-row bucket — salts at
-    //    the cap, which is exactly when spreading pays.
+    // 4. Resolve inside the write's one bucket exchange (the operator
+    //    compaction and rebucket use), salted — a bucket spread over several
+    //    write tasks — ONLY when its RESOLVED row volume warrants it: live
+    //    rows per bucket + batch events per touched bucket, NOT the raw
+    //    event count (a hot conversation's million events resolve to ≤
+    //    max_turns rows; salting on them multiplied output files and every
+    //    per-file cost for no balance). The default threshold is a healthy
+    //    parquet write task (~4M rows ≈ 0.5 GB); the 100 TB case — CoW
+    //    rewriting a ~2.4e8-row bucket — salts, which is when spreading pays.
     val livePerBucket = if (cur.rows > 0) cur.rows / math.max(1, b) else 0L
     val resolvedEstPerBucket = livePerBucket + inputEvents / math.max(1, touched.size)
     val salt = if (resolvedEstPerBucket < saltRowThreshold) 1
       else math.max(1, saltFactor)
-    val withBucket = resolved.withColumn("_bucket", bucketOf(col(keyCols.head), b))
-    val parts = LakeTable.writeTasks(spark, touched.size * salt)
+    val resolved = table.resolveIntoBuckets(toResolve, newVer, b,
+      LakeTable.writeTasks(spark, touched.size * salt), salt, maxCols = Seq("_batch"))
     // A8 ▸ observed metrics RIDE THE MERGE PLAN (Dataset.observe →
-    // CollectMetrics → QueryExecutionListener via the Observation helper):
-    // resolved-row and live-row counts are collected by the same pass that
-    // writes the data files, not by a separate aggregation job (reference
-    // analog: *_stats accumulator dicts,
+    // CollectMetrics via the Observation helper): resolved-row, live-row
+    // and batch-key counts come from the pass that writes the data files,
+    // not a separate job (reference analog: *_stats accumulator dicts,
     // Scripts/python/enhanced_main_etl.py:304-309).
     val obs = org.apache.spark.sql.Observation(s"merge-e$epochId-${System.nanoTime()}")
     // S9 null-payload QC is observed on the RESOLVED rows (live winners
@@ -264,23 +260,19 @@ object MergeApply {
       if (target.fieldNames.contains("text"))
         sum(when(!col("_deleted") && col("text").isNull, 1L).otherwise(0L))
       else sum(lit(0L))
-    val salted = withBucket
+    val observedRows = resolved
       .observe(obs, count(lit(1)).as("rows"),
         sum(when(col("_deleted"), 0L).otherwise(1L)).as("live"),
-        nullTextCol.as("null_text"))
-      .repartition(parts, col("_bucket"),
-        pmod(xxhash64(keyCols.map(col): _*), lit(salt)))
-    val files = timed("merge-write")(table.writeDataFiles(salted, newVer,
+        nullTextCol.as("null_text"), sum("_batch").as("batch_keys"))
+      .drop("_batch")
+    val files = timed("merge-write")(table.writeDataFiles(observedRows, newVer,
       kind = if (isMor) graft.lake.FileEntry.Delta else graft.lake.FileEntry.Base))
-    // writeDataFiles refuses speculative execution, so no write task runs
-    // twice and these plan-ride counts are exact.
+    // writeDataFiles refuses speculative execution, so these counts are
+    // exact. -1 = unavailable (the BatchStats default): 0 would read as
+    // "all tombstones" / "no nulls" and trip false reconciliations.
     val observed = obs.get
-    val obsRows = observed.get("rows").collect { case x: Long => x }.getOrElse(-1L)
-    // -1 = metric unavailable (same sentinel as obsRows/BatchStats
-    // defaults) — 0 would be indistinguishable from "all tombstones" /
-    // "no nulls" in the metrics channel and trip false reconciliations
-    val obsLive = Option(observed.getOrElse("live", null)).collect { case x: Long => x }.getOrElse(-1L)
-    val obsNullText = Option(observed.getOrElse("null_text", null)).collect { case x: Long => x }.getOrElse(-1L)
+    def observedOf(name: String): Long =
+      Option(observed.getOrElse(name, null)).collect { case x: Long => x }.getOrElse(-1L)
 
     // 5. Atomic fenced commit. Copy-on-write REPLACES the touched buckets'
     //    files; merge-on-read replaces nothing (pure append). Per-file
@@ -297,10 +289,10 @@ object MergeApply {
     // read-time LWW). Plain upsert under MoR reads nothing: pure append.
     val gateReadBuckets: Set[Int] =
       if (isMor && mode != MergeMode.Upsert) touched else Set.empty
-    val summary = Map("inputEvents" -> inputEvents, "dedupedKeys" -> files.map(_.rows).sum,
+    val summary = Map("inputEvents" -> inputEvents, "dedupedKeys" -> observedOf("batch_keys"),
       "touchedBuckets" -> touched.size.toLong, "mergeMs" -> elapsedMs(t0),
-      "observedRows" -> obsRows, "observedLive" -> obsLive,
-      "qcDeletes" -> head.getAs[Long]("qcDeletes"), "qcNullText" -> obsNullText)
+      "observedRows" -> observedOf("rows"), "observedLive" -> observedOf("live"),
+      "qcDeletes" -> head.getAs[Long]("qcDeletes"), "qcNullText" -> observedOf("null_text"))
     val res: CommitResult = timed("commit")(table.commit(files,
       if (isMor) Set.empty else touched, epochId, newVer,
       maxLsnSeen = batchMaxLsn, writerId = writerId, summary = summary,

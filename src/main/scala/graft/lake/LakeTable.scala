@@ -1149,30 +1149,35 @@ final class LakeTable(
       baseSnapshotId = cur.id, newNumBuckets = Some(newNumBuckets))
   }
 
-  /** LWW-resolve stored row versions (physical schema at `schemaVer`)
-    * INSIDE the bucket exchange a rewrite's write needs: one exchange that
-    * sends bucket `b` to write task `b mod parts`, then a max-LSN groupBy
-    * on `(_bucket, keys…)` that the exchange already clusters — the bucket
-    * is a function of the key, so the planner adds no second shuffle, and
-    * each bucket lands in exactly one write task (one file per bucket).
-    * `repartitionById` rather than a hash repartition: hashing a few small
-    * bucket ids into `parts` tasks is lopsided (16 buckets over 4 tasks
-    * hash to 6/4/3/3), the modulo deals them out evenly. Output: the
-    * physical columns plus `_bucket`, ready for [[writeDataFiles]].
-    * Bucket routing is the merge path's own transform — a drifted copy
-    * would put rows in different buckets than merges do.
+  /** The one LWW resolve of every rewrite — either merge, [[compact]] and
+    * [[rebucket]] — INSIDE the bucket exchange its write needs: write
+    * partition `p` goes to task `p mod parts`, then a max-LSN groupBy on
+    * `(_bucket, keys…)` that the exchange already clusters (the partition
+    * is a function of the key), so there is no second shuffle and the
+    * aggregate's sort is the write's. The partition is the bucket (one
+    * file per bucket), or with `salt` > 1 `bucket·salt + hash(keys) mod
+    * salt`, grouped last so the sort stays `(_bucket, keys…)`. By id, not
+    * hash: 16 buckets hash onto 4 tasks as 6/4/3/3, the modulo deals them
+    * evenly. `maxCols` ride along as their max per key. Output: physical
+    * columns at `schemaVer`, `_bucket` and `maxCols`, for [[writeDataFiles]];
+    * routing is the merge path's own bucket transform.
     */
-  private def resolveIntoBuckets(rows: DataFrame, schemaVer: Int, numBuckets: Int,
-      parts: Int): DataFrame = {
+  private[graft] def resolveIntoBuckets(rows: DataFrame, schemaVer: Int, numBuckets: Int,
+      parts: Int, salt: Int = 1, maxCols: Seq[String] = Nil): DataFrame = {
     val cols = physicalSchema(schemaVer).fieldNames.toSeq
-    rows.withColumn("_bucket", graft.cdc.MergeApply.bucketOf(col(keyCols.head), numBuckets))
-      .repartitionById(parts, col("_bucket"))
-      .groupBy(col("_bucket") +: keyCols.map(col): _*)
-      .agg(max_by(struct(cols.map(col): _*), col("_lsn")).as("r"))
+    val bucketed = rows.withColumn("_bucket",
+      graft.cdc.MergeApply.bucketOf(col(keyCols.head), numBuckets))
+    val (keyed, saltKey) =
+      if (salt <= 1) (bucketed, Nil)
+      else (bucketed.withColumn("_part", (col("_bucket") * salt +
+        pmod(xxhash64(keyCols.map(col): _*), lit(salt.toLong))).cast(IntegerType)), Seq("_part"))
+    keyed.repartitionById(parts, col(saltKey.headOption.getOrElse("_bucket")))
+      .groupBy((("_bucket" +: keyCols) ++ saltKey).map(col): _*)
+      .agg(max_by(struct(cols.map(col): _*), col("_lsn")).as("r"), maxCols.map(c => max(c).as(c)): _*)
       // key columns straight from the grouping keys: their sort order
       // (the aggregate's) carries through to the write's sort
-      .select(cols.map(c => if (keyCols.contains(c)) col(c) else col(s"r.$c").as(c)) :+
-        col("_bucket"): _*)
+      .select(cols.map(c => if (keyCols.contains(c)) col(c) else col(s"r.$c").as(c)) ++
+        ("_bucket" +: maxCols).map(col): _*)
   }
 
   /** Expire all but the last `keepLast` snapshots and GC data files no kept

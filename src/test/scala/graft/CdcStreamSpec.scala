@@ -179,6 +179,9 @@ class CdcStreamSpec extends AnyFunSuite {
     val sc = StreamConfig(maxFilesPerTrigger = 2,
       strategy = graft.cdc.WriteStrategy.MergeOnRead, compactEveryEpochs = 2)
     CdcStream.runAvailable(spark, table, s"$base/events", s"$base/cp", sc)
+    // the scheduled epoch folded its touched buckets in its own merge; an
+    // out-of-band compaction puts the maintenance commit on top
+    assert(table.compact(maxFilesPerBucket = 0).applied)
     val lastEpoch = table.current.epochId
     assert(table.current.maint, "schedule should leave a compaction commit on top")
     import org.apache.spark.sql.functions.col
@@ -343,7 +346,7 @@ class CdcStreamSpec extends AnyFunSuite {
     assert(rows(CdcStream.metrics(spark, root)) == Set(metricsRow(3, 120), metricsRow(4, 80)))
   }
 
-  test("a streamed merge-on-read epoch runs 5 Spark jobs, plus 2 when it compacts") {
+  test("a streamed merge-on-read epoch runs 4 Spark jobs, its scheduled fold adds none") {
     val base = tmp()
     val cfg = GenConfig(numConvs = 30, maxTurns = 12, numEvents = 2400)
     writeEventFiles(cfg, s"$base/events", nFiles = 4)
@@ -356,8 +359,73 @@ class CdcStreamSpec extends AnyFunSuite {
     val perEpoch = seen.jobs.groupBy(j =>
       Option(j.properties.getProperty("streaming.sql.batchId")).map(_.toLong).getOrElse(-1L))
       .map { case (e, js) => e -> js.size }
-    // epochs 1 and 3 fold the delta stack after their merge
-    assert(perEpoch == Map(0L -> 5, 1L -> 7, 2L -> 5, 3L -> 7), perEpoch.toString)
+    // epochs 1 and 3 are written copy-on-write; each touches all 8
+    // buckets, so the trailing compaction finds no delta left and runs no job
+    assert(perEpoch == Map(0L -> 4, 1L -> 4, 2L -> 4, 3L -> 4), perEpoch.toString)
+    assert(!table.current.maint)
+    assert(table.current.files.forall(_.kind == graft.lake.FileEntry.Base))
     assert(stateOf(table) == oracleOf(cfg))
+  }
+
+  /** Events of one conversation in one file, every other event in another:
+    * whichever file a scheduled epoch reads, it leaves buckets untouched
+    * that carry the other epoch's deltas.
+    */
+  private def writeSplitFiles(cfg: GenConfig, dir: String): Seq[org.apache.spark.sql.DataFrame] = {
+    import spark.implicits._
+    val all = ChangeGen.emittedEvents(spark, cfg).collect().toSeq
+    val lone = all.head.conv_id
+    val (one, rest) = all.partition(_.conv_id == lone)
+    Seq(rest, one).zipWithIndex.map { case (chunk, i) =>
+      StreamFiles.writeFlat(spark.createDataset(chunk).toDF(), dir, f"chunk-$i%04d")
+      spark.createDataset(chunk).toDF()
+    }
+  }
+
+  test("a scheduled epoch that leaves delta buckets untouched still ends with base files only") {
+    val base = tmp()
+    val cfg = GenConfig(numConvs = 20, maxTurns = 10, numEvents = 1200)
+    writeSplitFiles(cfg, s"$base/events")
+    val table = LakeTable.create(spark, s"$base/table", schemaVer = 1, numBuckets = 8)
+    CdcStream.runAvailable(spark, table, s"$base/events", s"$base/cp",
+      StreamConfig(maxFilesPerTrigger = 1,
+        strategy = graft.cdc.WriteStrategy.MergeOnRead, compactEveryEpochs = 2))
+    // the trailing compaction folded the untouched delta buckets
+    assert(table.current.maint)
+    assert(table.current.files.forall(_.kind == graft.lake.FileEntry.Base))
+    assert(table.current.rows == table.read().count())
+    assert(stateOf(table) == oracleOf(cfg))
+  }
+
+  test("a fenced replay of a scheduled epoch still folds the delta stack") {
+    val base = tmp()
+    val cfg = GenConfig(numConvs = 20, maxTurns = 10, numEvents = 1200)
+    val events = s"$base/events"
+    val staged = s"$base/staged"
+    val Seq(_, second) = writeSplitFiles(cfg, staged)
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sessionState.newHadoopConf())
+    def release(i: Int): Unit = {
+      fs.mkdirs(new org.apache.hadoop.fs.Path(events))
+      assert(fs.rename(new org.apache.hadoop.fs.Path(f"$staged/chunk-$i%04d.parquet"),
+        new org.apache.hadoop.fs.Path(f"$events/chunk-$i%04d.parquet")))
+    }
+    val table = LakeTable.create(spark, s"$base/table", schemaVer = 1, numBuckets = 8)
+    val sc = StreamConfig(maxFilesPerTrigger = 1,
+      strategy = graft.cdc.WriteStrategy.MergeOnRead, compactEveryEpochs = 2)
+    release(0)
+    CdcStream.runAvailable(spark, table, events, s"$base/cp", sc) // epoch 0: deltas
+    // epoch 1 committed as the stream would, then a crash before its
+    // compaction and before the checkpoint advanced
+    assert(MergeApply.applyBatch(table, second, 1L, writerId = CdcStream.writerIdOf(s"$base/cp"),
+      strategy = graft.cdc.WriteStrategy.CopyOnWrite).applied)
+    val committed = table.current.id
+    assert(table.current.files.exists(_.kind == graft.lake.FileEntry.Delta))
+    release(1)
+    CdcStream.runAvailable(spark, table, events, s"$base/cp", sc)
+    // the replay was fenced, and its scheduled compaction still ran
+    assert(table.current.maint && table.current.parent == committed)
+    assert(table.current.files.forall(_.kind == graft.lake.FileEntry.Base))
+    assert(stateOf(table) == oracleOf(cfg))
+    assert(CdcStream.metrics(spark, table.root).count() == 2L)
   }
 }

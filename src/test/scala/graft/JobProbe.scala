@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
@@ -54,6 +54,10 @@ object JobProbe extends AdaptiveSparkPlanHelper {
   /** Shuffle exchanges in an executed plan, through adaptive query stages. */
   def shuffles(plan: SparkPlan): Seq[ShuffleExchangeLike] =
     collect(plan) { case s: ShuffleExchangeLike => s }
+
+  /** Sorts in an executed plan, through adaptive query stages. */
+  def sorts(plan: SparkPlan): Seq[SortExec] =
+    collect(plan) { case s: SortExec => s }
 
   /** The executed plans that wrote files. */
   def writePlans(seen: Seen): Seq[SparkPlan] =

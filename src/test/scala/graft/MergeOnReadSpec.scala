@@ -155,4 +155,49 @@ class MergeOnReadSpec extends AnyFunSuite {
     assert(table.current.files.groupBy(_.bucket).values.forall(_.size == 1))
     assert(finalState(table) == oracleState(cfg))
   }
+
+  test("every merge resolves inside its one bucket exchange: copy-on-write, merge-on-read and salted write plans run one shuffle and one sort") {
+    val cfg = GenConfig(numConvs = 40, maxTurns = 12, numEvents = 3000)
+    import spark.implicits._
+    val all = ChangeGen.emittedEvents(spark, cfg).collect()
+    val (first, second) = all.splitAt(all.length / 2)
+    def probe(strategy: WriteStrategy, saltRowThreshold: Long): Unit = {
+      val table = LakeTable.create(spark, tmp(), schemaVer = 2, numBuckets = 8)
+      assert(MergeApply.applyBatch(table, spark.createDataset(first.toSeq).toDF(), 0L).applied)
+      val (st, seen) = JobProbe.during(spark)(MergeApply.applyBatch(table,
+        spark.createDataset(second.toSeq).toDF(), 1L, saltFactor = 4,
+        saltRowThreshold = saltRowThreshold, strategy = strategy))
+      assert(st.applied)
+      val write = JobProbe.writePlans(seen)
+      assert(write.size == 1, s"$strategy: ${write.size} write plans")
+      assert(JobProbe.shuffles(write.head).size == 1, write.head.toString)
+      assert(JobProbe.sorts(write.head).size == 1, write.head.toString)
+      if (saltRowThreshold == 0L) // salted: some bucket spread over write tasks
+        assert(table.current.files.groupBy(_.bucket).values.exists(_.size > 1))
+      assert(finalState(table) == oracleState(cfg))
+    }
+    probe(WriteStrategy.CopyOnWrite, saltRowThreshold = 4000000L)
+    probe(WriteStrategy.MergeOnRead, saltRowThreshold = 4000000L)
+    probe(WriteStrategy.CopyOnWrite, saltRowThreshold = 0L)
+  }
+
+  test("copy-on-write and merge-on-read count the same deduped keys for one batch over one table") {
+    val cfg = GenConfig(numConvs = 40, maxTurns = 12, numEvents = 3000)
+    import spark.implicits._
+    val all = ChangeGen.emittedEvents(spark, cfg).collect()
+    val (first, second) = all.splitAt(all.length / 2)
+    val batchKeys = second.map(e => (e.conv_id, e.turn_idx)).distinct.length.toLong
+    val deduped = Seq(WriteStrategy.CopyOnWrite, WriteStrategy.MergeOnRead).map { strategy =>
+      val table = LakeTable.create(spark, tmp(), schemaVer = 2, numBuckets = 8)
+      assert(MergeApply.applyBatch(table, spark.createDataset(first.toSeq).toDF(), 0L).applied)
+      val st = MergeApply.applyBatch(table, spark.createDataset(second.toSeq).toDF(), 1L,
+        strategy = strategy)
+      assert(st.applied)
+      // a copy-on-write rewrite writes the touched buckets' every row,
+      // more than the batch's keys
+      if (strategy == WriteStrategy.CopyOnWrite) assert(st.observedRows > batchKeys)
+      st.dedupedKeys
+    }
+    assert(deduped == Seq(batchKeys, batchKeys))
+  }
 }

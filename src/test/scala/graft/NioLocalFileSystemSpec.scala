@@ -4,12 +4,12 @@ import java.io.FileNotFoundException
 import java.net.URI
 import java.nio.file.Files
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, FileContext, FileStatus, FileSystem, Options, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.lake.{NioLocalFileSystem, NioRawLocalFileSystem}
+import graft.lake.{NioLocalFileSystem, NioLocalFs, NioRawLocalFileSystem, NioRawLocalFs}
 
 /** The fork-free `file:` FileSystem engine sessions bind: every status it
   * produces must equal what stock `RawLocalFileSystem` (which forks `ls`
@@ -85,5 +85,56 @@ class NioLocalFileSystemSpec extends AnyFunSuite {
     intercept[FileNotFoundException](ours.listStatus(missing))
     intercept[FileNotFoundException](ours.setPermission(missing, new FsPermission("644")))
     assert(!ours.exists(missing))
+  }
+
+  test("engine sessions bind it for FileContext too: file: creates and renames through the NIO classes") {
+    val conf = spark.sessionState.newHadoopConf()
+    val fc = FileContext.getFileContext(URI.create("file:///"), conf)
+    val afs = fc.getDefaultFileSystem
+    assert(afs.isInstanceOf[NioLocalFs], afs.getClass)
+    assert(afs.asInstanceOf[ChecksumFs].getRawFs.isInstanceOf[NioRawLocalFs])
+    // a checkpoint-log write: create a temp, rename it over the target
+    val dir = new Path(Files.createTempDirectory("graft-localfs-").toString)
+    val (tmp, dst) = (new Path(dir, ".0.tmp"), new Path(dir, "0"))
+    Seq("v1", "v2").foreach { v =>
+      val out = fc.create(tmp, java.util.EnumSet.of(org.apache.hadoop.fs.CreateFlag.CREATE,
+        org.apache.hadoop.fs.CreateFlag.OVERWRITE), Options.CreateOpts.createParent())
+      try out.write(v.getBytes("UTF-8")) finally out.close()
+      fc.rename(tmp, dst, Options.Rename.OVERWRITE)
+    }
+    assert(new String(Files.readAllBytes(java.nio.file.Paths.get(dst.toString)), "UTF-8") == "v2")
+    assert(!fc.util.exists(tmp))
+  }
+
+  test("getFileLinkStatus: a file or directory is its status, a symlink is the link itself") {
+    val conf = spark.sessionState.newHadoopConf()
+    val ours = new NioRawLocalFileSystem
+    ours.initialize(URI.create("file:///"), conf)
+    val ref = stock()
+    val root = Files.createTempDirectory("graft-localfs-")
+    val file = Files.write(root.resolve("f.bin"), Array.fill[Byte](321)(1))
+    val dir = Files.createDirectory(root.resolve("d"))
+    val link = Files.createSymbolicLink(root.resolve("ln"), file)
+    val dangling = Files.createSymbolicLink(root.resolve("gone"), root.resolve("nope"))
+    // unqualified: the stock class reads links only through a plain path
+    def p(x: java.nio.file.Path) = new Path(x.toString)
+    Seq(file, dir).foreach { x =>
+      val st = ours.getFileLinkStatus(p(x))
+      assert(!st.isSymlink)
+      assertSame(st, ref.getFileLinkStatus(p(x)))
+    }
+    Seq(link, dangling).foreach { x =>
+      val st = ours.getFileLinkStatus(p(x))
+      val want = ref.getFileLinkStatus(p(x))
+      assert(st.isSymlink && !st.isDirectory && want.isSymlink, x)
+      assert(st.getPath == ref.makeQualified(want.getPath) && st.getSymlink == want.getSymlink, x)
+      assert(st.getLen == Files.readAttributes(x, classOf[java.nio.file.attribute.BasicFileAttributes],
+        java.nio.file.LinkOption.NOFOLLOW_LINKS).size, x)
+      assert(ours.getLinkTarget(p(x)) == ref.getLinkTarget(p(x)), x)
+    }
+    // through FileContext, the link target comes back qualified
+    val fc = FileContext.getFileContext(URI.create("file:///"), conf)
+    assert(fc.getFileLinkStatus(p(link)).getSymlink == ref.makeQualified(p(file)))
+    intercept[FileNotFoundException](ours.getFileLinkStatus(p(root.resolve("nope"))))
   }
 }
