@@ -196,15 +196,16 @@ object CdcStream {
     * snapshot past maintenance commits (they carry the epoch id forward)
     * and past other writers' commits stacked on top, and stops as soon as
     * this writer's watermark no longer covers the epoch, so an epoch that
-    * never committed reads one manifest. An expired target means the
-    * record is gone: None, since absence beats wrong attribution.
+    * never committed reads one manifest. The walk reads snapshot headers
+    * only, never a file list. An expired target means the record is gone:
+    * None, since absence beats wrong attribution.
     */
   private[graft] def committedRecord(table: LakeTable, epochId: Long,
       wid: String): Option[BatchStats] = {
     def isTarget(s: Snapshot) = !s.maint && s.epochId == epochId && s.writerId == wid
     var cur = table.current
     while (!isTarget(cur) && cur.parent >= 0 && table.fenced(cur, epochId, wid))
-      cur = try table.snapshot(cur.parent)
+      cur = try table.header(cur.parent)
         catch { case _: java.io.FileNotFoundException => return None }
     if (isTarget(cur)) BatchStats.of(cur) else None
   }

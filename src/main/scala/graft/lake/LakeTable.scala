@@ -101,20 +101,17 @@ final case class FileStats(minKey: String, maxKey: String)
   * @param touched  buckets this commit replaced or appended to — the
   *                  commit's WRITE SET, persisted so a concurrent committer
   *                  rebasing over this snapshot can detect write-set
-  *                  overlap (serializable conflict check). None on
-  *                  manifests written before the field existed: an unknown
-  *                  write set conflicts with everything (fail loud, never
-  *                  lose a commit).
-  * @param groupRefs SHARDED manifest format (tables with more buckets than
-  *                  [[LakeTable.shardBucketThreshold]]): the snapshot JSON
-  *                  carries references to per-bucket-group manifest files
-  *                  instead of the inline `files` array — Iceberg's
-  *                  manifest-list shape. A commit rewrites only the groups
-  *                  its buckets fall in and REUSES the parent's refs for
-  *                  the rest, so both the snapshot JSON and the per-commit
-  *                  metadata write volume are O(buckets touched), not
-  *                  O(table). `files` is always the fully resolved list in
-  *                  memory (loaded from the refs at read time).
+  *                  overlap (serializable conflict check), and the groups
+  *                  whose manifests the commit rewrote.
+  * @param groupRefs the snapshot's group manifests,
+  *                  `_meta/m-g<g>-<uid>.json`, one per 64-bucket group that
+  *                  holds files ([[Manifest]]). A commit rewrites only the
+  *                  groups its buckets fall in and REUSES the parent's refs
+  *                  for the rest, so both the snapshot JSON and the
+  *                  per-commit metadata write volume are O(buckets
+  *                  touched), not O(table). `files` is the file list loaded
+  *                  from the refs; a header read ([[LakeTable.header]])
+  *                  leaves it empty.
   */
 final case class Snapshot(
     id: Long,
@@ -129,7 +126,7 @@ final case class Snapshot(
     summary: Map[String, Long] = Map.empty,
     writerEpochs: Map[String, Long] = Map.empty,
     batchHashes: Seq[Long] = Nil,
-    touched: Option[Seq[Int]] = None,
+    touched: Seq[Int] = Nil,
     groupRefs: Seq[GroupRef] = Nil,
     // true ⟺ a maintenance commit (compaction, rebucket): its epochId and
     // writerId are CARRIED FORWARD from the last epoch commit, not its own,
@@ -137,8 +134,8 @@ final case class Snapshot(
     // (the crash-window channel replay) walks past maint snapshots to it.
     maint: Boolean = false)
 
-/** Reference to one bucket-group manifest file (sharded format): `g` is
-  * the group index (`bucket / groupSize`), `path` the manifest's file name
+/** Reference to one bucket-group manifest file: `g` is the group index
+  * (`bucket / 64`, [[Manifest.GroupWidth]]), `path` the manifest's file name
   * under `_meta` (relative, so a table survives being moved), `n` its file
   * count (for cheap accounting without opening it).
   */
@@ -163,6 +160,7 @@ final class CommitConflictException(msg: String) extends RuntimeException(msg)
   * Layout (all under `root`):
   * {{{
   *   _meta/snap-<id>.json    // immutable manifest per snapshot; the highest id is current
+  *   _meta/m-g<g>-<uid>.json // group manifest: the file entries of one 64-bucket group
   *   _meta/_current          // hint: a recent snapshot's manifest name
   *   data/c<id>-<salt>/_bucket=<n>/part-*.parquet
   * }}}
@@ -174,12 +172,11 @@ final class CommitConflictException(msg: String) extends RuntimeException(msg)
   *     bounding write amplification on hot conversations; B is sized at
   *     table creation (tests use 16-64, a 100 TB table would use 4096+)
   *     and evolved later with [[rebucket]] when the table outgrows it.
-  *   - Tables up to [[LakeTable.shardBucketThreshold]] buckets keep file
-  *     entries inline in one JSON per snapshot; larger tables use the
-  *     SHARDED format (Iceberg manifest-list shape): per-bucket-group
-  *     manifest files referenced from the snapshot, rewritten only for
-  *     the groups a commit touches — snapshot JSON and per-commit
-  *     metadata writes stay O(buckets touched) regardless of table size.
+  *   - Metadata is Iceberg's manifest-list shape ([[Manifest]]): file
+  *     entries live in per-64-bucket-group manifest files referenced from
+  *     the snapshot, rewritten only for the groups a commit touches, so
+  *     snapshot JSON and per-commit metadata writes stay O(buckets
+  *     touched) regardless of table size.
   *   - A commit is one put-if-absent manifest publish — O(1) regardless
   *     of data size.
   *   - Scans are planned from the manifest: each file entry carries its
@@ -265,7 +262,7 @@ final class LakeTable(
   }
   private def metaDir = new Path(rootPath, "_meta")
   private def currentPtr = new Path(metaDir, "_current")
-  private def snapPath(id: Long) = new Path(metaDir, f"snap-$id%010d.json")
+  private def snapPath(id: Long) = new Path(metaDir, Manifest.snapName(id))
 
   /** Internal columns persisted alongside the public schema. `_lsn` is the
     * LSN of the winning write for the row (cross-batch last-writer-wins
@@ -284,8 +281,8 @@ final class LakeTable(
     * to listing `_meta`.
     */
   def current: Snapshot =
-    try readManifest(fs, snapPath(latestFrom(hintId)))
-    catch { case _: java.io.FileNotFoundException => readManifest(fs, snapPath(latestFrom(-1L))) }
+    try snapshot(latestFrom(hintId))
+    catch { case _: java.io.FileNotFoundException => snapshot(latestFrom(-1L)) }
 
   private def latestFrom(hint: Long): Long = {
     var id = if (hint >= 0) hint else snapshotIds.lastOption.getOrElse(
@@ -298,19 +295,18 @@ final class LakeTable(
     * racing read can see it empty or cut short; only a whole name counts.
     */
   private def hintId: Long =
-    try {
-      val name = readString(fs, currentPtr).trim
-      if (name.startsWith("snap-") && name.endsWith(".json")) idOf(name) else -1L
-    } catch { case _: java.io.IOException | _: NumberFormatException => -1L }
+    try Manifest.snapId(readString(fs, currentPtr).trim).getOrElse(-1L)
+    catch { case _: java.io.IOException => -1L }
 
-  private def idOf(name: String): Long = name.stripPrefix("snap-").stripSuffix(".json").toLong
+  def snapshotIds: Seq[Long] =
+    fs.listStatus(metaDir).flatMap(st => Manifest.snapId(st.getPath.getName)).sorted.toSeq
 
-  def snapshotIds: Seq[Long] = {
-    val st = fs.listStatus(metaDir)
-    st.map(_.getPath.getName).filter(_.startsWith("snap-")).map(idOf).sorted.toSeq
-  }
+  def snapshot(id: Long): Snapshot = Manifest.read(fs, metaDir, id)
 
-  def snapshot(id: Long): Snapshot = readManifest(fs, snapPath(id))
+  /** Snapshot `id` without its file list (`files` empty): one metadata
+    * read, for walks that need only header fields.
+    */
+  private[graft] def header(id: Long): Snapshot = Manifest.readHeader(fs, metaDir, id)
 
   /** Physical parquet schema of files written at `ver` (public + internal). */
   def physicalSchema(ver: Int): StructType =
@@ -322,18 +318,20 @@ final class LakeTable(
     * row accounting and the commit instant (manifest mtime — the publish
     * instant, same clock [[expireSnapshots]]' age-based retention uses).
     * Driver-side metadata only, bounded by retention: expireSnapshots
-    * caps how many manifests exist, so this never scans data. A snapshot
-    * whose manifest a concurrent expiry deletes after the listing is no
-    * longer retained, so it is left out instead of failing the call.
+    * caps how many manifests exist, so this never scans data, and it
+    * reads each snapshot's header only (`num_files` sums its group refs).
+    * A snapshot whose manifest a concurrent expiry deletes after the
+    * listing is no longer retained, so it is left out instead of failing
+    * the call.
     */
   def history: DataFrame = {
     import spark.implicits._
     snapshotIds.flatMap { id =>
       try {
         val mtime = fs.getFileStatus(snapPath(id)).getModificationTime
-        val s = snapshot(id)
+        val s = header(id)
         Some((s.id, s.parent, s.epochId, s.writerId, s.schemaVer, s.numBuckets,
-          s.rows, s.maxLsn, s.maint, s.files.size.toLong, new java.sql.Timestamp(mtime)))
+          s.rows, s.maxLsn, s.maint, s.groupRefs.map(_.n.toLong).sum, new java.sql.Timestamp(mtime)))
       } catch { case _: java.io.FileNotFoundException => None }
     }.toDF("snapshot_id", "parent_id", "epoch_id", "writer_id", "schema_ver",
       "num_buckets", "rows", "max_lsn", "is_maintenance", "num_files", "committed_at")
@@ -531,7 +529,7 @@ final class LakeTable(
     * order — the key must be a string column): every bucket can hold keys
     * of the range under hash bucketing, so pruning is purely manifest
     * min/max overlap per file. Files without stats are read (never
-    * skipped), so legacy manifests stay correct, just unpruned.
+    * skipped), so a file holding null keys stays correct, just unpruned.
     */
   def readKeyRange(lower: String, upper: String): DataFrame = {
     val snap = current
@@ -681,8 +679,7 @@ final class LakeTable(
   }
 
   /** Cast/null-fill/RENAME-map `df` (physical schema of `fromVer`) up to
-    * `toVer`'s physical schema: the version-aware form of
-    * [[LakeTable.conform]]. Renamed columns read their old-name data;
+    * `toVer`'s physical schema. Renamed columns read their old-name data;
     * added columns null-fill; dropped columns are projected away (not
     * selected); widened types cast up.
     */
@@ -800,7 +797,7 @@ final class LakeTable(
       // a snapshot that retention already dropped cannot prove its layout.
       if (baseSnapshotId >= 0 && cur.id != baseSnapshotId) {
         val baseNb =
-          try LakeTable.parseManifest(readString(fs, snapPath(baseSnapshotId))).numBuckets
+          try header(baseSnapshotId).numBuckets
           catch { case scala.util.control.NonFatal(_) => -1 }
         if (baseNb != cur.numBuckets)
           throw new CommitConflictException(
@@ -828,13 +825,12 @@ final class LakeTable(
       val rows =
         if (allFiles.exists(_.kind == FileEntry.Delta)) -1L
         else allFiles.map(_.live).sum
-      val nb = newNumBuckets.getOrElse(cur.numBuckets)
       val snap = Snapshot(
         id = cur.id + 1,
         parent = cur.id,
         epochId = if (epochId >= 0) epochId else cur.epochId,
         schemaVer = math.max(schemaVer, cur.schemaVer),
-        numBuckets = nb,
+        numBuckets = newNumBuckets.getOrElse(cur.numBuckets),
         rows = rows,
         maxLsn = math.max(maxLsnSeen, cur.maxLsn),
         files = allFiles,
@@ -847,16 +843,17 @@ final class LakeTable(
           else cur.writerEpochs,
         batchHashes = (cur.batchHashes ++ batchHash).takeRight(maxBatchHashes),
         maint = epochId < 0,
-        touched = Some((replacedBuckets ++ newFiles.map(_.bucket)).toSeq.distinct.sorted),
-        groupRefs =
-          if (!sharded(nb)) Nil
-          else shardGroupRefs(cur, allFiles, replacedBuckets, newFiles, nb))
-      if (publish(fs, snapPath(snap.id), manifestJson(snap))) {
-        // The snapshot is committed; the hint only saves the next reader a
-        // longer probe, so failing to write it fails nothing.
-        try writeString(fs, currentPtr, snapPath(snap.id).getName)
-        catch { case _: java.io.IOException => }
-        return CommitResult(snap, applied = true)
+        // A rebucket replaces every old bucket, so its write set covers
+        // every group of the old layout: no parent ref survives it.
+        touched = (replacedBuckets ++ newFiles.map(_.bucket)).toSeq.distinct.sorted)
+      Manifest.publish(fs, metaDir, cur.groupRefs, snap) match {
+        case Some(published) =>
+          // The snapshot is committed; the hint only saves the next reader
+          // a longer probe, so failing to write it fails nothing.
+          try writeString(fs, currentPtr, Manifest.snapName(snap.id))
+          catch { case _: java.io.IOException => }
+          return CommitResult(published, applied = true)
+        case None =>
       }
       // Claim lost: another committer published snap-(cur.id+1), so the
       // next `current` sees it. Loop (re-fence, re-validate, re-id).
@@ -871,72 +868,27 @@ final class LakeTable(
       s"commit by writer '$writerId' lost the snapshot-claim race $maxCommitRetries times at $root")
   }
 
-  /** Sharded-format manifest diff: write ONE new group manifest per group
-    * a touched bucket falls in (carrying that group's full post-commit file
-    * list) and reuse the parent's refs for every other group — the
-    * metadata written per commit is O(buckets touched), never O(table).
-    * Orphan group manifests from lost claim races are GC'd by
-    * [[expireSnapshots]].
-    */
-  private def shardGroupRefs(cur: Snapshot, allFiles: Seq[FileEntry],
-      replacedBuckets: Set[Int], newFiles: Seq[FileEntry],
-      numBuckets: Int): Seq[GroupRef] = {
-    val gsz = groupSize(numBuckets)
-    val touched = (replacedBuckets.iterator ++ newFiles.iterator.map(_.bucket))
-      .map(_ / gsz).toSet
-    // A BUCKET-COUNT change (rebucket, including one that crosses the
-    // shard threshold from the inline format) re-materializes every group
-    // holding files: the parent's refs, if any, are grouped by the OLD
-    // group size, so none can carry forward (the rebucket replaced every
-    // file anyway).
-    val changed =
-      if (numBuckets != cur.numBuckets)
-        touched ++ allFiles.iterator.map(_.bucket / gsz).toSet
-      else touched
-    // On a bucket-count change NO parent ref may survive — its group id is
-    // in the OLD layout's numbering; an id that happens to miss `changed`
-    // (a new-layout group holding no files) would resurrect old-layout
-    // files into the rebucketed snapshot.
-    val kept =
-      if (numBuckets != cur.numBuckets) Nil
-      else cur.groupRefs.filterNot(r => changed.contains(r.g))
-    val byGroup = allFiles.groupBy(_.bucket / gsz)
-    val fresh = changed.toSeq.sorted.flatMap { g =>
-      byGroup.get(g).map { fes =>
-        val name = f"m-g$g%04d-${java.util.UUID.randomUUID.toString.take(12)}.json"
-        writeString(fs, new Path(metaDir, name), groupManifestJson(g, fes))
-        GroupRef(g, name, fes.size)
-      }
-    }
-    (kept ++ fresh).sortBy(_.g)
-  }
-
   /** Assert that every snapshot in (base, cur] has a write set disjoint
-    * from `ours`. A missed commit with an unknown write set (pre-`touched`
-    * manifest, or already expired) conflicts by definition: failing loud
-    * beats silently dropping its rows.
+    * from `ours`. A missed commit that already expired has an unknown
+    * write set and conflicts by definition: failing loud beats silently
+    * dropping its rows.
     */
   private def validateDisjointSince(base: Long, cur: Snapshot, ours: Set[Int],
       writerId: String): Unit = {
     var id = cur.id
     var s = cur
     while (id > base) {
-      val overlap = s.touched match {
-        case Some(t) => t.filter(ours.contains)
-        case None => Seq(-1) // unknown write set — conflict
-      }
+      val overlap = s.touched.filter(ours.contains)
       if (overlap.nonEmpty)
         throw new CommitConflictException(
           s"concurrent commit conflict at $root: snapshot $id (writer '${s.writerId}') " +
             s"touched buckets ${overlap.mkString(",")} that writer '$writerId' derived its " +
             s"files from (base snapshot $base) — re-read and retry")
       id = s.parent
-      // Header-only parse: the walk reads `touched`/`parent`/`writerId`,
-      // never file lists — resolving a sharded snapshot's group manifests
-      // here would cost up to 64 extra metadata reads per missed commit on
-      // the commit critical path.
+      // Header read: the walk reads `touched`/`parent`/`writerId`, never
+      // file lists, so it opens no group manifest on the commit path.
       if (id > base) s =
-        try LakeTable.parseManifest(readString(fs, snapPath(id)))
+        try header(id)
         catch {
           case e: Exception => throw new CommitConflictException(
             s"concurrent commit conflict at $root: snapshot $id expired before writer " +
@@ -1131,12 +1083,11 @@ final class LakeTable(
     * intact, and a concurrent committer conflicts LOUDLY (the rebucket's
     * write set is every bucket). Unresolved merge-on-read deltas fold in
     * (LWW resolves inside the new-bucket exchange, [[resolveIntoBuckets]]
-    * — the one shuffle of the rewrite); tombstones are preserved. Crossing
-    * [[LakeTable.shardBucketThreshold]] in either direction migrates the
-    * manifest format automatically. Incremental consumers must
-    * re-baseline: [[readChangesSince]] windows cannot span a bucket-count
-    * change (it rejects them), matching Iceberg's own partition-spec
-    * evolution caveat for changelog reads.
+    * — the one shuffle of the rewrite); tombstones are preserved, and the
+    * commit regroups the file list under the new layout. Incremental
+    * consumers must re-baseline: [[readChangesSince]] windows cannot span a
+    * bucket-count change (it rejects them), matching Iceberg's own
+    * partition-spec evolution caveat for changelog reads.
     */
   def rebucket(newNumBuckets: Int): CommitResult = {
     require(newNumBuckets > 0, s"bucket count must be positive: $newNumBuckets")
@@ -1222,12 +1173,8 @@ final class LakeTable(
       if (olderThanMs < 0L) Set.empty
       else {
         val ageCutoff = System.currentTimeMillis() - olderThanMs
-        fs.listStatus(metaDir)
-          .filter(st => st.getPath.getName.startsWith("snap-") &&
-            st.getModificationTime >= ageCutoff)
-          .map(st => st.getPath.getName.stripPrefix("snap-")
-            .stripSuffix(".json").toLong)
-          .toSet
+        fs.listStatus(metaDir).filter(_.getModificationTime >= ageCutoff)
+          .flatMap(st => Manifest.snapId(st.getPath.getName)).toSet
       }
     val keep = ids.filter(_ >= curId - keepLast + 1).toSet ++ youngEnough + curId
     val keptSnaps = keep.toSeq.map(snapshot)
@@ -1243,8 +1190,8 @@ final class LakeTable(
     // temps a crash leaked go by the same grace
     val liveRefs: Set[String] = keptSnaps.flatMap(_.groupRefs.map(_.path)).toSet
     val oldMeta = fs.listStatus(metaDir).filter(_.getModificationTime < cutoff).map(_.getPath)
-    val refsDeleted = oldMeta.filter(p => p.getName.startsWith("m-") &&
-      p.getName.endsWith(".json") && !liveRefs.contains(p.getName)).count(fs.delete(_, false))
+    val refsDeleted = oldMeta.filter(p => Manifest.isGroupManifest(p.getName) &&
+      !liveRefs.contains(p.getName)).count(fs.delete(_, false))
     oldMeta.filter(_.getName.startsWith(PublishTempPrefix)).foreach(fs.delete(_, false))
     // delete orphan data files, same grace
     var dirsReclaimed = 0
@@ -1377,21 +1324,6 @@ object LakeTable {
     */
   val defaultOrphanGraceMs: Long = 30L * 60 * 1000
 
-  /** Tables with more buckets than this use the SHARDED manifest format:
-    * file entries live in per-bucket-group manifest files and the snapshot
-    * JSON carries only group references. 64 groups bounds the snapshot
-    * JSON and the manifest-list diff per commit regardless of bucket count
-    * (a 4096-bucket table has 64-bucket groups), while commits rewrite
-    * only the groups their touched buckets fall in.
-    */
-  val shardBucketThreshold = 64
-
-  def sharded(numBuckets: Int): Boolean = numBuckets > shardBucketThreshold
-
-  /** Buckets per group manifest — sized so there are ≤ 64 groups. */
-  def groupSize(numBuckets: Int): Int =
-    math.max(1, (numBuckets + shardBucketThreshold - 1) / shardBucketThreshold)
-
   /** Byte total of a point read's files below which [[LakeTable.readKey]]
     * decodes them on the driver instead of running a Spark scan: the
     * crossover of the two paths. Measured on a 4-core host, one
@@ -1432,10 +1364,10 @@ object LakeTable {
           "as the re-created table's state)")
     fs.mkdirs(metaDir)
     val snap = Snapshot(0L, -1L, -1L, schemaVer, numBuckets, 0L, -1L, Nil)
-    val t = new LakeTable(spark, root, registry, keyCols, renames)
-    writeManifest(fs, new Path(metaDir, f"snap-${0L}%010d.json"), snap)
-    writeString(fs, new Path(metaDir, "_current"), f"snap-${0L}%010d.json")
-    t
+    if (Manifest.publish(fs, metaDir, Nil, snap).isEmpty)
+      throw new IllegalStateException(s"create: another creator published $root's first snapshot")
+    writeString(fs, new Path(metaDir, "_current"), Manifest.snapName(0L))
+    new LakeTable(spark, root, registry, keyCols, renames)
   }
 
   def load(
@@ -1448,7 +1380,7 @@ object LakeTable {
   def exists(spark: SparkSession, root: String): Boolean = {
     val meta = new Path(root, "_meta")
     val fs = meta.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.exists(meta) && fs.listStatus(meta).exists(_.getPath.getName.startsWith("snap-"))
+    fs.exists(meta) && fs.listStatus(meta).exists(st => Manifest.snapId(st.getPath.getName).isDefined)
   }
 
   /** Driver-side twin of [[graft.cdc.MergeApply.bucketOf]]: the same
@@ -1493,132 +1425,6 @@ object LakeTable {
     case a: ArrayType => ArrayType(asNullable(a.elementType), containsNull = true)
     case m: MapType => MapType(asNullable(m.keyType), asNullable(m.valueType), valueContainsNull = true)
     case o => o
-  }
-
-  /** Cast/null-fill `df` (physical schema `from`) up to `to`. Only widening
-    * casts are legal here; the registry guarantees versions only add
-    * nullable columns or widen types.
-    */
-  private[graft] def conform(df: DataFrame, from: StructType, to: StructType): DataFrame = {
-    val have = from.fieldNames.toSet
-    df.select(to.fields.toSeq.map { f =>
-      if (have.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
-      else lit(null).cast(f.dataType).as(f.name)
-    }: _*)
-  }
-
-  // ---- tiny JSON codec for manifests (no external deps beyond Spark's
-  // jackson; hand-rolled to keep the format explicit and stable) ----
-
-  private def esc(x: String) = x.flatMap {
-    case '"' => "\\\""; case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
-  private[graft] def filesJson(fes: Seq[FileEntry]): String =
-    fes.map { f =>
-      // The key range is optional per entry: a file holding null keys has
-      // none.
-      val st = f.stats.map(s => s""","mn":"${esc(s.minKey)}","mx":"${esc(s.maxKey)}"""").getOrElse("")
-      s"""{"path":"${esc(f.path)}","bucket":${f.bucket},"schemaVer":${f.schemaVer},""" +
-        s""""rows":${f.rows},"live":${f.live},"kind":"${esc(f.kind)}"$st,"len":${f.len}}"""
-    }.mkString("[", ",", "]")
-
-  /** One bucket-group manifest (sharded format). */
-  private[lake] def groupManifestJson(g: Int, fes: Seq[FileEntry]): String =
-    s"""{"g":$g,"files":${filesJson(fes)}}"""
-
-  private[lake] def parseGroupManifest(json: String): Seq[FileEntry] = {
-    val m = new com.fasterxml.jackson.databind.ObjectMapper()
-    parseFileArray(m.readTree(json).get("files"))
-  }
-
-  private def parseFileArray(arr: com.fasterxml.jackson.databind.JsonNode): Seq[FileEntry] =
-    (0 until arr.size()).map { i =>
-      val f = arr.get(i)
-      val stats =
-        if (f.has("mn") && f.has("mx")) Some(FileStats(f.get("mn").asText(), f.get("mx").asText()))
-        else None
-      FileEntry(f.get("path").asText(), f.get("bucket").asInt(),
-        f.get("schemaVer").asInt(), f.get("rows").asLong(), f.get("live").asLong(),
-        if (f.has("kind")) f.get("kind").asText() else FileEntry.Base,
-        stats,
-        f.get("len").asLong())
-    }
-
-  private[graft] def manifestJson(s: Snapshot): String = {
-    // Sharded tables reference group manifests; inline tables embed files.
-    val tail =
-      if (sharded(s.numBuckets)) {
-        val gs = s.groupRefs
-          .map(r => s"""{"g":${r.g},"path":"${esc(r.path)}","n":${r.n}}""")
-          .mkString("[", ",", "]")
-        s""""groups":$gs"""
-      } else s""""files":${filesJson(s.files)}"""
-    val we = s.writerEpochs.toSeq.sortBy(_._1)
-      .map { case (w, e) => s"""{"w":"${esc(w)}","e":$e}""" }.mkString("[", ",", "]")
-    val bh = s.batchHashes.mkString("[", ",", "]")
-    val tb = s.touched.map(_.mkString(""""touched":[""", ",", "],")).getOrElse("")
-    val sm = s.summary.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""${esc(k)}":$v""" }.mkString("{", ",", "}")
-    s"""{"id":${s.id},"parent":${s.parent},"epochId":${s.epochId},"schemaVer":${s.schemaVer},""" +
-      s""""numBuckets":${s.numBuckets},"rows":${s.rows},"maxLsn":${s.maxLsn},""" +
-      s""""writer":"${esc(s.writerId)}","summary":$sm,"maint":${s.maint},""" +
-      s"""$tb"writerEpochs":$we,"batchHashes":$bh,$tail}"""
-  }
-
-  private[graft] def parseManifest(json: String): Snapshot = {
-    import com.fasterxml.jackson.databind.ObjectMapper
-    import scala.jdk.CollectionConverters._
-    val m = new ObjectMapper()
-    val n = m.readTree(json)
-    val files = if (n.has("files")) parseFileArray(n.get("files")) else Nil
-    val groupRefs: Seq[GroupRef] =
-      if (!n.has("groups")) Nil
-      else (0 until n.get("groups").size()).map { i =>
-        val g = n.get("groups").get(i)
-        GroupRef(g.get("g").asInt(), g.get("path").asText(), g.get("n").asInt())
-      }
-    val writerEpochs: Map[String, Long] =
-      if (!n.has("writerEpochs")) Map.empty
-      else (0 until n.get("writerEpochs").size()).map { i =>
-        val e = n.get("writerEpochs").get(i)
-        e.get("w").asText() -> e.get("e").asLong()
-      }.toMap
-    val batchHashes: Seq[Long] =
-      if (!n.has("batchHashes")) Nil
-      else (0 until n.get("batchHashes").size()).map(i => n.get("batchHashes").get(i).asLong())
-    val touched: Option[Seq[Int]] =
-      if (!n.has("touched")) None
-      else Some((0 until n.get("touched").size()).map(i => n.get("touched").get(i).asInt()))
-    val summary: Map[String, Long] =
-      if (!n.has("summary")) Map.empty
-      else n.get("summary").properties().asScala.map(e => e.getKey -> e.getValue.asLong()).toMap
-    Snapshot(n.get("id").asLong(), n.get("parent").asLong(), n.get("epochId").asLong(),
-      n.get("schemaVer").asInt(), n.get("numBuckets").asInt(), n.get("rows").asLong(),
-      n.get("maxLsn").asLong(), files,
-      writerId = if (n.has("writer")) n.get("writer").asText() else "",
-      summary = summary,
-      writerEpochs = writerEpochs, batchHashes = batchHashes, touched = touched,
-      groupRefs = groupRefs,
-      // pre-field manifests: false (every commit then was written by a
-      // build where the replay guard tolerated the ambiguity)
-      maint = n.has("maint") && n.get("maint").asBoolean())
-  }
-
-  private def writeManifest(fs: FileSystem, p: Path, s: Snapshot): Unit =
-    writeString(fs, p, manifestJson(s))
-
-  /** Read a snapshot manifest, resolving sharded group refs into the full
-    * in-memory file list (≤ 64 small sequential reads — driver metadata,
-    * not a data-path cost).
-    */
-  private def readManifest(fs: FileSystem, p: Path): Snapshot = {
-    val s = parseManifest(readString(fs, p))
-    if (s.groupRefs.isEmpty) s
-    else s.copy(files = s.groupRefs.flatMap(r =>
-      parseGroupManifest(readString(fs, new Path(p.getParent, r.path)))))
   }
 
   /** Plain overwrite, past the checksum layer of a checksummed FS such as

@@ -217,6 +217,28 @@ class CdcStreamSpec extends AnyFunSuite {
     assert(CdcStream.committedRecord(table, 2L, "w").isEmpty)
   }
 
+  test("committedRecord walks snapshot headers: it finds an epoch's record under later " +
+      "commits with no group manifest of theirs read") {
+    val base = tmp()
+    val root = s"$base/table"
+    val table = LakeTable.create(spark, root, schemaVer = 2, numBuckets = 4)
+    val cfg = GenConfig(numConvs = 10, maxTurns = 6, numEvents = 300)
+    val st = MergeApply.applyBatch(table, ChangeGen.events(spark, cfg).toDF(), 0L, writerId = "w",
+      strategy = graft.cdc.WriteStrategy.MergeOnRead)
+    assert(st.applied)
+    // a maintenance commit and another writer's epoch land on top
+    assert(table.compact(foldDeltas = true).applied)
+    assert(table.commit(Nil, Set.empty, 0L, 2, st.maxLsn, writerId = "other",
+      baseSnapshotId = table.current.id).applied)
+    // every group manifest but the current snapshot's is gone: only the
+    // walked snapshots' headers remain readable
+    val live = table.current.groupRefs.map(_.path).toSet
+    new java.io.File(root, "_meta").listFiles().filter(f => f.getName.startsWith("m-") &&
+      !live.contains(f.getName)).foreach(f => assert(f.delete()))
+    intercept[java.io.FileNotFoundException](table.snapshot(st.snapshotId))
+    assert(CdcStream.committedRecord(table, 0L, "w") == Some(st))
+  }
+
   test("observability channels are writer-scoped: a fresh checkpoint's epoch 0 does not clobber the old writer's") {
     val base = tmp()
     val cfg = GenConfig(numConvs = 15, maxTurns = 8, numEvents = 1000)

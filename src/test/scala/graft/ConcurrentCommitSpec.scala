@@ -9,7 +9,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.lake.{CommitConflictException, FileEntry, LakeTable}
+import graft.lake.{CommitConflictException, FileEntry, LakeTable, Manifest}
 
 /** Multi-writer commit safety: two committers on SEPARATE LakeTable
   * instances (the two-driver deployment shape — a CDC stream plus an
@@ -129,11 +129,14 @@ class ConcurrentCommitSpec extends AnyFunSuite {
       "and the next commit lands on top of it at once") {
     val root = tmp()
     val t = LakeTable.create(spark, root, schemaVer = 1, numBuckets = 8)
-    // a committer that died right after publishing snap-1: its manifest is
-    // whole, but the `_current` hint still names snap-0
+    // a committer that died right after publishing snap-1: its group
+    // manifest and snapshot are whole, but the `_current` hint still names
+    // snap-0
     val crashed = t.current.copy(id = 1L, parent = 0L, epochId = 0L, writerId = "wDead",
-      files = Seq(fe(0, "dead")), writerEpochs = Map("wDead" -> 0L), touched = Some(Seq(0)))
-    Files.writeString(snapFile(root, 1L), LakeTable.manifestJson(crashed))
+      files = Seq(fe(0, "dead")), writerEpochs = Map("wDead" -> 0L), touched = Seq(0))
+    val meta = new org.apache.hadoop.fs.Path(root, "_meta")
+    assert(Manifest.publish(meta.getFileSystem(spark.sessionState.newHadoopConf()), meta,
+      t.current.groupRefs, crashed).isDefined)
     assert(Files.readString(Paths.get(root, "_meta", "_current")).trim ==
       snapFile(root, 0L).getFileName.toString)
     assert(t.current.id == 1L && t.current.files == crashed.files)

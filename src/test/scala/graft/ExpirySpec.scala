@@ -178,6 +178,21 @@ class ExpirySpec extends AnyFunSuite {
     assert(table.snapshotIds == Seq(1L) && table.read().count() == 20L)
   }
 
+  test("history reads snapshot headers only: a retained snapshot whose group manifest " +
+      "is gone is still listed") {
+    val root = Files.createTempDirectory("graft-expiry-").toString
+    val table = LakeTable.create(spark, root, schemaVer = 2, numBuckets = 4)
+    (0L to 2L).foreach(commitBatch(table, _))
+    val want = (0L to 3L).map(id => table.snapshot(id).files.size.toLong)
+    // snapshot 1's only group manifest: no later snapshot shares it
+    val ref = table.snapshot(1L).groupRefs.map(_.path)
+    assert(ref.size == 1 && !table.current.groupRefs.map(_.path).contains(ref.head))
+    assert(new java.io.File(s"$root/_meta", ref.head).delete())
+    intercept[java.io.FileNotFoundException](table.snapshot(1L))
+    val h = table.history.orderBy("snapshot_id").select("snapshot_id", "num_files").collect()
+    assert(h.map(r => (r.getLong(0), r.getLong(1))).toSeq == (0L to 3L).zip(want))
+  }
+
   test("history skips a listed snapshot whose manifest an expiry deleted") {
     val root = Files.createTempDirectory("graft-expiry-").toString
     val table = LakeTable.create(spark, root, schemaVer = 2, numBuckets = 4)

@@ -2,21 +2,22 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.cdc.{MergeApply, WriteStrategy}
-import graft.lake.{FileEntry, FileStats, LakeTable, Snapshot}
+import graft.lake.{FileEntry, FileStats, LakeTable, Manifest, Snapshot}
 import graft.model.Model
 
 /** Manifest-level min/max file skipping: the engine's substitute for the
   * reference's secondary indexes (SURVEY §4; reference:
   * Scripts/database_schema.sql:165-169). A point read of one conversation
   * must prune to its bucket AND then to the file(s) whose key range covers
-  * it — without opening any parquet footer — while files without stats
-  * (legacy manifests) are never skipped.
+  * it — without opening any parquet footer — while files without a key
+  * range (they hold null keys) are never skipped.
   */
 class FileSkippingSpec extends AnyFunSuite {
 
@@ -115,28 +116,28 @@ class FileSkippingSpec extends AnyFunSuite {
     assert(got == want && got.size == 10)
   }
 
-  test("manifest codec: stats roundtrip, legacy entries parse to None and never skip") {
+  test("manifest codec: stats round-trip, entries without a key range never skip") {
     val withStats = FileEntry("/p/a.parquet", 3, 2, 100, 90, FileEntry.Base,
       Some(FileStats("conv-a", "conv-z")), len = 4321L)
     val nullKeyStats = FileEntry("/p/b.parquet", 1, 2, 10, 10, FileEntry.Delta)
     val noStats = FileEntry("/p/c.parquet", 0, 1, 5, 5)
     val snap = Snapshot(4L, 3L, 9L, 2, 4, 115L, 150L,
-      Seq(withStats, nullKeyStats, noStats), writerId = "w1")
-    val back = LakeTable.parseManifest(LakeTable.manifestJson(snap))
+      Seq(withStats, nullKeyStats, noStats), writerId = "w1", touched = Seq(0, 1, 3))
+    val meta = new Path(tmp())
+    val fs = meta.getFileSystem(spark.sessionState.newHadoopConf())
+    val published = Manifest.publish(fs, meta, Nil, snap).get
+    val back = Manifest.read(fs, meta, snap.id)
     assert(back.files == Seq(withStats, nullKeyStats, noStats))
-    // `len` is written on every entry, -1 included
+    // `len` is written on every entry, -1 included; `mn`/`mx` only where known
+    val group = Files.readString(java.nio.file.Paths.get(meta.toUri.getPath, published.groupRefs.head.path))
+    assert(group.split("\"len\":").length == 4 && group.split("\"mn\":").length == 2)
     assert(back.files.map(_.len) == Seq(4321L, -1L, -1L))
-    assert(LakeTable.manifestJson(snap).split("\"len\":").length == 4)
 
-    // a LEGACY manifest (written before the stats field existed) parses
-    // to stats=None and is never skipped by any probe
-    val legacyJson = LakeTable.manifestJson(
-      snap.copy(files = snap.files.map(_.copy(stats = None))))
-    assert(!legacyJson.contains("\"mn\""))
-    val legacy = LakeTable.parseManifest(legacyJson)
-    assert(legacy.files.forall(_.stats.isEmpty))
+    // entries written without a key range read back as stats=None and are
+    // never skipped by any probe
+    assert(back.files.drop(1).forall(_.stats.isEmpty))
     val probe = UTF8String.fromString("zzz-outside-any-range")
-    assert(legacy.files.forall(LakeTable.mayContainKey(_, probe)))
+    assert(back.files.drop(1).forall(LakeTable.mayContainKey(_, probe)))
     // an entry without a key range (its file holds null keys) never skips
     assert(LakeTable.mayContainKey(nullKeyStats, probe))
     // known ranges DO skip
@@ -144,7 +145,6 @@ class FileSkippingSpec extends AnyFunSuite {
   }
 
   test("write pass records each file's byte length, and it survives a reload") {
-    import org.apache.hadoop.fs.Path
     val root = tmp()
     val table = LakeTable.create(spark, root, schemaVer = 2, numBuckets = 4)
     val events = (0 until 120).map(i => ev(100 + i, f"conv-${i % 40}%03d", i / 40 + 1, s"t$i"))

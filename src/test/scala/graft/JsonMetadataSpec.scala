@@ -22,6 +22,15 @@ class JsonMetadataSpec extends AnyFunSuite {
     p
   }
 
+  test("oracle SQL reads the document it names: duckMaps embeds its path, ep1 names its own file") {
+    val p = "/elsewhere/metadata_other.json"
+    val sql = JsonMetadata.duckMaps(p)
+    assert(sql.contains(s"read_json('$p'") && !sql.contains(JsonMetadata.fixturePath))
+    val ep1 = ExpressionPipeline.ep1.oracle.get
+    assert(ep1.contains(s"read_json('${ExpressionPipeline.ep1MetaPath}'"))
+    assert(!ep1.contains(JsonMetadata.fixturePath))
+  }
+
   test("S2: document parses against the map-typed schema with all sections") {
     val doc = JsonMetadata.readDoc(spark, path)
     val row = doc.collect()(0)

@@ -2,20 +2,22 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.cdc.MergeApply
 import graft.gen.ChangeGen
 import graft.gen.ChangeGen.GenConfig
-import graft.lake.{FileEntry, FileStats, GroupRef, LakeTable, Snapshot}
+import graft.lake.{FileEntry, FileStats, LakeTable, Manifest, Snapshot}
 
-/** Sharded manifest format (tables with > 64 buckets): the snapshot JSON
-  * carries per-bucket-group manifest references instead of inline file
-  * entries, so both the snapshot JSON size and the metadata written per
-  * commit stay O(buckets touched) no matter how many buckets (files) the
-  * table holds — the Iceberg manifest-list shape, which is what lets a
-  * 4096-bucket 100 TB table commit in O(1) metadata.
+/** The manifest-list format every table uses: the snapshot JSON carries
+  * references to per-64-bucket-group manifests instead of file entries,
+  * so both the snapshot JSON size and the metadata written per commit stay
+  * O(buckets touched) no matter how many buckets (files) the table holds —
+  * the Iceberg manifest-list shape, which is what lets a 4096-bucket
+  * 100 TB table commit in O(1) metadata, and gives a small table one
+  * group manifest per snapshot.
   */
 class LakeShardingSpec extends AnyFunSuite {
 
@@ -29,21 +31,67 @@ class LakeShardingSpec extends AnyFunSuite {
   private def snapJsonBytes(root: String, id: Long): Long =
     new java.io.File(s"$root/_meta", f"snap-$id%010d.json").length()
 
-  test("manifest codec: a snapshot with a summary round-trips on the inline and the grouped shape") {
+  test("manifest codec: a snapshot with a summary round-trips through its groups") {
+    val meta = new Path(tmp())
+    val fs = meta.getFileSystem(spark.sessionState.newHadoopConf())
     val summary = Map("inputEvents" -> 1200L, "mergeMs" -> 431L, "qcNullText" -> -1L)
-    val inline = Snapshot(7L, 6L, 3L, 2, 8, 90L, 4100L,
+    // buckets 5 and 600 fall in groups 0 and 9
+    val snap = Snapshot(7L, 6L, 3L, 2, 4096, 90L, 4100L,
       Seq(FileEntry("/p/a.parquet", 5, 2, 100L, 90L, FileEntry.Base,
-        Some(FileStats("conv-a", "conv-q")), len = 2048L)),
+        Some(FileStats("conv-a", "conv-q")), len = 2048L),
+        FileEntry("/p/b.parquet", 600, 2, 7L, 7L, FileEntry.Delta, None, len = 99L)),
       writerId = "w-1", summary = summary, writerEpochs = Map("w-1" -> 3L, "w-0" -> 9L),
-      batchHashes = Seq(11L, -4L), touched = Some(Seq(5)))
-    assert(LakeTable.parseManifest(LakeTable.manifestJson(inline)) == inline)
-    // the grouped shape holds group refs; its file list is loaded from them
-    val grouped = inline.copy(numBuckets = 4096, files = Nil,
-      groupRefs = Seq(GroupRef(0, "m-g0000-a.json", 3), GroupRef(9, "m-g0009-b.json", 1)))
-    assert(LakeTable.parseManifest(LakeTable.manifestJson(grouped)) == grouped)
+      batchHashes = Seq(11L, -4L), touched = Seq(5, 600))
+    val published = Manifest.publish(fs, meta, Nil, snap).get
+    assert(published.groupRefs.map(r => (r.g, r.n)) == Seq((0, 1), (9, 1)))
+    assert(Manifest.read(fs, meta, 7L) == published)
+    // the header read carries every field but the file list
+    assert(Manifest.readHeader(fs, meta, 7L) == published.copy(files = Nil))
+    // snap-N is put-if-absent
+    assert(Manifest.publish(fs, meta, Nil, snap).isEmpty)
     // a maintenance commit's empty summary round-trips as empty
-    val maint = inline.copy(summary = Map.empty, maint = true)
-    assert(LakeTable.parseManifest(LakeTable.manifestJson(maint)) == maint)
+    val maint = snap.copy(id = 8L, summary = Map.empty, maint = true)
+    val maintBack = Manifest.publish(fs, meta, Nil, maint).get
+    assert(Manifest.read(fs, meta, 8L) == maintBack && maintBack.summary.isEmpty)
+  }
+
+  test("a commit to a 4-bucket table adds one group manifest and one snapshot, " +
+      "and the snapshot holds no file list") {
+    val root = tmp()
+    val t = LakeTable.create(spark, root, schemaVer = 1, numBuckets = 4)
+    def metaFiles(): Set[String] = new java.io.File(root, "_meta").list().toSet - "_current"
+    (0 until 3).foreach { e =>
+      val before = metaFiles()
+      assert(t.commit(Seq(fe(e, s"e$e")), Set(e), e.toLong, 1, 0L, writerId = "w",
+        baseSnapshotId = t.current.id).applied)
+      val added = metaFiles() -- before
+      assert(added.count(_.startsWith("m-")) == 1 && added.count(_.startsWith("snap-")) == 1 &&
+        added.size == 2, added.toString)
+      val json = Files.readString(new java.io.File(s"$root/_meta", f"snap-${e + 1}%010d.json").toPath)
+      assert(!json.contains("\"files\""), json)
+      assert(t.current.groupRefs.map(r => (r.g, r.n)) == Seq((0, e + 1)))
+    }
+  }
+
+  test("expiry on a 4-bucket table deletes replaced group manifests and keeps " +
+      "every ref of the kept snapshot") {
+    val cfg = GenConfig(numConvs = 20, maxTurns = 6, numEvents = 600)
+    val root = tmp()
+    val table = LakeTable.create(spark, root, schemaVer = 1, numBuckets = 4)
+    import spark.implicits._
+    ChangeGen.emittedEvents(spark, cfg).collect().grouped(200).zipWithIndex.foreach {
+      case (chunk, i) => assert(MergeApply.applyBatch(table,
+        spark.createDataset(chunk.toSeq).toDF(), epochId = i.toLong).applied)
+    }
+    def state() = table.read().orderBy("conv_id", "turn_idx").collect().toSeq
+    val before = state()
+    val report = table.expireSnapshots(keepLast = 1, orphanGraceMs = 0L)
+    assert(report.groupManifestsDeleted > 0, report.toString)
+    val metaNames = new java.io.File(root, "_meta").list().toSet
+    val refs = table.current.groupRefs.map(_.path)
+    assert(refs.size == 1 && refs.toSet.subsetOf(metaNames), "expiry deleted a live group manifest")
+    assert(metaNames.count(_.startsWith("m-")) == 1)
+    assert(state() == before)
   }
 
   test("4096-bucket table: snapshot JSON and metadata-write volume stay " +
@@ -79,7 +127,7 @@ class LakeShardingSpec extends AnyFunSuite {
     assert(cur.files.size == 512)
     assert(cur.files.count(_.path.contains("/e10-")) == 3)
     assert(cur.files.count(_.path.contains("/seed-")) == 512 - 30)
-    // a snapshot with 512 files inline would be ~50 KB; sharded stays small
+    // 512 file entries in the snapshot would be ~50 KB; the ref list stays small
     assert(snapJsonBytes(root, 11L) < 8 * 1024)
   }
 
@@ -107,7 +155,7 @@ class LakeShardingSpec extends AnyFunSuite {
   test("replay + compaction + snapshot expiry all run green on the sharded format") {
     val cfg = GenConfig(numConvs = 40, maxTurns = 15, numEvents = 3000)
     val root = tmp()
-    // 128 buckets > shardBucketThreshold → sharded metadata from commit 1
+    // 128 buckets: two group manifests
     val table = LakeTable.create(spark, root, schemaVer = 1, numBuckets = 128)
     val all = ChangeGen.emittedEvents(spark, cfg).collect()
     import spark.implicits._
@@ -115,7 +163,7 @@ class LakeShardingSpec extends AnyFunSuite {
       assert(MergeApply.applyBatch(table,
         spark.createDataset(chunk.toSeq).toDF(), epochId = i.toLong).applied)
     }
-    assert(table.current.groupRefs.nonEmpty, "expected sharded metadata")
+    assert(table.current.groupRefs.map(_.g) == Seq(0, 1))
 
     val oracle = ChangeGen.oracleFold(
       (0L until cfg.totalRows).map(i => ChangeGen.rowAt(cfg, i))).toSeq
@@ -126,7 +174,7 @@ class LakeShardingSpec extends AnyFunSuite {
       .as[(String, Long, String, String)].collect().toSeq
     assert(state() == oracle)
 
-    // compaction commits through the same sharded diff path
+    // compaction commits through the same group diff path
     table.compact(maxFilesPerBucket = 1)
     assert(state() == oracle)
 

@@ -13,8 +13,8 @@ import graft.model.Model
 
 /** Bucket-count evolution: `LakeTable.rebucket` — the lifecycle operation
   * that takes a table sized small at creation to the bucket count its
-  * grown volume needs, preserving exact state, LWW semantics, and the
-  * manifest format contract across the shard threshold.
+  * grown volume needs, preserving exact state and LWW semantics, and
+  * regrouping the manifest list under the new bucket count.
   */
 class RebucketSpec extends AnyFunSuite {
 
@@ -95,25 +95,28 @@ class RebucketSpec extends AnyFunSuite {
     assert(got == oracle)
   }
 
-  test("crossing the shard threshold migrates the manifest format both " +
-      "ways, and post-rebucket commits stay O(touched groups)") {
+  test("rebucket regroups: 16, 256, 8 buckets hold 1, 4, 1 group manifests") {
     val table = LakeTable.create(spark, tmp(), schemaVer = 2, numBuckets = 16)
     MergeApply.applyBatch(table, batch(
       (0 until 64).map(i => ev(i + 1L, "I", s"conv-$i", 0, s"t$i")): _*), 0L)
     val before = state(table)
-    assert(table.rebucket(256).applied) // 16 (inline) → 256 (sharded)
-    val sharded = table.current
-    assert(sharded.numBuckets == 256 && sharded.groupRefs.nonEmpty)
+    assert(table.current.groupRefs.map(_.g) == Seq(0))
+    assert(table.rebucket(256).applied)
+    val wide = table.current
+    assert(wide.numBuckets == 256 && wide.groupRefs.map(_.g) == Seq(0, 1, 2, 3))
+    assert(wide.groupRefs.map(_.n).sum == wide.files.size)
     assert(state(table) == before)
-    // one-key commit on the sharded layout rewrites O(1) group manifests
+    // one-key commit on 256 buckets rewrites O(1) group manifests
     MergeApply.applyBatch(table, batch(ev(1000, "U", "conv-0", 0, "v2")), 1L)
     val after = table.current
-    val changedRefs = after.groupRefs.toSet -- sharded.groupRefs.toSet
+    val changedRefs = after.groupRefs.toSet -- wide.groupRefs.toSet
     assert(changedRefs.size <= 2) // the key's group (± a boundary group)
-    // shrink back below the threshold: inline format again, state intact
+    val updated = state(table)
+    assert(updated.exists(r => r.head == "conv-0" && r.contains("v2")))
+    // shrink back to one group, state intact
     assert(table.rebucket(8).applied)
-    assert(table.current.numBuckets == 8 && table.current.groupRefs.isEmpty)
-    assert(state(table).exists(r => r.head == "conv-0" && r.contains("v2")))
+    assert(table.current.numBuckets == 8 && table.current.groupRefs.map(_.g) == Seq(0))
+    assert(state(table) == updated)
   }
 
   test("a commit derived from the pre-rebucket layout conflicts loudly — " +
