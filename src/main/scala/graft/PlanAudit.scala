@@ -171,47 +171,6 @@ object PlanAudit {
         }
     }
 
-    // CDC-out changelog read: the diff must SCAN only buckets whose file
-    // sets differ between the two snapshots (inputFiles is the executed
-    // scan set), and the winner diff must be an anti-join, never a
-    // cartesian. One commit touching 1 of 16 buckets ⇒ the window read
-    // touches that bucket's files only, at BOTH snapshots.
-    locally {
-      import spark.implicits._
-      val root = java.nio.file.Files.createTempDirectory("graft-audit-chg-")
-        .toString + "/t"
-      val table = graft.lake.LakeTable.create(spark, root, schemaVer = 2, numBuckets = 16)
-      val ts = new java.sql.Timestamp(1704067200000L)
-      def ev(lsn: Long, conv: String) = graft.model.Model.ChangeEvent(
-        lsn, "I", 2, conv, 0, Some("user"), Some(s"t$lsn"), None, Some(ts))
-      graft.cdc.MergeApply.applyBatch(table,
-        spark.createDataset((0 until 64).map(i => ev(i + 1L, s"conv-$i"))).toDF(), 0L)
-      val from = table.current
-      graft.cdc.MergeApply.applyBatch(table,
-        spark.createDataset(Seq(ev(100L, "conv-0"))).toDF(), 1L)
-      val changed = table.changedBuckets(from, table.current)
-      val df = table.readChangesSince(from.id)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      println(s"\n===== cdc_changes_since =====")
-      println(plan.linesIterator.take(30).mkString("\n"))
-      val scanned = df.inputFiles.toSeq
-        .flatMap("_bucket=(\\d+)".r.findFirstMatchIn(_).map(_.group(1).toInt)).toSet
-      Seq(
-        "scan restricted to the changed buckets" ->
-          (scanned.nonEmpty && scanned.subsetOf(changed) && changed.size < 16),
-        // the whole diff rides ONE full-outer winner join — a second join
-        // (the old reverse anti-join) would double changed-bucket scans
-        "winner diff is a single full-outer join" ->
-          (plan.contains("FullOuter") &&
-            """\(\d+\) \w*(Join|CartesianProduct)""".r.findAllIn(plan).size == 1),
-        "no cartesian product" -> !plan.contains("CartesianProduct"))
-        .foreach { case (what, ok) =>
-          if (!ok) failures += 1
-          println(s"[audit] cdc_changes_since :: $what -> ${if (ok) "OK" else "VIOLATED"}")
-        }
-    }
-
     println(s"\n[audit] total violations: $failures")
     spark.stop()
     if (failures > 0) sys.exit(1)

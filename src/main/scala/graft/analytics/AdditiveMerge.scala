@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.cdc.MergeApply
-import graft.lake.LakeTable
+import graft.lake.{Commit, LakeTable}
 
 /** The shared exactly-once ADD-merge kernel for ADDITIVE aggregate tables
   * (incremental sufficient statistics, materialized pair counts): fold a
@@ -12,7 +12,7 @@ import graft.lake.LakeTable
   * only buckets whose groups appear in the delta. ADD is NOT idempotent
   * under re-apply, so exactly-once rides the per-writer epoch fence PLUS
   * a batch content hash for the checkpoint-swap redelivery window
-  * ([[LakeTable.commit]]'s `batchHash` scope rules). ONE definition — the
+  * ([[graft.lake.Commit.alreadyApplied]] scopes it). ONE definition — the
   * redelivery/fencing semantics of every additive table evolve together
   * instead of as drifting near-verbatim copies.
   *
@@ -37,7 +37,7 @@ object AdditiveMerge {
       writerId: String, batchHashCol: Column,
       partitionCap: Int = Int.MaxValue): Boolean = {
     val cur = table.current
-    if (table.fenced(cur, epochId, writerId)) return false
+    if (Commit.alreadyApplied(cur, epochId, writerId)) return false
     val b = cur.numBuckets
     val keyCols = table.keyCols
     val schema = table.registry(cur.schemaVer)
@@ -53,11 +53,8 @@ object AdditiveMerge {
         batchHashCol.as("bh")).collect()(0)
       if (head.getAs[Long]("n") == 0L) return false
       val batchHash = head.getAs[Long]("bh")
-      // early exit before writing data files — scoped like the commit-level
-      // fence: only a NOT-yet-established writer (checkpoint-swap
-      // redelivery window) is hash-checked; commit re-checks the same rule
-      if (!table.establishedWriter(cur, writerId) &&
-        cur.batchHashes.contains(batchHash)) return false
+      // the commit's own fence, asked before any data file is written
+      if (Commit.alreadyApplied(cur, epochId, writerId, Some(batchHash))) return false
       val touched: Set[Int] = head.getAs[Seq[Int]]("touched").toSet
       // Tombstone guard: readConformed returns ALL stored versions
       // including _deleted rows — additive tables only ever write live CoW

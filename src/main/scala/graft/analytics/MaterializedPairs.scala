@@ -6,7 +6,7 @@ import org.apache.spark.sql.types._
 
 import graft.analytics.RelationalQueries.Q
 import graft.cdc.MergeApply
-import graft.lake.LakeTable
+import graft.lake.{Commit, LakeTable}
 
 /** Materialized candidate-pair view + refresh job (reference: the ETL
   * spec's candidate-pair materialization and analytics-view refresh procs,
@@ -113,7 +113,7 @@ object MaterializedPairs {
   def refresh(table: LakeTable, source: DataFrame, epochId: Long,
       writerId: String = ""): Boolean = {
     val cur = table.current
-    if (table.fenced(cur, epochId, writerId)) return false
+    if (Commit.alreadyApplied(cur, epochId, writerId)) return false
     val b = cur.numBuckets
     val rows = candidatePairs(source, minOrders = 1L) // store raw counts
       .withColumn("_lsn", lit(epochId))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
-import graft.lake.{LakeTable, Snapshot}
+import graft.lake.{Commit, LakeTable, Snapshot}
 import graft.model.Model
 
 /** The streaming face of the engine: tail a change-event log (file-based
@@ -68,16 +68,12 @@ object CdcStream {
     */
   final case class StreamConfig(
       maxFilesPerTrigger: Int = 4,
-      saltFactor: Int = 4,
-      availableNow: Boolean = true,
-      triggerMs: Long = 500L,
       mode: MergeMode = MergeMode.Upsert,
       strategy: WriteStrategy = WriteStrategy.CopyOnWrite,
       compactEveryEpochs: Int = 0,
       retry: RetryPolicy = RetryPolicy.default,
       expireEveryEpochs: Int = 0,
       expireKeepLast: Int = 2,
-      expireOlderThanMs: Long = -1L,
       expireOrphanGraceMs: Long = LakeTable.defaultOrphanGraceMs)
 
   /** Stream identity for epoch fencing: a UUID minted on first use and
@@ -91,7 +87,7 @@ object CdcStream {
     * the OLD identity, so its first epochs fall under the old watermark
     * and genuinely new batches are silently fenced — data loss with no
     * error. A checkpoint without the id file mints one, whatever else it
-    * holds. [[LakeTable.publish]] settles concurrent first starts (the
+    * holds. [[Commit.publish]] settles concurrent first starts (the
     * loser reads the winner's id, never a partly written one).
     */
   def writerIdOf(checkpointDir: String): String = {
@@ -102,21 +98,25 @@ object CdcStream {
     // resolve a different FS than the stream itself); bare defaults only
     // when no session is up at all.
     val conf = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      .map(hadoopConf).getOrElse(new org.apache.hadoop.conf.Configuration())
+      .map(LakeTable.hadoopConf).getOrElse(new org.apache.hadoop.conf.Configuration())
     val fs = p.getFileSystem(conf)
-    if (fs.exists(p)) return LakeTable.readString(fs, p).trim
+    if (fs.exists(p)) return Commit.readString(fs, p).trim
     val fresh = "w-" + java.util.UUID.randomUUID.toString.replace("-", "").take(12)
     fs.mkdirs(p.getParent)
-    if (LakeTable.publish(fs, p, fresh)) fresh
-    else LakeTable.readString(fs, p).trim
+    if (Commit.publish(fs, p, fresh)) fresh
+    else Commit.readString(fs, p).trim
   }
 
+  /** Start tailing `eventsDir` into `table`. The default trigger runs
+    * over the files present at start and stops (AvailableNow).
+    */
   def start(
       spark: SparkSession,
       table: LakeTable,
       eventsDir: String,
       checkpointDir: String,
-      cfg: StreamConfig = StreamConfig()): StreamingQuery = {
+      cfg: StreamConfig = StreamConfig(),
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     val wid = writerIdOf(checkpointDir)
     val events = spark.readStream
       .schema(Model.changeEventSchema)
@@ -138,8 +138,7 @@ object CdcStream {
         val compacts = cfg.compactEveryEpochs > 0 &&
           epochId % cfg.compactEveryEpochs == (cfg.compactEveryEpochs - 1)
         val stats = Retry.run(cfg.retry, s"epoch $epochId apply") {
-          MergeApply.applyBatch(table, batch, epochId, cfg.saltFactor, mode = cfg.mode,
-            writerId = wid,
+          MergeApply.applyBatch(table, batch, epochId, mode = cfg.mode, writerId = wid,
             strategy = if (compacts) WriteStrategy.CopyOnWrite else cfg.strategy)
         }
         Retry.run(cfg.retry, s"epoch $epochId observability") {
@@ -162,8 +161,7 @@ object CdcStream {
         if (cfg.expireEveryEpochs > 0 &&
           epochId % cfg.expireEveryEpochs == (cfg.expireEveryEpochs - 1))
           Retry.run(cfg.retry, s"epoch $epochId expiry") {
-            val r = table.expireSnapshots(cfg.expireKeepLast, cfg.expireOrphanGraceMs,
-              cfg.expireOlderThanMs)
+            val r = table.expireSnapshots(cfg.expireKeepLast, cfg.expireOrphanGraceMs)
             // retention activity is part of the stream's operational log
             if (r.snapshotsDeleted + r.dataFilesDeleted + r.commitDirsReclaimed > 0)
               System.err.println(s"[stream] epoch $epochId expiry: $r")
@@ -171,9 +169,7 @@ object CdcStream {
           }
         ()
       }
-    (if (cfg.availableNow) writer.trigger(Trigger.AvailableNow())
-     else writer.trigger(Trigger.ProcessingTime(cfg.triggerMs)))
-      .start()
+    writer.trigger(trigger).start()
   }
 
   /** Run the stream to completion over the files currently in `eventsDir`
@@ -186,8 +182,7 @@ object CdcStream {
       eventsDir: String,
       checkpointDir: String,
       cfg: StreamConfig = StreamConfig()): Unit = {
-    val q = start(spark, table, eventsDir, checkpointDir, cfg.copy(availableNow = true))
-    q.awaitTermination()
+    start(spark, table, eventsDir, checkpointDir, cfg).awaitTermination()
   }
 
   /** The record of writer `wid`'s commit of `epochId`, read back from the
@@ -204,7 +199,7 @@ object CdcStream {
       wid: String): Option[BatchStats] = {
     def isTarget(s: Snapshot) = !s.maint && s.epochId == epochId && s.writerId == wid
     var cur = table.current
-    while (!isTarget(cur) && cur.parent >= 0 && table.fenced(cur, epochId, wid))
+    while (!isTarget(cur) && cur.parent >= 0 && Commit.alreadyApplied(cur, epochId, wid))
       cur = try table.header(cur.parent)
         catch { case _: java.io.FileNotFoundException => return None }
     if (isTarget(cur)) BatchStats.of(cur) else None
@@ -232,7 +227,7 @@ object CdcStream {
     // overwrite-by-epoch emission makes that loss final) while Retry.run
     // sees success; the same rule channel() states for its reads.
     val dir = new org.apache.hadoop.fs.Path(s"$checkpointDir/sources/0")
-    val fs = dir.getFileSystem(hadoopConf(spark))
+    val fs = dir.getFileSystem(LakeTable.hadoopConf(spark))
     val plain = new org.apache.hadoop.fs.Path(dir, epochId.toString)
     val compacted = new org.apache.hadoop.fs.Path(dir, s"$epochId.compact")
     // exists→read is not atomic against the source's log compactor: the
@@ -242,12 +237,12 @@ object CdcStream {
     // record '<none>' lineage for a batch whose offsets are still on disk.
     val attempt: Option[(String, Boolean)] =
       (if (fs.exists(plain))
-         try Some((LakeTable.readString(fs, plain), false))
+         try Some((Commit.readString(fs, plain), false))
          catch { case _: java.io.FileNotFoundException => None } // raced the compactor
        else None)
         .orElse(
           if (fs.exists(compacted))
-            try Some((LakeTable.readString(fs, compacted), true))
+            try Some((Commit.readString(fs, compacted), true))
             catch { case _: java.io.FileNotFoundException => None }
           else None)
     val (content, fromCompact) = attempt.getOrElse(return Nil)
@@ -307,7 +302,7 @@ object CdcStream {
       rows: Seq[Seq[Any]]): Unit = {
     import org.apache.hadoop.fs.Path
     import org.apache.parquet.example.data.simple.SimpleGroup
-    val conf = hadoopConf(spark)
+    val conf = LakeTable.hadoopConf(spark)
     val target = new Path(dir)
     val fs = target.getFileSystem(conf)
     val staged = new Path(target.getParent,
@@ -338,24 +333,6 @@ object CdcStream {
       throw new java.io.IOException(s"could not move channel rows $staged into $target")
   }
 
-  /** Hadoop conf per session, weakly keyed: `sessionState.newHadoopConf()`
-    * deep-copies the whole SparkConf + Hadoop resource set (~100 ms,
-    * measured at LakeTable's per-commit listing) — per-epoch metadata
-    * probes must not pay that on the serial driver path every batch.
-    */
-  private val hadoopConfCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, org.apache.hadoop.conf.Configuration]())
-
-  private def hadoopConf(spark: SparkSession): org.apache.hadoop.conf.Configuration = {
-    val got = hadoopConfCache.get(spark)
-    if (got != null) got
-    else {
-      val c = spark.sessionState.newHadoopConf()
-      hadoopConfCache.put(spark, c)
-      c
-    }
-  }
-
   /** Cold-start safe read of an observability channel: a table where no
     * epoch has applied yet (or whose every batch was empty/fenced) has no
     * channel directory — monitoring must see an empty table with the
@@ -367,7 +344,7 @@ object CdcStream {
     // (transient FS outage, permissions) must propagate — mapping it to
     // "empty channel" would tell monitoring "no epochs applied" while the
     // data is intact, with the error swallowed.
-    val exists = try p.getFileSystem(hadoopConf(spark)).exists(p)
+    val exists = try p.getFileSystem(LakeTable.hadoopConf(spark)).exists(p)
       catch { case _: java.io.FileNotFoundException => false }
     if (exists) spark.read.option("recursiveFileLookup", "true").schema(schema).parquet(dir)
     else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)

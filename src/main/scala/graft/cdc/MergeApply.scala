@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.lake.{CommitResult, LakeTable, Snapshot}
+import graft.lake.{Commit, CommitResult, LakeTable, Snapshot, Writer}
 import graft.model.Model
 
 /** M4 ▸ merge modes (reference: sp_merge_staging_to_production declares
@@ -52,7 +52,7 @@ object MergeMode {
   *
   * The same dichotomy as Iceberg v2 copy-on-write vs merge-on-read; both
   * strategies resolve in the one bucket exchange of their write
-  * ([[LakeTable.resolveIntoBuckets]]), commit through the same fenced
+  * ([[graft.lake.Writer.resolveIntoBuckets]]), commit through the same fenced
   * snapshot protocol and may be mixed batch-by-batch on one table.
   */
 sealed trait WriteStrategy
@@ -128,6 +128,9 @@ object BatchStats {
   */
 object MergeApply {
 
+  /** Write tasks a salted bucket is spread over. */
+  private val SaltFactor = 4
+
   /** Apply one batch of change events (wire schema
     * [[Model.changeEventSchema]]) to `table`. `epochId < 0` disables the
     * fence (ad-hoc batch mode); streaming passes the foreachBatch epoch.
@@ -136,7 +139,6 @@ object MergeApply {
       table: LakeTable,
       events: DataFrame,
       epochId: Long,
-      saltFactor: Int = 4,
       saltRowThreshold: Long = 4000000L,
       mode: MergeMode = MergeMode.Upsert,
       writerId: String = "",
@@ -152,12 +154,11 @@ object MergeApply {
     val cur = table.current
     val keyCols = table.keyCols
 
-    // Fence first (scoped per writer identity): replaying an epoch this
-    // writer already committed must cost nothing. A DIFFERENT writer's
-    // epoch numbering is unrelated — it applies (LWW makes that safe).
+    // Fence first: replaying an epoch this writer already committed must
+    // cost nothing.
     def notApplied(s: Snapshot) = BatchStats(epochId, applied = false, s.id, 0L, 0L, 0,
       s.schemaVer, s.maxLsn, s.rows, elapsedMs(t0))
-    if (table.fenced(cur, epochId, writerId)) return notApplied(cur)
+    if (Commit.alreadyApplied(cur, epochId, writerId)) return notApplied(cur)
 
     // One driver-side pass for the batch-level facts the PLAN ITSELF
     // depends on: count, max lsn, max schema version, the touched-bucket
@@ -240,10 +241,9 @@ object MergeApply {
     //    rewriting a ~2.4e8-row bucket — salts, which is when spreading pays.
     val livePerBucket = if (cur.rows > 0) cur.rows / math.max(1, b) else 0L
     val resolvedEstPerBucket = livePerBucket + inputEvents / math.max(1, touched.size)
-    val salt = if (resolvedEstPerBucket < saltRowThreshold) 1
-      else math.max(1, saltFactor)
-    val resolved = table.resolveIntoBuckets(toResolve, newVer, b,
-      LakeTable.writeTasks(spark, touched.size * salt), salt, maxCols = Seq("_batch"))
+    val salt = if (resolvedEstPerBucket < saltRowThreshold) 1 else SaltFactor
+    val resolved = Writer.resolveIntoBuckets(table, toResolve, newVer, b,
+      Writer.writeTasks(spark, touched.size * salt), salt, maxCols = Seq("_batch"))
     // A8 ▸ observed metrics RIDE THE MERGE PLAN (Dataset.observe →
     // CollectMetrics via the Observation helper): resolved-row, live-row
     // and batch-key counts come from the pass that writes the data files,

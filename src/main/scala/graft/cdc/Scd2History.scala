@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.analytics.RelationalQueries.Q
-import graft.lake.LakeTable
+import graft.lake.{Commit, LakeTable}
 
 /** M7 ▸ SCD2-lite history maintenance: every change to a key CLOSES the
   * key's active row (`effective_to` = the new change's sequence number,
@@ -91,7 +91,7 @@ object Scd2History {
   def applyBatch(table: LakeTable, cfg: Scd2Config, batch: DataFrame, epochId: Long,
       writerId: String = ""): Boolean = {
     val cur = table.current
-    if (table.fenced(cur, epochId, writerId)) return false
+    if (Commit.alreadyApplied(cur, epochId, writerId)) return false
     val b = cur.numBuckets
     val keyC = cfg.keyCols.map(col)
     val head = batch.agg(
@@ -101,12 +101,8 @@ object Scd2History {
       .collect()(0)
     if (head.getAs[Long]("n") == 0L) return false
     val batchHash = head.getAs[Long]("bh")
-    // early exit before writing data files — scoped like the commit-level
-    // fence: only a NOT-yet-established writer (checkpoint-swap redelivery
-    // window) is hash-checked; a genuinely new batch from an established
-    // writer that happens to repeat old content must still apply
-    if (!table.establishedWriter(cur, writerId) &&
-        cur.batchHashes.contains(batchHash)) return false
+    // the commit's own fence, asked before any data file is written
+    if (Commit.alreadyApplied(cur, epochId, writerId, Some(batchHash))) return false
     val touched: Set[Int] = head.getAs[Seq[Int]]("touched").toSet
 
     // 1. incoming versions: each record opens a version, closed within the

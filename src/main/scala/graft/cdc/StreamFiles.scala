@@ -11,7 +11,7 @@ import org.apache.spark.sql.DataFrame
 object StreamFiles {
   def writeFlat(df: DataFrame, dir: String, name: String): Unit = {
     val spark = df.sparkSession
-    val conf = spark.sessionState.newHadoopConf()
+    val conf = graft.lake.LakeTable.hadoopConf(spark)
     val tmp = new Path(dir, s".tmp-$name")
     df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
     val fs = tmp.getFileSystem(conf)
@@ -36,7 +36,7 @@ object StreamFiles {
   def writeChunkedOrdered(df: DataFrame, dir: String, nChunks: Int,
       orderCols: Seq[String], payload: String): Int = {
     val spark = df.sparkSession
-    val conf = spark.sessionState.newHadoopConf()
+    val conf = graft.lake.LakeTable.hadoopConf(spark)
     val tmp = new Path(dir, ".tmp-chunks")
     val cols = orderCols.map(df.col)
     df.repartitionByRange(nChunks, cols: _*)

@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.cdc.MergeApply
-import graft.lake.{ExpiryReport, LakeTable}
+import graft.lake.{Commit, ExpiryReport, LakeTable}
 import graft.model.Model
 
 /** `file:` FileSystem whose deletes all fail (return false), as a delete
@@ -165,7 +165,7 @@ class ExpirySpec extends AnyFunSuite {
     val table = LakeTable.create(spark, root, schemaVer = 2, numBuckets = 4)
     commitBatch(table, 0L)
     def leak(name: String, ageMs: Long): java.io.File = {
-      val f = new java.io.File(s"$root/_meta", LakeTable.PublishTempPrefix + name)
+      val f = new java.io.File(s"$root/_meta", Commit.PublishTempPrefix + name)
       Files.writeString(f.toPath, "{")
       assert(f.setLastModified(System.currentTimeMillis() - ageMs))
       f

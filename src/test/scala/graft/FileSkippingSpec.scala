@@ -137,11 +137,11 @@ class FileSkippingSpec extends AnyFunSuite {
     // never skipped by any probe
     assert(back.files.drop(1).forall(_.stats.isEmpty))
     val probe = UTF8String.fromString("zzz-outside-any-range")
-    assert(back.files.drop(1).forall(LakeTable.mayContainKey(_, probe)))
+    assert(back.files.drop(1).forall(LakeTable.mayOverlapKeyRange(_, probe, probe)))
     // an entry without a key range (its file holds null keys) never skips
-    assert(LakeTable.mayContainKey(nullKeyStats, probe))
+    assert(LakeTable.mayOverlapKeyRange(nullKeyStats, probe, probe))
     // known ranges DO skip
-    assert(!LakeTable.mayContainKey(withStats, probe))
+    assert(!LakeTable.mayOverlapKeyRange(withStats, probe, probe))
   }
 
   test("write pass records each file's byte length, and it survives a reload") {

@@ -112,8 +112,7 @@ class MergeApplySpec extends AnyFunSuite {
       yield ev(100000L + c * 10 + t, s"cold-$c", t, s"c-$c-$t")
     val batch = spark.createDataset(scala.util.Random.shuffle(hot ++ cold)).toDF()
     // force the salted path regardless of volume heuristics
-    val st = MergeApply.applyBatch(table, batch, epochId = 0,
-      saltFactor = 4, saltRowThreshold = 0L)
+    val st = MergeApply.applyBatch(table, batch, epochId = 0, saltRowThreshold = 0L)
     assert(st.applied)
     // exact LWW oracle, computed naively
     val want = ((hot ++ cold).groupBy(e => (e.conv_id, e.turn_idx))
@@ -137,7 +136,7 @@ class MergeApplySpec extends AnyFunSuite {
       // saltRowThreshold=0 forces the salted multi-file write path so
       // compaction has small files to bin-pack
       MergeApply.applyBatch(table, spark.createDataset(chunk.toSeq).toDF(), i.toLong,
-        saltFactor = 4, saltRowThreshold = 0L)
+        saltRowThreshold = 0L)
     }
     val before = finalState(table)
     val filesBefore = table.current.files.size

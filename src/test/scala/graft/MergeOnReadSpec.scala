@@ -165,7 +165,7 @@ class MergeOnReadSpec extends AnyFunSuite {
       val table = LakeTable.create(spark, tmp(), schemaVer = 2, numBuckets = 8)
       assert(MergeApply.applyBatch(table, spark.createDataset(first.toSeq).toDF(), 0L).applied)
       val (st, seen) = JobProbe.during(spark)(MergeApply.applyBatch(table,
-        spark.createDataset(second.toSeq).toDF(), 1L, saltFactor = 4,
+        spark.createDataset(second.toSeq).toDF(), 1L,
         saltRowThreshold = saltRowThreshold, strategy = strategy))
       assert(st.applied)
       val write = JobProbe.writePlans(seen)

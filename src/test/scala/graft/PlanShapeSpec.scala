@@ -9,8 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * change cannot silently deoptimize a scan between audit runs (the
   * round-4 config-driven validation rewrite did exactly that — wrapped
   * the p6 filter in a non-convertible coalesce and lost parquet pushdown;
-  * only the out-of-band audit caught it). Construction-only — no query
-  * executes, so the whole suite costs plan compilation, not I/O.
+  * only the out-of-band audit caught it). The catalog checks are
+  * construction-only — no query executes, so they cost plan compilation,
+  * not I/O; the lake-table checks build their own small tables.
   */
 class PlanShapeSpec extends AnyFunSuite {
 
@@ -63,6 +64,37 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(pushed.isDefined, "no PushedFilters line in the point-read plan")
     assert(pushed.get.contains("EqualTo(conv_id,conv-7)"),
       s"key equality did not reach the scan: ${pushed.get}")
+  }
+
+  /** The changelog read (`cdc_changes_since`) diffs only the buckets whose
+    * file sets differ between the two snapshots, at both of them, in one
+    * full-outer winner join. One commit touching 1 of 16 buckets: the
+    * window's scan set (`inputFiles`, planned from the manifest) is that
+    * bucket's files, and a second join (the old reverse anti-join) or a
+    * cartesian product would show in the plan.
+    */
+  test("cdc_changes_since: changed-bucket scan, one full-outer join, no cartesian") {
+    import graft.lake.LakeTable
+    import graft.cdc.MergeApply
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft-shape-chg-").toString
+    val table = LakeTable.create(spark, root, schemaVer = 2, numBuckets = 16)
+    val ts = new java.sql.Timestamp(1704067200000L)
+    def ev(lsn: Long, conv: String) = graft.model.Model.ChangeEvent(
+      lsn, "I", 2, conv, 0, Some("user"), Some(s"t$lsn"), None, Some(ts))
+    MergeApply.applyBatch(table, spark.createDataset((0 until 64).map(i => ev(i + 1L, s"conv-$i"))).toDF(), 0L)
+    val from = table.current
+    MergeApply.applyBatch(table, spark.createDataset(Seq(ev(100L, "conv-0"))).toDF(), 1L)
+    val changed = table.changedBuckets(from, table.current)
+    val df = table.readChangesSince(from.id)
+    val p = df.queryExecution.explainString(FormattedMode)
+    val scanned = df.inputFiles.toSeq
+      .flatMap("_bucket=(\\d+)".r.findFirstMatchIn(_).map(_.group(1).toInt)).toSet
+    assert(scanned.nonEmpty && scanned.subsetOf(changed) && changed.size < 16,
+      s"scanned buckets $scanned, changed $changed")
+    assert(p.contains("FullOuter"))
+    assert("""\(\d+\) \w*(Join|CartesianProduct)""".r.findAllIn(p).size == 1, p)
+    assert(!p.contains("CartesianProduct"))
   }
 
   test("q1: aggregation is partial (map-side combine) with a pruned scan") {
