@@ -107,16 +107,15 @@ object CdcStream {
     else Commit.readString(fs, p).trim
   }
 
-  /** Start tailing `eventsDir` into `table`. The default trigger runs
-    * over the files present at start and stops (AvailableNow).
+  /** Start tailing `eventsDir` into `table`. The trigger runs over the
+    * files present at start and stops (AvailableNow).
     */
   def start(
       spark: SparkSession,
       table: LakeTable,
       eventsDir: String,
       checkpointDir: String,
-      cfg: StreamConfig = StreamConfig(),
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+      cfg: StreamConfig = StreamConfig()): StreamingQuery = {
     val wid = writerIdOf(checkpointDir)
     val events = spark.readStream
       .schema(Model.changeEventSchema)
@@ -169,7 +168,7 @@ object CdcStream {
           }
         ()
       }
-    writer.trigger(trigger).start()
+    writer.trigger(Trigger.AvailableNow()).start()
   }
 
   /** Run the stream to completion over the files currently in `eventsDir`

@@ -94,10 +94,9 @@ private[graft] object Commit {
     * Docs/etl_requirements_reviewed_by_sr.md:162-165). For an established
     * writer it could only produce false positives — two distinct batches
     * with identical content (plausible for the ADD-merge stats kernel)
-    * would be silently dropped. A hash fence is logged when it fires, and
-    * so is a saturated window: a redelivery backlog longer than
-    * [[maxBatchHashes]] would re-apply its evicted prefix undetected, so
-    * the operator must size the cap to the source's retained backlog.
+    * would be silently dropped. A hash fence is logged when it fires;
+    * otherwise the decision is pure, so a kernel may ask before it writes
+    * and [[commit]] ask again without logging anything twice.
     */
   def alreadyApplied(cur: Snapshot, epochId: Long, writerId: String,
       batchHash: Option[Long] = None): Boolean = cur.writerEpochs.get(writerId) match {
@@ -107,11 +106,6 @@ private[graft] object Commit {
       if (redelivered)
         System.err.println(s"[lake] content-hash fence: writer '$writerId' epoch $epochId " +
           s"re-delivered an already-applied batch (hash ${batchHash.get}) — commit skipped")
-      else if (batchHash.isDefined && cur.batchHashes.size >= maxBatchHashes)
-        System.err.println(s"[lake] content-hash window SATURATED ($maxBatchHashes) while " +
-          s"unestablished writer '$writerId' commits epoch $epochId: a redelivery older " +
-          "than the window would double-apply undetected — ensure maxBatchHashes covers " +
-          "the source's retained backlog")
       redelivered
   }
 
@@ -144,6 +138,15 @@ private[graft] object Commit {
     while (attempt <= maxCommitRetries) {
       val cur = current(t)
       if (alreadyApplied(cur, epochId, writerId, batchHash)) return CommitResult(cur, applied = false)
+      // The hash window is FIFO-capped: a redelivery backlog longer than
+      // maxBatchHashes would re-apply its evicted prefix undetected, so an
+      // unestablished writer committing into a full window says so loudly.
+      if (batchHash.isDefined && !cur.writerEpochs.contains(writerId) &&
+        cur.batchHashes.size >= maxBatchHashes)
+        System.err.println(s"[lake] content-hash window SATURATED ($maxBatchHashes) while " +
+          s"unestablished writer '$writerId' commits epoch $epochId: a redelivery older " +
+          "than the window would double-apply undetected — ensure maxBatchHashes covers " +
+          "the source's retained backlog")
       if (baseSnapshotId >= 0 && cur.id != baseSnapshotId)
         validate(t, baseSnapshotId, cur, replacedBuckets ++ derivedBuckets, writerId)
       val snap = next(cur, newFiles, replacedBuckets, epochId, schemaVer, maxLsnSeen, writerId,
