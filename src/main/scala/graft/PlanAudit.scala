@@ -56,13 +56,6 @@ object PlanAudit {
     audit("j5_anti_join_dedup",
       "left anti join" -> (p => p.contains("LeftAnti")),
       "no cartesian product" -> (p => !p.contains("CartesianProduct")))
-    // semi filter join: key filter runs map-side against a broadcast
-    // dimension slice — the fact side is never exchanged for the join
-    audit("j3_semi_filter_join",
-      "broadcast left-semi" -> (p =>
-        p.contains("BroadcastHashJoin") && p.contains("LeftSemi")),
-      "fact side not shuffled for the join" -> (p =>
-        !p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin")))
     // scalar-threshold queries are ONE lazy plan: building the DataFrame
     // must run zero QUERY jobs (a driver-side .head probe would run one —
     // two scans and two scheduling rounds per query at scale). Spark 4
@@ -91,21 +84,10 @@ object PlanAudit {
       "no cartesian product" -> (p => !p.contains("CartesianProduct")))
     audit("d5_embedding_dup",
       "no cartesian product" -> (p => !p.contains("CartesianProduct")))
-    // IVF: the ONLY cross join is vectors × broadcast centroids (K rows);
-    // probe→candidate expansion must be an equi-join on cell id
-    audit("sim3_ivf_ann",
-      "centroid build side broadcast" -> (p => p.contains("BroadcastNestedLoopJoin")
-        || p.contains("BroadcastExchange")),
-      "no unbroadcast cartesian" -> (p => !p.contains("CartesianProduct")))
     // windowed event agg: partial agg before the shuffle (state per open
     // window x type, not per event)
     audit("st1_window_agg",
       "partial aggregation" -> (_.contains("partial_count")))
-    // sessionize: lag + running sum + group-agg all ride ONE user_id
-    // hash exchange (plus the final presentation orderBy's range exchange)
-    audit("st2_sessionize",
-      "single user_id shuffle for the window chain" ->
-        (p => "hashpartitioning\\(user_id".r.findAllIn(p).size <= 1))
     // top-k must be TakeOrderedAndProject, not a global sort+window
     audit("w1_ranked_topk",
       "take-ordered top-k" -> (_.contains("TakeOrderedAndProject")))

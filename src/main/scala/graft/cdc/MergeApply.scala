@@ -202,7 +202,7 @@ object MergeApply {
     //    touched buckets next to the full-width currentRows read below —
     //    a ~key-column-sized overhead, accepted over threading one
     //    resolve through both the gate and the union.
-    def liveKeys = table.readResolved(cur, Some(touched))
+    def liveKeys = table.readResolvedKeys(cur, Some(touched))
       .filter(!col("_deleted")).select(keyCols.map(col): _*)
     val gatedBatch = mode match {
       case MergeMode.Upsert => batchRows

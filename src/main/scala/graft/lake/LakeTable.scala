@@ -194,7 +194,15 @@ final class LakeTable(
     * with zero extra exchanges.
     */
   def readResolved(snap: Snapshot, buckets: Option[Set[Int]]): DataFrame =
-    resolveWanted(filesIn(snap, buckets), snap.schemaVer, None)
+    resolveWanted(filesIn(snap, buckets), snap.schemaVer, None,
+      physicalSchema(snap.schemaVer).fieldNames.toSeq)
+
+  /** [[readResolved]] narrowed to the keys and each key's winning `_lsn`
+    * and `_deleted`: the resolve carries only these, so no payload column
+    * is scanned.
+    */
+  private[graft] def readResolvedKeys(snap: Snapshot, buckets: Option[Set[Int]]): DataFrame =
+    resolveWanted(filesIn(snap, buckets), snap.schemaVer, None, keyCols ++ Seq("_lsn", "_deleted"))
 
   private def filesIn(snap: Snapshot, buckets: Option[Set[Int]]): Seq[FileEntry] =
     buckets.fold(snap.files)(bs => snap.files.filter(f => bs.contains(f.bucket)))
@@ -205,21 +213,22 @@ final class LakeTable(
     * (every stored version of a key passes or fails together, so the
     * per-key max-LSN winner is unchanged), and load-bearing for point
     * reads: the filter reaches the parquet scan, so row-group stats prune
-    * within the files manifest-level skipping kept.
+    * within the files manifest-level skipping kept. The result has the
+    * columns `carry` (which hold the keys and `_lsn`): only they enter the
+    * resolve's struct, so only they are scanned.
     */
   private def resolveWanted(wanted: Seq[FileEntry], schemaVer: Int,
-      keyPred: Option[org.apache.spark.sql.Column]): DataFrame = {
+      keyPred: Option[org.apache.spark.sql.Column], carry: Seq[String]): DataFrame = {
     def scan(fes: Seq[FileEntry]): DataFrame = {
-      val df = readFiles(fes, schemaVer)
+      val df = readFiles(fes, schemaVer).select(carry.map(col): _*)
       keyPred.map(df.filter).getOrElse(df)
     }
     val deltaBuckets = wanted.filter(_.kind == FileEntry.Delta).map(_.bucket).toSet
     if (deltaBuckets.isEmpty) return scan(wanted)
     val (multi, pure) = wanted.partition(f => deltaBuckets.contains(f.bucket))
-    val cols = physicalSchema(schemaVer).fieldNames.toSeq
     val resolved = scan(multi)
       .groupBy(keyCols.map(col): _*)
-      .agg(max_by(struct(cols.map(col): _*), col("_lsn")).as("r"))
+      .agg(max_by(struct(carry.map(col): _*), col("_lsn")).as("r"))
       .select(col("r.*"))
     if (pure.isEmpty) resolved
     else resolved.unionByName(scan(pure))
@@ -267,7 +276,8 @@ final class LakeTable(
     val snap = current
     val wanted = filesForKey(snap, key)
     if (wanted.iterator.map(_.len).sum < driverCapBytes) readKeyOnDriver(snap, wanted, key, format)
-    else publicRows(resolveWanted(wanted, snap.schemaVer, Some(col(keyCols.head) === lit(key))), snap)
+    else publicRows(resolveWanted(wanted, snap.schemaVer, Some(col(keyCols.head) === lit(key)),
+      physicalSchema(snap.schemaVer).fieldNames.toSeq), snap)
   }
 
   /** [[readKey]]'s driver path: the rule of the Spark path (conform each
@@ -338,7 +348,8 @@ final class LakeTable(
     val hi = UTF8String.fromString(upper)
     val wanted = snap.files.filter(f => mayOverlapKeyRange(f, lo, hi))
     publicRows(resolveWanted(wanted, snap.schemaVer,
-      Some(col(keyCols.head) >= lit(lower) && col(keyCols.head) <= lit(upper))), snap)
+      Some(col(keyCols.head) >= lit(lower) && col(keyCols.head) <= lit(upper)),
+      physicalSchema(snap.schemaVer).fieldNames.toSeq), snap)
   }
 
   /** Point and range reads bucket and prune on the STRING form of the
@@ -355,9 +366,9 @@ final class LakeTable(
   /** Buckets whose FILE SETS differ between two snapshots — the pruning
     * unit for [[readChangesSince]]: identical file sets imply identical
     * rows, so an untouched bucket never enters the diff. Compaction makes
-    * a bucket eligible without changing its rows; the diff's anti-join
-    * drops those rows, so eligibility over-approximation costs read I/O,
-    * never correctness.
+    * a bucket eligible without changing its rows; the diff drops those
+    * rows, so eligibility over-approximation costs read I/O, never
+    * correctness.
     */
   def changedBuckets(from: Snapshot, to: Snapshot): Set[Int] = {
     val f = from.files.groupBy(_.bucket).map { case (b, fs) => b -> fs.map(_.path).toSet }
@@ -387,13 +398,24 @@ final class LakeTable(
     * any incremental consumer still needs (Iceberg's own rule that delete
     * files outlive incremental readers).
     *
-    * Scale shape: reads only [[changedBuckets]] at BOTH snapshots, ONCE
-    * each; the `from` side carries only (key, `_lsn`, `_deleted`) into one
-    * full-outer join, so the diff costs one scan per side plus one
-    * co-keyed shuffle — per-epoch
-    * windows on a bucketed 100 TB table touch a few buckets, not the
-    * table. Retention: `from`'s manifest and data files must still exist
-    * (run [[expireSnapshots]] with `keepLast` covering the oldest
+    * Scale shape: reads only [[changedBuckets]], in one of two plans that
+    * the driver picks from the manifests.
+    *   - Append-only window: every file `from` holds in those buckets is
+    *     still in `to` (merge-on-read epochs only add delta files). LWW is
+    *     associative, so each key's `to` winner is the LWW of its `from`
+    *     winner and its winner among the ADDED files: a key changed
+    *     exactly when its added-files winner has a larger `_lsn` than its
+    *     `from` winner, or it has no `from` winner (an equal `_lsn` is a
+    *     duplicate re-emission). The added files at full width and
+    *     `from`'s files as (keys, `_lsn`) alone meet in one aggregate: one
+    *     exchange, no join, no base file read at full width.
+    *   - Any file removed (copy-on-write, compaction, tombstone GC): both
+    *     sides are LWW-resolved, the `from` side carrying only (keys,
+    *     `_lsn`, `_deleted`), and meet in one full-outer join, which also
+    *     carries the vanished-key DELETE.
+    * Per-epoch windows on a bucketed 100 TB table touch a few buckets, not
+    * the table. Retention: `from`'s manifest and data files must still
+    * exist (run [[expireSnapshots]] with `keepLast` covering the oldest
     * consumer).
     */
   def readChangesSince(fromSnapshotId: Long, toSnapshotId: Long = -1L): DataFrame = {
@@ -405,29 +427,47 @@ final class LakeTable(
       s"changes window is forward-only: from snapshot ${from.id} > to ${to.id} " +
         "(an undo diff would invert the vanished-key DELETE semantics silently)")
     val bs = changedBuckets(from, to)
-    // ONE full-outer join on the key carries all three cases in a single
-    // pass over each side (one scan each, one co-keyed shuffle — a
-    // separate reverse anti-join for the vanished case would scan both
-    // sides twice): the `from` side contributes only (key, _lsn, _deleted)
-    //   - to-winner with a different (or no) from-lsn  → UPSERT / DELETE
-    //   - same (key, lsn) on both sides               → unchanged, dropped
-    //   - from-key with NO to-row (tombstone GC'd mid-window) → DELETE
-    //     with null payload, but only if LIVE at `from` — a key already
-    //     dead there was already dead to the consumer
-    val fromSide = readResolved(from, Some(bs))
-      .select(keyCols.map(col) :+ col("_lsn").as("_from_lsn") :+
-        col("_deleted").as("_from_deleted"): _*)
-    val publicCols = registry(to.schemaVer).fieldNames.toSeq
-    readResolved(to, Some(bs))
-      .join(fromSide, keyCols, "full_outer")
-      .filter(
-        (col("_lsn").isNotNull &&
-          (col("_from_lsn").isNull || col("_from_lsn") =!= col("_lsn"))) ||
-        (col("_lsn").isNull && !col("_from_deleted")))
+    val fromFiles = filesIn(from, Some(bs))
+    val toFiles = filesIn(to, Some(bs))
+    val fromPaths = fromFiles.map(_.path).toSet
+    val changed = if (fromPaths.subsetOf(toFiles.map(_.path).toSet)) {
+      // `_a` tags the added files' rows; max_by skips the null orderings
+      // of the other side, so `r` is the added-files winner
+      val phys = physicalSchema(to.schemaVer)
+      val fromKeys = readFiles(fromFiles, to.schemaVer).select(phys.map(f =>
+        if (keyCols.contains(f.name) || f.name == "_lsn") col(f.name)
+        else lit(null).cast(f.dataType).as(f.name)): _*)
+      readFiles(toFiles.filterNot(f => fromPaths(f.path)), to.schemaVer).withColumn("_a", lit(true))
+        .unionByName(fromKeys.withColumn("_a", lit(false)))
+        .groupBy(keyCols.map(col): _*)
+        .agg(max(when(!col("_a"), col("_lsn"))).as("_from_lsn"),
+          max_by(struct(phys.fieldNames.map(col): _*), when(col("_a"), col("_lsn"))).as("r"))
+        .filter(col("r").isNotNull && (col("_from_lsn").isNull || col("r._lsn") > col("_from_lsn")))
+        .select(col("r.*"))
+    } else {
+      // ONE full-outer join on the key carries all three cases in a single
+      // pass over each side (a separate reverse anti-join for the vanished
+      // case would scan both sides twice):
+      //   - to-winner with a different (or no) from-lsn  → UPSERT / DELETE
+      //   - same (key, lsn) on both sides               → unchanged, dropped
+      //   - from-key with NO to-row (tombstone GC'd mid-window) → DELETE
+      //     with null payload, but only if LIVE at `from` — a key already
+      //     dead there was already dead to the consumer
+      val fromSide = readResolvedKeys(from, Some(bs))
+        .select(keyCols.map(col) :+ col("_lsn").as("_from_lsn") :+
+          col("_deleted").as("_from_deleted"): _*)
+      readResolved(to, Some(bs))
+        .join(fromSide, keyCols, "full_outer")
+        .filter(
+          (col("_lsn").isNotNull &&
+            (col("_from_lsn").isNull || col("_from_lsn") =!= col("_lsn"))) ||
+          (col("_lsn").isNull && !col("_from_deleted")))
+    }
+    changed
       .withColumn("change_type",
         when(col("_lsn").isNull || col("_deleted"), lit("DELETE"))
           .otherwise(lit("UPSERT")))
-      .select(publicCols.map(col) :+ col("change_type"): _*)
+      .select(registry(to.schemaVer).fieldNames.map(col).toSeq :+ col("change_type"): _*)
   }
 
   /** Scan of `wanted`, conformed to `targetVer`, planned from the manifest

@@ -236,6 +236,71 @@ class IncrementalReadSpec extends AnyFunSuite {
     assert(follower == source)
   }
 
+  test("append-only windows (the manifest rule) equal a full-outer reference " +
+      "diff; windows with a compaction or a copy-on-write epoch inside do too") {
+    import graft.cdc.WriteStrategy.{CopyOnWrite, MergeOnRead}
+    import graft.lake.Snapshot
+    val table = LakeTable.create(spark, tmp(), schemaVer = 1, numBuckets = 2)
+    def v1(e: Model.ChangeEvent) = e.copy(schema_ver = 1)
+    def apply(epoch: Long, st: graft.cdc.WriteStrategy, evs: Model.ChangeEvent*): Long = {
+      assert(MergeApply.applyBatch(table, batch(evs: _*), epoch, strategy = st).applied)
+      table.current.id
+    }
+    val s0 = table.current.id
+    val s1 = apply(0L, MergeOnRead, v1(ev(50, "I", "a", 1, "a1")), v1(ev(60, "I", "b", 2, "b1")),
+      v1(ev(70, "I", "c", 3, "c1")), v1(ev(65, "I", "x", 9, "x1")))
+    // a late loser, a same-lsn re-emission, a late winner with an old lsn,
+    // and a tombstone for a key first seen in the window
+    val s2 = apply(1L, MergeOnRead, v1(ev(40, "U", "a", 1, "a-late-loses")),
+      v1(ev(60, "I", "b", 2, "b1")), v1(ev(5, "I", "d", 4, "d-late-wins")), v1(ev(80, "D", "e", 5, "")))
+    val s3 = apply(2L, MergeOnRead, ev(90, "U", "c", 3, "c2").copy(tool = Some("t"))) // v1 → v2
+    assert(table.compact(maxFilesPerBucket = 0).applied)
+    val s4 = table.current.id
+    val s5 = apply(3L, MergeOnRead, ev(100, "U", "a", 1, "a2"))
+    val s6 = apply(4L, CopyOnWrite, ev(110, "U", "b", 2, "b2"), ev(120, "D", "x", 9, ""))
+    val s7 = apply(5L, MergeOnRead, ev(130, "U", "d", 4, "d2"))
+    assert(table.snapshotIds == Seq(s0, s1, s2, s3, s4, s5, s6, s7))
+
+    def appendOnly(from: Snapshot, to: Snapshot): Boolean = {
+      val bs = table.changedBuckets(from, to)
+      from.files.filter(f => bs(f.bucket)).map(_.path).toSet.subsetOf(to.files.map(_.path).toSet)
+    }
+    // the reference: both sides LWW-resolved and diffed by a full outer
+    // join on the key, in driver memory
+    def reference(from: Snapshot, to: Snapshot): Set[Seq[Any]] = {
+      val bs = Some(table.changedBuckets(from, to))
+      def winners(s: Snapshot) = table.readResolved(s, bs).collect()
+        .map(r => (r.getAs[String]("conv_id"), r.getAs[Any]("turn_idx").toString) -> r).toMap
+      val (f, t) = (winners(from), winners(to))
+      val cols = table.registry(to.schemaVer).fieldNames.toSeq
+      val changed = t.collect {
+        case (k, r) if !f.get(k).exists(_.getAs[Long]("_lsn") == r.getAs[Long]("_lsn")) =>
+          cols.map(r.getAs[Any]) :+ (if (r.getAs[Boolean]("_deleted")) "DELETE" else "UPSERT")
+      }
+      val vanished = f.collect { case (k, r) if !t.contains(k) && !r.getAs[Boolean]("_deleted") =>
+        cols.map(c => if (table.keyCols.contains(c)) r.getAs[Any](c) else null) :+ "DELETE"
+      }
+      (changed ++ vanished).toSet
+    }
+    def window(fromId: Long, toId: Long) =
+      table.readChangesSince(fromId, toId).collect().map(_.toSeq).toSet
+
+    // (from, to, append-only): every per-snapshot window, an empty one, a
+    // multi-epoch one across the schema bump, and the two that hold a
+    // compaction and a copy-on-write epoch
+    Seq((s0, s1, true), (s1, s2, true), (s2, s3, true), (s3, s4, false), (s4, s5, true),
+      (s5, s6, false), (s6, s7, true), (s1, s1, true), (s1, s3, true), (s3, s5, false),
+      (s5, s7, false)).foreach { case (a, b, append) =>
+        val (from, to) = (table.snapshot(a), table.snapshot(b))
+        assert(appendOnly(from, to) == append, s"window ($a, $b]")
+        assert(window(a, b) == reference(from, to), s"window ($a, $b]")
+      }
+    assert(window(s1, s1).isEmpty)
+    assert(window(s1, s2).map(r => (r(0), r(1), r(3), r.last)) ==
+      Set(("d", 4, "d-late-wins", "UPSERT"), ("e", 5, null, "DELETE")))
+    assert(window(s2, s3).map(r => (r(0), r(3), r(4), r.last)) == Set(("c", "c2", "t", "UPSERT")))
+  }
+
   test("changedBuckets prunes to exactly the touched buckets") {
     val table = LakeTable.create(spark, tmp(), schemaVer = 2, numBuckets = 16)
     MergeApply.applyBatch(table, batch(

@@ -74,17 +74,7 @@ class PlanShapeSpec extends AnyFunSuite {
     * cartesian product would show in the plan.
     */
   test("cdc_changes_since: changed-bucket scan, one full-outer join, no cartesian") {
-    import graft.lake.LakeTable
-    import graft.cdc.MergeApply
-    import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-shape-chg-").toString
-    val table = LakeTable.create(spark, root, schemaVer = 2, numBuckets = 16)
-    val ts = new java.sql.Timestamp(1704067200000L)
-    def ev(lsn: Long, conv: String) = graft.model.Model.ChangeEvent(
-      lsn, "I", 2, conv, 0, Some("user"), Some(s"t$lsn"), None, Some(ts))
-    MergeApply.applyBatch(table, spark.createDataset((0 until 64).map(i => ev(i + 1L, s"conv-$i"))).toDF(), 0L)
-    val from = table.current
-    MergeApply.applyBatch(table, spark.createDataset(Seq(ev(100L, "conv-0"))).toDF(), 1L)
+    val (table, from) = oneKeyWindow(graft.cdc.WriteStrategy.CopyOnWrite)
     val changed = table.changedBuckets(from, table.current)
     val df = table.readChangesSince(from.id)
     val p = df.queryExecution.explainString(FormattedMode)
@@ -94,6 +84,103 @@ class PlanShapeSpec extends AnyFunSuite {
       s"scanned buckets $scanned, changed $changed")
     assert(p.contains("FullOuter"))
     assert("""\(\d+\) \w*(Join|CartesianProduct)""".r.findAllIn(p).size == 1, p)
+    assert(!p.contains("CartesianProduct"))
+  }
+
+  /** A 16-bucket table of 64 keys, then one commit under `strategy` that
+    * upserts `conv-0`: the table and the snapshot before that commit.
+    */
+  private def oneKeyWindow(strategy: graft.cdc.WriteStrategy) = {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft-shape-chg-").toString
+    val table = graft.lake.LakeTable.create(spark, root, schemaVer = 2, numBuckets = 16)
+    val ts = new java.sql.Timestamp(1704067200000L)
+    def ev(lsn: Long, conv: String) = graft.model.Model.ChangeEvent(
+      lsn, "I", 2, conv, 0, Some("user"), Some(s"t$lsn"), None, Some(ts))
+    graft.cdc.MergeApply.applyBatch(table,
+      spark.createDataset((0 until 64).map(i => ev(i + 1L, s"conv-$i"))).toDF(), 0L)
+    val from = table.current
+    graft.cdc.MergeApply.applyBatch(table, spark.createDataset(Seq(ev(100L, "conv-0"))).toDF(), 1L,
+      strategy = strategy)
+    (table, from)
+  }
+
+  /** A window in which no file of the changed buckets left the table (one
+    * merge-on-read epoch) is read from the files it added plus a (keys,
+    * `_lsn`) read of `from`'s files in those buckets, in one aggregate: no
+    * join, one exchange, and no payload column read on the `from` side.
+    */
+  test("cdc_changes_since, append-only window: added files plus a (keys, _lsn) " +
+      "read of from, one exchange, no join") {
+    val (table, from) = oneKeyWindow(graft.cdc.WriteStrategy.MergeOnRead)
+    val to = table.current
+    val changed = table.changedBuckets(from, to)
+    def uris(fs: Seq[graft.lake.FileEntry]) =
+      fs.map(f => new org.apache.hadoop.fs.Path(f.path).toUri.toString).toSet
+    val fromFiles = uris(from.files.filter(f => changed(f.bucket)))
+    val added = uris(to.files) -- uris(from.files)
+    assert(changed.size == 1 && added.size == 1)
+    val df = table.readChangesSince(from.id)
+    assert(df.inputFiles.toSet == fromFiles ++ added)
+    val p = df.queryExecution.explainString(FormattedMode)
+    assert("""\(\d+\) \w*(Join|CartesianProduct)""".r.findAllIn(p).isEmpty, p)
+    assert("""\(\d+\) Exchange""".r.findAllIn(p).size == 1, p)
+    val schemas = p.linesIterator.filter(_.contains("ReadSchema")).map(_.trim).toSeq
+    assert(schemas.contains("ReadSchema: struct<conv_id:string,turn_idx:int,_lsn:bigint>"), schemas)
+    assert(df.count() == 1L)
+  }
+
+  /** MergeApply's merge-mode gate probes which keys are live. On buckets
+    * that carry merge-on-read deltas the probe resolves per key, and the
+    * resolve must carry only the keys, `_lsn` and `_deleted`: no payload
+    * column is scanned.
+    */
+  test("liveKeys: an InsertOnly merge-on-read batch scans no payload column of the table") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import graft.lake.LakeTable
+    import graft.cdc.{MergeApply, MergeMode, WriteStrategy}
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft-shape-live-").toString
+    val table = LakeTable.create(spark, root, schemaVer = 2, numBuckets = 4)
+    val ts = new java.sql.Timestamp(1704067200000L)
+    def batch(lsn0: Long, n: Int) = spark.createDataset((0 until n).map(i =>
+      graft.model.Model.ChangeEvent(lsn0 + i, "I", 2, s"conv-$i", 0, Some("user"), Some(s"t$i"),
+        None, Some(ts)))).toDF()
+    MergeApply.applyBatch(table, batch(1L, 32), 0L)
+    MergeApply.applyBatch(table, batch(100L, 32), 1L, strategy = WriteStrategy.MergeOnRead)
+    assert(table.current.files.map(_.bucket).distinct.size == 4)
+    val (st, seen) = JobProbe.during(spark)(MergeApply.applyBatch(table, batch(200L, 64), 2L,
+      mode = MergeMode.InsertOnly, strategy = WriteStrategy.MergeOnRead))
+    assert(st.applied)
+    val read = seen.plans.flatMap(JobProbe.collect(_) {
+      case s: FileSourceScanExec => s.requiredSchema.fieldNames.toSet
+    })
+    assert(read.nonEmpty)
+    read.foreach(cols => assert(cols.subsetOf(Set("conv_id", "turn_idx", "_lsn", "_deleted")), cols))
+  }
+
+  test("j3: the semi filter join is a broadcast left-semi; the fact side is not shuffled for it") {
+    val p = plan("j3_semi_filter_join")
+    assert(p.contains("BroadcastHashJoin") && p.contains("LeftSemi"))
+    assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin"))
+  }
+
+  test("st2: lag, running sum and group-agg ride a single user_id shuffle") {
+    assert("hashpartitioning\\(user_id".r.findAllIn(plan("st2_sessionize")).size == 1)
+  }
+
+  /** IVF: the only cross join is the vectors against the K broadcast
+    * centroids; probe→candidate expansion is an equi-join on cell id.
+    * Planned with size-based broadcasting off: a filter does not shrink
+    * Spark's size estimate, so at scale the centroids are estimated at the
+    * embedding table's size, and only the query's own hint broadcasts them.
+    */
+  test("sim3: the query broadcasts the centroids, no unbroadcast cartesian") {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val was = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    val p = try plan("sim3_ivf_ann") finally was.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastExchange"))
     assert(!p.contains("CartesianProduct"))
   }
 
