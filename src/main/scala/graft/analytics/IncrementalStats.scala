@@ -37,8 +37,6 @@ object IncrementalStats {
 
   val registry: Map[Int, StructType] = Map(1 -> statsSchema)
 
-  private val statCols = Seq("k", "s1", "s2", "st", "st2")
-
   def createTable(spark: SparkSession, root: String, numBuckets: Int = 8): LakeTable =
     LakeTable.create(spark, root, schemaVer = 1, numBuckets = numBuckets,
       registry = registry, keyCols = Seq("group_key"))
@@ -73,23 +71,10 @@ object IncrementalStats {
     * currently present (AvailableNow) and waits.
     */
   def streamAvailable(spark: SparkSession, table: LakeTable, obsDir: String,
-      checkpointDir: String, obsSchema: StructType): Unit = {
-    val wid = graft.cdc.CdcStream.writerIdOf(checkpointDir)
-    // maxFilesPerTrigger is PINNED to 1, not exposed: the content-hash
-    // redelivery guard compares whole batches, so it assumes a restarted
-    // stream re-chunks the source into the SAME batches. One file per
-    // batch makes batch boundaries a property of the (immutable) source
-    // files rather than of trigger timing — the only chunking for which
-    // that assumption always holds.
-    val q = spark.readStream.schema(obsSchema)
-      .option("maxFilesPerTrigger", 1).parquet(obsDir)
-      .writeStream.option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        applyBatch(table, deltas(batch), epochId, writerId = wid); ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
-  }
+      checkpointDir: String, obsSchema: StructType): Unit =
+    graft.cdc.CdcStream.streamOneFilePerBatch(spark, obsDir, checkpointDir, obsSchema) {
+      (batch, epochId, wid) => applyBatch(table, deltas(batch), epochId, writerId = wid); ()
+    }
 
   /** MERGE-ADD one delta batch into the stats table. Exactly-once via the
     * table's PER-WRITER epoch fence plus a batch content hash: merge-ADD is
@@ -104,34 +89,18 @@ object IncrementalStats {
     * (Docs/etl_requirements_reviewed_by_sr.md:162-165). Copy-on-write
     * touches only buckets whose groups appear in the batch. Returns false
     * when fenced or empty.
+    *
+    * `delta` must come from [[deltas]]: the content hash is folded from
+    * its `_hsum` sums over the raw observation rows, exact values that do
+    * not move with float-summation order.
     */
   def applyBatch(table: LakeTable, delta: DataFrame, epochId: Long,
       writerId: String = ""): Boolean = {
-    // Batch content hash over the RAW observation rows (folded from the
-    // per-group `_hsum` sums deltas() carries — exact values, no float
-    // recomputation), falling back to hashing the delta columns when the
-    // caller built its own delta without `_hsum`.
-    // UPGRADE NOTE: this definition replaced a float-aggregate hash, so
-    // hashes recorded by the previous release never match ones computed
-    // here — the redelivery guard is blind across that one upgrade.
-    // Operational rule: do not swap checkpoints in the same deploy that
-    // upgrades the engine (the per-writer epoch fence then covers
-    // redelivery on its own, no hash needed).
-    val bhCol =
-      if (delta.columns.contains("_hsum")) LakeTable.batchContentHashFromSums(col("_hsum"))
-      else {
-        // Order-UNSTABLE fallback: hashing recomputed float aggregates can
-        // change across partition orders, so a redelivered batch may slip
-        // the fence and double-count. Loud at build time — callers should
-        // construct deltas via deltas() so the exact `_hsum` rides along.
-        System.err.println("[stats] delta lacks _hsum: content-hash fence falls back to " +
-          "FLOAT-aggregate hashing (order-unstable across recomputation) — redelivery " +
-          "protection is best-effort; build deltas via IncrementalStats.deltas()")
-        LakeTable.batchContentHash(Seq(col("group_key"), col("k"), col("s1"),
-          col("s2"), col("st"), col("st2")))
-      }
+    require(delta.columns.contains("_hsum"),
+      "stats delta lacks _hsum: build it with IncrementalStats.deltas()")
     // the merge itself is the shared exactly-once ADD kernel
-    AdditiveMerge(table, delta, epochId, writerId, bhCol)
+    AdditiveMerge(table, delta, epochId, writerId,
+      LakeTable.batchContentHashFromSums(col("_hsum")))
   }
 
   /** Pooled DerSimonian–Laird columns from the stored state — identical

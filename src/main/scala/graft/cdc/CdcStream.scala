@@ -107,6 +107,26 @@ object CdcStream {
     else Commit.readString(fs, p).trim
   }
 
+  /** Tail `srcDir` over the files present at start (AvailableNow) and
+    * wait, calling `body(batch, epochId, writerId)` once per micro-batch
+    * under the checkpoint's [[writerIdOf]]. The stream reads one file per
+    * batch, pinned and not exposed: a content-hash redelivery guard
+    * compares whole batches, so it holds only if a restarted stream
+    * re-chunks the source into the same batches, and one file per batch
+    * makes the boundaries a property of the immutable source files
+    * rather than of trigger timing.
+    */
+  private[graft] def streamOneFilePerBatch(spark: SparkSession, srcDir: String,
+      checkpointDir: String, srcSchema: StructType)(body: (DataFrame, Long, String) => Unit): Unit = {
+    val wid = writerIdOf(checkpointDir)
+    spark.readStream.schema(srcSchema)
+      .option("maxFilesPerTrigger", 1).parquet(srcDir)
+      .writeStream.option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: DataFrame, epochId: Long) => body(batch, epochId, wid) }
+      .trigger(Trigger.AvailableNow()).start()
+      .awaitTermination()
+  }
+
   /** Start tailing `eventsDir` into `table`. The trigger runs over the
     * files present at start and stops (AvailableNow).
     */

@@ -60,23 +60,10 @@ object Scd2History {
     * (AvailableNow) and waits.
     */
   def streamAvailable(spark: SparkSession, table: LakeTable, cfg: Scd2Config,
-      srcDir: String, checkpointDir: String, srcSchema: StructType): Unit = {
-    val wid = CdcStream.writerIdOf(checkpointDir)
-    // maxFilesPerTrigger is PINNED to 1, not exposed (same rule as
-    // IncrementalStats.streamAvailable): the content-hash redelivery guard
-    // compares whole batches, so it assumes a restarted stream re-chunks
-    // the source into the SAME batches — one file per batch makes batch
-    // boundaries a property of the immutable source files rather than of
-    // trigger timing, the only chunking for which that always holds.
-    val q = spark.readStream.schema(srcSchema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-      .writeStream.option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        applyBatch(table, cfg, batch, epochId, writerId = wid); ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
-  }
+      srcDir: String, checkpointDir: String, srcSchema: StructType): Unit =
+    CdcStream.streamOneFilePerBatch(spark, srcDir, checkpointDir, srcSchema) {
+      (batch, epochId, wid) => applyBatch(table, cfg, batch, epochId, writerId = wid); ()
+    }
 
   /** Apply one batch of change records. Returns false when fenced/empty.
     *

@@ -52,7 +52,7 @@ object Validation {
     * scan pushes down to parquet row-group pruning — wrapping in
     * `coalesce` (needed only for PROJECTED flags, where three-valued
     * logic would leak downstream) blocks that conversion and turns the
-    * scan into a full read (PlanAudit asserts PushedFilters on p6).
+    * scan into a full read (PlanShapeSpec pins PushedFilters on p6).
     */
   def anyViolation(rules: Seq[RangeRule]): Column =
     rules.flatMap(rawChecks).reduceOption(_ || _).getOrElse(lit(false))

@@ -42,7 +42,7 @@ object TextQueries {
     * the self-join (a stopword present in every doc of the verify slice
     * would contribute |slice|² join rows and ~nothing to Jaccard; the df
     * cap is the same hot-bucket skip d2/d3/d5 apply at their candidate
-    * sites). Exposed so tests / PlanAudit can assert the guard holds.
+    * sites). Exposed so tests can assert the guard holds.
     */
   def invertedIndex(slice: DataFrame, maxDf: Long): DataFrame = {
     val tok0 = slice.select(col("doc_id"), explode(col("toks")).as("token"))

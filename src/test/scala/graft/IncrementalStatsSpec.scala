@@ -121,6 +121,16 @@ class IncrementalStatsSpec extends AnyFunSuite {
     assert(stateOf(table)("g0")._1 == 2L, "identical-content batch from an established writer was dropped")
   }
 
+  test("a delta without _hsum is refused before anything is committed") {
+    val root = Files.createTempDirectory("graft-stats-nohsum-").toString
+    val table = IncrementalStats.createTable(spark, root, numBuckets = 4)
+    assert(IncrementalStats.applyBatch(table, IncrementalStats.deltas(obs(100)), 0L))
+    val before = table.current.id
+    val bare = IncrementalStats.deltas(obs(100)).drop("_hsum")
+    intercept[IllegalArgumentException](IncrementalStats.applyBatch(table, bare, 1L))
+    assert(table.current.id == before)
+  }
+
   test("streaming ingest: fresh-checkpoint re-delivery is hash-fenced, " +
       "new files still apply (end-to-end exactly-once)") {
     val data = obs(800)

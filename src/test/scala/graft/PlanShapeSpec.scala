@@ -4,14 +4,16 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Fast plan-shape regression tests: the scale-critical physical-plan
-  * properties `graft.PlanAudit` asserts, pinned in `sbt test` so a source
-  * change cannot silently deoptimize a scan between audit runs (the
-  * round-4 config-driven validation rewrite did exactly that — wrapped
-  * the p6 filter in a non-convertible coalesce and lost parquet pushdown;
-  * only the out-of-band audit caught it). The catalog checks are
-  * construction-only — no query executes, so they cost plan compilation,
-  * not I/O; the lake-table checks build their own small tables.
+/** Plan-shape regression tests: the one place the scale-critical
+  * physical-plan properties are pinned (broadcast dimensions, partial
+  * aggregates, pushed filters, equi-joined candidate generation, a pair
+  * expansion with no self-join), so a source change cannot silently
+  * deoptimize a plan while its results stay correct (a config-driven
+  * validation rewrite once wrapped the p6 filter in a non-convertible
+  * coalesce and lost parquet pushdown). Most catalog checks build the
+  * plan only, so they cost plan compilation, not I/O; the few that need
+  * the executed plan run at sf0.001, and the lake-table checks build
+  * their own small tables.
   */
 class PlanShapeSpec extends AnyFunSuite {
 
@@ -28,12 +30,74 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("j1: both dimensions broadcast in the star join") {
-    assert("BroadcastHashJoin".r.findAllIn(plan("j1_star_join")).size >= 2)
+    val p = plan("j1_star_join")
+    assert("BroadcastHashJoin".r.findAllIn(p).size >= 2)
+    // and the aggregate is partial before its shuffle ("HashAggregate"
+    // alone would also match the final aggregate)
+    assert(p.contains("partial_"), p)
   }
 
   test("j5: the dedup is a real anti-join, no cartesian") {
     val p = plan("j5_anti_join_dedup")
     assert(p.contains("LeftAnti") && !p.contains("CartesianProduct"))
+  }
+
+  /** The scalar-threshold queries are one lazy plan: building the
+    * DataFrame runs no query job (a driver-side `.head` probe would run
+    * one, a second scan and scheduling round per query at scale). Spark
+    * runs a small footer/schema job per `read.parquet` ("parquet at …");
+    * that is table-open cost for any plan shape and is not counted.
+    */
+  test("j5, j6: building the query runs no job beyond parquet table opens") {
+    Seq("j5_anti_join_dedup", "j6_anti_probe").foreach { name =>
+      val (_, seen) = JobProbe.during(spark)(SparkEntry.queries(name)(spark, dir))
+      val probes = seen.jobs.flatMap(_.stageInfos.map(_.name)).filterNot(_.startsWith("parquet at"))
+      assert(probes.isEmpty && seen.plans.isEmpty, s"$name ran $probes")
+    }
+  }
+
+  /** Similarity and near-duplicate candidates join on a bucket, band or
+    * cell key, never all pairs. At this scale the planner broadcasts the
+    * small side, so a join that lost its equi-key plans as a broadcast
+    * nested loop join rather than a cartesian product: both are ruled out.
+    */
+  test("d3, sim2, d5: candidate joins are equi-joins, no cartesian or nested-loop join") {
+    Seq("d3_simhash", "sim2_lsh_ann", "d5_embedding_dup").foreach { name =>
+      val p = plan(name)
+      assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
+        s"$name:\n$p")
+    }
+  }
+
+  test("st1: the windowed event count is partial before its shuffle") {
+    assert(plan("st1_window_agg").contains("partial_count"))
+  }
+
+  test("p1: the unpivot is one Expand over the input") {
+    assert(plan("p1_melt_unpivot").contains("Expand"))
+  }
+
+  /** The materialized-pair aggregate expands pairs with array generators
+    * after a per-order collect, not a self-join. Its three shuffles are
+    * the per-order collect, the spread of oversized orders and the
+    * per-pair count; the static plan prints the shared collect once per
+    * branch, so it holds 4 `Exchange` headers. Data with no order over
+    * the chunk size leaves the spread branch empty, and AQE's
+    * empty-relation propagation removes it at runtime: the final plan
+    * holds no `Union` and 2 hash exchanges.
+    */
+  test("candidatePairs: generator pair expansion, no self-join; " +
+      "the oversized-order branch is dropped at runtime") {
+    val li = spark.read.parquet(s"$dir/lineitem.parquet")
+    val df = graft.analytics.MaterializedPairs.candidatePairs(li)
+    val p = df.queryExecution.explainString(FormattedMode)
+    assert(!p.contains("Join") && p.contains("Generate"), p)
+    assert("""\(\d+\) Exchange""".r.findAllIn(p).size == 4, p)
+    df.collect() // executes this QueryExecution, so AQE finalizes its plan
+    // the adaptive plan prints "== Final Plan ==" and then the initial plan
+    val finalPlan = df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
+    assert(!finalPlan.contains("Union"), finalPlan)
+    assert("Exchange hashpartitioning".r.findAllIn(finalPlan).size == 2, finalPlan)
   }
 
   test("w1: top-k plans as TakeOrderedAndProject, not global sort") {
@@ -192,5 +256,14 @@ class PlanShapeSpec extends AnyFunSuite {
     val rs = p.linesIterator.find(_.contains("ReadSchema"))
     assert(rs.isDefined, "no ReadSchema line in the formatted plan")
     assert(rs.get.count(_ == ',') <= 4)
+  }
+
+  test("q1: the executed plan runs in whole-stage codegen") {
+    val df = SparkEntry.queries("q1_agg")(spark, dir)
+    df.collect() // executes this plan; count() would wrap a new one
+    // AQE's pre-execution formatted plan hides codegen stages, so check the
+    // executed one: "WholeStageCodegen (n)" or "*(n) Operator" markers
+    val executed = df.queryExecution.executedPlan.toString
+    assert(executed.contains("WholeStageCodegen") || executed.contains("*("), executed)
   }
 }
